@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness. Protocol decisions (throttle gate, budget
   * arithmetic, deflation) are pure functions in [[BenchProtocol]] —
@@ -28,7 +27,6 @@ object Bench {
     val t0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Wall budget for the WHOLE protocol, calibrated to the driver's
     // OBSERVED kill horizon rather than a guess. Every measured point
     // so far: r16 completed at 1946 s sbt wall (horizon > 1946 s);
@@ -48,13 +46,7 @@ object Bench {
     val queryTimeoutS = sys.env.get("SPARK_GRAFT_BENCH_QUERY_TIMEOUT_S")
       .map(_.toDouble).getOrElse(300.0)
     val knobs = BenchProtocol.Knobs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", 100000)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The r17 driver tail was consumed by `WindowExec: No Partition
     // Defined` spam from the engine's deliberate bounded-frame

@@ -112,25 +112,12 @@ object Canary {
     "shuf" -> time(shufProbe(spark)),
     "mcpu" -> time(mcpuProbe()))
 
-  /** Spark-free sample (no shuf): one untimed warm of each probe, then
-    * the timed pass. The mcpu/cpu gating ratio needs no session, and a
-    * ~2 s lite sample lets a window-poll loop run every ~30 s without
-    * itself becoming measurable load ([[Probe]] `lite`).
-    */
-  def sampleLite(): Map[String, Double] = {
-    sink ^= cpuProbe(); sink ^= sortProbe(); sink ^= mcpuProbe()
-    Map(
-      "cpu" -> time(cpuProbe()),
-      "sort" -> time(sortProbe()),
-      "mcpu" -> time(mcpuProbe()))
-  }
-
   /** Run `body` inside a canary bracket and print it as one stderr
     * JSON line. The r17/r18 lesson, made structural: every
-    * measurement TOOL (OneQ, MultiRegion, PipeScale — not just the
-    * bench) should carry its own window tag, so an absolute number
-    * can never again be published without the throttle context that
-    * decides whether it is an anchor or an upper bound.
+    * measurement TOOL (OneQ — not just the bench) should carry its
+    * own window tag, so an absolute number can never again be
+    * published without the throttle context that decides whether it
+    * is an anchor or an upper bound.
     */
   def bracketed[T](spark: SparkSession, label: String)(body: => T): T = {
     warm(spark)

@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool: print the executed plan of registered queries (the same
-  * session shape as [[OneQ]]) — `runMain graft.Explain q121_pagerank`.
+/** Dev tool: print the executed plan of registered queries under the
+  * same [[Session]] confs Bench and OneQ time at (`SPARK_GRAFT_CPUS`) —
+  * `runMain graft.Explain q121_pagerank`.
   * Iteration aid for the plan-shape work PlanAuditSpec pins.
   *
   * `SPARK_GRAFT_EXPLAIN_MODE=formatted` switches to
@@ -12,11 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", 100000)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val mode = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_MODE", "executed")

@@ -14,8 +14,8 @@ import graft.operators.Graph
   * had never been priced.
   *
   * Per node count this main synthesizes — once, deterministically
-  * (hash-derived targets, no Random/now; SemScale discipline) — a
-  * degree-6 directed graph, SYMMETRIZED by doubling (the q121/q125
+  * (hash-derived targets, no Random/now) — a degree-6 directed
+  * graph, SYMMETRIZED by doubling (the q121/q125
   * coverage contract, so validation passes are skipped exactly as
   * those callers skip them), persists it to parquet, and measures:
   *
@@ -34,6 +34,7 @@ import graft.operators.Graph
   * 800k (above), 1.6M (×100).
   *
   * Usage: runMain graft.GraphScale [nNodes ...]
+  * (the SURVEY §6 figures ran with `SPARK_GRAFT_CPUS=32`)
   */
 object GraphScale {
 
@@ -71,13 +72,7 @@ object GraphScale {
   def main(args: Array[String]): Unit = {
     val counts = if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(160000L, 400000L, 800000L, 1600000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     for (n <- counts) {

@@ -170,8 +170,8 @@ object Incremental {
     * `outDir == prevDir` switches to IN-PLACE mode: the live tree is
     * updated — affected tile files deleted then rewritten — and no
     * unchanged byte is read or written, so the IO cost is proportional
-    * to the delta, not the tileset (the deployment mode PipeScale
-    * measures). Falls back to the full pipeline when the changed-GEOID
+    * to the delta, not the tileset (the deployment mode perfbench's
+    * `nightly-delta` measures). Falls back to the full pipeline when the changed-GEOID
     * fraction exceeds `maxChangedFraction` — mass change means the
     * incremental machinery costs more than it saves, and q135's
     * fraction readout is exactly the signal.

@@ -16,16 +16,17 @@ import graft.config.EtlConfig
   * source GeoJSON (`build.sh:111`: polygons drive the choropleth layer,
   * polylabel interior points the bubble layer) or, degraded, a
   * parquet/csv of pre-computed GEOID, lon, lat points (bubble layer
-  * only). The wide CSV is always written (`build.sh:81`). Deploy (-d) is
-  * out of scope offline — outputs land under --out; point it at a
-  * mounted bucket in production.
+  * only). The wide CSV is always written (`build.sh:81`) as a header CSV
+  * part-file directory `<out>/<region>.wide`; -e adds the single-file
+  * `<out>/<region>.extents`. Deploy (-d) is out of scope offline —
+  * outputs land under --out; point it at a mounted bucket in production.
   */
 object Main {
-  private case class Args(data: String = "", out: String = "",
-                          geo: Option[String] = None,
-                          regions: Seq[String] = Nil, // default applied post-parse
-                          inputType: String = "raw",
-                          extents: Boolean = false, tiles: Boolean = false)
+  final case class Args(data: String = "", out: String = "",
+                        geo: Option[String] = None,
+                        regions: Seq[String] = Nil, // default applied post-parse
+                        inputType: String = "raw",
+                        extents: Boolean = false, tiles: Boolean = false)
 
   private def parse(argv: List[String], acc: Args): Args = argv match {
     case Nil => acc
@@ -39,7 +40,8 @@ object Main {
     case other :: _ => throw new IllegalArgumentException(s"unknown arg: $other")
   }
 
-  def main(argv: Array[String]): Unit = {
+  /** Parse and validate the CLI arguments (before any session exists). */
+  def parseArgs(argv: Seq[String]): Args = {
     val parsed = parse(argv.toList, Args())
     val args = if (parsed.regions.isEmpty)
       parsed.copy(regions = Seq("counties")) else parsed
@@ -51,38 +53,41 @@ object Main {
     require(unknown.isEmpty,
       s"unknown region(s): ${unknown.mkString(", ")} " +
         s"(known: ${EtlConfig.regions.mkString(", ")})")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", 100000)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .appName("graft-etl")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      val metricNames = EtlConfig.columnMap(args.inputType).map(_._1)
-        .filterNot(Seq("id", "year", "name", "parent_location").contains)
-      for (region <- args.regions) {
-        val features = args.geo.map { g =>
-          if (g.endsWith(".geojson") || g.endsWith(".json"))
-            Pipeline.geometryFeatures(graft.sources.Sources.readGeoJson(spark, g))
-          else if (g.endsWith(".parquet")) spark.read.parquet(g)
-          else spark.read.option("header", true).csv(g)
-        }
-        val (wide, ext) = Pipeline.runRegion(spark, args.data, args.inputType,
-          metricNames, region,
-          features = if (args.tiles) features else None,
-          outDir = if (args.tiles) Some(s"${args.out}/tiles") else None)
-        graft.sources.Sources.writeCsv(wide, s"${args.out}/$region.wide",
-          singleFile = true)
-        if (args.extents)
-          graft.sources.Sources.writeCsv(ext, s"${args.out}/$region.extents",
-            singleFile = true)
-        println(s"[graft] $region: wide=${wide.columns.length} cols" +
-          (if (args.extents) s", extents=${ext.count()} metrics" else ""))
+    args
+  }
+
+  /** Every region through [[Pipeline.runRegion]], which writes the wide
+    * and extents CSVs itself, so the long CSV is scanned once per region
+    * (PipelineSpec pins this for Main too).
+    */
+  def run(spark: SparkSession, args: Args): Unit = {
+    val metricNames = EtlConfig.columnMap(args.inputType).map(_._1)
+      .filterNot(Seq("id", "year", "name", "parent_location").contains)
+    for (region <- args.regions) {
+      val features = args.geo.map { g =>
+        if (g.endsWith(".geojson") || g.endsWith(".json"))
+          Pipeline.geometryFeatures(graft.sources.Sources.readGeoJson(spark, g))
+        else if (g.endsWith(".parquet")) spark.read.parquet(g)
+        else spark.read.option("header", true).csv(g)
       }
-    } finally spark.stop()
+      val (wide, _) = Pipeline.runRegion(spark, args.data, args.inputType,
+        metricNames, region,
+        features = if (args.tiles) features else None,
+        outDir = if (args.tiles) Some(s"${args.out}/tiles") else None,
+        wideOut = Some(s"${args.out}/$region.wide"),
+        extentsOut =
+          if (args.extents) Some(s"${args.out}/$region.extents") else None)
+      val metricCols = wide.columns.count(c => !EtlConfig.idColumns.contains(c))
+      println(s"[graft] $region: wide=${wide.columns.length} cols" +
+        (if (args.extents) s", extents over $metricCols metric-year cols" else ""))
+    }
+  }
+
+  def main(argv: Array[String]): Unit = {
+    val args = parseArgs(argv.toSeq)
+    val b = Session.builder(Session.cpus).appName("graft-etl")
+    val spark = sys.env.get("SPARK_MASTER").fold(b)(b.master).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try run(spark, args) finally spark.stop()
   }
 }

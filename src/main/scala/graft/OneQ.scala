@@ -1,12 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Re-measure individual catalog queries outside the full bench.
   *
   * Comparability contract with the per-round bench artifact
-  * (`BENCH_r*.json` per_query_cs): set `SPARK_GRAFT_CPUS=32` — the
-  * driver benches at local[32]; OneQ's default stays 4 for cheap
-  * plan-shape checks — and read the `min` line, which is min over
+  * (`BENCH_r*.json` per_query_cs): set `SPARK_GRAFT_CPUS=32` — those
+  * artifacts were taken at local[32]; the [[Session]] default stays 4
+  * for cheap plan-shape checks — and read the `min` line, which is min over
   * `SPARK_GRAFT_ONEQ_PASSES` (default 2) timed passes taken AFTER one
   * untimed warm pass, the same estimator Bench uses (warm pass absorbs
   * janino/codegen compilation and parquet footer reads; min over
@@ -41,14 +40,10 @@ object OneQ {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val passes = sys.env.getOrElse("SPARK_GRAFT_ONEQ_PASSES", "2").toInt
     val wantStats = sys.env.get("SPARK_GRAFT_ONEQ_STATS").contains("1")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", 100000)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the whole run self-reports its host window (stderr bracket line)

@@ -676,8 +676,8 @@ object QueriesRel {
   // oracle recomputes the profile (naive full-rank formulation), the
   // threshold comparison, AND the join result, hash-checking that
   // salting didn't change a single row. Thresholds are the measured
-  // defaults (SaltAb: uniform profiles at top1≈0.01/mom≈1.2, the hot
-  // fixture at 0.90/900; the A/B wins 1.4–1.7× salted).
+  // defaults (the r15 salt A/B recorded in SURVEY: uniform profiles at
+  // top1≈0.01/mom≈1.2, the hot fixture at 0.90/900; salted wins 1.4–1.7×).
   def q138SaltDecision(s: SparkSession, d: String): DataFrame = {
     val big = lineitem(s, d).select(
       when(col("l_orderkey") % 10 =!= 0, lit(1L))

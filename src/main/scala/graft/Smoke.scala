@@ -2,19 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Mimics the driver's t1 smoke: fresh session (no special confs), run
-  * `SparkEntry.entry`, require rows > 0. Run with
-  * `sbt "runMain graft.Smoke"`.
+/** The entry-point smoke check: a bare `local[4]` session (no special
+  * confs — deliberately NOT [[Session]], so an entry point that only
+  * works under the repo's confs fails here), run `SparkEntry.entry`,
+  * require rows > 0. Run with `sbt "runMain graft.Smoke"`.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", 100000)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSession.builder().master("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

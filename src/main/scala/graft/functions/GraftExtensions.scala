@@ -9,11 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions into the SQL function registry, so
   * `SELECT graft_dotp(a, b)` works from plain SQL.
   *
-  * Enable with:
-  * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  * }}}
+  * Every session built through [[graft.Session.builder]] enables it;
+  * elsewhere set
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   * No custom `Rule[LogicalPlan]` / `SparkStrategy` is injected — stock
   * Catalyst covers every relational operator here (SURVEY.md §4); the
   * extension seam exists for the function surface only.

@@ -73,7 +73,7 @@ object Joins {
   }
 
   /** The profile's executable verdict: salt or not, plus the inputs
-    * the thresholds fired on (for logs / specs / the SaltAb tool).
+    * the thresholds fired on (for logs / specs).
     */
   case class SkewVerdict(salt: Boolean, top1Share: Double,
                          maxOverMean: Double, gini: Double)

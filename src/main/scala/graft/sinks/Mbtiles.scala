@@ -40,7 +40,7 @@ object Mbtiles {
     * asking the caller to know their blob-repetition profile up front —
     * the same measured-decision pattern the engine uses for broadcast
     * limits and salt factors. The trade-off being arbitrated is
-    * spec-measured (MbtilesSpec / ContainerScale): the map/images
+    * spec-measured (MbtilesSpec): the map/images
     * layout costs ~3.1× write wall and +0.03% bytes on all-distinct
     * tilesets, but collapses a 500×-repeated-blob fixture to <25% of
     * the direct container. Decision rule: dedup iff

@@ -180,6 +180,51 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("no cross-region state leak: counties after states ≡ counties solo, full and in-place") {
+    // one session runs regions serially (`build.sh:69`): any cache or
+    // artifact state leaking from one region into the next must show
+    // as a counties tree that differs from a solo counties build, on
+    // the full path and on the in-place incremental path
+    val oldCsv = writeLong(0 until NCells, bumped = Set.empty)
+    val newCsv = writeLong(0 until NCells, bumped = Set(5, 150))
+    // states: different data and a different feature set
+    val statesFeats = features.filter(
+      org.apache.spark.sql.functions.col("GEOID") < geoid(120))
+    val statesOld = writeLong(0 until 120, bumped = Set(3))
+    val statesNew = writeLong(0 until 120, bumped = Set(3, 40))
+
+    val solo = Files.createTempDirectory("leak-solo").toString
+    Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "counties",
+      features = Some(features), outDir = Some(solo))
+    val soloFull = md5tree(s"$solo/counties")
+    val soloIncrDir = Files.createTempDirectory("leak-isolo").toString
+    val soloStats = Incremental.incrementalRegion(spark, oldCsv, newCsv,
+      "raw", metricLongNames, "counties", features, prevDir = solo,
+      outDir = soloIncrDir)
+    assert(!soloStats.fullRebuild, soloStats.toString)
+    val soloIncr = md5tree(s"$soloIncrDir/counties")
+    assert(soloFull.nonEmpty && soloIncr != soloFull,
+      "the delta must rewrite some counties tiles")
+
+    val serial = Files.createTempDirectory("leak-serial").toString
+    Pipeline.runRegion(spark, statesOld, "raw", metricLongNames, "states",
+      features = Some(statesFeats), outDir = Some(serial))
+    Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "counties",
+      features = Some(features), outDir = Some(serial))
+    assert(md5tree(s"$serial/counties") == soloFull,
+      "full path: counties built after states differs from the solo build")
+
+    for ((region, f, o, n) <- Seq(
+        ("states", statesFeats, statesOld, statesNew),
+        ("counties", features, oldCsv, newCsv))) {
+      val st = Incremental.incrementalRegion(spark, o, n, "raw",
+        metricLongNames, region, f, prevDir = serial, outDir = serial)
+      assert(!st.fullRebuild, s"$region: $st")
+    }
+    assert(md5tree(s"$serial/counties") == soloIncr,
+      "in-place path: counties updated after states differs from the solo update")
+  }
+
   test("mass change routes to the full-rebuild fallback") {
     val oldCsv = writeLong(0 until 40, bumped = Set.empty)
     val newCsv = writeLong(0 until 40, bumped = (0 until 20).toSet) // 50% changed

@@ -2,7 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reference-shaped end-to-end fixture test (FIXTURES.md §A, SURVEY.md §5
@@ -254,17 +260,10 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     assert(p.contains("partial_max_by"), "pivot must partial-aggregate map-side")
   }
 
-  test("composed runRegion is scan-once: every stage reuses one cached pivot (SURVEY §3.1)") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
-
-    val features = Pipeline.geometryFeatures(
-      graft.sources.Sources.readGeoJson(spark, fixtureGeoJson)).persist()
-    features.count() // geometry parse outside the capture window
+  /** Executed plans of every action `body` triggers, captured by a
+    * QueryExecutionListener.
+    */
+  private def capturePlans(body: => Unit): Seq[SparkPlan] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
@@ -272,11 +271,8 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val out = Files.createTempDirectory("composed").toString
     try {
-      Pipeline.runRegion(spark, fixtureCsv, "raw", metricLongNames, "counties",
-        features = Some(features), outDir = Some(out),
-        wideOut = Some(s"$out/wide-csv"), extentsOut = Some(s"$out/ext-csv"))
+      body
       // the execution listener bus is async — poll until the capture
       // count is stable for a second
       var last = -1; var stable = 0
@@ -286,41 +282,95 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
         Thread.sleep(250)
       }
     } finally spark.listenerManager.unregister(listener)
-    features.unpersist()
+    plans.asScala.toSeq
+  }
 
-    // structural traversal: descend through AQE wrappers, STOP at
-    // InMemoryTableScan (its cached child plan executes once by the
-    // cache contract, not per consumer)
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(allNodes)
+  /** Structural traversal: descend through AQE wrappers, STOP at
+    * InMemoryTableScan (its cached child plan executes once by the
+    * cache contract, not per consumer).
+    */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
     }
-    val all = plans.asScala.toSeq
-    // wide CSV, extents CSV, decade-00 pbf, decade-10 pbf + cache fills
-    assert(all.size >= 4, s"expected >=4 composed actions, saw ${all.size}")
-    val directCsv = all.flatMap(allNodes).collect {
+    p +: kids.flatMap(allNodes)
+  }
+
+  /** File scans of the long CSV (every fixture names it `data.csv`). */
+  private def directCsvScans(plans: Seq[SparkPlan]): Seq[FileSourceScanExec] =
+    plans.flatMap(allNodes).collect {
       case f: FileSourceScanExec if f.relation.location.rootPaths
         .exists(_.toString.contains("data.csv")) => f
     }
+
+  /** Plans that read metric-year columns from the cached pivot. */
+  private def wideCacheConsumers(plans: Seq[SparkPlan]): Int =
+    plans.count(p => allNodes(p).exists {
+      case s: InMemoryTableScanExec =>
+        s.output.exists(_.name.matches("(er|p)-\\d\\d"))
+      case _ => false
+    })
+
+  test("composed runRegion is scan-once: every stage reuses one cached pivot (SURVEY §3.1)") {
+    val features = Pipeline.geometryFeatures(
+      graft.sources.Sources.readGeoJson(spark, fixtureGeoJson)).persist()
+    features.count() // geometry parse outside the capture window
+    val out = Files.createTempDirectory("composed").toString
+    val all = capturePlans {
+      Pipeline.runRegion(spark, fixtureCsv, "raw", metricLongNames, "counties",
+        features = Some(features), outDir = Some(out),
+        wideOut = Some(s"$out/wide-csv"), extentsOut = Some(s"$out/ext-csv"))
+    }
+    features.unpersist()
+
+    // wide CSV, extents CSV, decade-00 pbf, decade-10 pbf + cache fills
+    assert(all.size >= 4, s"expected >=4 composed actions, saw ${all.size}")
+    val directCsv = directCsvScans(all)
     assert(directCsv.size <= 1,
       s"the long CSV must feed ONE cache build, not per-stage re-scans; " +
         s"found ${directCsv.size} direct scans")
     // wide-table cache consumers: the stage-b artifact write, extents,
     // and both decade tile builds all read metric-year columns from the
     // InMemoryRelation, never from the file
-    val wideCacheConsumers = all.count(p => allNodes(p).exists {
-      case s: InMemoryTableScanExec =>
-        s.output.exists(_.name.matches("(er|p)-\\d\\d"))
-      case _ => false
-    })
-    assert(wideCacheConsumers >= 3,
-      s"stages must reuse the cached pivot, saw $wideCacheConsumers consumers")
+    val consumers = wideCacheConsumers(all)
+    assert(consumers >= 3,
+      s"stages must reuse the cached pivot, saw $consumers consumers")
     assert(!all.flatMap(allNodes).exists(_.nodeName.contains("CartesianProduct")),
       "no stage of the composed pipeline may plan a cartesian product")
+  }
+
+  test("graft.Main -e -t is scan-once too: wide, extents and tiles share one pivot") {
+    // Main reads every raw metric column, so its fixture carries the
+    // full raw header, with scattered empty cells
+    val metrics = graft.config.EtlConfig.columnMapRaw.map(_._1)
+      .filterNot(Seq("id", "year", "name", "parent_location").contains)
+    val header = ("id,year,name,parent_location" +: metrics).mkString(",")
+    val rows = for (g <- Seq("01001", "02013"); y <- 2000 to 2011) yield
+      (Seq(g, y.toString, s"Place $g", "Alabama") ++ metrics.indices.map(i =>
+        if ((i + y) % 7 == 0) "" else ((g.toInt + y * 3 + i) % 97).toString))
+        .mkString(",")
+    val csv = java.nio.file.Paths.get(
+      Files.createTempDirectory("main-fixture").toString, "data.csv")
+    Files.write(csv, (header +: rows).mkString("", "\n", "\n").getBytes("UTF-8"))
+    val out = Files.createTempDirectory("main-out").toString
+    val args = Main.parseArgs(Seq("--data", csv.toString, "--out", out,
+      "-e", "-t", "--geo", fixtureGeoJson))
+    val all = capturePlans(Main.run(spark, args))
+
+    val directCsv = directCsvScans(all)
+    assert(directCsv.size <= 1,
+      s"Main must scan the long CSV once per region, found ${directCsv.size} " +
+        "direct scans")
+    assert(wideCacheConsumers(all) >= 3,
+      "Main's wide/extents writes and tile builds must read the cached pivot")
+    def parts(p: String) = Option(new java.io.File(p).listFiles).toSeq.flatten
+      .filter(_.getName.startsWith("part-"))
+    assert(parts(s"$out/counties.wide").nonEmpty, "wide CSV missing")
+    assert(parts(s"$out/counties.extents").size == 1,
+      "extents CSV is one part file")
+    assert(new java.io.File(s"$out/tiles/counties/00/metadata.json").exists)
   }
 
   test("decadeTiles choropleth without polygon geometry fails fast") {

@@ -989,4 +989,24 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
       s"a small batch must never SMJ against the registry:\n$p")
     assert(!p.contains("CartesianProduct"), s"no product:\n$p")
   }
+
+  test("session invariants: the shared session carries Session's confs; only Session builds one") {
+    val c = spark.conf
+    assert(c.get("spark.sql.adaptive.enabled") == "true")
+    assert(c.get("spark.sql.shuffle.partitions") == "4")
+    assert(c.get("spark.sql.session.timeZone") == "UTC")
+    assert(c.get("spark.sql.optimizer.windowGroupLimitThreshold") == "100000")
+    assert(c.get("spark.sql.extensions") == "graft.functions.GraftExtensions")
+    // every main goes through graft.Session except Smoke, which builds a
+    // bare session on purpose (the entry smoke runs with no confs)
+    import scala.jdk.CollectionConverters._
+    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains("SparkSession.builder"))
+      .map(_.getFileName.toString).toSet
+    assert(builders == Set("Session.scala", "Smoke.scala"),
+      s"SparkSession.builder outside Session/Smoke: $builders")
+  }
 }

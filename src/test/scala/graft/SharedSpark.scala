@@ -4,19 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** One SparkSession per suite, driver-like config. */
+/** One SparkSession per suite, built through [[Session]] at 4 cores. */
 trait SharedSpark extends BeforeAndAfterAll { self: Suite =>
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  @transient lazy val spark: SparkSession = Session.builder(4)
     .appName("graft-test")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.optimizer.windowGroupLimitThreshold", 100000)
-      .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     // static conf, first session in the JVM wins: keep saveAsTable
     // artifacts (the bucketed-join spec) out of the repo tree
     .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   override def beforeAll(): Unit = {

@@ -2,7 +2,8 @@
 """Local mimic of the driver's DuckDB-oracle compare.
 
 Usage: python3 tools/check.py [sfDir] [verifyOutDir]
-Run `sbt "runMain graft.Verify <sfDir> <outDir>"` first.
+Run `sbt "runMain graft.Verify <sfDir> <outDir> [query...]"` first; with
+query names, Verify dumps only those and this compares only those.
 Stricter than the driver: exact float equality after column-name sort and
 row sort, so a PASS here should imply a driver hash-match.
 """
