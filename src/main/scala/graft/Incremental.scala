@@ -305,8 +305,8 @@ object Incremental {
         Seq("id"), "left_semi")
       val wideC = Pipeline.shape(longC, inputType)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // IDENTICAL code path to runRegion's choropleth stage (shared
-      // helpers — see Pipeline.choroTileFeatures): in particular the
+      // IDENTICAL code path to runRegion (Pipeline.choroTileFeatures,
+      // then Pipeline.decadeTileset per decade): in particular the
       // geometry stage runs over featC BEFORE any attribute join, so a
       // data-less neighbour (e.g. a removed GEOID) still contributes its
       // shared edges and border simplification reproduces byte-for-byte
@@ -316,22 +316,9 @@ object Incremental {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       else None
       for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
-        val bubble = Pipeline.decadeTiles(wideC, featC, inputType, decade,
-          "bubble", region)
-        val choro = polyFeats match {
-          case Some(tf) =>
-            Pipeline.choroDecadeEncode(wideC, tf, inputType, decade, region)
-          case None => bubble.limit(0)
-        }
-        // same layer union-merge as runRegion (J3, tile-join `build.sh:214`)
-        val merged = bubble.select(col("z"), col("x"), col("y"),
-            col("tile_bytes").as("bubble_bytes"))
-          .join(choro.select(col("z"), col("x"), col("y"),
-            col("tile_bytes").as("choro_bytes")), Seq("z", "x", "y"), "full_outer")
-          .select(col("z"), col("x"), col("y"),
-            concat(coalesce(col("bubble_bytes"), lit(Array.empty[Byte])),
-              coalesce(col("choro_bytes"), lit(Array.empty[Byte]))).as("tile_bytes"))
-        val rebuilt = merged.join(affectedTiles, Seq("z", "x", "y"), "left_semi")
+        val rebuilt = Pipeline.decadeTileset(wideC, featC, polyFeats,
+          inputType, decade, region, bubbleMaxZ = None)
+          .join(affectedTiles, Seq("z", "x", "y"), "left_semi")
         if (inPlace) {
           // live-tree update: unchanged tiles already sit in outDir, so
           // only the affected files are touched — delete them first (a

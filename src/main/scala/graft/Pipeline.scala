@@ -69,49 +69,40 @@ object Pipeline {
     * encodes the interior points (`build.sh:121-134`); the choropleth
     * layer encodes the polygon rings themselves
     * (`build.sh:139-160` — requires a `polys` column, see
-    * [[geometryFeatures]]).
+    * [[geometryFeatures]]) through [[choroTileFeatures]] and
+    * [[choroDecadeEncode]], the path [[runRegion]] ships.
     *
     * @param features GEOID + lon/lat (bubble center) and, for the
     *                 choropleth layer, the parsed `polys` column
     */
   def decadeTiles(wide: DataFrame, features: DataFrame, inputType: String,
                   decade: String, layer: String, region: String,
-                  maxZoomOverride: Option[Int] = None): DataFrame = {
-    val vars = layer match {
-      case "bubble" => EtlConfig.bubbleVars(inputType)
-      case _ => EtlConfig.choroplethVars(inputType)
-    }
-    val zoom = layer match {
-      case "bubble" => EtlConfig.bubbleZoom(region)
-      case _ => EtlConfig.choroplethZoom(region)
-    }
-    val maxZ = maxZoomOverride.getOrElse(zoom.maxZoom)
-    val fields = EtlConfig.decadeFields(vars, decade)
-      .filter(f => wide.columns.contains(f))
-    val slice = Shape.decadeSlice(wide, fields)
-    val joined = Joins.attributeJoin(features, slice, "GEOID", ifMatched = true)
-      .withColumn("fid", col("GEOID").cast("long")) // P5/T5 numeric feature id
-    val attrs = fields.filterNot(_ == "GEOID")
-    val name = s"$region-$decade-$layer"
-    if (layer == "bubble")
+                  maxZoomOverride: Option[Int] = None): DataFrame =
+    if (layer == "bubble") {
+      val zoom = EtlConfig.bubbleZoom(region)
+      val fields = EtlConfig.decadeFields(EtlConfig.bubbleVars(inputType), decade)
+        .filter(f => wide.columns.contains(f))
+      val joined = Joins.attributeJoin(features, Shape.decadeSlice(wide, fields),
+          "GEOID", ifMatched = true)
+        .withColumn("fid", col("GEOID").cast("long")) // P5/T5 numeric feature id
       // `--base-zoom` (`build.sh:121-126`): zooms below the region's base
       // thin at ~2.5×/level — how 217k block-group dots stay readable at
       // z4; the flat density budget only caps the residue
-      TileBuild.buildPointTiles(joined, "fid", "lon", "lat", attrs, name,
-        zoom.minZoom, maxZ, baseZoom = Some(zoom.baseZoom))
-    else {
+      TileBuild.buildPointTiles(joined, "fid", "lon", "lat",
+        fields.filterNot(_ == "GEOID"), s"$region-$decade-$layer",
+        zoom.minZoom, maxZoomOverride.getOrElse(zoom.maxZoom),
+        baseZoom = Some(zoom.baseZoom))
+    } else {
       require(features.columns.contains("polys"),
         "choropleth layer needs polygon geometry: supply GeoJSON-derived " +
           "features (Pipeline.geometryFeatures), not bare lon/lat points")
-      // per-region tippecanoe knobs (`build.sh:148-152`): simplification
-      // scale and coalesce-vs-drop over-budget strategy
-      val knobs = EtlConfig.choroplethBuild(region)
-      TileBuild.buildPolygonTiles(joined, "fid", "polys", attrs, name,
-        zoom.minZoom, maxZ,
-        simplifyPx = knobs.simplifyPx, coalesce = knobs.coalesce,
-        sharedBorders = knobs.sharedBorders)
+      // the same geometry-before-join split runRegion writes (see
+      // [[choroTileFeatures]]), so a one-off decade build is byte-identical
+      // to the choropleth layer of the shipped tileset
+      val maxZ = maxZoomOverride.getOrElse(EtlConfig.choroplethZoom(region).maxZoom)
+      choroDecadeEncode(wide, choroTileFeatures(features, region, maxZ),
+        inputType, decade, region)
     }
-  }
 
   /** The decade-independent choropleth GEOMETRY stage
     * (`build.sh:139-160`: one base tileset, split per decade by
@@ -165,6 +156,34 @@ object Pipeline {
       s"$region-$decade-choropleth", coalesce = knobs.coalesce)
   }
 
+  /** One decade's shipped tileset: the bubble layer, the choropleth
+    * layer over a prepared [[choroTileFeatures]] frame when there is
+    * one, and the J3 layer union-merge (`tile-join` `build.sh:214`):
+    * align on (z,x,y), concatenate layer bytes at the protobuf level.
+    * Without polygons the bubble layer IS the tileset. Shared by
+    * [[runRegion]] and [[Incremental.incrementalRegion]], so the two
+    * rebuild modes write the same bytes.
+    *
+    * @return (z, x, y, tile_bytes)
+    */
+  private[graft] def decadeTileset(wide: DataFrame, features: DataFrame,
+                                   polyFeats: Option[DataFrame],
+                                   inputType: String, decade: String,
+                                   region: String,
+                                   bubbleMaxZ: Option[Int]): DataFrame = {
+    val bubble = decadeTiles(wide, features, inputType, decade, "bubble",
+      region, maxZoomOverride = bubbleMaxZ).select("z", "x", "y", "tile_bytes")
+    polyFeats.fold(bubble) { tf =>
+      val choro = choroDecadeEncode(wide, tf, inputType, decade, region)
+      bubble.withColumnRenamed("tile_bytes", "bubble_bytes")
+        .join(choro.select(col("z"), col("x"), col("y"),
+          col("tile_bytes").as("choro_bytes")), Seq("z", "x", "y"), "full_outer")
+        .select(col("z"), col("x"), col("y"),
+          concat(coalesce(col("bubble_bytes"), lit(Array.empty[Byte])),
+            coalesce(col("choro_bytes"), lit(Array.empty[Byte]))).as("tile_bytes"))
+    }
+  }
+
   /** Full region run (`build.sh:69-233`): returns (wide, extents) and
     * writes tiles per decade under `outDir` when features are given.
     * With GeoJSON-derived features ([[geometryFeatures]]) both layers
@@ -202,8 +221,7 @@ object Pipeline {
                 outDir: Option[String] = None,
                 extendBudget: Int = 10000,
                 wideOut: Option[String] = None,
-                extentsOut: Option[String] = None,
-                mbtiles: Boolean = false): (DataFrame, DataFrame) = {
+                extentsOut: Option[String] = None): (DataFrame, DataFrame) = {
     val long = Sources.readCsv(spark, longCsvPath,
       Sources.longSchema(metricLongNames))
     val multiAction = (features.isDefined && outDir.isDefined) ||
@@ -261,22 +279,6 @@ object Pipeline {
           bz.maxZoom, bz.maxZoom + 2, budget = extendBudget))
       else None
       for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
-        val bubble = decadeTiles(wide, f, inputType, decade, "bubble", region,
-          maxZoomOverride = bubbleMaxZ)
-        val choro = polyFeats match {
-          case Some(tf) =>
-            choroDecadeEncode(wide, tf, inputType, decade, region)
-          case None => bubble.limit(0)
-        }
-        // J3 layer union-merge (`tile-join` `build.sh:214`): align on
-        // (z,x,y), concatenate layer bytes at the protobuf level.
-        val merged = bubble.select(col("z"), col("x"), col("y"),
-            col("tile_bytes").as("bubble_bytes"))
-          .join(choro.select(col("z"), col("x"), col("y"),
-            col("tile_bytes").as("choro_bytes")), Seq("z", "x", "y"), "full_outer")
-          .select(col("z"), col("x"), col("y"),
-            concat(coalesce(col("bubble_bytes"), lit(Array.empty[Byte])),
-              coalesce(col("choro_bytes"), lit(Array.empty[Byte]))).as("tile_bytes"))
         val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
         val meta = Map("name" -> s"$region-$decade",
           "type" -> "overlay",
@@ -288,18 +290,8 @@ object Pipeline {
             Map("bounds" -> s"$x0,$y0,$x1,$y1",
               "center" -> s"${(x0 + x1) / 2},${(y0 + y1) / 2},$maxZoomOut")
           }.getOrElse(Map.empty)
-        // the mbtiles sink re-reads the merged tiles (the container is
-        // a second consumer): persist for the duration so the decade
-        // build runs once, not per sink
-        val out2 = if (mbtiles)
-          merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else merged
-        TileBuild.writePbfDirectory(out2, s"$out/$region/$decade", meta)
-        if (mbtiles) {
-          graft.sinks.Mbtiles.writeMbtiles(out2,
-            s"$out/$region/$decade.mbtiles", meta + ("format" -> "pbf"))
-          out2.unpersist()
-        }
+        TileBuild.writePbfDirectory(decadeTileset(wide, f, polyFeats,
+          inputType, decade, region, bubbleMaxZ), s"$out/$region/$decade", meta)
       }
       polyFeats.foreach(_.unpersist())
     }

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import java.io.{File, RandomAccessFile}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,48 +32,38 @@ import Sqlite._
   * `toLocalIterator` ordered (z, x, row), so driver memory holds one
   * partition of tile rows at a time, never the tileset. The pbf
   * directory stays the scale path for serving; this sink exists for
-  * tool-compatibility with the reference's ecosystem.
+  * tool-compatibility with the reference's ecosystem. A decade's
+  * container is packaged from its written tree:
+  * `writeMbtiles(Incremental.readPbfTree(spark, dir), s"$dir.mbtiles",
+  * meta)`.
+  *
+  * One layout is written: the direct `tiles` table. [[readMbtiles]]
+  * also reads newer tippecanoe's deduplicated map/images layout.
   */
 object Mbtiles {
 
-  /** Layout AUTO-SELECTION: measure the tileset's duplicate ratio with
-    * one cheap pre-pass and pick the layout per write, instead of
-    * asking the caller to know their blob-repetition profile up front —
-    * the same measured-decision pattern the engine uses for broadcast
-    * limits and salt factors. The trade-off being arbitrated is
-    * spec-measured (MbtilesSpec): the map/images
-    * layout costs ~3.1× write wall and +0.03% bytes on all-distinct
-    * tilesets, but collapses a 500×-repeated-blob fixture to <25% of
-    * the direct container. Decision rule: dedup iff
-    * `approx_count_distinct(md5(blob)) / count ≤ maxDistinctRatio` —
-    * at the 0.5 default, repeats must at least halve the blob count
-    * (≈ halve the payload bytes for uniform blob sizes) before the
-    * write-wall premium is paid. The pre-pass is one digest scan
-    * folded into a partial aggregate: blobs are read once, only
-    * HLL sketch bytes cross the shuffle, nothing materializes.
-    * HLL's few-% error is immaterial against a 2× decision margin.
-    *
-    * @return true iff the dedup (map/images) layout was chosen
+  /** Write `tiles` (z, x, y, tile_bytes) as the container at `path`.
+    * The container is built in a temp file beside `path` and renamed
+    * over it only once complete: a failed write leaves any previous
+    * container untouched and no temp file behind.
     */
-  def writeMbtilesAuto(tiles: DataFrame, path: String,
-                       metadata: Map[String, String] = Map.empty,
-                       maxDistinctRatio: Double = 0.5): Boolean = {
-    val r = tiles.agg(
-      count(lit(1)).as("n"),
-      approx_count_distinct(md5(col("tile_bytes"))).as("nd")).head()
-    val (n, nd) = (r.getLong(0), r.getLong(1))
-    val dedup = n > 0 && nd.toDouble / n <= maxDistinctRatio
-    writeMbtiles(tiles, path, metadata, dedupLayout = dedup)
-    dedup
+  def writeMbtiles(tiles: DataFrame, path: String,
+                   metadata: Map[String, String]): Unit = {
+    val target = Paths.get(path).toAbsolutePath
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(
+      s".${target.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      writeContainer(tiles, tmp.toFile, metadata)
+      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case e: Throwable => Files.deleteIfExists(tmp); throw e
+    }
   }
 
-  def writeMbtiles(tiles: DataFrame, path: String,
-                   metadata: Map[String, String],
-                   dedupLayout: Boolean = false): Unit = {
-    if (dedupLayout) { writeMbtilesDedup(tiles, path, metadata); return }
-    val f = new File(path)
-    if (f.exists) f.delete()
-    Option(f.getParentFile).foreach(_.mkdirs())
+  private def writeContainer(tiles: DataFrame, f: File,
+                             metadata: Map[String, String]): Unit = {
     val raf = new RandomAccessFile(f, "rw")
     try {
       val sink = new Sink(raf)
@@ -124,132 +115,8 @@ object Mbtiles {
         ("index", "tile_index", "tiles", idxRoot,
           "CREATE UNIQUE INDEX tile_index on tiles (zoom_level, " +
             "tile_column, tile_row)"))))
+      raf.getFD.sync() // durable before the rename makes it the container
     } finally raf.close()
-  }
-
-  /** The map/images DEDUPLICATED layout (newer tippecanoe's output;
-    * [[readMbtiles]] has read it since r16 — this writer closes the
-    * asymmetry behind an explicit flag): identical tile blobs are
-    * stored ONCE in `images(tile_data, tile_id)` and referenced from
-    * `map(zoom_level, tile_column, tile_row, tile_id)`; a `tiles` VIEW
-    * over their join keeps every MBTiles 1.3 consumer working
-    * unchanged. Pays real bytes whenever a tileset repeats blobs —
-    * ocean/empty fills, cloned coarse tiles — and costs one extra
-    * b-tree walk per lookup; the default export stays the direct
-    * layout because the drop-densest/coalesce stages already avoid
-    * producing repeated tiles in this engine's own pipelines
-    * (MbtilesSpec measures both claims).
-    *
-    * tile_id assignment is deterministic: dense numbering of the
-    * DISTINCT blob digests in digest order — the single-partition
-    * window ranks 16-byte digests only, never blobs, and re-evaluating
-    * the frame for the second streaming pass reproduces identical ids.
-    */
-  private def writeMbtilesDedup(tiles: DataFrame, path: String,
-                                metadata: Map[String, String]): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val f = new File(path)
-    if (f.exists) f.delete()
-    Option(f.getParentFile).foreach(_.mkdirs())
-    // persist BOTH frames across the map and images passes: without
-    // it the input lineage (including md5 of every blob) re-evaluates
-    // per pass — triple digest cost, and a non-deterministic upstream
-    // frame could yield map rows referencing tile_ids absent from
-    // images, a silently broken container (r17 ADVICE)
-    val dgd = tiles
-      .select(col("z").cast("long").as("z"), col("x").cast("long").as("x"),
-        col("y").cast("long").as("y"), col("tile_bytes"),
-        md5(col("tile_bytes")).as("dg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // rank window bound: rows = DISTINCT blob digests (16 bytes each,
-    // never blobs) — single-partition by the same single-writer logic
-    // as the sqlite container itself; partitionBy(lit(1)) documents
-    // the intent (the literal folds out of the spec, so WindowExec's
-    // no-partition warning still logs — silenced where tails matter)
-    val ids = dgd.select("dg").distinct()
-      .withColumn("tile_id",
-        row_number().over(Window.partitionBy(lit(1)).orderBy("dg"))
-          .cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ids.count() // materialize: id assignment is frozen before either pass
-    val raf = new RandomAccessFile(f, "rw")
-    try {
-      val sink = new Sink(raf)
-      val metaB = new TableBuilder(sink)
-      metadata.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((k, v), i) =>
-        metaB.addRow(i + 1L, record(Seq(SqlText(k), SqlText(v))))
-      }
-      val metaRoot = metaB.finish()
-
-      // map: one row per tile, (z, x, tile_row)-ordered like the direct
-      // layout (same duplicate-key fail-fast), cells are 4 small ints
-      val mapB = new TableBuilder(sink)
-      val mapIdxB = new IndexBuilder(sink)
-      val mapIt = dgd.join(ids, "dg")
-        .select(col("z"), col("x"), col("y"), col("tile_id"))
-        .orderBy(col("z"), col("x"), col("y").desc)
-        .toLocalIterator()
-      var rowid = 0L
-      var prevKey: (Long, Long, Long) = null
-      while (mapIt.hasNext) {
-        val r = mapIt.next()
-        rowid += 1
-        val z = r.getLong(0); val x = r.getLong(1); val y = r.getLong(2)
-        val row = (1L << z) - 1L - y
-        val key = (z, x, row)
-        require(prevKey == null || key != prevKey,
-          s"duplicate tile key (z=$z, x=$x, y=$y) — tiles must be unique")
-        prevKey = key
-        val tid = r.getLong(3)
-        mapB.addRow(rowid,
-          record(Seq(SqlInt(z), SqlInt(x), SqlInt(row), SqlInt(tid))))
-        mapIdxB.addEntry(
-          record(Seq(SqlInt(z), SqlInt(x), SqlInt(row), SqlInt(rowid))))
-      }
-      val mapRoot = mapB.finish()
-      val mapIdxRoot = mapIdxB.finish()
-
-      // images: one row per DISTINCT blob, rowid = tile_id (dense from
-      // the digest rank, so iteration order is rowid order)
-      val imgB = new TableBuilder(sink)
-      val imgIdxB = new IndexBuilder(sink)
-      val imgIt = dgd.dropDuplicates("dg").join(ids, "dg")
-        .select(col("tile_id"), col("tile_bytes"))
-        .orderBy(col("tile_id"))
-        .toLocalIterator()
-      while (imgIt.hasNext) {
-        val r = imgIt.next()
-        val tid = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]]("tile_bytes")
-        imgB.addRow(tid, record(Seq(SqlBlob(bytes), SqlInt(tid))))
-        imgIdxB.addEntry(record(Seq(SqlInt(tid), SqlInt(tid))))
-      }
-      val imgRoot = imgB.finish()
-      val imgIdxRoot = imgIdxB.finish()
-
-      sink.patchPage1(buildPage1(sink.nPages, Seq(
-        ("table", "metadata", "metadata", metaRoot,
-          "CREATE TABLE metadata (name text, value text)"),
-        ("table", "map", "map", mapRoot,
-          "CREATE TABLE map (zoom_level integer, tile_column integer, " +
-            "tile_row integer, tile_id integer)"),
-        ("index", "map_index", "map", mapIdxRoot,
-          "CREATE UNIQUE INDEX map_index on map (zoom_level, " +
-            "tile_column, tile_row)"),
-        ("table", "images", "images", imgRoot,
-          "CREATE TABLE images (tile_data blob, tile_id integer)"),
-        ("index", "images_idx", "images", imgIdxRoot,
-          "CREATE UNIQUE INDEX images_idx on images (tile_id)"),
-        ("view", "tiles", "tiles", 0,
-          "CREATE VIEW tiles AS SELECT map.zoom_level AS zoom_level, " +
-            "map.tile_column AS tile_column, map.tile_row AS tile_row, " +
-            "images.tile_data AS tile_data FROM map JOIN images ON " +
-            "images.tile_id = map.tile_id"))))
-    } finally {
-      raf.close()
-      ids.unpersist()
-      dgd.unpersist()
-    }
   }
 
   /** `tile-join` over CONTAINERS (`build.sh:189,210,214`): read every
@@ -262,13 +129,8 @@ object Mbtiles {
     * Scale shape: ONE shuffle regardless of input count (a grouped
     * aggregate over the unioned frames, not a join chain), and the
     * per-input reads are [[readMbtiles]]'s distributed leaf scans.
-    * Output layout is the direct MBTiles 1.3 `tiles` table BY DEFAULT
-    * (what the reference's own tooling exchanges; this engine's
-    * drop-densest/coalesce stages already avoid repeated blobs, so
-    * dedup usually buys nothing here); tilesets that DO repeat blobs
-    * opt into the map/images layout via
-    * `writeMbtiles(..., dedupLayout = true)` — r17 closed the
-    * writer/reader asymmetry.
+    * Output layout is the direct MBTiles 1.3 `tiles` table, what the
+    * reference's own tooling exchanges.
     */
   def tileJoin(spark: SparkSession, inputs: Seq[String], out: String,
                metadata: Map[String, String] = Map.empty): Unit = {

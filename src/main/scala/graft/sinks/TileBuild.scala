@@ -144,30 +144,21 @@ object TileBuild {
                         simplifyPx: Double = 1.0,
                         coalesce: Boolean = false,
                         sharedBorders: Boolean = false): DataFrame = {
-    // fused single-pass plan (attrs ride the fan-out rows — NO join
-    // unless sharedBorders adds the per-feature shared-segment join):
-    // the split polygonTileFeatures/encodePolygonTiles pair exists for
-    // the per-decade reuse path where the geometry stage is persisted.
-    // CAVEAT (r15, found by IncrementalSpec): under sharedBorders the
-    // fused path detects shared segments over THIS frame — if callers
-    // pre-join attributes and thereby drop data-less features, those
-    // features' edges stop counting as shared and borders simplify
-    // differently than the split path (which runs geometry over the
-    // full feature table BEFORE the attribute join). Pipeline paths
-    // that must agree byte-for-byte use the split helpers
-    // (Pipeline.choroTileFeatures/choroDecadeEncode).
+    // the q48-only fused single-pass plan (attrs ride the fan-out rows —
+    // NO join unless sharedBorders adds the per-feature shared-segment
+    // join). Every pipeline path builds through the split
+    // polygonTileFeatures/encodePolygonTiles pair instead
+    // (Pipeline.choroTileFeatures/choroDecadeEncode). CAVEAT (r15, found
+    // by IncrementalSpec): under sharedBorders this build detects shared
+    // segments over THIS frame — if callers pre-join attributes and
+    // thereby drop data-less features, those features' edges stop
+    // counting as shared and borders simplify differently than the split
+    // path, which runs geometry over the full feature table BEFORE the
+    // attribute join.
     val spark = polys.sparkSession
     import spark.implicits._
-    val withShared =
-      if (sharedBorders) Geometry.withSharedSegments(polys, idCol, polygonsCol)
-      else polys.withColumn("shared_segs",
-        typedLit(Seq.empty[Seq[Seq[Double]]]))
-    val withBbox = Geometry.bboxColumns(col(polygonsCol))
-      .foldLeft(withShared) { case (df, (n, c)) => df.withColumn(n, c) }
-    val covered = Geometry.coverTiles(withFlatGeom(withBbox, polygonsCol),
-      minZoom, maxZoom)
-    val budgeted = Tiling.dropDensest(covered,
-      col(importanceCol.getOrElse(idCol)), col(idCol), budget)
+    val budgeted = polygonCandidates(polys, idCol, polygonsCol, minZoom,
+      maxZoom, importanceCol, budget, sharedBorders)
     val attrPairs = attrCols.flatMap(c => Seq(lit(c), col(c).cast("string")))
     val rows = budgeted.select(col("z").cast("int"), col("x"), col("y"),
       col("density_rank"), col(idCol).cast("long").as("fid"),
@@ -197,11 +188,25 @@ object TileBuild {
       .filter(col("n_features") > 0)
   }
 
-  private def toSegSet(segs: Seq[Seq[Seq[Double]]])
-      : Set[((Double, Double), (Double, Double))] =
-    segs.map { s =>
-      ((s(0)(0), s(0)(1)), (s(1)(0), s(1)(1)))
-    }.toSet
+  /** The candidate prelude of both polygon builds: shared-border
+    * segments → bbox → flat wire geometry → bbox cover fan-out → the
+    * map-side density cap BEFORE the tile shuffle, like the point path.
+    */
+  private def polygonCandidates(polys: DataFrame, idCol: String,
+                                polygonsCol: String, minZoom: Int,
+                                maxZoom: Int, importanceCol: Option[String],
+                                budget: Int, sharedBorders: Boolean): DataFrame = {
+    val withShared =
+      if (sharedBorders) Geometry.withSharedSegments(polys, idCol, polygonsCol)
+      else polys.withColumn("shared_segs",
+        typedLit(Seq.empty[Seq[Seq[Double]]]))
+    val withBbox = Geometry.bboxColumns(col(polygonsCol))
+      .foldLeft(withShared) { case (df, (n, c)) => df.withColumn(n, c) }
+    val covered = Geometry.coverTiles(withFlatGeom(withBbox, polygonsCol),
+      minZoom, maxZoom)
+    Tiling.dropDensest(covered,
+      col(importanceCol.getOrElse(idCol)), col(idCol), budget)
+  }
 
   // -------------------------------------------------------------------
   // Flattened geometry wire format. The per-(tile, feature) rows that
@@ -334,18 +339,8 @@ object TileBuild {
                           sharedBorders: Boolean = false): DataFrame = {
     val spark = polys.sparkSession
     import spark.implicits._
-
-    val withShared =
-      if (sharedBorders) Geometry.withSharedSegments(polys, idCol, polygonsCol)
-      else polys.withColumn("shared_segs",
-        typedLit(Seq.empty[Seq[Seq[Double]]]))
-    val withBbox = Geometry.bboxColumns(col(polygonsCol))
-      .foldLeft(withShared) { case (df, (n, c)) => df.withColumn(n, c) }
-    val covered = Geometry.coverTiles(withFlatGeom(withBbox, polygonsCol),
-      minZoom, maxZoom)
-    // map-side candidate cap BEFORE the tile shuffle, like the point path
-    val budgeted = Tiling.dropDensest(covered,
-      col(importanceCol.getOrElse(idCol)), col(idCol), budget)
+    val budgeted = polygonCandidates(polys, idCol, polygonsCol, minZoom,
+      maxZoom, importanceCol, budget, sharedBorders)
     val rows = budgeted.select(col("z").cast("int"), col("x"), col("y"),
       col("density_rank"), col(idCol).cast("long").as("fid"),
       col("coords"), col("ring_sizes"), col("poly_sizes"), col("shared_flat"))

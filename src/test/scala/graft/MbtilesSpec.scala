@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.security.MessageDigest
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +21,20 @@ class MbtilesSpec extends AnyFunSuite with SharedSpark {
 
   private def md5(b: Array[Byte]): String =
     MessageDigest.getInstance("MD5").digest(b).map("%02x".format(_)).mkString
+
+  /** Package a written decade tree into `<dir>.mbtiles` the one way
+    * every caller ships a container: its pbf tree read back, with the
+    * tree's own metadata.json.
+    */
+  private def packageTree(dir: String): String = {
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(new java.io.File(s"$dir/metadata.json"),
+        classOf[java.util.Map[String, String]]).asScala.toMap
+    val db = s"$dir.mbtiles"
+    graft.sinks.Mbtiles.writeMbtiles(Incremental.readPbfTree(spark, dir), db,
+      meta + ("format" -> "pbf"))
+    db
+  }
 
   private lazy val python: Option[String] =
     Seq("python3", "python").find { p =>
@@ -104,101 +120,6 @@ class MbtilesSpec extends AnyFunSuite with SharedSpark {
     assert(back == in, "reader must invert the writer exactly")
   }
 
-  test("dedup layout: view-parity with the direct layout; repeated blobs pay bytes once") {
-    assume(python.isDefined, "python3 with sqlite3 not available")
-    // a tileset with HEAVY blob repetition: 600 tiles over 4 distinct
-    // blobs (one 8 KB "ocean" fill on 500 of them) — the case the
-    // map/images layout exists for
-    val ocean = Array.tabulate[Byte](8000)(j => (j % 251).toByte)
-    val others = (0 until 3).map(i =>
-      Array.fill[Byte](500 + i * 37)((i + 1).toByte))
-    val tiles = (0 until 600).map { i =>
-      val b = if (i < 500) ocean else others(i % 3)
-      (9, (i % 512).toLong, (i / 512).toLong, b)
-    }
-    val df = tiles.toDF("z", "x", "y", "tile_bytes").orderBy(rand(7))
-    val dir = Files.createTempDirectory("mbtdedup")
-    val direct = dir.resolve("direct.mbtiles").toString
-    val dedup = dir.resolve("dedup.mbtiles").toString
-    graft.sinks.Mbtiles.writeMbtiles(df, direct, Map("name" -> "fx"))
-    graft.sinks.Mbtiles.writeMbtiles(df, dedup, Map("name" -> "fx"),
-      dedupLayout = true)
-
-    // sqlite itself adjudicates: structure valid, and the tiles VIEW
-    // serves the exact same rows as the direct layout's table
-    val outDirect = pyDump(direct)
-    val outDedup = pyDump(dedup)
-    assert(outDedup.head == "ok", s"integrity_check: ${outDedup.head}")
-    assert(outDedup.filter(_.startsWith("T,")) ==
-      outDirect.filter(_.startsWith("T,")),
-      "the dedup view must serve byte-identical tiles in the same order")
-    // the indexed point-lookup path works THROUGH the view
-    assert(outDedup.exists(_.startsWith("L,")))
-
-    // our own reader inverts the dedup container too
-    val back = graft.sinks.Mbtiles.readMbtiles(spark, dedup).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
-        md5(r.getAs[Array[Byte]]("tile_bytes"))).toMap
-    assert(back == tiles.map { case (z, x, y, b) =>
-      (z, x, y) -> md5(b) }.toMap)
-
-    // and the layout's reason to exist: 500 repeated 8 KB blobs stored
-    // once — the container must shrink by roughly their mass
-    val (szDirect, szDedup) = (new java.io.File(direct).length,
-      new java.io.File(dedup).length)
-    assert(szDedup.toDouble < szDirect * 0.25,
-      s"dedup must collapse repeated blobs: $szDedup vs $szDirect bytes")
-  }
-
-  test("writeMbtilesAuto picks the layout by measured duplicate ratio on both fixtures") {
-    val dir = Files.createTempDirectory("mbtauto")
-
-    // fixture 1: heavy repetition (600 tiles over 4 distinct blobs —
-    // the dedup layout's reason to exist) → auto must choose dedup
-    val ocean = Array.tabulate[Byte](8000)(j => (j % 251).toByte)
-    val others = (0 until 3).map(i =>
-      Array.fill[Byte](500 + i * 37)((i + 1).toByte))
-    val repTiles = (0 until 600).map { i =>
-      val b = if (i < 500) ocean else others(i % 3)
-      (9, (i % 512).toLong, (i / 512).toLong, b)
-    }
-    val repDf = repTiles.toDF("z", "x", "y", "tile_bytes").orderBy(rand(7))
-    val repAuto = dir.resolve("rep_auto.mbtiles").toString
-    val repDirect = dir.resolve("rep_direct.mbtiles").toString
-    assert(graft.sinks.Mbtiles.writeMbtilesAuto(repDf, repAuto,
-      Map("name" -> "fx")), "4/600 distinct must select the dedup layout")
-    graft.sinks.Mbtiles.writeMbtiles(repDf, repDirect, Map("name" -> "fx"))
-    assert(new java.io.File(repAuto).length.toDouble <
-      new java.io.File(repDirect).length * 0.25,
-      "the auto-chosen layout must actually collapse the repeats")
-
-    // fixture 2: all-distinct blobs (this engine's own pipelines after
-    // drop-densest/coalesce) → auto must keep the direct layout
-    val distinctTiles = (0 until 400).map { i =>
-      (9, (i % 512).toLong, (i / 512).toLong,
-        Array.tabulate[Byte](60 + i % 40)(j => ((i * 31 + j) % 251).toByte))
-    }
-    val dDf = distinctTiles.toDF("z", "x", "y", "tile_bytes").orderBy(rand(9))
-    val dAuto = dir.resolve("d_auto.mbtiles").toString
-    val dDirect = dir.resolve("d_direct.mbtiles").toString
-    assert(!graft.sinks.Mbtiles.writeMbtilesAuto(dDf, dAuto,
-      Map("name" -> "fx")), "all-distinct must keep the direct layout")
-    graft.sinks.Mbtiles.writeMbtiles(dDf, dDirect, Map("name" -> "fx"))
-    assert(java.util.Arrays.equals(
-      Files.readAllBytes(Paths.get(dAuto)),
-      Files.readAllBytes(Paths.get(dDirect))),
-      "auto(direct) must be byte-identical to an explicit direct write")
-
-    // either way the container serves the exact tile set back
-    for ((db, tiles) <- Seq(repAuto -> repTiles, dAuto -> distinctTiles)) {
-      val back = graft.sinks.Mbtiles.readMbtiles(spark, db).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
-          md5(r.getAs[Array[Byte]]("tile_bytes"))).toMap
-      assert(back == tiles.map { case (z, x, y, b) =>
-        (z, x, y) -> md5(b) }.toMap, s"round-trip mismatch for $db")
-    }
-  }
-
   test("a container whose FINAL index entry lands on a leaf boundary keeps every tile") {
     assume(python.isDefined, "python3 with sqlite3 not available")
     // the r15-review high finding: when the last addEntry triggered a
@@ -238,13 +159,24 @@ class MbtilesSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("writeMbtiles fails fast on duplicate (z,x,y) keys") {
+    val dir = Files.createTempDirectory("mbt-dup")
+    val db = dir.resolve("d.mbtiles").toString
+    // a good container already lives at the path
+    graft.sinks.Mbtiles.writeMbtiles(Seq((5, 1L, 2L, Array[Byte](7)))
+      .toDF("z", "x", "y", "tile_bytes"), db, Map("name" -> "live"))
+    val live = Files.readAllBytes(Paths.get(db))
     val tiles = Seq((5, 1L, 2L, Array[Byte](1)), (5, 1L, 2L, Array[Byte](2)))
       .toDF("z", "x", "y", "tile_bytes")
-    val db = Files.createTempDirectory("mbt-dup").resolve("d.mbtiles").toString
     val e = intercept[IllegalArgumentException] {
       graft.sinks.Mbtiles.writeMbtiles(tiles, db, Map.empty)
     }
     assert(e.getMessage.contains("duplicate tile key"))
+    // the failed write leaves the live container byte-identical and no
+    // temp file behind
+    assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(db)), live),
+      "a failed write must not touch the live container")
+    val left = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toList
+    assert(left == List("d.mbtiles"), s"leftover files: $left")
   }
 
   test("scan parallelism grows with leaf count; limit() terminates cleanly") {
@@ -395,9 +327,10 @@ class MbtilesSpec extends AnyFunSuite with SharedSpark {
         s"${(c * 31 + y) % 97 + 1},${(c * 7 + y) % 13 + 1}\n")
     Files.write(Paths.get(dir, "data.csv"), csv.toString.getBytes("UTF-8"))
 
-    // reference output: the frame-level merge shipped by the pipeline
+    // reference output: the frame-level merge the pipeline writes,
+    // packaged from its pbf tree
     Pipeline.runRegion(spark, s"$dir/data.csv", "raw", metrics, "counties",
-      features = Some(features), outDir = Some(dir), mbtiles = true)
+      features = Some(features), outDir = Some(dir))
 
     // container flow: rebuild each LAYER with the pipeline's own
     // building blocks (counties: bubble never extends, choropleth
@@ -424,7 +357,7 @@ class MbtilesSpec extends AnyFunSuite with SharedSpark {
       def tileMap(path: String) = Mbtiles.readMbtiles(spark, path).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) ->
           md5(r.getAs[Array[Byte]]("tile_bytes"))).toMap
-      val ref = tileMap(s"$dir/counties/$decade.mbtiles")
+      val ref = tileMap(packageTree(s"$dir/counties/$decade"))
       val got = tileMap(joined)
       assert(ref.nonEmpty && got == ref,
         s"decade $decade container join differs: " +
@@ -436,7 +369,7 @@ class MbtilesSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("runRegion(mbtiles = true) ships the container next to the pbf tree") {
+  test("a container packaged from runRegion's pbf tree holds that tree byte for byte") {
     assume(python.isDefined, "python3 with sqlite3 not available")
     val dir = Files.createTempDirectory("mbt-pipe").toString
     val csv = {
@@ -449,10 +382,9 @@ class MbtilesSpec extends AnyFunSuite with SharedSpark {
     val features = Seq(("01001", -86.6, 32.5), ("01003", -87.1, 30.7))
       .toDF("GEOID", "lon", "lat")
     Pipeline.runRegion(spark, csv, "raw", Seq("population"), "counties",
-      features = Some(features), outDir = Some(dir), mbtiles = true)
+      features = Some(features), outDir = Some(dir))
     for (decade <- Seq("00", "10")) {
-      val db = s"$dir/counties/$decade.mbtiles"
-      assert(Files.exists(Paths.get(db)), s"missing $db")
+      val db = packageTree(s"$dir/counties/$decade")
       val out = pyDump(db)
       assert(out.head == "ok")
       // container contents ≡ the pbf tree, tile for tile, byte for byte

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -386,5 +386,65 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     val bubble = Pipeline.decadeTiles(wide, pts, "raw", "00", "bubble",
       "counties")
     assert(bubble.count() > 0)
+  }
+
+  test("decadeTiles layer by layer, J3-merged, matches runRegion's tree tile for tile") {
+    // brick-laid shared-border grid (IncrementalSpec's fixture pattern,
+    // rows offset by half a cell): every border carries a T-junction
+    // vertex, so shared-border simplification depends on the full
+    // neighbour set. The middle cell has geometry but no data row.
+    val dir = Files.createTempDirectory("one-choro").toString
+    val (cols, rows, hole) = (6, 5, 14)
+    def geoid(c: Int) = f"$c%05d"
+    // lattice coordinates from integer steps, so both owners of a border
+    // vertex compute the same doubles
+    def lon(k: Int) = -100.0 + k * 0.05
+    def lat(j: Int) = 30.0 + j * 0.1
+    val gj = (0 until cols * rows).map { c =>
+      val (gx, gy) = (c % cols, c / cols)
+      val k = 2 * gx + gy % 2
+      val ring = Seq((k, gy), (k + 1, gy), (k + 2, gy), (k + 2, gy + 1),
+        (k + 1, gy + 1), (k, gy + 1), (k, gy))
+        .map { case (i, j) => s"[${lon(i)},${lat(j)}]" }.mkString(",")
+      s"""{"type":"Feature","properties":{"GEOID":"${geoid(c)}"},""" +
+        s""""geometry":{"type":"Polygon","coordinates":[[$ring]]}}"""
+    }.mkString("\n")
+    Files.write(Paths.get(dir, "f.jsonl"), gj.getBytes("UTF-8"))
+    val features = Pipeline.geometryFeatures(
+      graft.sources.Sources.readGeoJsonLines(spark, s"$dir/f.jsonl"))
+    val metrics = Seq("population", "filing_rate")
+    val csv = new StringBuilder(
+      "id,year,name,parent_location,population,filing_rate\n")
+    for (c <- 0 until cols * rows if c != hole; y <- 2000 to 2018)
+      csv.append(s"${geoid(c)},$y,Cell $c,Gridland," +
+        s"${(c * 31 + y) % 97 + 1},${(c * 7 + y) % 13 + 1}\n")
+    Files.write(Paths.get(dir, "data.csv"), csv.toString.getBytes("UTF-8"))
+
+    val out = s"$dir/tiles"
+    val (wide, _) = Pipeline.runRegion(spark, s"$dir/data.csv", "raw", metrics,
+      "counties", features = Some(features), outDir = Some(out))
+    def md5(b: Array[Byte]) = java.security.MessageDigest.getInstance("MD5")
+      .digest(b).map("%02x".format(_)).mkString
+    for (decade <- Seq("00", "10")) {
+      def layer(name: String) = Pipeline.decadeTiles(wide, features, "raw",
+          decade, name, "counties").collect()
+        .map(r => s"${r.getAs[Int]("z")}/${r.getAs[Long]("x")}/" +
+          s"${r.getAs[Long]("y")}.pbf" -> r.getAs[Array[Byte]]("tile_bytes")).toMap
+      val (bubble, choro) = (layer("bubble"), layer("choropleth"))
+      val merged = (bubble.keySet ++ choro.keySet).map { k =>
+        k -> md5(bubble.getOrElse(k, Array.empty[Byte]) ++
+          choro.getOrElse(k, Array.empty[Byte]))
+      }.toMap
+      val base = Paths.get(s"$out/counties/$decade")
+      val tree = Files.walk(base).iterator().asScala
+        .filter(_.toString.endsWith(".pbf"))
+        .map(p => base.relativize(p).toString ->
+          md5(Files.readAllBytes(p))).toMap
+      assert(choro.nonEmpty && tree.nonEmpty)
+      assert(merged == tree, s"decade $decade: " +
+        s"missing=${(tree.keySet -- merged.keySet).take(3)} " +
+        s"extra=${(merged.keySet -- tree.keySet).take(3)} " +
+        s"changed=${tree.count { case (k, v) => merged.get(k).exists(_ != v) }}")
+    }
   }
 }
