@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.EtlConfig
-import graft.operators.{Geometry, TextStats, Tiling}
+import graft.operators.Geometry
 import graft.sinks.TileBuild
 import graft.sources.Sources
 
@@ -24,11 +25,11 @@ import graft.sources.Sources
   *  - the diff is q135's: per-GEOID order-free fingerprints (q145's
   *    commutative Σhash), one full-outer equi-join — only (id, 16-byte
   *    decimal) rows shuffle, never the long rows;
-  *  - the geoid→tile fan reuses the EXACT production assignment
-  *    (bubble point fan with base-zoom thinning keyed like
-  *    buildPointTiles; choropleth bbox cover) so "affected" is what
-  *    the encoder would actually touch, plus bbox false positives that
-  *    only widen the rebuild;
+  *  - the geoid→tile fan IS the encoders' own fan
+  *    ([[TileBuild.pointTileFan]] with its base-zoom thinning;
+  *    [[TileBuild.polygonTileFan]], the bbox cover) so "affected" is
+  *    what the encoder would actually touch, plus bbox false positives
+  *    that only widen the rebuild;
   *  - contributors = renderers of affected tiles PLUS their exact
   *    edge-neighbours (features sharing a canonical ring segment,
   *    [[Geometry.ringSegments]] keys): the renderers are what an
@@ -70,8 +71,7 @@ object Incremental {
     * deeper than the configured fan: they were written with an
     * extend-zooms override it cannot reproduce.
     */
-  private[graft] def treeMaxZoom(fs: org.apache.hadoop.fs.FileSystem,
-                                 regionDir: org.apache.hadoop.fs.Path): Int = {
+  private[graft] def treeMaxZoom(fs: FileSystem, regionDir: Path): Int = {
     if (!fs.exists(regionDir)) return -1
     val decades = fs.listStatus(regionDir).filter(_.isDirectory)
     val zs = decades.flatMap(d => fs.listStatus(d.getPath))
@@ -120,32 +120,26 @@ object Incremental {
 
   /** The (GEOID, z, x, y) fan of the current feature table — exactly
     * the tiles the two encoders would place each feature in. Bubble:
-    * point assignment with the SAME base-zoom thinning key the
-    * encoder uses (hash of the long-cast fid's string form, see
-    * [[TileBuild.buildPointTiles]]). Choropleth: the bbox cover —
-    * the encoder's candidate superset (its clip-stage drops only
-    * shrink a tile's feature set; a bbox false positive here marks a
-    * tile affected that then rebuilds to its previous bytes).
+    * the encoder's own point fan ([[TileBuild.pointTileFan]], base-zoom
+    * thinning keyed on the long-cast fid like the bubble build).
+    * Choropleth: the encoder's bbox cover ([[TileBuild.polygonTileFan]]),
+    * a candidate superset (its clip-stage drops only shrink a tile's
+    * feature set; a bbox false positive here marks a tile affected that
+    * then rebuilds to its previous bytes).
     */
   def featureTileFan(features: DataFrame, region: String): DataFrame = {
     val bz = EtlConfig.bubbleZoom(region)
     val cz = EtlConfig.choroplethZoom(region)
-    val pts = features.select(col("GEOID"), col("lon"), col("lat"))
-    val fanned = Tiling.assignTiles(pts, "lon", "lat", bz.minZoom, bz.maxZoom)
-    val bubbleFan = (if (bz.baseZoom > bz.minZoom)
-      fanned.filter(Tiling.baseZoomKeep(
-        TextStats.hash60(col("GEOID").cast("long").cast("string")),
-        col("z"), bz.minZoom, bz.baseZoom))
-    else fanned)
+    val pts = features.select(col("GEOID"),
+      col("GEOID").cast("long").as("fid"), col("lon"), col("lat"))
+    val bubbleFan = TileBuild.pointTileFan(pts, "fid", "lon", "lat",
+        bz.minZoom, bz.maxZoom, Some(bz.baseZoom))
       .select(col("GEOID"), col("z").cast("int").as("z"), col("x"), col("y"))
-    val choroFan = if (features.columns.contains("polys")) {
-      val withBbox = Geometry.bboxColumns(col("polys"))
-        .foldLeft(features.select(col("GEOID"), col("polys"))) {
-          case (df, (n, c)) => df.withColumn(n, c)
-        }.drop("polys")
-      Geometry.coverTiles(withBbox, cz.minZoom, cz.maxZoom)
+    val choroFan = if (features.columns.contains("polys"))
+      TileBuild.polygonTileFan(features.select(col("GEOID"), col("polys")),
+          "polys", cz.minZoom, cz.maxZoom)
         .select(col("GEOID"), col("z").cast("int").as("z"), col("x"), col("y"))
-    } else bubbleFan.limit(0)
+    else bubbleFan.limit(0)
     bubbleFan.unionByName(choroFan).distinct()
   }
 
@@ -190,23 +184,20 @@ object Incremental {
     // one driver-side FileSystem per tree end (scheme-agnostic — the
     // bookkeeping below lists/deletes/copies through the Hadoop FS API)
     val hconf = spark.sessionState.newHadoopConf()
-    val prevFs = new org.apache.hadoop.fs.Path(prevDir).getFileSystem(hconf)
+    val prevFs = new Path(prevDir).getFileSystem(hconf)
     // the OUT end mutates the checksum flag below, so it gets a PRIVATE
     // instance (closed in the finally below) — flipping the flag on the
     // JVM-cached FileSystem would silently disable .crc sidecars for
     // every other writer of the scheme in the process (r17 ADVICE)
-    val outFs = org.apache.hadoop.fs.FileSystem.newInstance(
-      new org.apache.hadoop.fs.Path(outDir).toUri, hconf)
+    val outFs = FileSystem.newInstance(new Path(outDir).toUri, hconf)
     // no .crc sidecars in the live tree (same contract as the sink)
     outFs.setWriteChecksum(false)
     // close outFs on EVERY exit path — an exception anywhere below
     // (runRegion, writePbfDirectory, the FS bookkeeping itself) must
     // not leak the private instance in a long-lived session (r18 ADVICE)
     try {
-      val fpPath = new org.apache.hadoop.fs.Path(
-        s"$prevDir/$region/fingerprints.parquet")
-      val fs = prevFs
-      val oldFps = if (fs.exists(fpPath)) spark.read.parquet(fpPath.toString)
+      val fpPath = new Path(s"$prevDir/$region/fingerprints.parquet")
+      val oldFps = if (prevFs.exists(fpPath)) spark.read.parquet(fpPath.toString)
         else fingerprints(oldLong)
       val newFps = fingerprints(newLong)
       // localCheckpoint, not persist: the new fingerprints OVERWRITE the
@@ -231,10 +222,9 @@ object Incremental {
         else bz
       }
       val treeDeeperThanFan =
-        treeMaxZoom(prevFs, new org.apache.hadoop.fs.Path(
-          s"$prevDir/$region")) > fanMaxZ
+        treeMaxZoom(prevFs, new Path(s"$prevDir/$region")) > fanMaxZ
       // the NEW fingerprints persist for the next delta at the END of
-      // each path (after the fallback's tree wipe, after the in-place
+      // each path (after the fallback's swap, after the in-place
       // updates) — newFps derives from the new CSV, so writing it late
       // is always safe, and diff is already checkpoint-materialized
       def persistFingerprints(): Unit = newFps.write.mode("overwrite")
@@ -242,14 +232,28 @@ object Incremental {
       if (nTotal == 0 || treeDeeperThanFan ||
           (nChanged + nAdded + nRemoved).toDouble / nTotal > maxChangedFraction) {
         diff.unpersist()
-        // full rebuild into a dir that may hold the previous tree: clear
-        // the region subtree first (the reference's own `rm -rf _proc`
-        // semantics) — an overwrite-only rebuild would leave STALE tile
-        // files for (z,x,y)s the new data no longer produces
-        val regionDir = new org.apache.hadoop.fs.Path(s"$outDir/$region")
-        if (outFs.exists(regionDir)) outFs.delete(regionDir, true)
-        Pipeline.runRegion(spark, newCsvPath, inputType, metricLongNames,
-          region, features = Some(features), outDir = Some(outDir))
+        // a fresh tree replaces the whole region subtree (the reference's
+        // own `rm -rf _proc` semantics — an overwrite-only rebuild would
+        // leave STALE tiles for (z,x,y)s the new data no longer produces),
+        // crash-safe: runRegion builds into a hidden staging sibling, and
+        // only a complete tree is swapped in (live dir renamed aside,
+        // staged dir renamed into place, old dir deleted). A failed build
+        // deletes the staging dir and leaves the live tree as it was.
+        val tag = java.util.UUID.randomUUID()
+        val staging = new Path(s"$outDir/.$region.$tag.staging")
+        val regionDir = new Path(s"$outDir/$region")
+        val aside = new Path(s"$outDir/.$region.$tag.old")
+        try {
+          Pipeline.runRegion(spark, newCsvPath, inputType, metricLongNames,
+            region, features = Some(features), outDir = Some(staging.toString))
+          if (outFs.exists(regionDir) && !outFs.rename(regionDir, aside))
+            throw new java.io.IOException(s"cannot move $regionDir aside")
+          if (!outFs.rename(new Path(staging, region), regionDir)) {
+            outFs.rename(aside, regionDir) // put the live tree back, if any
+            throw new java.io.IOException(s"cannot swap in $staging/$region")
+          }
+          outFs.delete(aside, true)
+        } finally outFs.delete(staging, true)
         persistFingerprints()
         return Stats(nChanged, nAdded, nRemoved, -1L, -1L, fullRebuild = true)
       }
@@ -280,8 +284,8 @@ object Incremental {
       // copying ~every unchanged tile into a second tree — the live
       // deployment mode (writePbfDirectory truncate-overwrites per file,
       // so a crash mid-update re-runs idempotently)
-      val outQ = outFs.makeQualified(new org.apache.hadoop.fs.Path(outDir))
-      val prevQ = prevFs.makeQualified(new org.apache.hadoop.fs.Path(prevDir))
+      val outQ = outFs.makeQualified(new Path(outDir))
+      val prevQ = prevFs.makeQualified(new Path(prevDir))
       // qualified-URI equality first (scheme-agnostic), then — for local
       // paths only — java.io canonical-path equality, so a symlink- or
       // `..`-aliased prevDir/outDir pair is still recognized as the SAME
@@ -326,7 +330,7 @@ object Incremental {
           // GEOID's deep tile), then write the rebuilt set. The delete
           // list is the small affected frame, not the tree.
           for (r <- affectedRows)
-            outFs.delete(new org.apache.hadoop.fs.Path(
+            outFs.delete(new Path(
               s"$outDir/$region/$decade/${r.getAs[Int]("z")}/" +
                 s"${r.getAs[Long]("x")}/${r.getAs[Long]("y")}.pbf"), false)
           TileBuild.writePbfDirectory(rebuilt, s"$outDir/$region/$decade",
@@ -337,19 +341,10 @@ object Incremental {
           TileBuild.writePbfDirectory(rebuilt.unionByName(carried),
             s"$outDir/$region/$decade")
           // metadata is decade-level and attribute-independent: carry it over
-          val src = new org.apache.hadoop.fs.Path(
-            s"$prevDir/$region/$decade/metadata.json")
-          if (prevFs.exists(src)) {
-            val in = prevFs.open(src)
-            val bytes = try {
-              val b = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, b, 65536, false)
-              b.toByteArray
-            } finally in.close()
-            val dst = outFs.create(new org.apache.hadoop.fs.Path(
-              s"$outDir/$region/$decade/metadata.json"), true)
-            try dst.write(bytes) finally dst.close()
-          }
+          val src = new Path(s"$prevDir/$region/$decade/metadata.json")
+          if (prevFs.exists(src))
+            FileUtil.copy(prevFs, src, outFs,
+              new Path(s"$outDir/$region/$decade/metadata.json"), false, true, hconf)
         }
       }
       persistFingerprints()

@@ -152,7 +152,7 @@ object Pipeline {
     val est = slice.queryExecution.optimizedPlan.stats.sizeInBytes
     val attrs = if (est <= (64L << 20)) broadcast(attrsRaw)
       else attrsRaw.hint("shuffle_hash")
-    TileBuild.encodePolygonTiles(polyFeats, attrs,
+    TileBuild.encodePolygonTiles(polyFeats.join(attrs, Seq("fid")),
       s"$region-$decade-choropleth", coalesce = knobs.coalesce)
   }
 
@@ -261,10 +261,10 @@ object Pipeline {
       // polygon regions use the true geometry bbox, point regions the
       // bubble centers
       val bounds: Option[(Double, Double, Double, Double)] = {
-        val r = (if (hasPolys) {
-          val bb = Geometry.bboxColumns(col("polys"))
-          f.select(min(bb(0)._2), min(bb(2)._2), max(bb(1)._2), max(bb(3)._2))
-        } else f.select(min(col("lon")), min(col("lat")),
+        val r = (if (hasPolys)
+          Geometry.withBbox(f.select("polys"), "polys").select(min("lon_min"),
+            min("lat_min"), max("lon_max"), max("lat_max"))
+        else f.select(min(col("lon")), min(col("lat")),
           max(col("lon")), max(col("lat")))).head()
         // zero features ⇒ the min/max aggregate returns one all-null row;
         // skip the bounds/center metadata keys rather than NPE on getDouble

@@ -169,10 +169,10 @@ object QueriesTile {
   def q48PolygonCover(s: SparkSession, d: String): DataFrame = {
     val feats = squareFeatures(s, d).select(
       col("c_custkey").as("fid"),
-      Geometry.parsePolygons(col("geometry_json")).as("polys"),
-      col("c_acctbal"))
-    TileBuild.buildPolygonTiles(feats, "fid", "polys", Seq("c_acctbal"),
-        layerName = "sq", minZoom = 3, maxZoom = 5)
+      Geometry.parsePolygons(col("geometry_json")).as("polys"))
+    TileBuild.encodePolygonTiles(
+        TileBuild.polygonTileFeatures(feats, "fid", "polys", 3, 5)
+          .withColumn("attrs", typedLit(Map.empty[String, String])), "sq")
       .select(col("z"), col("x"), col("y"), col("n_features"))
       .orderBy("z", "x", "y")
   }

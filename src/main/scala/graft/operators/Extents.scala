@@ -76,24 +76,20 @@ object Extents {
     * The exact path stays the default because it is the oracle-parity
     * (R-7 / d3.quantile) estimator.
     *
-    * `fewGroups` (default true) lets the exact path broadcast its
-    * per-group boundary/offset tables (≤ [[RangeBuckets]] rows per
-    * group). That is right for the reference shape — tens of regions ×
-    * a handful of metrics — but the broadcast grows LINEARLY in group
-    * cardinality: pass `fewGroups = false` above ~10⁵ groups and the
-    * boundary/offset sides join by shuffle instead (slower at small
-    * scale, bounded everywhere).
+    * The exact path broadcasts its per-group boundary/offset tables
+    * (≤ [[RangeBuckets]] rows per group): right for the reference shape
+    * — tens of regions × a handful of metrics — since the broadcast
+    * grows linearly in group cardinality.
     */
   def extentsBy(df: DataFrame, groupCol: String, metricCols: Seq[String],
                 lo: Double = 0.01, hi: Double = 0.99,
-                approximate: Boolean = false,
-                fewGroups: Boolean = true): DataFrame = {
+                approximate: Boolean = false): DataFrame = {
     val stackExpr = explodeToLong(metricCols)
     val long = df.select(col(groupCol) +: stackExpr: _*)
       .select(col(groupCol), col("id"), numericOrNull(col("value")).as("value"))
       .filter(col("value").isNotNull)
     val names = array(metricCols.map(lit): _*)
-    computeExtents(long, Seq(groupCol, "id"), lo, hi, approximate, fewGroups)
+    computeExtents(long, Seq(groupCol, "id"), lo, hi, approximate)
       .withColumn("id", element_at(names, col("id") + 1))
       .orderBy(groupCol, "id")
   }
@@ -139,8 +135,7 @@ object Extents {
     */
   private def computeExtents(long: DataFrame, groupCols: Seq[String],
                              lo: Double, hi: Double,
-                             approximate: Boolean,
-                             fewGroups: Boolean = true): DataFrame = {
+                             approximate: Boolean): DataFrame = {
     val gcols = groupCols.map(col)
     if (approximate) {
       // HISTOGRAM-FED sketch (round 10): the per-row GK update re-pays
@@ -164,7 +159,7 @@ object Extents {
           element_at(col("qq"), 2).as("q99")): _*)
     } else {
       val (hist, bucketed, offs, bounds) =
-        cumulativeHistogram(long, groupCols, fewGroups)
+        cumulativeHistogram(long, groupCols)
       // RANK-TARGETED window (round 10): the two quantiles need the
       // exact rank of only 4 target positions per group, and the
       // offset table already brackets each bucket's rank span — so
@@ -183,7 +178,7 @@ object Extents {
           (col("__off") < kHi && kHi <= col("__off") + col("bsum"))
       }
       val cum = cumFrom(bucketed, offs.where(bucketHit(lo) || bucketHit(hi)),
-        groupCols, fewGroups)
+        groupCols)
       // rank targets (1-based): kLo = ⌊h⌋+1 and its successor, clamped
       def picks(p: Double, name: String): Seq[Column] = {
         val h = (col("n") - 1) * p
@@ -212,7 +207,7 @@ object Extents {
       val minmax = bounds.select(gcols ++
         Seq(col("__vmin").as("vmin"), col("__vmax").as("vmax")): _*)
       val out = pickAgg
-        .join(if (fewGroups) broadcast(minmax) else minmax, groupCols)
+        .join(broadcast(minmax), groupCols)
         .select(gcols ++ Seq(col("vmin"), col("vmax"),
           interp(lo, "a").as("q1"), interp(hi, "b").as("q99")): _*)
       unpersistAfterUse(Seq(hist, bounds), out)
@@ -235,8 +230,7 @@ object Extents {
     * Consumers: [[computeExtents]] (exact R-7 quantiles) and
     * [[quantileBins]] (equal-frequency binning).
     */
-  private def cumulativeHistogram(long: DataFrame, groupCols: Seq[String],
-                                  fewGroups: Boolean)
+  private def cumulativeHistogram(long: DataFrame, groupCols: Seq[String])
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val gcols = groupCols.map(col)
     // cache barrier: the histogram (already the SMALL distinct-value
@@ -264,16 +258,10 @@ object Extents {
       .agg(percentile_approx(col("value"), qs, lit(1000)).as("__bnds"),
         min("value").as("__vmin"), max("value").as("__vmax"))
       .persist()
-    // bounds/offs are ≤ RangeBuckets rows PER GROUP, so the broadcast
-    // hint is only safe while groupCol cardinality is bounded
-    // (`fewGroups`, the reference shape: a handful of metrics ×
-    // regions). A 100 TB caller with millions of groups passes
-    // fewGroups = false and these become shuffle joins — the driver
-    // never builds an unbounded broadcast table.
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (fewGroups) broadcast(df) else df
+    // bounds/offs are ≤ RangeBuckets rows PER GROUP: broadcast, as the
+    // group cardinality is bounded (a handful of metrics × regions)
     val bucketed = hist.join(
-        maybeBroadcast(bounds.drop("__vmin", "__vmax")), groupCols)
+        broadcast(bounds.drop("__vmin", "__vmax")), groupCols)
       .withColumn("bkt", size(filter(col("__bnds"), b => b < col("value"))))
       .drop("__bnds")
     val bktCols = groupCols :+ "bkt"
@@ -299,12 +287,10 @@ object Extents {
     * rank.
     */
   private def cumFrom(bucketed: DataFrame, offs: DataFrame,
-                      groupCols: Seq[String],
-                      fewGroups: Boolean): DataFrame = {
+                      groupCols: Seq[String]): DataFrame = {
     val bktCols = groupCols :+ "bkt"
     val wIn = Window.partitionBy(bktCols.map(col): _*).orderBy("value")
-    val offsSide = if (fewGroups) broadcast(offs) else offs
-    bucketed.join(offsSide, bktCols)
+    bucketed.join(broadcast(offs), bktCols)
       .withColumn("cum", sum("cnt").over(wIn) + col("__off"))
       .withColumn("cum_before", col("cum") - col("cnt"))
   }
@@ -322,8 +308,7 @@ object Extents {
     * on one task — and the output is one row per (metric, bin) with
     * count and value range.
     */
-  def quantileBins(df: DataFrame, metricCols: Seq[String], k: Int,
-                   fewGroups: Boolean = true): DataFrame = {
+  def quantileBins(df: DataFrame, metricCols: Seq[String], k: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     val stackExpr = explodeToLong(metricCols)
     val long = df.select(stackExpr: _*)
@@ -331,8 +316,8 @@ object Extents {
       .filter(col("value").isNotNull)
     val names = array(metricCols.map(lit): _*)
     val (hist, bucketed, offs, bounds) =
-      cumulativeHistogram(long, Seq("id"), fewGroups)
-    val out = cumFrom(bucketed, offs, Seq("id"), fewGroups)
+      cumulativeHistogram(long, Seq("id"))
+    val out = cumFrom(bucketed, offs, Seq("id"))
       .withColumn("bin",
         expr(s"least($k - 1, CAST((cum_before * $k) div n AS INT))"))
       .groupBy(col("id"), col("bin"))
@@ -369,8 +354,7 @@ object Extents {
     * against the exact path in CoreOperatorsSpec.
     */
   def approxQuantileBins(df: DataFrame, metricCols: Seq[String], k: Int,
-                         accuracy: Int = 10000,
-                         fewGroups: Boolean = true): DataFrame = {
+                         accuracy: Int = 10000): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     val stackExpr = explodeToLong(metricCols)
     val long = df.select(stackExpr: _*)
@@ -397,10 +381,8 @@ object Extents {
       .agg(graft.functions.WeightedPercentileApprox.wpa(
         col("value"), col("cnt"),
         (1 until k).map(_.toDouble / k), accuracy).as("__cuts"))
-    // ≤ k−1 doubles per metric — broadcast while the metric space is
-    // bounded; a high-cardinality grouped caller would flip fewGroups
-    val cutsSide = if (fewGroups) broadcast(cuts) else cuts
-    val out = hist.join(cutsSide, "id")
+    // ≤ k−1 doubles per metric — broadcast
+    val out = hist.join(broadcast(cuts), "id")
       .withColumn("bin",
         size(filter(col("__cuts"), c => c < col("value"))))
       .groupBy(col("id"), col("bin"))
@@ -428,16 +410,15 @@ object Extents {
     * inputs to the one double division are exact integers —
     * engine-identical, merge-order-free.
     */
-  def cdfTransform(df: DataFrame, metricCols: Seq[String],
-                   fewGroups: Boolean = true): DataFrame = {
+  def cdfTransform(df: DataFrame, metricCols: Seq[String]): DataFrame = {
     val stackExpr = explodeToLong(metricCols)
     val long = df.select(stackExpr: _*)
       .select(col("id"), numericOrNull(col("value")).as("value"))
       .filter(col("value").isNotNull)
     val names = array(metricCols.map(lit): _*)
     val (hist, bucketed, offs, bounds) =
-      cumulativeHistogram(long, Seq("id"), fewGroups)
-    val out = cumFrom(bucketed, offs, Seq("id"), fewGroups)
+      cumulativeHistogram(long, Seq("id"))
+    val out = cumFrom(bucketed, offs, Seq("id"))
       .select(element_at(names, col("id") + 1).as("metric"),
         col("value"), col("cnt").as("n_rows"),
         round((col("cum_before") + col("cnt") * 0.5) / col("n"), 6).as("cdf"))

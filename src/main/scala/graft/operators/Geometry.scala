@@ -46,16 +46,18 @@ object Geometry {
   /** All [lon, lat] vertices of the polygons array (bbox input). */
   private def vertices(polygons: Column): Column = flatten(flatten(polygons))
 
-  /** Bbox columns (lon_min, lon_max, lat_min, lat_max) for a polygons
-    * array.
+  /** `df` plus the bbox columns (lon_min, lon_max, lat_min, lat_max) of
+    * its polygons array `polygonsCol` — the input [[coverTiles]] fans
+    * out from.
     */
-  def bboxColumns(polygons: Column): Seq[(String, Column)] = {
-    val pts = vertices(polygons)
+  def withBbox(df: DataFrame, polygonsCol: String): DataFrame = {
+    val pts = vertices(col(polygonsCol))
     val lons = transform(pts, p => element_at(p, 1))
     val lats = transform(pts, p => element_at(p, 2))
-    Seq(
-      "lon_min" -> array_min(lons), "lon_max" -> array_max(lons),
-      "lat_min" -> array_min(lats), "lat_max" -> array_max(lats))
+    df.withColumn("lon_min", array_min(lons))
+      .withColumn("lon_max", array_max(lons))
+      .withColumn("lat_min", array_min(lats))
+      .withColumn("lat_max", array_max(lats))
   }
 
   /** Column-z tile x index (same rounded web-mercator discipline as
@@ -76,10 +78,10 @@ object Geometry {
   /** T4 for area features: fan each polygon feature out to every (z,x,y)
     * tile its bbox covers, for z in [minZoom, maxZoom]. The bbox cover is
     * tippecanoe's candidate set; exact-intersection refinement happens in
-    * the per-tile clip ([[graft.sinks.TileBuild.buildPolygonTiles]]),
+    * the per-tile clip ([[graft.sinks.TileBuild.polygonTileFeatures]]),
     * where a feature whose clipped geometry is empty is dropped.
     *
-    * Expects the [[bboxColumns]] to be present; emits z, x, y.
+    * Expects the [[withBbox]] columns to be present; emits z, x, y.
     */
   def coverTiles(df: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
     val n = pow(lit(2.0), col("z")).cast("long")
@@ -92,29 +94,6 @@ object Geometry {
       .withColumn("x", explode(sequence(col("x0"), col("x1"))))
       .withColumn("y", explode(sequence(col("y0"), col("y1"))))
       .drop("x0", "x1", "y0", "y1")
-  }
-
-  /** T1 end-to-end: interior point (pole of inaccessibility) per feature
-    * from parsed polygons — `mapshaper -points inner`
-    * (`build.sh:111-118`). The largest-area exterior ring anchors the
-    * label point, matching mapshaper's largest-part rule.
-    *
-    * Genuine per-row imperative logic (priority-queue grid refinement),
-    * so this is a typed map — the documented last-resort tier of
-    * SURVEY.md §2.11 — over (id, polygons); everything stays
-    * executor-side and distributed.
-    */
-  def interiorPoints(df: DataFrame, idCol: String, polygonsCol: String)
-      : DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("string"),
-        col(polygonsCol).cast(multiPolygonCoords.sql))
-      .as[(String, Seq[Seq[Seq[Seq[Double]]]])]
-      .flatMap { case (id, polys) =>
-        interiorPoint(polys).map { case (ix, iy) => (id, ix, iy) }
-      }
-      .toDF(idCol, "ip_lon", "ip_lat")
   }
 
   /** Interior point of one parsed polygons value: polylabel of the
@@ -134,11 +113,14 @@ object Geometry {
     }
   }
 
-  /** T1 wiring variant: stamp `lon`/`lat` interior-point columns while
-    * CARRYING the polygons column through — one narrow typed map, no
-    * self-join, no shuffle. This is the feature-derivation step of
-    * `build.sh:111-118` feeding BOTH tile layers: the polygons drive the
-    * choropleth build, the stamped point drives the bubble build.
+  /** T1: stamp `lon`/`lat` interior-point (pole of inaccessibility)
+    * columns per feature — `mapshaper -points inner` (`build.sh:111-118`)
+    * — while CARRYING the polygons column through. Genuine per-row
+    * imperative logic (priority-queue grid refinement), so this is one
+    * narrow typed map — the documented last-resort tier of SURVEY.md
+    * §2.11 — with no self-join and no shuffle. It feeds BOTH tile
+    * layers: the polygons drive the choropleth build, the stamped point
+    * drives the bubble build.
     */
   def withInteriorPoints(df: DataFrame, idCol: String, polygonsCol: String)
       : DataFrame = {
@@ -169,9 +151,9 @@ object Geometry {
   // ------------------------------------------------------------------
   // Per-tile polygon geometry (plain Scala, executor-side): the clip +
   // quantize half of tippecanoe's tile encode (`build.sh:139-160`).
-  // These run inside the per-tile `mapGroups` fold of
-  // [[graft.sinks.TileBuild.buildPolygonTiles]] — after the one tile
-  // shuffle, on already-colocated features.
+  // These run once per (tile, feature) row in
+  // [[graft.sinks.TileBuild.polygonTileFeatures]], after the bbox-cover
+  // fan-out and before the one tile shuffle.
 
   /** Continuous web-mercator "world pixel" coordinates at zoom z: the
     * whole world spans [0, 2^z * extent) in both axes, y growing south.

@@ -305,7 +305,7 @@ object Joins {
     *     broadcast — right while the repeated-gram vocabulary is
     *     executor-sized; at very large distinct-key counts the table
     *     grows linearly with the key space, so pass `false` to fall
-    *     back to shuffle hash joins (the Extents `fewGroups` pattern);
+    *     back to shuffle hash joins;
     *  3. PREFIX filter (PPJoin): each key's grams rank in the global
     *     (df asc, hash) order — rarest first, over the key's FULL gram
     *     set (df-1 grams included via a left join, hot grams last) —

@@ -1,11 +1,9 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Geometry, Tiling}
+import graft.operators.{Geometry, TextStats, Tiling}
 
 /** Tile-pyramid build + sink: the Spark re-expression of the reference's
   * tippecanoe → tile-join → `--output-to-directory` chain
@@ -32,41 +30,40 @@ import graft.operators.{Geometry, Tiling}
   */
 object TileBuild {
 
+  /** Per-tile feature-COUNT cap (the density budget), applied map-side
+    * BEFORE the tile shuffle — bounds shuffle fan-in.
+    */
+  val FeatureBudget = 10000
+
+  /** Per-tile encoded-BYTE cap, applied at encode time — tippecanoe's
+    * `--drop-densest-as-needed` semantics are a tile size budget
+    * (`build.sh:124-126`; tippecanoe default 500K).
+    */
+  val ByteBudget: Int = 500 * 1024
+
   /** Encode point features into per-tile MVT byte blobs.
     *
     * @param points     DataFrame with id, lon, lat and `attrCols`
     * @param attrCols   attribute columns carried into tiles (null cells
     *                   dropped per-feature — `--empty-csv-columns-are-null`)
-    * @param budget     per-tile feature-COUNT cap, applied map-side BEFORE
-    *                   the tile shuffle (bounds shuffle fan-in)
-    * @param byteBudget per-tile encoded-BYTE cap, applied at encode time —
-    *                   tippecanoe's actual `--drop-densest-as-needed`
-    *                   semantics are a tile size budget
-    *                   (`build.sh:124-126`; tippecanoe default 500K)
-    * @param baseZoom   tippecanoe `--base-zoom` (`build.sh:121-126`):
-    *                   zooms below it thin points at ~2.5×/level
-    *                   ([[Tiling.baseZoomKeep]] — deterministic
-    *                   hash-ordered drop, applied per-row BEFORE the
-    *                   tile shuffle)
+    * @param budget     per-tile feature-COUNT cap ([[FeatureBudget]])
+    * @param byteBudget per-tile encoded-BYTE cap ([[ByteBudget]])
+    * @param baseZoom   tippecanoe `--base-zoom` (`build.sh:121-126`), see
+    *                   [[pointTileFan]]
     * @return DataFrame (z, x, y, n_features, tile_bytes)
     */
   def buildPointTiles(points: DataFrame, idCol: String, lonCol: String,
                       latCol: String, attrCols: Seq[String], layerName: String,
                       minZoom: Int, maxZoom: Int,
                       importanceCol: Option[String] = None,
-                      budget: Int = 10000,
-                      byteBudget: Int = 500 * 1024,
+                      budget: Int = FeatureBudget,
+                      byteBudget: Int = ByteBudget,
                       baseZoom: Option[Int] = None): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
 
-    val fanned = Tiling.assignTiles(points, lonCol, latCol, minZoom, maxZoom)
-    val assigned = baseZoom match {
-      case Some(bz) if bz > minZoom => fanned.filter(Tiling.baseZoomKeep(
-        graft.operators.TextStats.hash60(col(idCol).cast("string")),
-        col("z"), minZoom, bz))
-      case _ => fanned
-    }
+    val assigned = pointTileFan(points, idCol, lonCol, latCol, minZoom,
+      maxZoom, baseZoom)
     // pixel coords per zoom: computed per-row from the already-assigned z
     val withPx = assigned.withColumn("fx",
         round((col(lonCol) + 180.0) / 360.0 * pow(lit(2.0), col("z")), 6))
@@ -109,104 +106,37 @@ object TileBuild {
       .toDF("z", "x", "y", "n_features", "tile_bytes")
   }
 
-  /** Encode polygon features into per-tile MVT byte blobs — the
-    * choropleth half of the reference's tippecanoe stage
-    * (`build.sh:139-160`: mapshaper simplify → tippecanoe polygon
-    * tiles). Candidate tiles come from the bbox cover
-    * ([[Geometry.coverTiles]], a pure Generate fan-out); the exact
-    * refinement happens per tile AFTER the one groupBy(z,x,y) shuffle:
-    * project rings to world pixels, per-zoom Douglas-Peucker simplify
-    * (`--simplification`, pixel tolerance is zoom-scaled for free
-    * because pixel space doubles per zoom), Sutherland–Hodgman clip to
-    * the tile square, quantize to the 4096 grid, drop empty/sliver
-    * rings — a feature whose clipped exterior vanishes is dropped, and
-    * tiles left with zero features are dropped (bbox-cover false
-    * positives on diagonal shapes).
-    *
-    * @param polys      DataFrame with id, a parsed polygons column
-    *                   ([[Geometry.parsePolygons]] layout:
-    *                   polygons→rings→points→[lon,lat]) and `attrCols`
-    * @param simplifyPx Douglas-Peucker tolerance in tile pixels (the
-    *                   tippecanoe `--simplification` knob; 0 disables)
-    * @param coalesce   over-budget strategy: true =
-    *                   `--coalesce-smallest-as-needed` (merge
-    *                   attr-identical features, keep coverage — the
-    *                   reference's choropleth setting), false =
-    *                   `--drop-densest-as-needed` prefix drop
-    * @return DataFrame (z, x, y, n_features, tile_bytes)
+  /** The tiles a point lands in: one row per (z, x, y), z in
+    * [minZoom, maxZoom] ([[Tiling.assignTiles]]); below `baseZoom` only
+    * the rows tippecanoe's `--base-zoom` keeps ([[Tiling.baseZoomKeep]],
+    * keyed on the hash of the id's string form, BEFORE the tile
+    * shuffle). [[buildPointTiles]] encodes these rows and
+    * [[graft.Incremental.featureTileFan]] reads them as the tiles a
+    * changed feature touches.
     */
-  def buildPolygonTiles(polys: DataFrame, idCol: String, polygonsCol: String,
-                        attrCols: Seq[String], layerName: String,
-                        minZoom: Int, maxZoom: Int,
-                        importanceCol: Option[String] = None,
-                        budget: Int = 10000,
-                        byteBudget: Int = 500 * 1024,
-                        simplifyPx: Double = 1.0,
-                        coalesce: Boolean = false,
-                        sharedBorders: Boolean = false): DataFrame = {
-    // the q48-only fused single-pass plan (attrs ride the fan-out rows —
-    // NO join unless sharedBorders adds the per-feature shared-segment
-    // join). Every pipeline path builds through the split
-    // polygonTileFeatures/encodePolygonTiles pair instead
-    // (Pipeline.choroTileFeatures/choroDecadeEncode). CAVEAT (r15, found
-    // by IncrementalSpec): under sharedBorders this build detects shared
-    // segments over THIS frame — if callers pre-join attributes and
-    // thereby drop data-less features, those features' edges stop
-    // counting as shared and borders simplify differently than the split
-    // path, which runs geometry over the full feature table BEFORE the
-    // attribute join.
-    val spark = polys.sparkSession
-    import spark.implicits._
-    val budgeted = polygonCandidates(polys, idCol, polygonsCol, minZoom,
-      maxZoom, importanceCol, budget, sharedBorders)
-    val attrPairs = attrCols.flatMap(c => Seq(lit(c), col(c).cast("string")))
-    val rows = budgeted.select(col("z").cast("int"), col("x"), col("y"),
-      col("density_rank"), col(idCol).cast("long").as("fid"),
-      col("coords"), col("ring_sizes"), col("poly_sizes"),
-      col("shared_flat"), map(attrPairs: _*).as("attrs"))
-
-    rows.as[(Int, Long, Long, Int, Long, Array[Double], Array[Int], Array[Int], Array[Double], Map[String, String])]
-      .groupByKey { case (z, x, y, _, _, _, _, _, _, _) => (z, x, y) }
-      .mapGroups { (key: (Int, Long, Long),
-                    it: Iterator[(Int, Long, Long, Int, Long, Array[Double], Array[Int], Array[Int], Array[Double], Map[String, String])]) =>
-        val (z, x, y) = key
-        val feats = it.toSeq.sortBy(t => (t._4, t._5)).flatMap {
-          case (_, _, _, _, fid, coords, ringSizes, polySizes, sharedFlat, attrs) =>
-            val rings = tileRings(z, x, y,
-              unflatten(coords, ringSizes, polySizes), simplifyPx,
-              if (sharedBorders) Some(toSegSetFlat(sharedFlat)) else None)
-            if (rings.isEmpty) None
-            else Some(Mvt.Feature(fid, Mvt.PolygonGeom, rings,
-              attrs.toSeq.filter(_._2 != null).sortBy(_._1)))
-        }
-        val (kept, bytes) =
-          if (coalesce) coalesceToByteBudget(layerName, feats, byteBudget)
-          else fitToByteBudget(layerName, feats, byteBudget)
-        (z, x, y, kept, bytes)
-      }
-      .toDF("z", "x", "y", "n_features", "tile_bytes")
-      .filter(col("n_features") > 0)
+  private[graft] def pointTileFan(points: DataFrame, idCol: String,
+                                  lonCol: String, latCol: String,
+                                  minZoom: Int, maxZoom: Int,
+                                  baseZoom: Option[Int]): DataFrame = {
+    val fanned = Tiling.assignTiles(points, lonCol, latCol, minZoom, maxZoom)
+    baseZoom match {
+      case Some(bz) if bz > minZoom => fanned.filter(Tiling.baseZoomKeep(
+        TextStats.hash60(col(idCol).cast("string")), col("z"), minZoom, bz))
+      case _ => fanned
+    }
   }
 
-  /** The candidate prelude of both polygon builds: shared-border
-    * segments → bbox → flat wire geometry → bbox cover fan-out → the
-    * map-side density cap BEFORE the tile shuffle, like the point path.
+  /** The tiles a polygon feature is a candidate for: one row per
+    * (z, x, y) its bbox covers ([[Geometry.withBbox]] →
+    * [[Geometry.coverTiles]]), with `polygonsCol` dropped.
+    * [[polygonTileFeatures]] refines these rows by clipping and
+    * [[graft.Incremental.featureTileFan]] reads them as the tiles a
+    * changed feature may touch — a superset of the encoded ones.
     */
-  private def polygonCandidates(polys: DataFrame, idCol: String,
-                                polygonsCol: String, minZoom: Int,
-                                maxZoom: Int, importanceCol: Option[String],
-                                budget: Int, sharedBorders: Boolean): DataFrame = {
-    val withShared =
-      if (sharedBorders) Geometry.withSharedSegments(polys, idCol, polygonsCol)
-      else polys.withColumn("shared_segs",
-        typedLit(Seq.empty[Seq[Seq[Double]]]))
-    val withBbox = Geometry.bboxColumns(col(polygonsCol))
-      .foldLeft(withShared) { case (df, (n, c)) => df.withColumn(n, c) }
-    val covered = Geometry.coverTiles(withFlatGeom(withBbox, polygonsCol),
+  private[graft] def polygonTileFan(polys: DataFrame, polygonsCol: String,
+                                    minZoom: Int, maxZoom: Int): DataFrame =
+    Geometry.coverTiles(Geometry.withBbox(polys, polygonsCol).drop(polygonsCol),
       minZoom, maxZoom)
-    Tiling.dropDensest(covered,
-      col(importanceCol.getOrElse(idCol)), col(idCol), budget)
-  }
 
   // -------------------------------------------------------------------
   // Flattened geometry wire format. The per-(tile, feature) rows that
@@ -256,8 +186,9 @@ object TileBuild {
     b.result()
   }
 
-  /** Replace the nested polygons + shared_segs columns with the flat
-    * wire format — applied BEFORE the tile fan-out, so the flattening
+  /** Add the flat wire format of the nested polygons + shared_segs
+    * columns (shared_segs dropped; [[polygonTileFan]] drops the
+    * polygons) — applied BEFORE the tile fan-out, so the flattening
     * runs once per FEATURE and only primitive arrays ride the
     * per-(tile, feature) rows into the shuffle.
     */
@@ -267,10 +198,10 @@ object TileBuild {
         p => transform(p, r => size(r)))))
       .withColumn("poly_sizes", transform(col(polygonsCol), p => size(p)))
       .withColumn("shared_flat", flatten(flatten(col("shared_segs"))))
-      .drop(polygonsCol, "shared_segs")
+      .drop("shared_segs")
 
-  /** The per-(tile, feature) geometry kernel shared by the fused and
-    * split builds: project → simplify → clip → quantize → MVT winding.
+  /** The per-(tile, feature) geometry kernel of [[polygonTileFeatures]]:
+    * project → simplify → clip → quantize → MVT winding.
     * Empty result ⇒ the feature misses this tile.
     *
     * With `sharedSegs` (T3 `--detect-shared-borders` consume half), the
@@ -318,14 +249,33 @@ object TileBuild {
     }
   }
 
-  /** Stage 1 of the polygon build — everything DECADE-INDEPENDENT: bbox
-    * cover fan-out, per-tile simplify/clip/quantize. The reference builds
-    * its base choropleth tileset exactly once and then `tile-join`s each
-    * decade's CSV onto it (`build.sh:139-160` once, `:208-211` per
+  /** Stage 1 of the polygon build — the choropleth half of the
+    * reference's tippecanoe stage (`build.sh:139-160`: mapshaper simplify
+    * → tippecanoe polygon tiles), everything DECADE-INDEPENDENT.
+    * Candidate tiles come from the bbox cover ([[Geometry.coverTiles]],
+    * a pure Generate fan-out), capped map-side at [[FeatureBudget]] per
+    * tile (importance = the id) like the point path; each (tile,
+    * feature) row is then refined: project rings to world pixels,
+    * per-zoom Douglas-Peucker simplify (pixel tolerance is zoom-scaled
+    * for free because pixel space doubles per zoom), Sutherland–Hodgman
+    * clip to the tile square, quantize to the 4096 grid, drop
+    * empty/sliver rings — a feature whose clipped exterior vanishes
+    * misses the tile (bbox-cover false positives on diagonal shapes).
+    *
+    * The reference builds its base choropleth tileset exactly once and
+    * then `tile-join`s each decade's CSV onto it (`:208-211` per
     * decade); persisting this stage's output and re-running only
     * [[encodePolygonTiles]] per decade reproduces that shape — the
     * geometry pipeline (the expensive half) never re-runs.
     *
+    * @param polys         DataFrame with id and a parsed polygons column
+    *                      ([[Geometry.parsePolygons]] layout:
+    *                      polygons→rings→points→[lon,lat])
+    * @param simplifyPx    Douglas-Peucker tolerance in tile pixels (the
+    *                      tippecanoe `--simplification` knob; 0 disables)
+    * @param sharedBorders `--detect-shared-borders`: shared segments are
+    *                      found over THIS frame, so pass the full feature
+    *                      table, before any attribute join
     * @return (z, x, y, density_rank, fid, rings_flat, ring_sizes) —
     *         tile-local integer rings in MVT winding order, flattened
     *         (interleaved x,y + per-ring point counts: the primitive-
@@ -333,14 +283,18 @@ object TileBuild {
     */
   def polygonTileFeatures(polys: DataFrame, idCol: String,
                           polygonsCol: String, minZoom: Int, maxZoom: Int,
-                          importanceCol: Option[String] = None,
-                          budget: Int = 10000,
                           simplifyPx: Double = 1.0,
                           sharedBorders: Boolean = false): DataFrame = {
     val spark = polys.sparkSession
     import spark.implicits._
-    val budgeted = polygonCandidates(polys, idCol, polygonsCol, minZoom,
-      maxZoom, importanceCol, budget, sharedBorders)
+    val withShared =
+      if (sharedBorders) Geometry.withSharedSegments(polys, idCol, polygonsCol)
+      else polys.withColumn("shared_segs",
+        typedLit(Seq.empty[Seq[Seq[Double]]]))
+    val budgeted = Tiling.dropDensest(
+      polygonTileFan(withFlatGeom(withShared, polygonsCol), polygonsCol,
+        minZoom, maxZoom),
+      col(idCol), col(idCol), FeatureBudget)
     val rows = budgeted.select(col("z").cast("int"), col("x"), col("y"),
       col("density_rank"), col(idCol).cast("long").as("fid"),
       col("coords"), col("ring_sizes"), col("poly_sizes"), col("shared_flat"))
@@ -361,18 +315,25 @@ object TileBuild {
       .filter(size(col("rings_flat")) > 0)
   }
 
-  /** Stage 2 — per-decade attribute join + MVT encode: one broadcast-able
-    * join on fid, one groupBy(z,x,y) shuffle, per-group byte-budget fold.
-    * `attrs` = (fid, attrs map); features with no attr row are DROPPED
-    * (tile-join `--if-matched`, `build.sh:208`).
+  /** Stage 2 — MVT encode: one groupBy(z,x,y) shuffle, per-group
+    * byte-budget fold ([[ByteBudget]]); tiles left with zero features
+    * are dropped. The input is [[polygonTileFeatures]]' output plus an
+    * `attrs` map column — the pipeline attaches it with the per-decade
+    * `tile-join --if-matched` join on fid (`build.sh:208`,
+    * [[graft.Pipeline.choroDecadeEncode]]).
+    *
+    * @param coalesce over-budget strategy: true =
+    *                 `--coalesce-smallest-as-needed` (merge attr-identical
+    *                 features, keep coverage — the reference's choropleth
+    *                 setting), false = `--drop-densest-as-needed` prefix
+    *                 drop
+    * @return DataFrame (z, x, y, n_features, tile_bytes)
     */
-  def encodePolygonTiles(tileFeatures: DataFrame, attrs: DataFrame,
-                         layerName: String,
-                         byteBudget: Int = 500 * 1024,
+  def encodePolygonTiles(tileFeatures: DataFrame, layerName: String,
                          coalesce: Boolean = false): DataFrame = {
     val spark = tileFeatures.sparkSession
     import spark.implicits._
-    tileFeatures.join(attrs, Seq("fid"))
+    tileFeatures
       .select(col("z"), col("x"), col("y"), col("density_rank"), col("fid"),
         col("rings_flat"), col("ring_sizes"), col("attrs"))
       .as[(Int, Long, Long, Int, Long, Array[Int], Array[Int], Map[String, String])]
@@ -393,8 +354,8 @@ object TileBuild {
               attrs.toSeq.filter(_._2 != null).sortBy(_._1))
         }
         val (kept, bytes) =
-          if (coalesce) coalesceToByteBudget(layerName, feats, byteBudget)
-          else fitToByteBudget(layerName, feats, byteBudget)
+          if (coalesce) coalesceToByteBudget(layerName, feats, ByteBudget)
+          else fitToByteBudget(layerName, feats, ByteBudget)
         (z, x, y, kept, bytes)
       }
       .toDF("z", "x", "y", "n_features", "tile_bytes")
@@ -487,8 +448,8 @@ object TileBuild {
     * rides on that). Scheme-pluggability is spec-proven offline
     * through a foreign `mock://` filesystem (SchemeFsSpec) — s3a is
     * the same seam with credentials, which the sandbox cannot reach.
-    */
-  /** @param writeMetadata false for IN-PLACE tree updates
+    *
+    * @param writeMetadata false for IN-PLACE tree updates
     *                      ([[graft.Incremental]]): the live tree's
     *                      metadata.json is decade-level and already
     *                      correct — rewriting it from this call's

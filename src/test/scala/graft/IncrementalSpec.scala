@@ -281,6 +281,56 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark {
     assert(!Files.exists(deep), "in-place fallback must wipe the deep leaf")
   }
 
+  test("featureTileFan covers every tile runRegion writes") {
+    // the fan decides which tiles a delta rebuilds: a written tile the
+    // fan misses would never be rebuilt or deleted
+    val csv = writeLong(0 until NCells, bumped = Set.empty)
+    for (region <- Seq("block-groups", "counties")) {
+      val dir = Files.createTempDirectory(s"fan-$region").toString
+      Pipeline.runRegion(spark, csv, "raw", metricLongNames, region,
+        features = Some(features), outDir = Some(dir))
+      val written = md5tree(s"$dir/$region").keySet.map { rel =>
+        val parts = rel.stripSuffix(".pbf").split('/') // decade/z/x/y
+        (parts(1).toInt, parts(2).toLong, parts(3).toLong)
+      }
+      assert(written.nonEmpty, s"$region: runRegion wrote no tiles")
+      val fan = Incremental.featureTileFan(features, region)
+        .select("z", "x", "y").distinct().collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+      val missed = written -- fan
+      assert(missed.isEmpty,
+        s"$region: ${missed.size} written tiles outside the fan, e.g. ${missed.take(5)}")
+    }
+  }
+
+  test("a failed full-rebuild fallback leaves the live tree untouched") {
+    // mass change routes to the fallback; the rebuild then fails while
+    // evaluating the features. The live tree must survive byte for byte
+    // and no staging dir may be left behind.
+    val oldCsv = writeLong(0 until 40, bumped = Set.empty)
+    val newCsv = writeLong(0 until 40, bumped = (0 until 20).toSet) // 50% changed
+    val feats40 = features.filter(
+      org.apache.spark.sql.functions.col("GEOID") < geoid(40))
+    val live = Files.createTempDirectory("incr-crash").toString
+    Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "block-groups",
+      features = Some(feats40), outDir = Some(live))
+    val before = md5tree(s"$live/block-groups")
+    assert(before.nonEmpty)
+    val fault = org.apache.spark.sql.functions.udf { (lon: Double) =>
+      if (lon < 1000.0) throw new IllegalStateException("injected fault") else lon
+    }
+    val broken = feats40.withColumn("lon",
+      fault(org.apache.spark.sql.functions.col("lon")))
+    intercept[Exception] {
+      Incremental.incrementalRegion(spark, oldCsv, newCsv, "raw",
+        metricLongNames, "block-groups", broken, prevDir = live, outDir = live)
+    }
+    assert(md5tree(s"$live/block-groups") == before,
+      "the failed fallback must leave the live tree as it was")
+    val leftovers = new java.io.File(live).list().filterNot(_ == "block-groups")
+    assert(leftovers.isEmpty, s"staging left behind: ${leftovers.mkString(", ")}")
+  }
+
   test("diff plan: map-side partial fingerprints; one id-keyed shuffle per side") {
     val oldCsv = writeLong(0 until 20, bumped = Set.empty)
     val newCsv = writeLong(0 until 20, bumped = Set(3))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -246,8 +247,7 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
       (3L, """{"type":"Point","coordinates":[1,2]}"""))
       .toDF("id", "gj")
     val parsed = rows.select($"id", Geometry.parsePolygons($"gj").as("polys"))
-    val withBbox = Geometry.bboxColumns($"polys")
-      .foldLeft(parsed) { case (df, (n, c)) => df.withColumn(n, c) }
+    val withBbox = Geometry.withBbox(parsed, "polys")
     val m = withBbox.collect().map(r => r.getLong(0) -> r).toMap
     assert(m(1L).getAs[collection.Seq[_]]("polys").length == 1)
     assert(m(2L).getAs[collection.Seq[_]]("polys").length == 2)
@@ -256,13 +256,27 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
       m(2L).getAs[Double]("lon_max") == 9.0)
   }
 
-  test("buildPolygonTiles: clip splits a straddling square; bytes decode back") {
+  /** The one polygon build, as the pipeline's choropleth layer runs it:
+    * geometry stage, the attribute join on fid, then the encode.
+    */
+  private def polygonTiles(df: DataFrame, attrCols: Seq[String],
+                           layer: String, minZoom: Int, maxZoom: Int,
+                           simplifyPx: Double = 1.0,
+                           sharedBorders: Boolean = false): DataFrame = {
+    val attrs = df.select($"id".cast("long").as("fid"),
+      map(attrCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*)
+        .as("attrs"))
+    TileBuild.encodePolygonTiles(TileBuild.polygonTileFeatures(df, "id",
+        "polys", minZoom, maxZoom, simplifyPx, sharedBorders)
+      .join(attrs, Seq("fid")), layer)
+  }
+
+  test("polygon build: clip splits a straddling square; bytes decode back") {
     // square straddling the z1 antimeridian-free center boundary (lon=0)
     val gj = """{"type":"Polygon","coordinates":[[[-45,-40],[45,-40],[45,40],[-45,40],[-45,-40]]]}"""
     val df = Seq((7L, gj, "blue")).toDF("id", "gj", "color")
       .select($"id", Geometry.parsePolygons($"gj").as("polys"), $"color")
-    val tiles = TileBuild.buildPolygonTiles(df, "id", "polys", Seq("color"),
-      "choro", minZoom = 1, maxZoom = 1)
+    val tiles = polygonTiles(df, Seq("color"), "choro", minZoom = 1, maxZoom = 1)
     val got = tiles.collect().map(r =>
       (r.getAs[Int]("z"), r.getAs[Long]("x"), r.getAs[Long]("y"),
         r.getAs[Int]("n_features"), r.getAs[Array[Byte]]("tile_bytes"))).toSeq
@@ -289,15 +303,14 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
       s"tile bytes differ: got ${ne._5.length}B want ${expBytes.length}B")
   }
 
-  test("buildPolygonTiles drops bbox-cover false positives and zero-area tiles") {
+  test("polygon build drops bbox-cover false positives and zero-area tiles") {
     // thin diagonal triangle: bbox covers all four z1 tiles but the
     // geometry only crosses (0,0)/(1,1) quadrants' diagonal; the NE/SW
     // corner tiles get sliver or no coverage after clip+quantize
     val gj = """{"type":"Polygon","coordinates":[[[-170,-80],[170,80],[-170,-79.9],[-170,-80]]]}"""
     val df = Seq((1L, gj)).toDF("id", "gj")
       .select($"id", Geometry.parsePolygons($"gj").as("polys"))
-    val tiles = TileBuild.buildPolygonTiles(df, "id", "polys", Nil, "t", 1, 1,
-      simplifyPx = 0.0)
+    val tiles = polygonTiles(df, Nil, "t", 1, 1, simplifyPx = 0.0)
     val xs = tiles.select("x", "y").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // in y-down tile space the sliver runs from tile (0,1) through a
@@ -306,30 +319,11 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
     assert(xs == Set((0L, 1L), (0L, 0L), (1L, 0L)), s"unexpected tiles $xs")
   }
 
-  test("split geometry+encode path is byte-identical to the fused build") {
-    val gjA = """{"type":"Polygon","coordinates":[[[-45,-40],[45,-40],[45,40],[-45,40],[-45,-40]]]}"""
-    val gjB = """{"type":"Polygon","coordinates":[[[100,10],[140,10],[140,50],[100,50],[100,10]]]}"""
-    val df = Seq((1L, gjA, "red"), (2L, gjB, "blue")).toDF("id", "gj", "color")
-      .select($"id", Geometry.parsePolygons($"gj").as("polys"), $"color")
-    val fused = TileBuild.buildPolygonTiles(df, "id", "polys", Seq("color"),
-      "L", 1, 2).collect()
-    val tf = TileBuild.polygonTileFeatures(df, "id", "polys", 1, 2)
-    val attrs = df.select($"id".cast("long").as("fid"),
-      map(lit("color"), $"color".cast("string")).as("attrs"))
-    val split = TileBuild.encodePolygonTiles(tf, attrs, "L").collect()
-    def asMap(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-      (r.getAs[Int]("z"), r.getAs[Long]("x"), r.getAs[Long]("y")) ->
-        (r.getAs[Int]("n_features"), r.getAs[Array[Byte]]("tile_bytes").toSeq)
-    }.toMap
-    assert(asMap(fused) == asMap(split))
-    assert(fused.nonEmpty)
-  }
-
-  test("buildPolygonTiles encodes holes with opposite winding") {
+  test("polygon build encodes holes with opposite winding") {
     val gj = """{"type":"Polygon","coordinates":[[[-60,-50],[60,-50],[60,50],[-60,50],[-60,-50]],[[-20,-15],[20,-15],[20,15],[-20,15],[-20,-15]]]}"""
     val df = Seq((1L, gj)).toDF("id", "gj")
       .select($"id", Geometry.parsePolygons($"gj").as("polys"))
-    val tiles = TileBuild.buildPolygonTiles(df, "id", "polys", Nil, "t", 0, 0)
+    val tiles = polygonTiles(df, Nil, "t", 0, 0)
     val bytes = tiles.collect()(0).getAs[Array[Byte]]("tile_bytes")
     // replay the per-tile steps on each input ring: z0, origin (0,0)
     def ring(lonLat: Seq[(Double, Double)], ext: Boolean) = {
@@ -410,13 +404,13 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
     // owners -> no gap, no overlap
   }
 
-  test("buildPolygonTiles sharedBorders mode keeps both owners' features") {
+  test("polygon build: sharedBorders mode keeps both owners' features") {
     val a = """{"type":"Polygon","coordinates":[[[-40,-30],[0,-30],[0.4,0],[-0.4,15],[0,30],[-40,30],[-40,-30]]]}"""
     val b = """{"type":"Polygon","coordinates":[[[0,-30],[40,-30],[40,30],[0,30],[-0.4,15],[0.4,0],[0,-30]]]}"""
     val df = Seq((1L, a), (2L, b)).toDF("id", "gj")
       .select($"id", Geometry.parsePolygons($"gj").as("polys"))
-    val tiles = TileBuild.buildPolygonTiles(df, "id", "polys", Nil, "t", 0, 1,
-      simplifyPx = 50.0, sharedBorders = true)
+    val tiles = polygonTiles(df, Nil, "t", 0, 1, simplifyPx = 50.0,
+      sharedBorders = true)
     val z0 = tiles.filter($"z" === 0).collect()
     assert(z0.length == 1 && z0(0).getAs[Int]("n_features") == 2)
   }
