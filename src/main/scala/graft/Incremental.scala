@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.EtlConfig
-import graft.operators.Geometry
+import graft.operators.{ArtifactCache, Geometry}
 import graft.sinks.TileBuild
 import graft.sources.Sources
 
@@ -246,13 +246,7 @@ object Incremental {
         try {
           Pipeline.runRegion(spark, newCsvPath, inputType, metricLongNames,
             region, features = Some(features), outDir = Some(staging.toString))
-          if (outFs.exists(regionDir) && !outFs.rename(regionDir, aside))
-            throw new java.io.IOException(s"cannot move $regionDir aside")
-          if (!outFs.rename(new Path(staging, region), regionDir)) {
-            outFs.rename(aside, regionDir) // put the live tree back, if any
-            throw new java.io.IOException(s"cannot swap in $staging/$region")
-          }
-          outFs.delete(aside, true)
+          ArtifactCache.swapDir(outFs, new Path(staging, region), regionDir, aside)
         } finally outFs.delete(staging, true)
         persistFingerprints()
         return Stats(nChanged, nAdded, nRemoved, -1L, -1L, fullRebuild = true)

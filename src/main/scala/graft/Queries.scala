@@ -109,64 +109,23 @@ object Queries {
   // discretizer. Accuracy vs exact stays spec-pinned
   // (CoreOperatorsSpec "approximate extents stay within 2% of exact
   // quantiles").
-  // _v2: the learn_params provenance column changed the fixture
-  // schema — a bumped dir keeps old-schema subdirs out of the
-  // oracle's read_parquet glob (DuckDB has no union_by_name here; a
-  // mixed-schema glob fails even for the corpus just re-learned).
-  // The repo precedent: pq_codebooks_s16.
-  private val ExtFixtureDir = "/tmp/graft_fixtures/gk_extents_q1q99_v2"
-
-  /** Registry READ path (the loadCodebook discipline): provenance
-    * columns pin the corpus dir — two scale factors could share a row
-    * count with different content — AND the learn hyperparameters
-    * (`params`): a fixture learned under a different k / quantile pair
-    * / sketch accuracy must re-learn, never serve, or a constant
-    * change would silently serve stale cuts that the oracle (applying
-    * the same stale fixture) could not catch. The learn overwrites, so
-    * the oracle — which can only filter by count — always reads the
-    * artifact of the corpus just verified.
-    */
-  private def loadMetricDoubles(s: SparkSession, dir: String, n: Long,
-                                d: String, params: String,
-                                cols: Seq[String])
-      : Option[Seq[org.apache.spark.sql.Row]] =
-    graft.operators.ArtifactCache.parquetFixture(s, s"$dir/$n")
-      .filter(df => df.columns.contains("corpus_dir") &&
-        df.columns.contains("learn_params"))
-      .map(_.where(col("corpus_rows") === n && col("corpus_dir") === d &&
-          col("learn_params") === params)
-        .select(cols.map(col): _*).collect().toSeq)
-      .filter(_.size == extentCols.size) // torn/foreign dir: re-learn
+  private val ExtFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/gk_extents"
 
   private val ExtParams = "lo0.01:hi0.99:acc10000"
 
   private def extentQuantilesArtifact(s: SparkSession, d: String)
-      : Seq[(String, (Double, Double))] = {
-    // one count shared by the load and learn closures (both only run
-    // on a memory miss; the memory-hit path runs zero jobs)
-    var nMemo = -1L
-    def n: Long = {
-      if (nMemo < 0) nMemo = lineitem(s, d).count(); nMemo
-    }
-    // owned protocol: closes the same-JVM A-B-A gap between the
-    // in-memory artifact and the overwrite-on-learn fixture (see
-    // ArtifactCache.getOrLoadOrLearnOwned)
-    graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"extq:$d:$ExtParams", ExtFixtureDir, d) {
-      loadMetricDoubles(s, ExtFixtureDir, n, d, ExtParams,
-          Seq("metric", "q1", "q99"))
-        .map(_.map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2)))
-          .sortBy(_._1))
+      : Seq[(String, (Double, Double))] =
+    graft.operators.ArtifactCache.fixture(s, ExtFixtureDir,
+        s"extq:$d:$ExtParams", "corpus_rows", lineitem(s, d).count()) { dir =>
+      s.read.parquet(dir).select("metric", "q1", "q99").collect().toSeq
+        .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2)))
+        .sortBy(_._1)
     } {
-      val qs = Extents.approxExtentQuantiles(lineitem(s, d), extentCols)
       import s.implicits._
-      qs.map { case (m, (a, b)) => (m, a, b, n, d, ExtParams) }
-        .toDF("metric", "q1", "q99", "corpus_rows", "corpus_dir",
-          "learn_params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$ExtFixtureDir/$n")
-      qs
+      Extents.approxExtentQuantiles(lineitem(s, d), extentCols)
+        .map { case (m, (a, b)) => (m, a, b) }.toDF("metric", "q1", "q99")
+        .coalesce(1)
     }
-  }
 
   def q94ExtentsApprox(s: SparkSession, d: String): DataFrame =
     Extents.extentsWithFixedQuantiles(lineitem(s, d), extentCols,
@@ -413,31 +372,22 @@ object Queries {
   // (one scan, cuts as a broadcast literal, |metrics|·k-key shuffle)
   // and by the DuckDB oracle over the same fixture, hash-checking the
   // whole discretizer application end to end.
-  private val BinFixtureDir = "/tmp/graft_fixtures/gk_bin_cuts_v2"
+  private val BinFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/gk_bin_cuts"
 
   private val BinParams = s"k$BinK:acc10000"
 
   private def binCutsArtifact(s: SparkSession, d: String)
-      : Seq[(String, Seq[Double])] = {
-    var nMemo = -1L
-    def n: Long = {
-      if (nMemo < 0) nMemo = lineitem(s, d).count(); nMemo
-    }
-    graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"bincuts:$d:$BinParams", BinFixtureDir, d) {
-      loadMetricDoubles(s, BinFixtureDir, n, d, BinParams,
-          Seq("metric", "cuts"))
-        .map(_.map(r => r.getString(0) -> r.getSeq[Double](1).toSeq)
-          .sortBy(_._1))
+      : Seq[(String, Seq[Double])] =
+    graft.operators.ArtifactCache.fixture(s, BinFixtureDir,
+        s"bincuts:$d:$BinParams", "corpus_rows", lineitem(s, d).count()) { dir =>
+      s.read.parquet(dir).select("metric", "cuts").collect().toSeq
+        .map(r => r.getString(0) -> r.getSeq[Double](1).toSeq)
+        .sortBy(_._1)
     } {
-      val cuts = Extents.approxBinCuts(lineitem(s, d), extentCols, BinK)
       import s.implicits._
-      cuts.map { case (m, cs) => (m, cs, n, d, BinParams) }
-        .toDF("metric", "cuts", "corpus_rows", "corpus_dir", "learn_params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$BinFixtureDir/$n")
-      cuts
+      Extents.approxBinCuts(lineitem(s, d), extentCols, BinK)
+        .toDF("metric", "cuts").coalesce(1)
     }
-  }
 
   def q116QuantileBinsApprox(s: SparkSession, d: String): DataFrame =
     Extents.binByCuts(lineitem(s, d), extentCols, binCutsArtifact(s, d))

@@ -353,10 +353,10 @@ object QueriesDedup {
       |SELECT doc_id + 500000 AS doc_id, reverse(text) AS text
       |FROM documents WHERE doc_id % 11 = 5""".stripMargin
 
-  private val FpRegistryDir = "/tmp/graft_fixtures/fp_registry"
+  private val FpRegistryDir = s"${graft.operators.ArtifactCache.FixtureRoot}/fp_registry"
   private val IncTau = 0.5
 
-  /** The corpus fingerprint registry through the artifact cache (the
+  /** The corpus fingerprint registry through the fixture registry (the
     * pqResidualCodes protocol): built ONCE per corpus — digest +
     * MinHash signature + LSH buckets per doc, fixed-width rows, no
     * text — persisted as parquet, and every incremental-dedup serving
@@ -364,29 +364,13 @@ object QueriesDedup {
     * from-scratch re-derivation is the load ≡ learn proof.
     */
   private def fpRegistry(s: SparkSession, d: String): DataFrame = {
-    val path = graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"fpreg:$d:3:$NumHashes:$Bands:$RowsPerBand", FpRegistryDir, d) {
-      val n = documents(s, d).count()
-      val p = s"$FpRegistryDir/$n"
-      graft.operators.ArtifactCache.parquetFixture(s, p)
-        .filter(df => df.columns.contains("corpus_dir") &&
-          df.columns.contains("corpus_docs"))
-        .filter(_.where(col("corpus_docs") === n && col("corpus_dir") === d)
-          .limit(1).count() == 1)
-        .map(_ => p)
-    } {
-      val docs = documents(s, d).select("doc_id", "text")
-      val n = docs.count()
-      val p = s"$FpRegistryDir/$n"
-      Dedup.fingerprintRegistry(docs, "text", "doc_id",
-          k = 3, NumHashes, Bands, RowsPerBand)
-        .withColumn("corpus_docs", lit(n))
-        .withColumn("corpus_dir", lit(d))
-        .write.mode("overwrite").parquet(p)
-      p
+    val path = graft.operators.ArtifactCache.fixture(s, FpRegistryDir,
+        s"fpreg:$d:3:$NumHashes:$Bands:$RowsPerBand", "corpus_docs",
+        documents(s, d).count())(identity) {
+      Dedup.fingerprintRegistry(documents(s, d).select("doc_id", "text"),
+        "text", "doc_id", k = 3, NumHashes, Bands, RowsPerBand)
     }
-    s.read.parquet(path).where(col("corpus_dir") === d)
-      .select("doc_id", "text_md5", "sig", "buckets")
+    s.read.parquet(path).select("doc_id", "text_md5", "sig", "buckets")
   }
 
   def q98IncrementalDedup(s: SparkSession, d: String): DataFrame = {

@@ -288,71 +288,41 @@ object QueriesSim {
   private val PqSubDim = 8 // 64 / PqM
   private val PqK = 16
   private val PqIters = 3
-  private val PqFixtureDir = "/tmp/graft_fixtures/pq_codebooks_s16"
+  private val PqFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/pq_codebooks"
 
-  /** Learn the PQ codebook and write its oracle fixture — shared by
-    * q73/q74 so either query is self-sufficient under Verify
-    * (learning is deterministic, so the overwrite is idempotent).
-    * Registered in [[graft.operators.ArtifactCache]]: the codebook is
-    * an immutable function of (corpus, m, K, iters) — learned once per
-    * JVM, the persisted-model-registry pattern.
+  /** (sub, cid, cvec) rows of a persisted codebook; m=1 coarse
+    * codebooks carry no `sub` column and read as sub 0. Row order is
+    * irrelevant to every consumer (they key by (sub, cid)); sorted for
+    * determinism.
     */
-  /** Registry READ path shared by the three PQ fixtures: rebuild the
-    * (sub, cid, cvec) rows from a persisted codebook keyed by this
-    * corpus's size. Row order is semantically irrelevant to every
-    * consumer (they key by (sub, cid)); sorted for determinism.
-    */
-  /** Registry READ path shared by the three PQ fixtures. Besides the
-    * corpus-size key the loader checks the stored `corpus_dir`: two
-    * scale factors can share a row COUNT with different content (the
-    * sf0.001/sf0.01 embeddings both hold 500 vectors), and a
-    * same-count foreign fixture must re-learn, not serve — the learn
-    * then overwrites the fixture, so the oracle (which can only filter
-    * by count) always reads the codebook of the corpus just verified.
-    * `trainRows` pins the TRAINING discipline (Pq.trainCap sample):
-    * a fixture learned under a different sample budget — or before
-    * bounded-sample training existed — must re-learn, keeping
-    * load ≡ learn exact.
-    */
-  private def loadCodebook(s: SparkSession, dir: String, n: Long, d: String,
-                           subCol: Option[String], trainRows: Long)
-      : Option[Seq[(Int, Int, Array[Double])]] =
-    graft.operators.ArtifactCache.parquetFixture(s, s"$dir/$n")
-      // a fixture without the provenance columns predates them: re-learn
-      .filter(df => df.columns.contains("corpus_dir") &&
-        df.columns.contains("train_rows"))
-      .map { df =>
-        df.where(col("corpus_vecs") === n && col("corpus_dir") === d &&
-            col("train_rows") === trainRows)
-          .select(subCol.map(col).getOrElse(lit(0)).as("sub"),
-            col("cid"), col("cvec"))
-          .collect().toSeq
-          .map(r => (r.getInt(0), r.getInt(1),
-            r.getSeq[Double](2).toArray))
-          .sortBy(t => (t._1, t._2))
-      }
-      .filter(_.nonEmpty) // empty frame = torn/foreign dir: re-learn
+  private def codebookRows(s: SparkSession, dir: String)
+      : Seq[(Int, Int, Array[Double])] = {
+    val df = s.read.parquet(dir)
+    df.select((if (df.columns.contains("sub")) col("sub") else lit(0)).as("sub"),
+        col("cid"), col("cvec"))
+      .collect().toSeq
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .sortBy(t => (t._1, t._2))
+  }
 
+  /** The PQ codebook through the fixture registry — shared by q73/q74
+    * so either query is self-sufficient under Verify. An immutable
+    * function of (corpus, m, K, iters) and the `Pq.trainCap` sample
+    * budget, which the key pins: a codebook learned under a different
+    * training discipline re-learns.
+    */
   private def pqCodebook(s: SparkSession, d: String)
-      : Seq[(Int, Int, Array[Double])] =
-    graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"pq:$d:$PqM:$PqK:$PqIters:s${graft.operators.Pq.trainCap(PqK)}",
-        PqFixtureDir, d) {
-      val n = embeddings(s, d).count()
-      loadCodebook(s, PqFixtureDir, n, d, Some("sub"),
-        graft.operators.Pq.trainCap(PqK))
-    } {
-      val emb = embeddings(s, d).select("vec_id", "embedding")
-      val cb = graft.operators.Pq.learnCodebooks(
-        emb, "vec_id", "embedding", PqM, PqK, PqIters)
-      val n = emb.count()
-      val tr = graft.operators.Pq.trainCap(PqK).toLong
+      : Seq[(Int, Int, Array[Double])] = {
+    val tr = graft.operators.Pq.trainCap(PqK)
+    graft.operators.ArtifactCache.fixture(s, PqFixtureDir,
+        s"pq:$d:$PqM:$PqK:$PqIters:s$tr", "corpus_vecs",
+        embeddings(s, d).count())(codebookRows(s, _)) {
       import s.implicits._
-      cb.map { case (sub, cid, v) => (sub, cid, v, n, d, tr) }
-        .toDF("sub", "cid", "cvec", "corpus_vecs", "corpus_dir", "train_rows")
-        .coalesce(1).write.mode("overwrite").parquet(s"$PqFixtureDir/$n")
-      cb
+      graft.operators.Pq.learnCodebooks(embeddings(s, d).select("vec_id", "embedding"),
+          "vec_id", "embedding", PqM, PqK, PqIters)
+        .toDF("sub", "cid", "cvec").coalesce(1)
     }
+  }
 
   def q73PqEncode(s: SparkSession, d: String): DataFrame = {
     val cb = pqCodebook(s, d)
@@ -844,8 +814,8 @@ object QueriesSim {
   // residual against that list's centroid (queryLutBy keyed
   // (qid, ccid)); candidate codes live in exactly one list, so the
   // (qid, ccid, sub, cid) LUT join stays an equi-join.
-  private val PqResidFixtureDir = "/tmp/graft_fixtures/pq_residual_codebooks_s16"
-  private val PqCoarseFixtureDir = "/tmp/graft_fixtures/pq_residual_coarse_s16"
+  private val PqResidFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/pq_residual_codebooks"
+  private val PqCoarseFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/pq_residual_coarse"
 
   /** L2 Lloyd coarse quantizer + oracle fixture (the pqCodebook
     * protocol; m=1 rows stored as (cid, cvec)). The list count is
@@ -861,50 +831,42 @@ object QueriesSim {
 
   private[graft] def pqResidualCoarse(s: SparkSession, d: String)
       : Seq[(Int, Int, Array[Double])] =
-    graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"pqcoarse:$d:derived:$CoarseIters", PqCoarseFixtureDir, d) {
-      val n = embeddings(s, d).count()
-      loadCodebook(s, PqCoarseFixtureDir, n, d, subCol = None,
-        graft.operators.Pq.trainCap(graft.operators.Pq.coarseListCount(n)))
-    } {
-      val emb = embeddings(s, d).select("vec_id", "embedding")
-      val n = emb.count()
-      val k = graft.operators.Pq.coarseListCount(n)
-      val coarse = graft.operators.Pq.coarseQuantizer(
-        emb, "vec_id", "embedding", k, CoarseIters)
-      val tr = graft.operators.Pq.trainCap(k).toLong
+    coarseFixture(s, s"pqcoarse:$d:derived:$CoarseIters",
+      embeddings(s, d).select("vec_id", "embedding"))
+
+  /** An L2 Lloyd coarse quantizer over `vectors` as an m=1 (cid, cvec)
+    * fixture in [[PqCoarseFixtureDir]], keyed by `vectors`' count; the
+    * sidecar stamps the derived training budget.
+    */
+  private def coarseFixture(s: SparkSession, key: String, vectors: DataFrame)
+      : Seq[(Int, Int, Array[Double])] =
+    graft.operators.ArtifactCache.fixture(s, PqCoarseFixtureDir, key,
+        "corpus_vecs", vectors.count(),
+        n => s"train=${graft.operators.Pq.trainCap(
+          graft.operators.Pq.coarseListCount(n))}")(codebookRows(s, _)) {
       import s.implicits._
-      coarse.map { case (_, cid, v) => (cid, v, n, d, tr) }
-        .toDF("cid", "cvec", "corpus_vecs", "corpus_dir", "train_rows")
-        .coalesce(1).write.mode("overwrite").parquet(s"$PqCoarseFixtureDir/$n")
-      coarse
+      graft.operators.Pq.coarseQuantizer(vectors, "vec_id", "embedding",
+          graft.operators.Pq.coarseListCount(vectors.count()), CoarseIters)
+        .map { case (_, cid, v) => (cid, v) }.toDF("cid", "cvec").coalesce(1)
     }
 
   /** Residual PQ codebook + oracle fixture (the pqCodebook protocol
     * applied to the residual frame; keyed by the coarse knobs too).
     */
   private def pqResidualCodebook(s: SparkSession, d: String)
-      : Seq[(Int, Int, Array[Double])] =
-    graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"pqresid:$d:$PqM:$PqK:$PqIters:derived:s${graft.operators.Pq.trainCap(PqK)}",
-        PqResidFixtureDir, d) {
-      val n = embeddings(s, d).count()
-      loadCodebook(s, PqResidFixtureDir, n, d, Some("sub"),
-        graft.operators.Pq.trainCap(PqK))
-    } {
-      val emb = embeddings(s, d).select("vec_id", "embedding")
-      val resid = graft.operators.Pq.residuals(emb, pqResidualCoarse(s, d),
+      : Seq[(Int, Int, Array[Double])] = {
+    val tr = graft.operators.Pq.trainCap(PqK)
+    graft.operators.ArtifactCache.fixture(s, PqResidFixtureDir,
+        s"pqresid:$d:$PqM:$PqK:$PqIters:derived:s$tr", "corpus_vecs",
+        embeddings(s, d).count())(codebookRows(s, _)) {
+      val resid = graft.operators.Pq.residuals(
+        embeddings(s, d).select("vec_id", "embedding"), pqResidualCoarse(s, d),
         "vec_id", "embedding")
-      val cb = graft.operators.Pq.learnCodebooks(
-        resid, "vec_id", "rvec", PqM, PqK, PqIters)
-      val n = emb.count()
-      val tr = graft.operators.Pq.trainCap(PqK).toLong
       import s.implicits._
-      cb.map { case (sub, cid, v) => (sub, cid, v, n, d, tr) }
-        .toDF("sub", "cid", "cvec", "corpus_vecs", "corpus_dir", "train_rows")
-        .coalesce(1).write.mode("overwrite").parquet(s"$PqResidFixtureDir/$n")
-      cb
+      graft.operators.Pq.learnCodebooks(resid, "vec_id", "rvec", PqM, PqK, PqIters)
+        .toDF("sub", "cid", "cvec").coalesce(1)
     }
+  }
 
   /** The persisted residual-PQ INDEX TABLE: (id, ccid, sub, cid) code
     * rows for the whole corpus. Index BUILD (coarse assignment — n·k
@@ -914,42 +876,25 @@ object QueriesSim {
     * measured 11.6× wall at a 10× corpus (n · 4√n lists grows n^1.5);
     * the code table scan is linear.
     */
-  private val PqCodesFixtureDir = "/tmp/graft_fixtures/pq_residual_codes_s16"
+  private val PqCodesFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/pq_residual_codes"
 
   private def pqResidualCodes(s: SparkSession, d: String): DataFrame = {
-    // train_rows provenance rides along: a code table built from
-    // codebooks under a DIFFERENT training discipline must rebuild —
-    // stale codes against a re-learned codebook fixture would be an
-    // index/model version skew
-    val tr = graft.operators.Pq.trainCap(PqK).toLong
-    val path = graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"pqcodesidx:$d:s$tr", PqCodesFixtureDir, d) {
-      val n = embeddings(s, d).count()
-      val p = s"$PqCodesFixtureDir/$n"
-      graft.operators.ArtifactCache.parquetFixture(s, p)
-        .filter(df => df.columns.contains("corpus_dir") &&
-          df.columns.contains("train_rows"))
-        .filter(_.where(col("corpus_vecs") === n && col("corpus_dir") === d &&
-            col("train_rows") === tr)
-          .limit(1).count() == 1)
-        .map(_ => p)
-    } {
-      val emb = embeddings(s, d).select("vec_id", "embedding")
-      val n = emb.count()
-      val resid = graft.operators.Pq.residuals(emb, pqResidualCoarse(s, d),
-        "vec_id", "embedding")
-      val p = s"$PqCodesFixtureDir/$n"
+    // the key's sample budget: a code table built from codebooks under
+    // a DIFFERENT training discipline must rebuild — stale codes against
+    // a re-learned codebook fixture would be an index/model version skew
+    val tr = graft.operators.Pq.trainCap(PqK)
+    val path = graft.operators.ArtifactCache.fixture(s, PqCodesFixtureDir,
+        s"pqcodesidx:$d:s$tr", "corpus_vecs",
+        embeddings(s, d).count())(identity) {
       // assignment + residual + encode compose into ONE shuffle-free
       // projection over the corpus scan — the index build is map-only
-      resid.select(col("vec_id").as("id"), col("ccid"),
+      graft.operators.Pq.residuals(embeddings(s, d).select("vec_id", "embedding"),
+          pqResidualCoarse(s, d), "vec_id", "embedding")
+        .select(col("vec_id").as("id"), col("ccid"),
           posexplode(graft.operators.Pq.encodeCodes(col("rvec"),
-            pqResidualCodebook(s, d))).as(Seq("sub", "cid")),
-          lit(n).as("corpus_vecs"), lit(d).as("corpus_dir"),
-          lit(tr).as("train_rows"))
-        .write.mode("overwrite").parquet(p)
-      p
+            pqResidualCodebook(s, d))).as(Seq("sub", "cid")))
     }
-    s.read.parquet(path).where(col("corpus_dir") === d)
+    s.read.parquet(path).select("id", "ccid", "sub", "cid")
   }
 
   /** Residual IVFADC top-k over the lists each query probes. Probe
@@ -1228,17 +1173,8 @@ object QueriesSim {
   // semantics exactly, so the hash check covers the cap path itself.
   private val SemTau = 0.95
   private val SemCap = 64
-  private val SemClustersDir = "/tmp/graft_fixtures/sem_clusters"
+  private val SemClustersDir = s"${graft.operators.ArtifactCache.FixtureRoot}/sem_clusters"
 
-  /** The persisted CLUSTERING TABLE: (vec_id, cid, embedding) for the
-    * dedup corpus — SemDeDup's own deployment shape (the paper computes
-    * the k-means assignment once and sweeps tau over the stored sorted
-    * clusters). Assignment is the n·k·dim cost — the same class as the
-    * IVF index build, and like it (pqResidualCodes, measured 11.6×
-    * wall at 10× when re-derived per run) it runs ONCE into the
-    * registry; serving reads the table and pays only the bounded pair
-    * stage.
-    */
   /** The clustering table's training-provenance stamp is the COARSE
     * quantizer's actual budget — trainCap(coarseListCount(n_emb)), the
     * discipline [[pqResidualCoarse]] itself trains under — NOT the PQ
@@ -1253,35 +1189,26 @@ object QueriesSim {
     graft.operators.Pq.trainCap(
       graft.operators.Pq.coarseListCount(embeddings(s, d).count())).toLong
 
+  /** The persisted CLUSTERING TABLE: (vec_id, cid, embedding) for the
+    * dedup corpus — SemDeDup's own deployment shape (the paper computes
+    * the k-means assignment once and sweeps tau over the stored sorted
+    * clusters). Assignment is the n·k·dim cost — the same class as the
+    * IVF index build, and like it (pqResidualCodes, measured 11.6×
+    * wall at 10× when re-derived per run) it runs ONCE into the
+    * registry; serving reads the table and pays only the bounded pair
+    * stage.
+    */
   private[graft] def semClusters(s: SparkSession, d: String): DataFrame = {
-    val path = graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"semclusters:$d:$CoarseIters:coarsetrain", SemClustersDir, d) {
-      val tr = semClustersTrainRows(s, d)
-      val n = neardupCorpus(s, d).count()
-      val p = s"$SemClustersDir/$n"
-      graft.operators.ArtifactCache.parquetFixture(s, p)
-        .filter(df => df.columns.contains("corpus_dir") &&
-          df.columns.contains("train_rows"))
-        .filter(_.where(col("corpus_vecs") === n && col("corpus_dir") === d &&
-            col("train_rows") === tr)
-          .limit(1).count() == 1)
-        .map(_ => p)
-    } {
-      val tr = semClustersTrainRows(s, d)
-      val corpus = neardupCorpus(s, d)
-      val n = corpus.count()
-      val p = s"$SemClustersDir/$n"
-      Similarity.assignClusters(corpus,
+    val path = graft.operators.ArtifactCache.fixture(s, SemClustersDir,
+        s"semclusters:$d:$CoarseIters:coarsetrain", "corpus_vecs",
+        neardupCorpus(s, d).count(),
+        _ => s"train=${semClustersTrainRows(s, d)}")(identity) {
+      Similarity.assignClusters(neardupCorpus(s, d),
           pqResidualCoarse(s, d).map { case (_, cid, v) => (cid, v) },
           "vec_id", "embedding")
-        .select(col("vec_id"), col("cid"), col("embedding"),
-          lit(n).as("corpus_vecs"), lit(d).as("corpus_dir"),
-          lit(tr).as("train_rows"))
-        .write.mode("overwrite").parquet(p)
-      p
+        .select("vec_id", "cid", "embedding")
     }
-    s.read.parquet(path).where(col("corpus_dir") === d)
-      .select("vec_id", "cid", "embedding")
+    s.read.parquet(path).select("vec_id", "cid", "embedding")
   }
 
   def q86SemanticDedup(s: SparkSession, d: String): DataFrame =
@@ -1403,43 +1330,30 @@ object QueriesSim {
   private val SqBoostedProbeSql =
     s"(SELECT greatest(2, count(*) // 16) * $SqRefineProbeBoost FROM cent)"
 
-  private val SqRangesFixtureDir = "/tmp/graft_fixtures/sq_ranges"
-  private val SqCodesFixtureDir = "/tmp/graft_fixtures/sq_codes"
+  private val SqRangesFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/sq_ranges"
+  private val SqCodesFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/sq_codes"
 
   /** SQ8 per-dimension ranges through the registry (the pqCodebook
-    * protocol): one row per dimension (pos, mn, span) + provenance.
-    * `train_rows` = the full corpus size — SQ "training" is the EXACT
-    * min/max aggregation, no sampling; the stamp records that
-    * discipline so a future sampled-ranges variant invalidates the
-    * fixture rather than silently serving stale endpoints.
+    * protocol): one row per dimension (pos, mn, span), trained on the
+    * full corpus — SQ "training" is the EXACT min/max aggregation, no
+    * sampling, so the sidecar's row count is the training stamp too.
     */
   private def sqRanges(s: SparkSession, d: String): graft.operators.Sq.Ranges =
-    graft.operators.ArtifactCache.getOrLoadOrLearnOwned(s"sq8:$d",
-        SqRangesFixtureDir, d) {
-      val n = embeddings(s, d).count()
-      graft.operators.ArtifactCache
-        .parquetFixture(s, s"$SqRangesFixtureDir/$n")
-        .filter(df => df.columns.contains("corpus_dir") &&
-          df.columns.contains("train_rows"))
-        .map { df =>
-          df.where(col("corpus_vecs") === n && col("corpus_dir") === d &&
-              col("train_rows") === n)
-            .select("pos", "mn", "span")
-            .collect().sortBy(_.getInt(0)).toSeq
-        }
-        .filter(_.nonEmpty)
-        .map(rows => graft.operators.Sq.Ranges(
-          rows.map(_.getDouble(1)), rows.map(_.getDouble(2))))
+    rangesFixture(s, SqRangesFixtureDir, s"sq8:$d", embeddings(s, d))
+
+  /** SQ8 ranges learned over `vectors` as a fixture keyed by its count. */
+  private def rangesFixture(s: SparkSession, dir: String, key: String,
+                            vectors: DataFrame): graft.operators.Sq.Ranges =
+    graft.operators.ArtifactCache.fixture(s, dir, key, "corpus_vecs",
+        vectors.count()) { p =>
+      val rows = s.read.parquet(p).select("pos", "mn", "span")
+        .collect().sortBy(_.getInt(0)).toSeq
+      graft.operators.Sq.Ranges(rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
     } {
-      val r = graft.operators.Sq.learnRanges(
-        embeddings(s, d).select("embedding"), "embedding")
-      val n = embeddings(s, d).count()
+      val r = graft.operators.Sq.learnRanges(vectors.select("embedding"), "embedding")
       import s.implicits._
-      r.mins.indices.map(i => (i, r.mins(i), r.spans(i), n, d, n))
-        .toDF("pos", "mn", "span", "corpus_vecs", "corpus_dir", "train_rows")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$SqRangesFixtureDir/$n")
-      r
+      r.mins.indices.map(i => (i, r.mins(i), r.spans(i)))
+        .toDF("pos", "mn", "span").coalesce(1)
     }
 
   /** The persisted SQ8 CODE TABLE: (vec_id, codes) for the whole
@@ -1450,36 +1364,16 @@ object QueriesSim {
     * never re-encodes — before r9, q90 re-ran the encode projection
     * over every corpus row on every serving pass (3.7× wall at a 10×
     * corpus, the worst serving ratio in the suite, vs the persisted
-    * PQ family's 1.7× band). `train_rows` carries the ranges'
-    * full-corpus provenance so a codes table built under different
-    * range discipline rebuilds with it.
+    * PQ family's 1.7× band).
     */
   private def sqCodesTable(s: SparkSession, d: String): DataFrame = {
-    val path = graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"sqcodesidx:$d", SqCodesFixtureDir, d) {
-      val n = embeddings(s, d).count()
-      val p = s"$SqCodesFixtureDir/$n"
-      graft.operators.ArtifactCache.parquetFixture(s, p)
-        .filter(df => df.columns.contains("corpus_dir") &&
-          df.columns.contains("train_rows"))
-        .filter(_.where(col("corpus_vecs") === n && col("corpus_dir") === d &&
-            col("train_rows") === n)
-          .limit(1).count() == 1)
-        .map(_ => p)
-    } {
+    val path = graft.operators.ArtifactCache.fixture(s, SqCodesFixtureDir,
+        s"sqcodesidx:$d", "corpus_vecs", embeddings(s, d).count())(identity) {
       val r = sqRanges(s, d)
-      val emb = embeddings(s, d).select("vec_id", "embedding")
-      val n = emb.count()
-      val p = s"$SqCodesFixtureDir/$n"
-      emb.select(col("vec_id"),
-          graft.operators.Sq.encodeCodes(col("embedding"), r).as("codes"),
-          lit(n).as("corpus_vecs"), lit(d).as("corpus_dir"),
-          lit(n).as("train_rows"))
-        .write.mode("overwrite").parquet(p)
-      p
+      embeddings(s, d).select(col("vec_id"),
+        graft.operators.Sq.encodeCodes(col("embedding"), r).as("codes"))
     }
-    s.read.parquet(path).where(col("corpus_dir") === d)
-      .select("vec_id", "codes")
+    s.read.parquet(path).select("vec_id", "codes")
   }
 
   def q88Sq8Encode(s: SparkSession, d: String): DataFrame = {
@@ -1981,45 +1875,18 @@ object QueriesSim {
   private val CompactBaseSql = "vec_id % 2 = 0"
   private val CompactCentCountSql =
     "(SELECT count(*) FROM embeddings WHERE vec_id % 2 = 0)"
-  private val SqMergedFixtureDir = "/tmp/graft_fixtures/sq_merged_idx"
+  private val SqMergedFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/sq_merged_idx"
+  private val SqEvenRangesFixtureDir = s"${graft.operators.ArtifactCache.FixtureRoot}/sq_ranges_even"
 
   private def evenEmb(s: SparkSession, d: String): DataFrame =
     embeddings(s, d).where(col("vec_id") % 2 === 0)
 
   /** Base-half SQ8 ranges — [[sqRanges]]'s protocol keyed to the even
-    * corpus (train_rows = the even count: full-agg discipline on the
-    * base half; the fixture path carries an `even` prefix so it can
-    * never shadow a full-corpus ranges fixture).
+    * corpus (full-agg discipline on the base half), in its own fixture
+    * dir so it can never shadow a full-corpus ranges fixture.
     */
   private def sqEvenRanges(s: SparkSession, d: String): graft.operators.Sq.Ranges =
-    graft.operators.ArtifactCache.getOrLoadOrLearnOwned(s"sq8even:$d",
-        SqRangesFixtureDir, d) {
-      val nE = evenEmb(s, d).count()
-      graft.operators.ArtifactCache
-        .parquetFixture(s, s"$SqRangesFixtureDir/even$nE")
-        .filter(df => df.columns.contains("corpus_dir") &&
-          df.columns.contains("train_rows"))
-        .map { df =>
-          df.where(col("corpus_vecs") === nE && col("corpus_dir") === d &&
-              col("train_rows") === nE)
-            .select("pos", "mn", "span")
-            .collect().sortBy(_.getInt(0)).toSeq
-        }
-        .filter(_.nonEmpty)
-        .map(rows => graft.operators.Sq.Ranges(
-          rows.map(_.getDouble(1)), rows.map(_.getDouble(2))))
-    } {
-      val base = evenEmb(s, d)
-      val r = graft.operators.Sq.learnRanges(
-        base.select("embedding"), "embedding")
-      val nE = base.count()
-      import s.implicits._
-      r.mins.indices.map(i => (i, r.mins(i), r.spans(i), nE, d, nE))
-        .toDF("pos", "mn", "span", "corpus_vecs", "corpus_dir", "train_rows")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$SqRangesFixtureDir/even$nE")
-      r
-    }
+    rangesFixture(s, SqEvenRangesFixtureDir, s"sq8even:$d", evenEmb(s, d))
 
   /** Base-half coarse quantizer — [[pqResidualCoarse]]'s protocol
     * trained on the even corpus; the fixture lands in the SAME
@@ -2029,25 +1896,8 @@ object QueriesSim {
     */
   private def coarseEven(s: SparkSession, d: String)
       : Seq[(Int, Int, Array[Double])] =
-    graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"pqcoarseeven:$d:$CoarseIters", PqCoarseFixtureDir, d) {
-      val nE = evenEmb(s, d).count()
-      loadCodebook(s, PqCoarseFixtureDir, nE, d, subCol = None,
-        graft.operators.Pq.trainCap(graft.operators.Pq.coarseListCount(nE)))
-    } {
-      val base = evenEmb(s, d).select("vec_id", "embedding")
-      val nE = base.count()
-      val k = graft.operators.Pq.coarseListCount(nE)
-      val coarse = graft.operators.Pq.coarseQuantizer(
-        base, "vec_id", "embedding", k, CoarseIters)
-      val tr = graft.operators.Pq.trainCap(k).toLong
-      import s.implicits._
-      coarse.map { case (_, cid, v) => (cid, v, nE, d, tr) }
-        .toDF("cid", "cvec", "corpus_vecs", "corpus_dir", "train_rows")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$PqCoarseFixtureDir/$nE")
-      coarse
-    }
+    coarseFixture(s, s"pqcoarseeven:$d:$CoarseIters",
+      evenEmb(s, d).select("vec_id", "embedding"))
 
   /** The COMPACTED index table: (nid, ccid, codes) for the whole
     * corpus in one registry parquet — base rows encoded/assigned at
@@ -2060,34 +1910,20 @@ object QueriesSim {
     * never joined.
     */
   private[graft] def sqMergedIndex(s: SparkSession, d: String): DataFrame = {
-    val path = graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"sqmergedidx:$d", SqMergedFixtureDir, d) {
-      val n = embeddings(s, d).count()
-      val p = s"$SqMergedFixtureDir/$n"
-      graft.operators.ArtifactCache.parquetFixture(s, p)
-        .filter(df => df.columns.contains("corpus_dir"))
-        .filter(_.where(col("corpus_vecs") === n && col("corpus_dir") === d)
-          .limit(1).count() == 1)
-        .map(_ => p)
-    } {
+    val path = graft.operators.ArtifactCache.fixture(s, SqMergedFixtureDir,
+        s"sqmergedidx:$d", "corpus_vecs", embeddings(s, d).count())(identity) {
       val r = sqEvenRanges(s, d)
       val coarse = coarseEven(s, d)
       val emb = embeddings(s, d).select("vec_id", "embedding")
-      val n = emb.count()
       def half(df: DataFrame): DataFrame =
         df.select(col("vec_id").as("nid"),
           element_at(graft.operators.Pq.encodeCodes(
             col("embedding"), coarse), 1).as("ccid"),
           graft.operators.Sq.encodeCodes(col("embedding"), r).as("codes"))
-      val p = s"$SqMergedFixtureDir/$n"
       half(emb.where(col("vec_id") % 2 === 0))
         .unionByName(half(emb.where(col("vec_id") % 2 =!= 0)))
-        .withColumn("corpus_vecs", lit(n)).withColumn("corpus_dir", lit(d))
-        .write.mode("overwrite").parquet(p)
-      p
     }
-    s.read.parquet(path).where(col("corpus_dir") === d)
-      .select("nid", "ccid", "codes")
+    s.read.parquet(path).select("nid", "ccid", "codes")
   }
 
   /** The compacted-registry serving pipeline, parameterized by the
@@ -2345,34 +2181,17 @@ object QueriesSim {
   // end to end. Output shape matches q86: (vec_id, cid, kept), cid
   // now the refined cid₁·2²⁰+sub id.
   private val SemTargetOcc = 16
-  private val SemRefinedDir = "/tmp/graft_fixtures/sem_refined"
+  private val SemRefinedDir = s"${graft.operators.ArtifactCache.FixtureRoot}/sem_refined"
 
   private[graft] def semRefined(s: SparkSession, d: String): DataFrame = {
-    val path = graft.operators.ArtifactCache.getOrLoadOrLearnOwned(
-        s"semrefined:$d:$SemTargetOcc:$CoarseIters", SemRefinedDir, d) {
-      val n = neardupCorpus(s, d).count()
-      val p = s"$SemRefinedDir/$n"
-      graft.operators.ArtifactCache.parquetFixture(s, p)
-        .filter(df => df.columns.contains("corpus_dir") &&
-          df.columns.contains("target_occ"))
-        .filter(_.where(col("corpus_vecs") === n && col("corpus_dir") === d &&
-            col("target_occ") === SemTargetOcc)
-          .limit(1).count() == 1)
-        .map(_ => p)
-    } {
-      val base = semClusters(s, d)
-      val n = base.count()
-      val p = s"$SemRefinedDir/$n"
-      Similarity.subClusterAssignment(base, "vec_id", "embedding",
+    val path = graft.operators.ArtifactCache.fixture(s, SemRefinedDir,
+        s"semrefined:$d:$SemTargetOcc:$CoarseIters", "corpus_vecs",
+        neardupCorpus(s, d).count())(identity) {
+      Similarity.subClusterAssignment(semClusters(s, d), "vec_id", "embedding",
           SemTargetOcc)
-        .select(col("vec_id"), col("cid"), col("embedding"),
-          lit(n).as("corpus_vecs"), lit(d).as("corpus_dir"),
-          lit(SemTargetOcc).as("target_occ"))
-        .write.mode("overwrite").parquet(p)
-      p
+        .select("vec_id", "cid", "embedding")
     }
-    s.read.parquet(path).where(col("corpus_dir") === d)
-      .select("vec_id", "cid", "embedding")
+    s.read.parquet(path).select("vec_id", "cid", "embedding")
   }
 
   def q118SemDedupRefined(s: SparkSession, d: String): DataFrame = {
@@ -2390,8 +2209,7 @@ object QueriesSim {
        |assigned AS (
        | SELECT vec_id, cid
        | FROM read_parquet('$SemRefinedDir/*/*.parquet')
-       | WHERE corpus_vecs = (SELECT count(*) FROM corpus)
-       |   AND target_occ = $SemTargetOcc),
+       | WHERE corpus_vecs = (SELECT count(*) FROM corpus)),
        |anch AS (
        | SELECT cid, vec_id FROM (
        |  SELECT cid, vec_id,

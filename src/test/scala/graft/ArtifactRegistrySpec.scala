@@ -1,5 +1,12 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ArtifactCache
@@ -8,9 +15,15 @@ import graft.operators.ArtifactCache
   * table, PQ codebooks) written as parquet fixtures must SERVE a
   * cold-cache consumer — the cross-JVM read path — with zero learning
   * jobs, and the loaded artifact must drive results identical to the
-  * learned one (learning is deterministic, so load ≡ learn).
+  * learned one (learning is deterministic, so load ≡ learn). Each
+  * fixture dir's `_key` sidecar is what every access checks, so a
+  * same-count overwrite — from this JVM or another — is always seen,
+  * and a failed publish never touches the live dir.
   */
 class ArtifactRegistrySpec extends AnyFunSuite with SharedSpark {
+  import spark.implicits._
+
+  private def fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
 
   test("fixture-present cold cache serves q69/q73 without learning; load == learn") {
     val d = "/root/testdata/sf0.001"
@@ -57,20 +70,26 @@ class ArtifactRegistrySpec extends AnyFunSuite with SharedSpark {
     assert(a.toSeq == b.toSeq, "table-served dedup must equal the built one")
   }
 
-  test("owned protocol: a same-rowcount corpus alternation re-learns instead of serving stale memory") {
-    // two corpora with IDENTICAL lineitem row counts but different
-    // content/dirs — the on-disk fixture subdir (keyed by count)
-    // collides, which is exactly the A-B-A case the owner map closes:
-    // after B's learn overwrites A's fixture, A's next access must
-    // invalidate its memory hit and restore its own fixture (the
-    // oracle globs the fixture by count and would otherwise read B's)
+  /** Two lineitem copies with IDENTICAL row counts but different
+    * content/dirs: their count-keyed fixture dirs collide on disk.
+    */
+  private def sameCountCorpora(): (String, String) = {
     val base = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    val dirA = java.nio.file.Files.createTempDirectory("aba_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("aba_b").toString
+    val dirA = Files.createTempDirectory("aba_a").toString
+    val dirB = Files.createTempDirectory("aba_b").toString
     base.write.mode("overwrite").parquet(s"$dirA/lineitem.parquet")
-    base.withColumn("l_quantity",
-        org.apache.spark.sql.functions.col("l_quantity") + 1.0)
+    base.withColumn("l_quantity", col("l_quantity") + 1.0)
       .write.mode("overwrite").parquet(s"$dirB/lineitem.parquet")
+    (dirA, dirB)
+  }
+
+  private val BinCutsDir = s"${ArtifactCache.FixtureRoot}/gk_bin_cuts"
+
+  test("a same-rowcount corpus alternation re-learns instead of serving stale memory") {
+    // after B's learn overwrites A's fixture, A's next access must
+    // notice the sidecar mismatch and restore its own fixture (the
+    // oracle globs the fixture by count and would otherwise read B's)
+    val (dirA, dirB) = sameCountCorpora()
     val q = SparkEntry.queries("q116_quantile_bins_approx")
     val a1 = q(spark, dirA).collect().toSeq
     val learnsAfterA = ArtifactCache.learnCount
@@ -81,7 +100,7 @@ class ArtifactRegistrySpec extends AnyFunSuite with SharedSpark {
     // B learns (same row count, different dir) and overwrites the fixture
     val b1 = q(spark, dirB).collect().toSeq
     assert(b1 != a1, "the nudged corpus must bin differently")
-    // A again: the owner mismatch must force a re-learn that restores
+    // A again: the sidecar mismatch must force a re-learn that restores
     // A's fixture — identical output, learnCount strictly up
     val learnsBeforeA2 = ArtifactCache.learnCount
     val a2 = q(spark, dirA).collect().toSeq
@@ -90,38 +109,82 @@ class ArtifactRegistrySpec extends AnyFunSuite with SharedSpark {
       "the foreign overwrite must invalidate A's memory hit")
   }
 
-  test("owned protocol: an owner flip evicts ALL key families of the fixture dir") {
-    // some fixture dirs host multiple key families (sq8/sq8even,
-    // pqcoarse/pqcoarseeven). The A-B-A hazard: B's overwrite is
-    // noticed by family 1's access (owner flips B→A, family 1
-    // re-learns), but if only the CALLER's key were evicted, family
-    // 2's next access would see a matching owner and serve A's stale
-    // memory value against B's on-disk fixture. The owner flip must
-    // evict every key ever registered under the dir.
-    val dir = s"memdir://multifam-${System.nanoTime()}"
+  test("a foreign-JVM overwrite of the fixture dir is seen on the next memory hit") {
+    val (dirA, dirB) = sameCountCorpora()
+    val n = spark.read.parquet(s"$dirA/lineitem.parquet").count()
+    val live = new File(s"$BinCutsDir/$n")
+    // what the DuckDB oracle reads for a corpus of n rows
+    def oracleCuts(): Seq[String] =
+      spark.read.parquet(s"$BinCutsDir/*/*.parquet")
+        .where(col("corpus_rows") === n)
+        .select(col("metric"), col("cuts").cast("string"))
+        .collect().map(r => s"${r.getString(0)}:${r.getString(1)}").sorted.toSeq
+    val q = SparkEntry.queries("q116_quantile_bins_approx")
+    q(spark, dirB).collect()
+    val cutsB = oracleCuts()
+    val copyB = Files.createTempDirectory("fixture_b").toFile
+    FileUtils.copyDirectory(live, copyB)
+    ArtifactCache.clear()
+    val a1 = q(spark, dirA).collect().toSeq
+    val cutsA = oracleCuts()
+    assert(cutsA != cutsB, "A and B must learn different cuts")
+    // another JVM republishes B's fixture behind this cache's back
+    FileUtils.deleteDirectory(live)
+    FileUtils.copyDirectory(copyB, live)
+    assert(q(spark, dirA).collect().toSeq == a1)
+    assert(oracleCuts() == cutsA,
+      "serving A must leave A's cuts where the oracle reads them")
+  }
+
+  test("a foreign write into one key's fixture dir re-learns that key only") {
+    val fx = s"${ArtifactCache.FixtureRoot}/spec_${System.nanoTime()}"
     var gen = 0
-    def access(key: String, owner: String): String = {
-      gen += 1
-      val fresh = s"$key-$owner-g$gen" // unique per actual learn
-      ArtifactCache.getOrLoadOrLearnOwned[String](key, dir, owner)(None)(fresh)
+    def access(key: String, n: Long): String =
+      ArtifactCache.fixture(spark, fx, key, "n", n)(
+          dir => spark.read.parquet(dir).head().getString(0)) {
+        gen += 1
+        Seq(s"$key-g$gen").toDF("v").coalesce(1)
+      }
+    try {
+      val k1 = access("K1", 1)
+      val k2 = access("K2", 2)
+      val learns = ArtifactCache.learnCount
+      assert(access("K1", 1) == k1 && access("K2", 2) == k2)
+      assert(ArtifactCache.learnCount == learns, "steady state serves from memory")
+      // another JVM publishes a different artifact into K2's dir
+      ArtifactCache.publish(fs, new Path(ArtifactCache.FixtureRoot),
+          new Path(s"$fx/2"), "foreign") { tmp =>
+        Seq("foreign").toDF("v").write.parquet(tmp.toString)
+      }
+      assert(access("K1", 1) == k1)
+      assert(ArtifactCache.learnCount == learns, "K1's dir is untouched: no learn")
+      val k2b = access("K2", 2)
+      assert(k2b != k2 && k2b.startsWith("K2-"), "K2 must re-learn its own artifact")
+      assert(ArtifactCache.learnCount == learns + 1)
+    } finally FileUtils.deleteDirectory(new File(fx))
+  }
+
+  test("a publish whose build throws mid-write leaves the live fixture and .tmp untouched") {
+    val root = Files.createTempDirectory("fixture_root").toFile
+    val live = new Path(s"$root/art/7")
+    def md5s(dir: File): Map[String, String] =
+      dir.listFiles().map(f => f.getName ->
+        DigestUtils.md5Hex(Files.readAllBytes(f.toPath))).toMap
+    ArtifactCache.publish(fs, new Path(root.toString), live, "k1") { tmp =>
+      spark.range(0, 100, 1, 4).write.parquet(tmp.toString)
     }
-    val f1a = access("fam1", "A")
-    val f2a = access("fam2", "A")
-    // steady state: same owner serves from memory
-    assert(access("fam1", "A") == f1a)
-    assert(access("fam2", "A") == f2a)
-    // B arrives via family 1 ONLY — the flip must also evict fam2
-    val f1b = access("fam1", "B")
-    assert(f1b != f1a, "owner flip must re-learn the touched family")
-    // A returns via family 1 (owner flips back to A)
-    val f1a2 = access("fam1", "A")
-    assert(f1a2 != f1b)
-    // family 2 now sees a MATCHING owner — it must still have been
-    // evicted at one of the two flips, not served stale from A's era
-    val f2a2 = access("fam2", "A")
-    assert(f2a2 != f2a,
-      "family 2 must re-learn after the dir's owner flipped, not serve " +
-        "the pre-flip memory value")
+    val before = md5s(new File(live.toString))
+    assert(before.contains("_key"))
+    val boom = udf((i: Long) => if (i == 77) throw new IllegalStateException("boom") else i)
+    intercept[Exception] {
+      ArtifactCache.publish(fs, new Path(root.toString), live, "k2") { tmp =>
+        spark.range(0, 100, 1, 4).select(boom(col("id")).as("id"))
+          .write.parquet(tmp.toString)
+      }
+    }
+    assert(md5s(new File(live.toString)) == before)
+    assert(new File(s"$root/.tmp").list().isEmpty, "no staging dir may survive")
+    FileUtils.deleteDirectory(root)
   }
 
   test("the GK extent/bin-cut fixtures serve q94/q116 cold (r14 registry artifacts)") {

@@ -17,9 +17,10 @@ import graft.functions.BpeTable
   * re-pair with its neighbor).
   *
   * The learner here is a PURE independent reimplementation of
-  * `Bpe.learnMerges`'s contract (same pair weighting, same
-  * count-desc/left-asc/right-asc tie-break, same min-pair-count stop)
-  * — a test oracle, deliberately not sharing code with the operator.
+  * `Bpe.learnMerges`'s contract (same vocabulary cap, same pair
+  * weighting, same count-desc/left-asc/right-asc tie-break, same
+  * min-pair-count stop) — a test oracle, deliberately not sharing code
+  * with the operator; BpeSpec checks the learner against it.
   */
 object BpeProperties extends Properties("bpe") {
 
@@ -40,29 +41,45 @@ object BpeProperties extends Properties("bpe") {
       else acc :+ s
     }
 
-  private def pureLearn(words: List[String], numMerges: Int)
+  /** UTF-8 byte order (Spark's string order) as a String key. */
+  private def bytes(s: String): String =
+    new String(s.getBytes("UTF-8"), "ISO-8859-1")
+
+  /** `learnMerges` over a (word → cnt) table: vocabulary capped to the
+    * `maxVocab` words by (cnt desc, word asc); each step merges the
+    * pair of highest cnt-weighted count (ties: left asc, right asc),
+    * folded greedily left to right; stops below `minPairCount`.
+    */
+  private[graft] def pureLearn(counts: Map[String, Long], numMerges: Int,
+      maxVocab: Int = Int.MaxValue, minPairCount: Long = 2L)
       : List[(String, String)] = {
-    val counts = words.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    var syms: Map[String, List[String]] =
-      counts.keys.map(w => w -> w.map(_.toString).toList).toMap
+    var vocab: Seq[(Long, List[String])] = counts.toSeq
+      .sortBy { case (w, c) => (-c, bytes(w)) }.take(maxVocab)
+      .map { case (w, c) =>
+        (c, w.codePoints().toArray.map(cp => new String(Array(cp), 0, 1)).toList)
+      }
     val out = scala.collection.mutable.ListBuffer.empty[(String, String)]
     var stop = false
     for (_ <- 1 to numMerges if !stop) {
       val pairCounts = scala.collection.mutable.Map.empty[(String, String), Long]
-      for ((w, s) <- syms; Seq(a, b) <- s.sliding(2) if s.length >= 2)
-        pairCounts((a, b)) = pairCounts.getOrElse((a, b), 0L) + counts(w)
+      for ((c, s) <- vocab; Seq(a, b) <- s.sliding(2) if s.length >= 2)
+        pairCounts((a, b)) = pairCounts.getOrElse((a, b), 0L) + c
       if (pairCounts.isEmpty) stop = true
       else {
-        val ((l, r), c) = pairCounts.minBy { case ((l, r), c) => (-c, l, r) }
-        if (c < 2) stop = true
+        val ((l, r), c) = pairCounts.minBy { case ((l, r), c) =>
+          (-c, bytes(l), bytes(r)) }
+        if (c < minPairCount) stop = true
         else {
           out += ((l, r))
-          syms = syms.map { case (w, s) => w -> foldApply(s, l, r) }
+          vocab = vocab.map { case (c, s) => (c, foldApply(s, l, r)) }
         }
       }
     }
     out.toList
   }
+
+  private def pureLearn(words: List[String], numMerges: Int): List[(String, String)] =
+    pureLearn(words.groupBy(identity).view.mapValues(_.size.toLong).toMap, numMerges)
 
   property("priority encoder == rank-order exhaustive fold on every learned word") =
     forAll(corpusGen) { words =>

@@ -37,6 +37,31 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
     assert(a.nonEmpty && a.map(_.rank) == (1 to a.length))
   }
 
+  test("learnMerges == a brute-force recompute, step by step (hand corpus, sf0.001)") {
+    def check(wc: org.apache.spark.sql.DataFrame, numMerges: Int,
+              maxVocab: Int = 65536, minPairCount: Long = 2L)
+        : List[(String, String)] = {
+      val counts = wc.select("word", "cnt").as[(String, Long)].collect().toMap
+      val want = BpeProperties.pureLearn(counts, numMerges, maxVocab, minPairCount)
+      val got = Bpe.learnMerges(wc, numMerges, maxVocab, minPairCount)
+      assert(got.map(m => (m.left, m.right)) == want)
+      assert(got.map(_.rank) == (1 to got.size))
+      want
+    }
+    // the cap keeps aaab/abab (cnt 4, word asc) and drops baba/bbbb/cab
+    val hand = Seq(("aaab", 4L), ("abab", 4L), ("baba", 4L), ("bbbb", 1L),
+      ("cab", 2L)).toDF("word", "cnt")
+    // (a,b)=12 → [a,a,ab],[ab,ab]: (a,a)=(a,ab)=(ab,ab)=4, right asc
+    // picks (a,a) → [aa,ab],[ab,ab] → (aa,ab) → (ab,ab) → no pairs
+    assert(check(hand, 10, maxVocab = 2) ==
+      List(("a", "b"), ("a", "a"), ("aa", "ab"), ("ab", "ab")))
+    assert(check(hand, 10, maxVocab = 2, minPairCount = 5) == List(("a", "b")))
+    assert(check(hand, 10).nonEmpty) // uncapped: all five words
+    val docs = Bpe.wordCounts(Tables.documents(spark, "/root/testdata/sf0.001"), "text")
+    assert(check(docs, QueriesBpe.NumMerges).size == QueriesBpe.NumMerges)
+    assert(check(docs, 12, maxVocab = 40).nonEmpty)
+  }
+
   test("encoder == learner final state on every vocabulary word") {
     // the equivalence the oracle protocol rests on: the priority
     // encoder (leftmost lowest-rank pair repeatedly) must reproduce

@@ -177,6 +177,48 @@ class ExtensionOperatorsSpec extends AnyFunSuite with SharedSpark {
     assert(low.size == 1 && high.size == 1 && low != high)
   }
 
+  test("PQ learn: iters = t + 1 is one brute-force Lloyd step on the iters = t codebook") {
+    import graft.operators.Pq
+    val (m, k) = (8, 16)
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select("vec_id", "embedding")
+    // the id-ordered trainCap(k) sample the learner trains on
+    val sample = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Long, Seq[Double])].collect().sortBy(_._1)
+      .take(Pq.trainCap(k)).map(_._2.toArray)
+    val subDim = sample.head.length / m
+    def round6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def l2sq(a: Array[Double], b: Array[Double]): Double =
+      a.indices.foldLeft(0.0)((acc, i) => acc + (a(i) - b(i)) * (a(i) - b(i)))
+    // assign each sample subvector to its round-6 L2² argmin (lowest
+    // cid on ties), then mean each cluster in sample order; an empty
+    // cluster keeps its centroid
+    def lloydStep(cents: Map[(Int, Int), Array[Double]]) =
+      (0 until m).flatMap { s =>
+        val subs = sample.map(_.slice(s * subDim, (s + 1) * subDim))
+        val owner = subs.map(v =>
+          (0 until k).minBy(c => (round6(l2sq(v, cents((s, c)))), c)))
+        (0 until k).map { c =>
+          val members = subs.indices.filter(owner(_) == c).map(subs)
+          (s, c) -> (if (members.isEmpty) cents((s, c))
+            else members.foldLeft(new Array[Double](subDim))((acc, v) =>
+              acc.indices.map(i => acc(i) + v(i)).toArray).map(_ / members.size))
+        }
+      }.toMap
+    def learned(iters: Int) =
+      Pq.learnCodebooks(emb, "vec_id", "embedding", m, k, iters)
+        .map { case (s, c, v) => (s, c) -> v }.toMap
+    def bits(cb: Map[(Int, Int), Array[Double]]) =
+      cb.view.mapValues(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toMap
+    for (t <- 0 to 2) {
+      val prev = learned(t)
+      val next = learned(t + 1)
+      assert(bits(next) == bits(lloydStep(prev)), s"iters=${t + 1}")
+      assert(bits(next) != bits(prev), s"iters=${t + 1} must move a centroid")
+    }
+  }
+
   test("PQ map-side encoder is bit-identical to the join+window path") {
     import graft.operators.Pq
     val rnd = new scala.util.Random(23)
