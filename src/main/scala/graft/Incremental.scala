@@ -1,7 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.EtlConfig
@@ -43,7 +45,12 @@ import graft.sources.Sources
   *    215k of 217k cells "contributing" to a 217-cell delta);
   *  - the pivot runs over the contributor subset only; unchanged
   *    tiles never re-encode, their bytes stream from the previous
-  *    tree ([[readPbfTree]], a splittable binaryFile scan).
+  *    tree ([[readPbfTree]], a splittable binaryFile scan);
+  *  - every input is derived once: the new snapshot, its fingerprints
+  *    and the features are each checked out by one job and read back
+  *    from there; the affected tiles and the contributor GEOIDs are
+  *    driver-local sets (one collect each), bounded by
+  *    `maxChangedFraction`, fed back as local frames.
   *
   * Geometry changes are out of scope by design: the census shape
   * tables the reference tiles change once a decade — a geometry delta
@@ -135,12 +142,11 @@ object Incremental {
     val bubbleFan = TileBuild.pointTileFan(pts, "fid", "lon", "lat",
         bz.minZoom, bz.maxZoom, Some(bz.baseZoom))
       .select(col("GEOID"), col("z").cast("int").as("z"), col("x"), col("y"))
-    val choroFan = if (features.columns.contains("polys"))
-      TileBuild.polygonTileFan(features.select(col("GEOID"), col("polys")),
-          "polys", cz.minZoom, cz.maxZoom)
-        .select(col("GEOID"), col("z").cast("int").as("z"), col("x"), col("y"))
-    else bubbleFan.limit(0)
-    bubbleFan.unionByName(choroFan).distinct()
+    if (!features.columns.contains("polys")) bubbleFan.distinct()
+    else bubbleFan.unionByName(TileBuild.polygonTileFan(
+        features.select(col("GEOID"), col("polys")), "polys", cz.minZoom, cz.maxZoom)
+      .select(col("GEOID"), col("z").cast("int").as("z"), col("x"), col("y")))
+      .distinct()
   }
 
   /** Read a written pbf tree back as (z, x, y, tile_bytes) — the
@@ -156,6 +162,31 @@ object Incremental {
         regexp_extract(col("path"), re, 2).cast("long").as("x"),
         regexp_extract(col("path"), re, 3).cast("long").as("y"),
         col("content").as("tile_bytes"))
+  }
+
+  /** Publish a fingerprint frame as `regionDir/fingerprints.parquet`,
+    * crash-safe: it is written into a hidden staging sibling and swapped
+    * in ([[ArtifactCache.swapDir]]). A failed write deletes the staging
+    * dir and leaves the previous artifact as it was.
+    */
+  private[graft] def publishFingerprints(fs: FileSystem, fps: DataFrame,
+                                         regionDir: Path): Unit = {
+    val tag = java.util.UUID.randomUUID()
+    val staging = new Path(regionDir, s".fingerprints.$tag.staging")
+    try {
+      fps.write.parquet(staging.toString)
+      ArtifactCache.swapDir(fs, staging, new Path(regionDir, "fingerprints.parquet"),
+        new Path(regionDir, s".fingerprints.$tag.old"))
+    } finally fs.delete(staging, true)
+  }
+
+  /** A small frame collected to the driver, and fed back as a local
+    * frame: its exact size plans broadcast joins, and its consumers
+    * re-plan nothing upstream of it.
+    */
+  private def collectLocal(df: DataFrame): (Array[Row], DataFrame) = {
+    val rows = df.collect()
+    (rows, df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema))
   }
 
   /** Rebuild only what changed between `oldCsvPath` and `newCsvPath`,
@@ -177,7 +208,10 @@ object Incremental {
                         maxChangedFraction: Double = 0.3): Stats = {
     val schema = Sources.longSchema(metricLongNames)
     val oldLong = Sources.readCsv(spark, oldCsvPath, schema)
+    // the new snapshot is read ONCE: this checkout feeds both the
+    // fingerprints and the contributor pivot
     val newLong = Sources.readCsv(spark, newCsvPath, schema)
+      .localCheckpoint(eager = true)
     // diff against the PREVIOUS run's stored fingerprint artifact when
     // it exists — the old corpus never re-scans (at 100 TB that scan
     // is most of the diff's cost); cold path hashes the old CSV once
@@ -199,39 +233,39 @@ object Incremental {
       val fpPath = new Path(s"$prevDir/$region/fingerprints.parquet")
       val oldFps = if (prevFs.exists(fpPath)) spark.read.parquet(fpPath.toString)
         else fingerprints(oldLong)
-      val newFps = fingerprints(newLong)
-      // localCheckpoint, not persist: the new fingerprints OVERWRITE the
-      // stored artifact below (in-place mode shares the dir), and a
-      // cache-evicted lineage replay would re-read the overwritten file
+      // one materialized copy serves the diff, the GEOID count and the
+      // publish of the next delta's artifact
+      val newFps = fingerprints(newLong).localCheckpoint(eager = true)
+      // localCheckpoint, not persist: the publish below swaps the stored
+      // artifact out (in-place mode shares the dir), and a cache-evicted
+      // lineage replay would re-read a deleted file
       val diff = diffFingerprints(oldFps, newFps).localCheckpoint(eager = true)
       val byStatus = diff.groupBy("status").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val (nChanged, nAdded, nRemoved) = (byStatus.getOrElse("changed", 0L),
         byStatus.getOrElse("added", 0L), byStatus.getOrElse("removed", 0L))
-      val nTotal = newLong.select("id").distinct().count()
+      val nTotal = newFps.count()
       // a previous run that EXTENDED past the configured fan maxZoom
       // (`--extend-zooms-if-still-dropping` on dense point regions)
       // wrote deeper tiles than [[featureTileFan]] covers: affected deep
       // tiles would be neither rebuilt nor deleted — a silently
       // corrupted tree. Detect the condition from the tree's own
       // deepest z directory and route to the full rebuild instead.
+      val hasPolys = features.columns.contains("polys")
       val fanMaxZ = {
         val bz = EtlConfig.bubbleZoom(region).maxZoom
-        if (features.columns.contains("polys"))
-          math.max(bz, EtlConfig.choroplethZoom(region).maxZoom)
+        if (hasPolys) math.max(bz, EtlConfig.choroplethZoom(region).maxZoom)
         else bz
       }
       val treeDeeperThanFan =
         treeMaxZoom(prevFs, new Path(s"$prevDir/$region")) > fanMaxZ
-      // the NEW fingerprints persist for the next delta at the END of
+      // the NEW fingerprints publish for the next delta at the END of
       // each path (after the fallback's swap, after the in-place
-      // updates) — newFps derives from the new CSV, so writing it late
-      // is always safe, and diff is already checkpoint-materialized
-      def persistFingerprints(): Unit = newFps.write.mode("overwrite")
-        .parquet(s"$outDir/$region/fingerprints.parquet")
+      // updates) — newFps is a checkout, so writing it late reads
+      // nothing either path replaced
+      val regionDir = new Path(s"$outDir/$region")
       if (nTotal == 0 || treeDeeperThanFan ||
           (nChanged + nAdded + nRemoved).toDouble / nTotal > maxChangedFraction) {
-        diff.unpersist()
         // a fresh tree replaces the whole region subtree (the reference's
         // own `rm -rf _proc` semantics — an overwrite-only rebuild would
         // leave STALE tiles for (z,x,y)s the new data no longer produces),
@@ -241,29 +275,37 @@ object Incremental {
         // deletes the staging dir and leaves the live tree as it was.
         val tag = java.util.UUID.randomUUID()
         val staging = new Path(s"$outDir/.$region.$tag.staging")
-        val regionDir = new Path(s"$outDir/$region")
         val aside = new Path(s"$outDir/.$region.$tag.old")
         try {
           Pipeline.runRegion(spark, newCsvPath, inputType, metricLongNames,
             region, features = Some(features), outDir = Some(staging.toString))
           ArtifactCache.swapDir(outFs, new Path(staging, region), regionDir, aside)
         } finally outFs.delete(staging, true)
-        persistFingerprints()
+        publishFingerprints(outFs, newFps, regionDir)
         return Stats(nChanged, nAdded, nRemoved, -1L, -1L, fullRebuild = true)
       }
 
-      val fan = featureTileFan(features, region)
+      // one checkout of the features serves the fan, the edge-neighbour
+      // segments and both decades' tile builds; unlike persist, it never
+      // touches a cache the caller owns
+      val feats = features.localCheckpoint(eager = true)
+      val fan = featureTileFan(feats, region)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val touched = diff.select(col("GEOID"))
-      val affectedTiles = fan.join(touched, Seq("GEOID"), "left_semi")
-        .select("z", "x", "y").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // the bookkeeping sets live on the driver, SIZED BY CONTRACT, not
+      // by the tileset: |affected| = delta GEOIDs × per-feature tile
+      // fan-out, |contributors| = their renderers and edge-neighbours,
+      // and the delta path only runs when the changed fraction is under
+      // maxChangedFraction — a full-churn "delta" routed to the full
+      // rebuild above before reaching here
+      val (affectedRows, affectedTiles) = collectLocal(
+        fan.join(diff.select(col("GEOID")), Seq("GEOID"), "left_semi")
+          .select("z", "x", "y").distinct())
       // renderers of affected tiles + their exact edge-neighbours
       // (shared-border junction stability — see object scaladoc)
       val renderers = fan.join(affectedTiles, Seq("z", "x", "y"), "left_semi")
         .select("GEOID").distinct()
-      val contributors = (if (features.columns.contains("polys")) {
-        val segs = features.select(col("GEOID"),
+      val (contributorRows, contributors) = collectLocal(if (hasPolys) {
+        val segs = feats.select(col("GEOID"),
           explode(Geometry.ringSegments(col("polys"))).as("seg"))
         val rendererSegs = segs.join(renderers, Seq("GEOID"), "left_semi")
           .select("seg").distinct()
@@ -271,9 +313,7 @@ object Incremental {
           .select("GEOID")
         renderers.unionByName(nbrs).distinct()
       } else renderers)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nAffected = affectedTiles.count()
-      val nContrib = contributors.count()
+      fan.unpersist()
       // in-place = outDir IS the previous tree: update it instead of
       // copying ~every unchanged tile into a second tree — the live
       // deployment mode (writePbfDirectory truncate-overwrites per file,
@@ -289,16 +329,8 @@ object Incremental {
         outQ.toUri.getScheme == "file" && prevQ.toUri.getScheme == "file" &&
           new java.io.File(outQ.toUri.getPath).getCanonicalPath ==
             new java.io.File(prevQ.toUri.getPath).getCanonicalPath)
-      // driver-side collect is SIZED BY CONTRACT, not by the tileset:
-      // |affectedRows| = delta GEOIDs × per-feature tile fan-out, and
-      // the delta path only runs when the changed fraction is under
-      // maxChangedFraction — a full-churn "delta" routed to the full
-      // rebuild above before reaching here. ~24 B/row at nightly delta
-      // sizes (thousands of GEOIDs × tens of tiles) is driver-trivial.
-      val affectedRows: Array[org.apache.spark.sql.Row] =
-        if (inPlace) affectedTiles.collect() else Array.empty
 
-      val featC = features.join(contributors, Seq("GEOID"), "left_semi")
+      val featC = feats.join(contributors, Seq("GEOID"), "left_semi")
       val longC = newLong.join(contributors.withColumnRenamed("GEOID", "id"),
         Seq("id"), "left_semi")
       val wideC = Pipeline.shape(longC, inputType)
@@ -309,7 +341,7 @@ object Incremental {
       // data-less neighbour (e.g. a removed GEOID) still contributes its
       // shared edges and border simplification reproduces byte-for-byte
       val choroMaxZ = EtlConfig.choroplethZoom(region).maxZoom
-      val polyFeats = if (featC.columns.contains("polys"))
+      val polyFeats = if (hasPolys)
         Some(Pipeline.choroTileFeatures(featC, region, choroMaxZ)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       else None
@@ -322,7 +354,7 @@ object Incremental {
           // only the affected files are touched — delete them first (a
           // rebuilt tile that came out empty must VANISH, e.g. a removed
           // GEOID's deep tile), then write the rebuilt set. The delete
-          // list is the small affected frame, not the tree.
+          // list is the small affected set, not the tree.
           for (r <- affectedRows)
             outFs.delete(new Path(
               s"$outDir/$region/$decade/${r.getAs[Int]("z")}/" +
@@ -341,11 +373,11 @@ object Incremental {
               new Path(s"$outDir/$region/$decade/metadata.json"), false, true, hconf)
         }
       }
-      persistFingerprints()
+      publishFingerprints(outFs, newFps, regionDir)
       polyFeats.foreach(_.unpersist())
-      wideC.unpersist(); contributors.unpersist(); affectedTiles.unpersist()
-      fan.unpersist(); diff.unpersist()
-      Stats(nChanged, nAdded, nRemoved, nAffected, nContrib, fullRebuild = false)
+      wideC.unpersist()
+      Stats(nChanged, nAdded, nRemoved, affectedRows.length,
+        contributorRows.length, fullRebuild = false)
     } finally outFs.close()
   }
 }

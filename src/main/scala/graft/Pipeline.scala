@@ -235,7 +235,11 @@ object Pipeline {
     wideOut.foreach(p => Sources.writeCsv(wide, p))
     val ext = extents(wide)
     extentsOut.foreach(p => Sources.writeCsv(ext, p, singleFile = true))
-    for (f <- features; out <- outDir) {
+    for (supplied <- features; out <- outDir) {
+      // one checkout of the features serves the extend-zooms probes, the
+      // polygon geometry, the bounds and every decade's bubble layer;
+      // unlike persist, it never touches a cache the caller owns
+      val f = supplied.localCheckpoint(eager = true)
       val hasPolys = f.columns.contains("polys")
       // base choropleth GEOMETRY is decade-independent — built ONCE and
       // persisted, exactly the reference's base-tileset + per-decade

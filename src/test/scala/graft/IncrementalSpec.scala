@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the adversarial path, since border arcs depend on neighbours) with
   * one changed, one removed, and one added GEOID between snapshots.
   */
-class IncrementalSpec extends AnyFunSuite with SharedSpark {
+class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
 
   private val Cols = 20
   private val Rows = 15
@@ -51,7 +51,7 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark {
   /** 20×15 exact grid over a small bbox — neighbours share edges, so
     * the shared-border arc machinery runs for real.
     */
-  private lazy val features = {
+  private lazy val featuresJsonl: String = {
     val dir = Files.createTempDirectory("incr-geo").toString
     val (lon0, lat0, cw, ch) = (-100.0, 30.0, 0.1, 0.1)
     val sb = new StringBuilder
@@ -65,17 +65,25 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark {
     }
     val p = Paths.get(dir, "features.jsonl")
     Files.write(p, sb.toString.getBytes("UTF-8"))
+    p.toString
+  }
+
+  private lazy val features = {
     val f = Pipeline.geometryFeatures(
-      graft.sources.Sources.readGeoJsonLines(spark, p.toString)).persist()
+      graft.sources.Sources.readGeoJsonLines(spark, featuresJsonl)).persist()
     f.count()
     f
   }
 
-  private def md5tree(dir: String): Map[String, String] = {
+  /** md5 of every file under `dir` whose name ends with `suffix`, keyed
+    * by its relative path.
+    */
+  private def md5tree(dir: String, suffix: String = ".pbf"): Map[String, String] = {
     val base = Paths.get(dir)
     if (!Files.exists(base)) return Map.empty
     val out = scala.collection.mutable.Map.empty[String, String]
-    Files.walk(base).filter(_.toString.endsWith(".pbf")).forEach { p =>
+    Files.walk(base).filter(p => Files.isRegularFile(p) &&
+        p.toString.endsWith(suffix)).forEach { p =>
       val d = MessageDigest.getInstance("MD5").digest(Files.readAllBytes(p))
       out(base.relativize(p).toString) = d.map("%02x".format(_)).mkString
     }
@@ -328,6 +336,59 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark {
     assert(md5tree(s"$live/block-groups") == before,
       "the failed fallback must leave the live tree as it was")
     val leftovers = new java.io.File(live).list().filterNot(_ == "block-groups")
+    assert(leftovers.isEmpty, s"staging left behind: ${leftovers.mkString(", ")}")
+  }
+
+  test("an in-place delta reads each input once") {
+    // the 1% mutation fixture, with features the delta must derive
+    // itself: unpersisted, from their own copy of the file (the suite's
+    // persisted frame would otherwise serve the same plan from cache)
+    val oldCsv = writeLong((0 until NCells - 1), bumped = Set.empty)
+    val newCsv = writeLong((0 until NCells).filterNot(_ == 7), bumped = Set(5))
+    val live = Files.createTempDirectory("incr-once").toString
+    Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "block-groups",
+      features = Some(features), outDir = Some(live))
+    val geo = Files.copy(Paths.get(featuresJsonl),
+      Files.createTempDirectory("incr-once-geo").resolve("features.jsonl")).toString
+    val unpersisted = Pipeline.geometryFeatures(
+      graft.sources.Sources.readGeoJsonLines(spark, geo))
+    var stats: Incremental.Stats = null
+    val plans = capturePlans {
+      stats = Incremental.incrementalRegion(spark, oldCsv, newCsv, "raw",
+        metricLongNames, "block-groups", unpersisted, prevDir = live,
+        outDir = live)
+    }
+    val csvScans = fileScans(plans, newCsv).size
+    assert(csvScans <= 1, s"the new snapshot must be scanned once, saw $csvScans")
+    val geoScans = fileScans(plans, geo).size
+    assert(geoScans <= 1, s"the features must be derived once, saw $geoScans")
+    // the same sets as the unfused bookkeeping computed on this fixture
+    assert(stats == Incremental.Stats(changed = 1, added = 1, removed = 1,
+      affectedTiles = 9, contributors = 199, fullRebuild = false),
+      stats.toString)
+  }
+
+  test("a fingerprint publish whose frame throws mid-write leaves the previous artifact") {
+    val csv = writeLong(0 until 40, bumped = Set.empty)
+    val regionDir = Files.createTempDirectory("incr-fp").resolve("block-groups")
+    val region = new org.apache.hadoop.fs.Path(regionDir.toString)
+    val fs = region.getFileSystem(spark.sessionState.newHadoopConf())
+    val fps = Incremental.fingerprints(graft.sources.Sources.readCsv(spark, csv,
+      graft.sources.Sources.longSchema(metricLongNames)))
+    Incremental.publishFingerprints(fs, fps, region)
+    val before = md5tree(regionDir.toString, suffix = "")
+    assert(before.keys.exists(_.startsWith("fingerprints.parquet/part-")), before.toString)
+    val fault = org.apache.spark.sql.functions.udf { (g: String) =>
+      if (g != null) throw new IllegalStateException("injected fault") else g
+    }
+    intercept[Exception] {
+      Incremental.publishFingerprints(fs,
+        fps.withColumn("GEOID", fault(org.apache.spark.sql.functions.col("GEOID"))),
+        region)
+    }
+    assert(md5tree(regionDir.toString, suffix = "") == before,
+      "the failed publish must leave the previous fingerprints as they were")
+    val leftovers = regionDir.toFile.list().filterNot(_ == "fingerprints.parquet")
     assert(leftovers.isEmpty, s"staging left behind: ${leftovers.mkString(", ")}")
   }
 

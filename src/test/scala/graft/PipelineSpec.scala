@@ -4,11 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reference-shaped end-to-end fixture test (FIXTURES.md §A, SURVEY.md §5
@@ -16,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shape → extents → decade tiles, outputs checked against hand-computed
   * goldens replicating shape-data.js / extract-extents.js semantics.
   */
-class PipelineSpec extends AnyFunSuite with SharedSpark {
+class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
 
   /** A1-style fixture: dup (id,year) rows, missing parent_location,
     * empty metric cells, an unmapped column, non-numeric junk, leading
@@ -260,50 +258,9 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     assert(p.contains("partial_max_by"), "pivot must partial-aggregate map-side")
   }
 
-  /** Executed plans of every action `body` triggers, captured by a
-    * QueryExecutionListener.
-    */
-  private def capturePlans(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      // the execution listener bus is async — poll until the capture
-      // count is stable for a second
-      var last = -1; var stable = 0
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (stable < 4 && System.nanoTime < deadline) {
-        if (plans.size == last) stable += 1 else { stable = 0; last = plans.size }
-        Thread.sleep(250)
-      }
-    } finally spark.listenerManager.unregister(listener)
-    plans.asScala.toSeq
-  }
-
-  /** Structural traversal: descend through AQE wrappers, STOP at
-    * InMemoryTableScan (its cached child plan executes once by the
-    * cache contract, not per consumer).
-    */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
-
   /** File scans of the long CSV (every fixture names it `data.csv`). */
   private def directCsvScans(plans: Seq[SparkPlan]): Seq[FileSourceScanExec] =
-    plans.flatMap(allNodes).collect {
-      case f: FileSourceScanExec if f.relation.location.rootPaths
-        .exists(_.toString.contains("data.csv")) => f
-    }
+    fileScans(plans, "data.csv")
 
   /** Plans that read metric-year columns from the cached pivot. */
   private def wideCacheConsumers(plans: Seq[SparkPlan]): Int =
@@ -363,6 +320,10 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     assert(directCsv.size <= 1,
       s"Main must scan the long CSV once per region, found ${directCsv.size} " +
         "direct scans")
+    val geoScans = fileScans(all, fixtureGeoJson).size
+    assert(geoScans <= 1,
+      s"Main must derive its features from ONE GeoJSON scan per region, " +
+        s"found $geoScans")
     assert(wideCacheConsumers(all) >= 3,
       "Main's wide/extents writes and tile builds must read the cached pivot")
     def parts(p: String) = Option(new java.io.File(p).listFiles).toSeq.flatten
