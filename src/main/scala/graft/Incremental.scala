@@ -44,8 +44,9 @@ import graft.sources.Sources
   *    renderers whose own z8 tiles pulled the continent (measured:
   *    215k of 217k cells "contributing" to a 217-cell delta);
   *  - the pivot runs over the contributor subset only; unchanged
-  *    tiles never re-encode, their bytes stream from the previous
-  *    tree ([[readPbfTree]], a splittable binaryFile scan);
+  *    tiles never re-encode and never pass through Spark: an in-place
+  *    delta leaves them where they lie, and copy mode copies the
+  *    previous tree file for file before updating the copy;
   *  - every input is derived once: the new snapshot, its fingerprints
   *    and the features are each checked out by one job and read back
   *    from there; the affected tiles and the contributor GEOIDs are
@@ -149,9 +150,10 @@ object Incremental {
       .distinct()
   }
 
-  /** Read a written pbf tree back as (z, x, y, tile_bytes) — the
-    * carry-over side of the incremental union. binaryFile splits by
-    * file, so the scan parallelizes over the tile tree.
+  /** Read a written pbf tree back as (z, x, y, tile_bytes) — the tree
+    * reader `.mbtiles` packaging ([[graft.sinks.Mbtiles]]) feeds on.
+    * binaryFile splits by file, so the scan parallelizes over the tile
+    * tree.
     */
   def readPbfTree(spark: SparkSession, dir: String): DataFrame = {
     val re = "/(\\d+)/(\\d+)/(\\d+)\\.pbf$"
@@ -189,17 +191,34 @@ object Incremental {
     (rows, df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema))
   }
 
-  /** Rebuild only what changed between `oldCsvPath` and `newCsvPath`,
-    * carrying unchanged tiles from `prevDir` (a prior
-    * [[Pipeline.runRegion]] output) into `outDir`. Passing
-    * `outDir == prevDir` switches to IN-PLACE mode: the live tree is
-    * updated — affected tile files deleted then rewritten — and no
-    * unchanged byte is read or written, so the IO cost is proportional
+  /** `build` writes a region tree at the path it is given, inside a
+    * hidden staging sibling of `$outDir/$region`; the finished tree is
+    * swapped in whole ([[ArtifactCache.swapDir]]) and the staging dir
+    * deleted on every exit, so a failed build leaves the region as it was.
+    */
+  private def staged(fs: FileSystem, outDir: String, region: String)(
+      build: Path => Unit): Unit = {
+    val tag = java.util.UUID.randomUUID()
+    val staging = new Path(s"$outDir/.$region.$tag.staging")
+    try {
+      build(new Path(staging, region))
+      ArtifactCache.swapDir(fs, new Path(staging, region),
+        new Path(s"$outDir/$region"), new Path(s"$outDir/.$region.$tag.old"))
+    } finally fs.delete(staging, true)
+  }
+
+  /** Rebuild only what changed between `oldCsvPath` and `newCsvPath` in
+    * `prevDir`'s tree (a prior [[Pipeline.runRegion]] output), leaving
+    * the result at `outDir`. One update path: delete the affected tile
+    * files, write the rebuilt ones, publish the new fingerprints.
+    * `outDir == prevDir` updates the live tree IN PLACE, IO proportional
     * to the delta, not the tileset (the deployment mode perfbench's
-    * `nightly-delta` measures). Falls back to the full pipeline when the changed-GEOID
-    * fraction exceeds `maxChangedFraction` — mass change means the
-    * incremental machinery costs more than it saves, and q135's
-    * fraction readout is exactly the signal.
+    * `nightly-delta` measures); otherwise the previous region tree is
+    * copied into a staging sibling, updated there and swapped in whole
+    * (`staged`), so `prevDir` is never written. Falls back to the full
+    * pipeline when the changed-GEOID fraction exceeds
+    * `maxChangedFraction` — q135's fraction readout is the signal that
+    * the incremental machinery costs more than it saves.
     */
   def incrementalRegion(spark: SparkSession, oldCsvPath: String,
                         newCsvPath: String, inputType: String,
@@ -226,9 +245,8 @@ object Incremental {
     val outFs = FileSystem.newInstance(new Path(outDir).toUri, hconf)
     // no .crc sidecars in the live tree (same contract as the sink)
     outFs.setWriteChecksum(false)
-    // close outFs on EVERY exit path — an exception anywhere below
-    // (runRegion, writePbfDirectory, the FS bookkeeping itself) must
-    // not leak the private instance in a long-lived session (r18 ADVICE)
+    // closed on EVERY exit path: a failed call must not leak the
+    // private instance in a long-lived session
     try {
       val fpPath = new Path(s"$prevDir/$region/fingerprints.parquet")
       val oldFps = if (prevFs.exists(fpPath)) spark.read.parquet(fpPath.toString)
@@ -236,9 +254,9 @@ object Incremental {
       // one materialized copy serves the diff, the GEOID count and the
       // publish of the next delta's artifact
       val newFps = fingerprints(newLong).localCheckpoint(eager = true)
-      // localCheckpoint, not persist: the publish below swaps the stored
-      // artifact out (in-place mode shares the dir), and a cache-evicted
-      // lineage replay would re-read a deleted file
+      // localCheckpoint, not persist: an in-place publish swaps out the
+      // stored artifact oldFps reads, and a cache-evicted lineage replay
+      // would re-read a deleted file
       val diff = diffFingerprints(oldFps, newFps).localCheckpoint(eager = true)
       val byStatus = diff.groupBy("status").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -259,29 +277,19 @@ object Incremental {
       }
       val treeDeeperThanFan =
         treeMaxZoom(prevFs, new Path(s"$prevDir/$region")) > fanMaxZ
-      // the NEW fingerprints publish for the next delta at the END of
-      // each path (after the fallback's swap, after the in-place
-      // updates) — newFps is a checkout, so writing it late reads
-      // nothing either path replaced
-      val regionDir = new Path(s"$outDir/$region")
+      // the NEW fingerprints publish for the next delta as the last step
+      // of each tree build — newFps is a checkout, so writing it late
+      // reads nothing the build replaced
       if (nTotal == 0 || treeDeeperThanFan ||
           (nChanged + nAdded + nRemoved).toDouble / nTotal > maxChangedFraction) {
         // a fresh tree replaces the whole region subtree (the reference's
         // own `rm -rf _proc` semantics — an overwrite-only rebuild would
-        // leave STALE tiles for (z,x,y)s the new data no longer produces),
-        // crash-safe: runRegion builds into a hidden staging sibling, and
-        // only a complete tree is swapped in (live dir renamed aside,
-        // staged dir renamed into place, old dir deleted). A failed build
-        // deletes the staging dir and leaves the live tree as it was.
-        val tag = java.util.UUID.randomUUID()
-        val staging = new Path(s"$outDir/.$region.$tag.staging")
-        val aside = new Path(s"$outDir/.$region.$tag.old")
-        try {
+        // leave STALE tiles for (z,x,y)s the new data no longer produces)
+        staged(outFs, outDir, region) { tree =>
           Pipeline.runRegion(spark, newCsvPath, inputType, metricLongNames,
-            region, features = Some(features), outDir = Some(staging.toString))
-          ArtifactCache.swapDir(outFs, new Path(staging, region), regionDir, aside)
-        } finally outFs.delete(staging, true)
-        publishFingerprints(outFs, newFps, regionDir)
+            region, features = Some(features), outDir = Some(tree.getParent.toString))
+          publishFingerprints(outFs, newFps, tree)
+        }
         return Stats(nChanged, nAdded, nRemoved, -1L, -1L, fullRebuild = true)
       }
 
@@ -297,38 +305,24 @@ object Incremental {
       // and the delta path only runs when the changed fraction is under
       // maxChangedFraction — a full-churn "delta" routed to the full
       // rebuild above before reaching here
-      val (affectedRows, affectedTiles) = collectLocal(
-        fan.join(diff.select(col("GEOID")), Seq("GEOID"), "left_semi")
-          .select("z", "x", "y").distinct())
-      // renderers of affected tiles + their exact edge-neighbours
-      // (shared-border junction stability — see object scaladoc)
-      val renderers = fan.join(affectedTiles, Seq("z", "x", "y"), "left_semi")
-        .select("GEOID").distinct()
-      val (contributorRows, contributors) = collectLocal(if (hasPolys) {
-        val segs = feats.select(col("GEOID"),
-          explode(Geometry.ringSegments(col("polys"))).as("seg"))
-        val rendererSegs = segs.join(renderers, Seq("GEOID"), "left_semi")
-          .select("seg").distinct()
-        val nbrs = segs.join(rendererSegs, Seq("seg"), "left_semi")
-          .select("GEOID")
-        renderers.unionByName(nbrs).distinct()
-      } else renderers)
-      fan.unpersist()
-      // in-place = outDir IS the previous tree: update it instead of
-      // copying ~every unchanged tile into a second tree — the live
-      // deployment mode (writePbfDirectory truncate-overwrites per file,
-      // so a crash mid-update re-runs idempotently)
-      val outQ = outFs.makeQualified(new Path(outDir))
-      val prevQ = prevFs.makeQualified(new Path(prevDir))
-      // qualified-URI equality first (scheme-agnostic), then — for local
-      // paths only — java.io canonical-path equality, so a symlink- or
-      // `..`-aliased prevDir/outDir pair is still recognized as the SAME
-      // tree (r17 ADVICE: the copy-mode path would lazily read carried
-      // tiles from the very files it truncate-overwrites)
-      val inPlace = outQ == prevQ || (
-        outQ.toUri.getScheme == "file" && prevQ.toUri.getScheme == "file" &&
-          new java.io.File(outQ.toUri.getPath).getCanonicalPath ==
-            new java.io.File(prevQ.toUri.getPath).getCanonicalPath)
+      val ((affectedRows, affectedTiles), (contributorRows, contributors)) = try {
+        val affected = collectLocal(
+          fan.join(diff.select(col("GEOID")), Seq("GEOID"), "left_semi")
+            .select("z", "x", "y").distinct())
+        // renderers of affected tiles + their exact edge-neighbours
+        // (shared-border junction stability — see object scaladoc)
+        val renderers = fan.join(affected._2, Seq("z", "x", "y"), "left_semi")
+          .select("GEOID").distinct()
+        (affected, collectLocal(if (hasPolys) {
+          val segs = feats.select(col("GEOID"),
+            explode(Geometry.ringSegments(col("polys"))).as("seg"))
+          val rendererSegs = segs.join(renderers, Seq("GEOID"), "left_semi")
+            .select("seg").distinct()
+          val nbrs = segs.join(rendererSegs, Seq("seg"), "left_semi")
+            .select("GEOID")
+          renderers.unionByName(nbrs).distinct()
+        } else renderers))
+      } finally fan.unpersist()
 
       val featC = feats.join(contributors, Seq("GEOID"), "left_semi")
       val longC = newLong.join(contributors.withColumnRenamed("GEOID", "id"),
@@ -345,37 +339,39 @@ object Incremental {
         Some(Pipeline.choroTileFeatures(featC, region, choroMaxZ)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       else None
-      for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
-        val rebuilt = Pipeline.decadeTileset(wideC, featC, polyFeats,
-          inputType, decade, region, bubbleMaxZ = None)
-          .join(affectedTiles, Seq("z", "x", "y"), "left_semi")
-        if (inPlace) {
-          // live-tree update: unchanged tiles already sit in outDir, so
-          // only the affected files are touched — delete them first (a
-          // rebuilt tile that came out empty must VANISH, e.g. a removed
-          // GEOID's deep tile), then write the rebuilt set. The delete
-          // list is the small affected set, not the tree.
+      // the one tile update: delete the affected files first (a rebuilt
+      // tile that came out empty must VANISH, e.g. a removed GEOID's deep
+      // tile), then write the rebuilt set; unchanged tiles and the
+      // decade-level metadata.json already sit in `tree`
+      def update(tree: Path): Unit = {
+        for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
+          val rebuilt = Pipeline.decadeTileset(wideC, featC, polyFeats,
+            inputType, decade, region, bubbleMaxZ = None)
+            .join(affectedTiles, Seq("z", "x", "y"), "left_semi")
           for (r <- affectedRows)
-            outFs.delete(new Path(
-              s"$outDir/$region/$decade/${r.getAs[Int]("z")}/" +
-                s"${r.getAs[Long]("x")}/${r.getAs[Long]("y")}.pbf"), false)
-          TileBuild.writePbfDirectory(rebuilt, s"$outDir/$region/$decade",
-            writeMetadata = false) // the live metadata.json stays as-is
-        } else {
-          val carried = readPbfTree(spark, s"$prevDir/$region/$decade")
-            .join(affectedTiles, Seq("z", "x", "y"), "left_anti")
-          TileBuild.writePbfDirectory(rebuilt.unionByName(carried),
-            s"$outDir/$region/$decade")
-          // metadata is decade-level and attribute-independent: carry it over
-          val src = new Path(s"$prevDir/$region/$decade/metadata.json")
-          if (prevFs.exists(src))
-            FileUtil.copy(prevFs, src, outFs,
-              new Path(s"$outDir/$region/$decade/metadata.json"), false, true, hconf)
+            outFs.delete(new Path(tree, s"$decade/${r.getAs[Int]("z")}/" +
+              s"${r.getAs[Long]("x")}/${r.getAs[Long]("y")}.pbf"), false)
+          TileBuild.writePbfDirectory(rebuilt, s"$tree/$decade",
+            writeMetadata = false)
         }
+        publishFingerprints(outFs, newFps, tree)
       }
-      publishFingerprints(outFs, newFps, regionDir)
-      polyFeats.foreach(_.unpersist())
-      wideC.unpersist()
+      // in-place = outDir IS the previous tree (qualified-URI equality,
+      // scheme-agnostic); a copy never writes the tree it reads, so a
+      // symlink-aliased prevDir/outDir pair is still correct
+      val inPlace = outFs.makeQualified(new Path(outDir)) ==
+        prevFs.makeQualified(new Path(prevDir))
+      try {
+        if (inPlace) update(new Path(s"$outDir/$region"))
+        else staged(outFs, outDir, region) { tree =>
+          if (!FileUtil.copy(prevFs, new Path(s"$prevDir/$region"), outFs,
+              tree, false, hconf)) throw new java.io.IOException(s"cannot copy to $tree")
+          update(tree)
+        }
+      } finally {
+        polyFeats.foreach(_.unpersist())
+        wideC.unpersist()
+      }
       Stats(nChanged, nAdded, nRemoved, affectedRows.length,
         contributorRows.length, fullRebuild = false)
     } finally outFs.close()

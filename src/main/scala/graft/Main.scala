@@ -70,7 +70,7 @@ object Main {
         else if (g.endsWith(".parquet")) spark.read.parquet(g)
         else spark.read.option("header", true).csv(g)
       }
-      val (wide, _) = Pipeline.runRegion(spark, args.data, args.inputType,
+      val wide = Pipeline.runRegion(spark, args.data, args.inputType,
         metricNames, region,
         features = if (args.tiles) features else None,
         outDir = if (args.tiles) Some(s"${args.out}/tiles") else None,

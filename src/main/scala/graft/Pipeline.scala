@@ -184,8 +184,11 @@ object Pipeline {
     }
   }
 
-  /** Full region run (`build.sh:69-233`): returns (wide, extents) and
+  /** Full region run (`build.sh:69-233`): returns the wide frame and
     * writes tiles per decade under `outDir` when features are given.
+    * Extents are built only for `extentsOut` ([[extents]] of the returned
+    * frame gives them): an extents frame no one runs leaves its histogram
+    * cache registered, and a later identical plan adopts it and re-reads.
     * With GeoJSON-derived features ([[geometryFeatures]]) both layers
     * build; with bare lon/lat points only the bubble layer can.
     *
@@ -199,7 +202,7 @@ object Pipeline {
     * QueryExecutionListener over the composed run). The reference gets
     * the same effect by materializing `data.wide.csv` between
     * processes (`build.sh:80-81`); here it is one in-memory artifact
-    * with spill. Pure (wide, extents) callers stay fully lazy.
+    * with spill. A caller asking for no output gets a fully lazy wide frame.
     *
     * @param extendBudget densest-tile feature budget driving the
     *                     `--extend-zooms-if-still-dropping` decision for
@@ -221,7 +224,7 @@ object Pipeline {
                 outDir: Option[String] = None,
                 extendBudget: Int = 10000,
                 wideOut: Option[String] = None,
-                extentsOut: Option[String] = None): (DataFrame, DataFrame) = {
+                extentsOut: Option[String] = None): DataFrame = {
     val long = Sources.readCsv(spark, longCsvPath,
       Sources.longSchema(metricLongNames))
     val multiAction = (features.isDefined && outDir.isDefined) ||
@@ -232,76 +235,77 @@ object Pipeline {
         w.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else w
     }
-    wideOut.foreach(p => Sources.writeCsv(wide, p))
-    val ext = extents(wide)
-    extentsOut.foreach(p => Sources.writeCsv(ext, p, singleFile = true))
-    for (supplied <- features; out <- outDir) {
-      // one checkout of the features serves the extend-zooms probes, the
-      // polygon geometry, the bounds and every decade's bubble layer;
-      // unlike persist, it never touches a cache the caller owns
-      val f = supplied.localCheckpoint(eager = true)
-      val hasPolys = f.columns.contains("polys")
-      // base choropleth GEOMETRY is decade-independent — built ONCE and
-      // persisted, exactly the reference's base-tileset + per-decade
-      // `tile-join` split (`build.sh:139-160` once, `:208-211` per
-      // decade); only the attribute join + encode re-run per decade
-      val zoom = EtlConfig.choroplethZoom(region)
-      val knobs = EtlConfig.choroplethBuild(region)
-      // `--extend-zooms-if-still-dropping` applies to the CHOROPLETH too
-      // (`build.sh:148-152`) — but only the drop-densest strategy ever
-      // drops (cities); coalesce regions merge instead of dropping, so
-      // extension is a no-op there and is skipped. Density is measured
-      // on the decade-independent interior points (one per polygon —
-      // the same features that overflow a tile's feature budget).
-      val choroMaxZ = if (zoom.extend && !knobs.coalesce)
-        Tiling.extendMaxZoom(f, "lon", "lat",
-          zoom.maxZoom, zoom.maxZoom + 2, budget = extendBudget)
-      else zoom.maxZoom
-      val polyFeats = if (hasPolys)
-        Some(choroTileFeatures(f, region, choroMaxZ).persist())
-      else None
-      // tileset bounds/center (decade-independent, one small aggregate):
-      // tile-join's metadata.json carries them (`build.sh:220,226`) —
-      // polygon regions use the true geometry bbox, point regions the
-      // bubble centers
-      val bounds: Option[(Double, Double, Double, Double)] = {
-        val r = (if (hasPolys)
-          Geometry.withBbox(f.select("polys"), "polys").select(min("lon_min"),
-            min("lat_min"), max("lon_max"), max("lat_max"))
-        else f.select(min(col("lon")), min(col("lat")),
-          max(col("lon")), max(col("lat")))).head()
-        // zero features ⇒ the min/max aggregate returns one all-null row;
-        // skip the bounds/center metadata keys rather than NPE on getDouble
-        if (r.isNullAt(0)) None
-        else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+    // the scan-once cache is released on every exit; the returned frame
+    // stays valid and simply recomputes lazily if evaluated later
+    try {
+      wideOut.foreach(p => Sources.writeCsv(wide, p))
+      extentsOut.foreach(p => Sources.writeCsv(extents(wide), p, singleFile = true))
+      for (supplied <- features; out <- outDir) {
+        // one checkout of the features serves the extend-zooms probes, the
+        // polygon geometry, the bounds and every decade's bubble layer;
+        // unlike persist, it never touches a cache the caller owns
+        val f = supplied.localCheckpoint(eager = true)
+        val hasPolys = f.columns.contains("polys")
+        // base choropleth GEOMETRY is decade-independent — built ONCE and
+        // persisted, exactly the reference's base-tileset + per-decade
+        // `tile-join` split (`build.sh:139-160` once, `:208-211` per
+        // decade); only the attribute join + encode re-run per decade
+        val zoom = EtlConfig.choroplethZoom(region)
+        val knobs = EtlConfig.choroplethBuild(region)
+        // `--extend-zooms-if-still-dropping` applies to the CHOROPLETH too
+        // (`build.sh:148-152`) — but only the drop-densest strategy ever
+        // drops (cities); coalesce regions merge instead of dropping, so
+        // extension is a no-op there and is skipped. Density is measured
+        // on the decade-independent interior points (one per polygon —
+        // the same features that overflow a tile's feature budget).
+        val choroMaxZ = if (zoom.extend && !knobs.coalesce)
+          Tiling.extendMaxZoom(f, "lon", "lat",
+            zoom.maxZoom, zoom.maxZoom + 2, budget = extendBudget)
+        else zoom.maxZoom
+        val polyFeats = if (hasPolys)
+          Some(choroTileFeatures(f, region, choroMaxZ).persist())
+        else None
+        try {
+          // tileset bounds/center (decade-independent, one small aggregate):
+          // tile-join's metadata.json carries them (`build.sh:220,226`) —
+          // polygon regions use the true geometry bbox, point regions the
+          // bubble centers
+          val bounds: Option[(Double, Double, Double, Double)] = {
+            val r = (if (hasPolys)
+              Geometry.withBbox(f.select("polys"), "polys").select(min("lon_min"),
+                min("lat_min"), max("lon_max"), max("lat_max"))
+            else f.select(min(col("lon")), min(col("lat")),
+              max(col("lon")), max(col("lat")))).head()
+            // zero features ⇒ the min/max aggregate returns one all-null row;
+            // skip the bounds/center metadata keys rather than NPE on getDouble
+            if (r.isNullAt(0)) None
+            else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+          }
+          // `--extend-zooms-if-still-dropping`: decided ONCE per region from
+          // the geometry (decade-independent), then reused by every decade
+          val bz = EtlConfig.bubbleZoom(region)
+          val bubbleMaxZ = if (bz.extend)
+            Some(Tiling.extendMaxZoom(f, "lon", "lat",
+              bz.maxZoom, bz.maxZoom + 2, budget = extendBudget))
+          else None
+          for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
+            val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
+            val meta = Map("name" -> s"$region-$decade",
+              "type" -> "overlay",
+              "minzoom" -> math.min(bz.minZoom, zoom.minZoom).toString,
+              "maxzoom" -> maxZoomOut.toString,
+              "layers" -> (s"$region-$decade-bubble" +
+                (if (hasPolys) s",$region-$decade-choropleth" else ""))) ++
+              bounds.map { case (x0, y0, x1, y1) =>
+                Map("bounds" -> s"$x0,$y0,$x1,$y1",
+                  "center" -> s"${(x0 + x1) / 2},${(y0 + y1) / 2},$maxZoomOut")
+              }.getOrElse(Map.empty)
+            TileBuild.writePbfDirectory(decadeTileset(wide, f, polyFeats,
+              inputType, decade, region, bubbleMaxZ), s"$out/$region/$decade", meta)
+          }
+        } finally polyFeats.foreach(_.unpersist())
       }
-      // `--extend-zooms-if-still-dropping`: decided ONCE per region from
-      // the geometry (decade-independent), then reused by every decade
-      val bz = EtlConfig.bubbleZoom(region)
-      val bubbleMaxZ = if (bz.extend)
-        Some(Tiling.extendMaxZoom(f, "lon", "lat",
-          bz.maxZoom, bz.maxZoom + 2, budget = extendBudget))
-      else None
-      for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
-        val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
-        val meta = Map("name" -> s"$region-$decade",
-          "type" -> "overlay",
-          "minzoom" -> math.min(bz.minZoom, zoom.minZoom).toString,
-          "maxzoom" -> maxZoomOut.toString,
-          "layers" -> (s"$region-$decade-bubble" +
-            (if (hasPolys) s",$region-$decade-choropleth" else ""))) ++
-          bounds.map { case (x0, y0, x1, y1) =>
-            Map("bounds" -> s"$x0,$y0,$x1,$y1",
-              "center" -> s"${(x0 + x1) / 2},${(y0 + y1) / 2},$maxZoomOut")
-          }.getOrElse(Map.empty)
-        TileBuild.writePbfDirectory(decadeTileset(wide, f, polyFeats,
-          inputType, decade, region, bubbleMaxZ), s"$out/$region/$decade", meta)
-      }
-      polyFeats.foreach(_.unpersist())
-    }
-    // release the scan-once cache; the returned frames stay valid and
-    // simply recompute lazily if the caller evaluates them later
-    if (multiAction) wide.unpersist()
-    (wide, ext)
+    } finally if (multiAction) wide.unpersist()
+    wide
   }
 }

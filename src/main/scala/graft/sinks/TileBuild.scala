@@ -449,11 +449,11 @@ object TileBuild {
     * through a foreign `mock://` filesystem (SchemeFsSpec) — s3a is
     * the same seam with credentials, which the sandbox cannot reach.
     *
-    * @param writeMetadata false for IN-PLACE tree updates
-    *                      ([[graft.Incremental]]): the live tree's
-    *                      metadata.json is decade-level and already
-    *                      correct — rewriting it from this call's
-    *                      (empty) map would clobber bounds/zooms/layers
+    * @param writeMetadata false for the delta's tile update, live tree or
+    *                      staged copy alike ([[graft.Incremental]]): the
+    *                      tree's metadata.json is decade-level and already
+    *                      correct — rewriting it from this call's (empty)
+    *                      map would clobber bounds/zooms/layers
     */
   def writePbfDirectory(tiles: DataFrame, outDir: String,
                         metadata: Map[String, String] = Map.empty,

@@ -5,6 +5,27 @@ import java.security.MessageDigest
 
 import org.scalatest.funsuite.AnyFunSuite
 
+/** A local-disk Hadoop FileSystem under the `faulty://` scheme that
+  * refuses to create any file whose path contains [[FaultyFs.failOn]]
+  * (none while it is null). `faulty:///tmp/x` reads and writes `/tmp/x`.
+  */
+class FaultyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "faulty"
+  override def getUri: java.net.URI = java.net.URI.create("faulty:///")
+  override protected def createOutputStreamWithMode(f: org.apache.hadoop.fs.Path,
+      append: Boolean, permission: org.apache.hadoop.fs.permission.FsPermission
+  ): java.io.OutputStream = {
+    val marker = FaultyFs.failOn
+    if (marker != null && f.toString.contains(marker))
+      throw new java.io.IOException(s"injected fault: $f")
+    super.createOutputStreamWithMode(f, append, permission)
+  }
+}
+
+object FaultyFs {
+  @volatile var failOn: String = null
+}
+
 /** Incremental region rebuild ≡ full rebuild — the r14 verdict's item 4:
   * q135's diff primitive wired to the composed pipeline must produce a
   * tile tree BYTE-IDENTICAL to rebuilding everything, while touching
@@ -336,6 +357,99 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(md5tree(s"$live/block-groups") == before,
       "the failed fallback must leave the live tree as it was")
     val leftovers = new java.io.File(live).list().filterNot(_ == "block-groups")
+    assert(leftovers.isEmpty, s"staging left behind: ${leftovers.mkString(", ")}")
+  }
+
+  /** Persisted frames that are not checkpoints: what a call leaves in
+    * the session's cache (a checkpoint is released once unreferenced).
+    */
+  private def cachedRdds: Int =
+    spark.sparkContext.getPersistentRDDs.values.count(!_.isCheckpointed)
+
+  test("a copy-mode delta that fails mid-update leaves outDir and the cache as they were") {
+    // the fault hits the fingerprint publish, the last write of the
+    // update: by then every rebuilt tile has been written. The region
+    // must not appear half-updated, no staging dir may be left, and
+    // the call's persisted frames must be released.
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val oldCsv = writeLong(0 until 40, bumped = Set.empty)
+    val newCsv = writeLong(0 until 40, bumped = Set(3))
+    val feats40 = features.filter(
+      org.apache.spark.sql.functions.col("GEOID") < geoid(40))
+    val prev = Files.createTempDirectory("incr-fault-prev").toString
+    Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "block-groups",
+      features = Some(feats40), outDir = Some(prev))
+    val out = Files.createTempDirectory("incr-fault-out").toString
+    val cachedBefore = cachedRdds
+    FaultyFs.failOn = "/.fingerprints."
+    try {
+      intercept[Exception] {
+        Incremental.incrementalRegion(spark, oldCsv, newCsv, "raw",
+          metricLongNames, "block-groups", feats40, prevDir = prev,
+          outDir = s"faulty://$out")
+      }
+    } finally FaultyFs.failOn = null
+    val left = new java.io.File(out).list()
+    assert(left.isEmpty, s"outDir must be as it was (empty), found ${left.mkString(", ")}")
+    assert(cachedRdds <= cachedBefore,
+      s"the failed delta left ${cachedRdds - cachedBefore} persisted frames behind")
+  }
+
+  test("a copy-mode delta leaves the previous tree untouched") {
+    val oldCsv = writeLong(0 until 40, bumped = Set.empty)
+    val newCsv = writeLong(0 until 40, bumped = Set(3))
+    val feats40 = features.filter(
+      org.apache.spark.sql.functions.col("GEOID") < geoid(40))
+    val prev = Files.createTempDirectory("incr-keep-prev").toString
+    Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "block-groups",
+      features = Some(feats40), outDir = Some(prev))
+    val region = new org.apache.hadoop.fs.Path(s"$prev/block-groups")
+    Incremental.publishFingerprints(
+      region.getFileSystem(spark.sessionState.newHadoopConf()),
+      Incremental.fingerprints(graft.sources.Sources.readCsv(spark, oldCsv,
+        graft.sources.Sources.longSchema(metricLongNames))), region)
+    val before = md5tree(s"$prev/block-groups", suffix = "")
+    assert(before.keys.exists(_.endsWith(".pbf")) &&
+      before.keys.exists(_.endsWith("metadata.json")) &&
+      before.keys.exists(_.startsWith("fingerprints.parquet/part-")), before.keys.toString)
+    val out = Files.createTempDirectory("incr-keep-out").toString
+    val stats = Incremental.incrementalRegion(spark, oldCsv, newCsv, "raw",
+      metricLongNames, "block-groups", feats40, prevDir = prev, outDir = out)
+    assert(!stats.fullRebuild && stats.changed == 1, stats.toString)
+    assert(md5tree(s"$out/block-groups") != md5tree(s"$prev/block-groups"),
+      "the delta must rewrite some tiles of the copy")
+    assert(md5tree(s"$prev/block-groups", suffix = "") == before,
+      "a copy-mode delta must not write the previous tree")
+  }
+
+  test("a delta into a symlink of the previous tree equals the full rebuild") {
+    val oldCsv = writeLong(0 until 40, bumped = Set.empty)
+    val newCsv = writeLong(0 until 40, bumped = Set(3))
+    val feats40 = features.filter(
+      org.apache.spark.sql.functions.col("GEOID") < geoid(40))
+    val prev = Files.createTempDirectory("incr-alias-prev").toString
+    val full = Files.createTempDirectory("incr-alias-full").toString
+    Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "block-groups",
+      features = Some(feats40), outDir = Some(prev))
+    Pipeline.runRegion(spark, newCsv, "raw", metricLongNames, "block-groups",
+      features = Some(feats40), outDir = Some(full))
+    val alias = Files.createSymbolicLink(
+      Files.createTempDirectory("incr-alias").resolve("tree"), Paths.get(prev))
+    val stats = Incremental.incrementalRegion(spark, oldCsv, newCsv, "raw",
+      metricLongNames, "block-groups", feats40, prevDir = prev,
+      outDir = alias.toString)
+    assert(!stats.fullRebuild && stats.changed == 1, stats.toString)
+    for (decade <- Seq("00", "10")) {
+      val want = md5tree(s"$full/block-groups/$decade")
+      val got = md5tree(s"$prev/block-groups/$decade")
+      assert(want.nonEmpty && got.keySet == want.keySet,
+        s"decade $decade tile SETS differ: only-full=${(want.keySet -- got.keySet).take(5)}" +
+          s" only-alias=${(got.keySet -- want.keySet).take(5)}")
+      val mm = want.keys.filter(k => want(k) != got(k)).toSeq
+      assert(mm.isEmpty, s"decade $decade: ${mm.size} tiles differ ${mm.take(5)}")
+    }
+    val leftovers = new java.io.File(prev).list().filterNot(_ == "block-groups")
     assert(leftovers.isEmpty, s"staging left behind: ${leftovers.mkString(", ")}")
   }
 

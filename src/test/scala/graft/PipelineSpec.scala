@@ -37,7 +37,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     "judgement_rate", "low_flag", "junk_col")
 
   test("shape: A2 semantics — rename, last-wins, pl default, sort, zeros") {
-    val (wide, _) = Pipeline.runRegion(spark, fixtureCsv, "raw",
+    val wide = Pipeline.runRegion(spark, fixtureCsv, "raw",
       metricLongNames, "counties")
     val rows = wide.collect()
     // sorted by GEOID ascending, leading zeros intact
@@ -62,8 +62,8 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
   }
 
   test("extents: A3 semantics — numeric coercion, junk/empty dropped") {
-    val (_, ext) = Pipeline.runRegion(spark, fixtureCsv, "raw",
-      metricLongNames, "counties")
+    val ext = Pipeline.extents(Pipeline.runRegion(spark, fixtureCsv, "raw",
+      metricLongNames, "counties"))
     val byId = ext.collect().map(r => r.getAs[String]("id") -> r).toMap
     // er-00: values ("1.3" [last-wins], "not-a-number") -> only 1.3 numeric
     val er = byId("er-00")
@@ -198,7 +198,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
   }
 
   test("decade tiles: slice + if-matched join + polygon MVT build end-to-end") {
-    val (wide, _) = Pipeline.runRegion(spark, fixtureCsv, "raw",
+    val wide = Pipeline.runRegion(spark, fixtureCsv, "raw",
       metricLongNames, "counties")
     // 01001/02013 match the wide table; an unmatched feature would be
     // dropped by the if-matched join (geometry fixture has no 99999)
@@ -335,7 +335,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
   }
 
   test("decadeTiles choropleth without polygon geometry fails fast") {
-    val (wide, _) = Pipeline.runRegion(spark, fixtureCsv, "raw",
+    val wide = Pipeline.runRegion(spark, fixtureCsv, "raw",
       metricLongNames, "counties")
     import spark.implicits._
     val pts = Seq(("01001", -86.6, 32.5)).toDF("GEOID", "lon", "lat")
@@ -382,7 +382,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     Files.write(Paths.get(dir, "data.csv"), csv.toString.getBytes("UTF-8"))
 
     val out = s"$dir/tiles"
-    val (wide, _) = Pipeline.runRegion(spark, s"$dir/data.csv", "raw", metrics,
+    val wide = Pipeline.runRegion(spark, s"$dir/data.csv", "raw", metrics,
       "counties", features = Some(features), outDir = Some(out))
     def md5(b: Array[Byte]) = java.security.MessageDigest.getInstance("MD5")
       .digest(b).map("%02x".format(_)).mkString

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Executed plans of a composed run, for scan-count and plan-shape
@@ -50,11 +51,21 @@ trait PlanCapture { self: SharedSpark =>
   }
 
   /** File scans whose root paths name `path` (a file or any part of
-    * its path).
+    * its path), counting the plan of each distinct cache build the
+    * plans consume once: a build runs inside whichever query first
+    * reads the cache, so its scan is invisible to [[allNodes]].
     */
-  def fileScans(plans: Seq[SparkPlan], path: String): Seq[FileSourceScanExec] =
-    plans.flatMap(allNodes).collect {
+  def fileScans(plans: Seq[SparkPlan], path: String): Seq[FileSourceScanExec] = {
+    val builds = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def expand(p: SparkPlan): Seq[SparkPlan] = allNodes(p).flatMap {
+      case t: InMemoryTableScanExec if builds.add(t.relation.cacheBuilder) =>
+        t +: expand(t.relation.cacheBuilder.cachedPlan)
+      case n => Seq(n)
+    }
+    plans.flatMap(expand).collect {
       case f: FileSourceScanExec if f.relation.location.rootPaths
         .exists(_.toString.contains(path)) => f
     }
+  }
 }
