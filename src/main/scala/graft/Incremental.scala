@@ -227,10 +227,13 @@ object Incremental {
                         maxChangedFraction: Double = 0.3): Stats = {
     val schema = Sources.longSchema(metricLongNames)
     val oldLong = Sources.readCsv(spark, oldCsvPath, schema)
-    // the new snapshot is read ONCE: this checkout feeds both the
-    // fingerprints and the contributor pivot
-    val newLong = Sources.readCsv(spark, newCsvPath, schema)
-      .localCheckpoint(eager = true)
+    // every checkout of this call, released in the finally below
+    val checkouts = scala.collection.mutable.Buffer.empty[DataFrame]
+    def checkout(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(eager = true)
+      checkouts += c
+      c
+    }
     // diff against the PREVIOUS run's stored fingerprint artifact when
     // it exists — the old corpus never re-scans (at 100 TB that scan
     // is most of the diff's cost); cold path hashes the old CSV once
@@ -248,16 +251,19 @@ object Incremental {
     // closed on EVERY exit path: a failed call must not leak the
     // private instance in a long-lived session
     try {
+      // the new snapshot is read ONCE: this checkout feeds both the
+      // fingerprints and the contributor pivot
+      val newLong = checkout(Sources.readCsv(spark, newCsvPath, schema))
       val fpPath = new Path(s"$prevDir/$region/fingerprints.parquet")
       val oldFps = if (prevFs.exists(fpPath)) spark.read.parquet(fpPath.toString)
         else fingerprints(oldLong)
       // one materialized copy serves the diff, the GEOID count and the
       // publish of the next delta's artifact
-      val newFps = fingerprints(newLong).localCheckpoint(eager = true)
+      val newFps = checkout(fingerprints(newLong))
       // localCheckpoint, not persist: an in-place publish swaps out the
       // stored artifact oldFps reads, and a cache-evicted lineage replay
       // would re-read a deleted file
-      val diff = diffFingerprints(oldFps, newFps).localCheckpoint(eager = true)
+      val diff = checkout(diffFingerprints(oldFps, newFps))
       val byStatus = diff.groupBy("status").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val (nChanged, nAdded, nRemoved) = (byStatus.getOrElse("changed", 0L),
@@ -296,7 +302,7 @@ object Incremental {
       // one checkout of the features serves the fan, the edge-neighbour
       // segments and both decades' tile builds; unlike persist, it never
       // touches a cache the caller owns
-      val feats = features.localCheckpoint(eager = true)
+      val feats = checkout(features)
       val fan = featureTileFan(feats, region)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the bookkeeping sets live on the driver, SIZED BY CONTRACT, not
@@ -374,6 +380,9 @@ object Incremental {
       }
       Stats(nChanged, nAdded, nRemoved, affectedRows.length,
         contributorRows.length, fullRebuild = false)
-    } finally outFs.close()
+    } finally {
+      checkouts.foreach(Pipeline.releaseCheckpoint)
+      outFs.close()
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.config.EtlConfig
@@ -49,6 +50,14 @@ object Pipeline {
     val metricCols = wide.columns.filterNot(EtlConfig.idColumns.contains).toSeq
     Extents.extents(wide, metricCols).orderBy("id")
   }
+
+  /** Drops the blocks of a `localCheckpoint`ed frame now, rather than
+    * whenever a driver GC lets the ContextCleaner find it unreferenced.
+    * Call it once nothing reads the frame any more.
+    */
+  private[graft] def releaseCheckpoint(checkpoint: DataFrame): Unit =
+    checkpoint.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
 
   /** Stage d — feature derivation from source geometry
     * (`build.sh:111-118`: mapshaper `-points inner`): GeoJSON features →
@@ -187,10 +196,9 @@ object Pipeline {
   /** Full region run (`build.sh:69-233`): returns the wide frame and
     * writes tiles per decade under `outDir` when features are given.
     * Extents are built only for `extentsOut` ([[extents]] of the returned
-    * frame gives them): an extents frame no one runs leaves its histogram
-    * cache registered, and a later identical plan adopts it and re-reads.
-    * With GeoJSON-derived features ([[geometryFeatures]]) both layers
-    * build; with bare lon/lat points only the bubble layer can.
+    * frame gives them). With GeoJSON-derived features
+    * ([[geometryFeatures]]) both layers build; with bare lon/lat points
+    * only the bubble layer can.
     *
     * SCAN-ONCE discipline (SURVEY §3.1's "one lazy plan, the only true
     * barriers being the pivot shuffle and the tile groupBy shuffle"):
@@ -243,7 +251,8 @@ object Pipeline {
       for (supplied <- features; out <- outDir) {
         // one checkout of the features serves the extend-zooms probes, the
         // polygon geometry, the bounds and every decade's bubble layer;
-        // unlike persist, it never touches a cache the caller owns
+        // unlike persist, it never touches a cache the caller owns, and
+        // it is released when the tiles are written
         val f = supplied.localCheckpoint(eager = true)
         val hasPolys = f.columns.contains("polys")
         // base choropleth GEOMETRY is decade-independent — built ONCE and
@@ -303,7 +312,10 @@ object Pipeline {
             TileBuild.writePbfDirectory(decadeTileset(wide, f, polyFeats,
               inputType, decade, region, bubbleMaxZ), s"$out/$region/$decade", meta)
           }
-        } finally polyFeats.foreach(_.unpersist())
+        } finally {
+          polyFeats.foreach(_.unpersist())
+          releaseCheckpoint(f)
+        }
       }
     } finally if (multiAction) wide.unpersist()
     wide

@@ -23,11 +23,13 @@ import org.apache.spark.sql.types.DoubleType
   *    `stack` into (metric, value) pairs and aggregated in ONE shuffle
   *    keyed by metric — constant memory per partition, spills externally.
   *  - exact quantiles are computed with a DISTRIBUTED histogram (groupBy
-  *    (metric, value) → cumulative ranks over distinct values → R-7
-  *    interpolation), never Spark's `percentile` aggregate, whose buffer
-  *    holds a group's entire value multiset (OOM at 100 TB). See
-  *    `computeExtents`. `approximate = true` switches to the
-  *    `percentile_approx` sketch for when even the distinct-value
+  *    (metric, value) → cumulative ranks over distinct values in
+  *    equal-width buckets → R-7 interpolation), never Spark's
+  *    `percentile` aggregate, whose buffer holds a group's entire value
+  *    multiset (OOM at 100 TB). It is one lazy plan that stores
+  *    nothing, so a plan that is built and never run leaves nothing
+  *    behind. See [[rankPlan]]. `approximate = true` switches to a
+  *    histogram-fed GK sketch for when even the distinct-value
   *    histogram is hot (choropleth scales only need ~1% accuracy).
   */
 object Extents {
@@ -46,59 +48,38 @@ object Extents {
     */
   def extents(df: DataFrame, metricCols: Seq[String],
               lo: Double = 0.01, hi: Double = 0.99,
-              approximate: Boolean = false): DataFrame = {
-    // per-metric extents: group cardinality == metricCols.size, so the
-    // exact path's boundary/offset broadcast is always safe here
-    // the metric travels as an INT index through the histogram pipeline
-    // (the name string would otherwise be the repeated shuffle key on
-    // every histogram/window row) and is restored after the final
-    // per-metric aggregation
-    val stackExpr = explodeToLong(metricCols)
-    val long = df.select(stackExpr: _*)
-      .select(col("id"), numericOrNull(col("value")).as("value"))
-      .filter(col("value").isNotNull)
-    val names = array(metricCols.map(lit): _*)
-    computeExtents(long, Seq("id"), lo, hi, approximate)
-      .withColumn("id", element_at(names, col("id") + 1))
+              approximate: Boolean = false): DataFrame =
+    computeExtents(numericLong(df, metricCols), Seq("id"), lo, hi, approximate)
+      .withColumn("id", metricName(metricCols))
       .orderBy("id")
-  }
 
   /** Grouped extents: per (group, metric) min/max/q1/q99 — the
     * reference's per-region extents files (`build.sh:69,84-88` — one
     * extents CSV per region table) generalized to a grouping column in
     * one shuffle.
     *
-    * Memory ceiling: exact `percentile` buffers EVERY value of a
-    * (group, metric) cell in one aggregation buffer — at 100 TB a hot
-    * group OOMs the executor. Pass `approximate = true` to switch to
-    * `percentile_approx` (KLL-style sketch, constant memory, ~1e-4
-    * relative accuracy at 10k buckets — ample for choropleth scales).
-    * The exact path stays the default because it is the oracle-parity
-    * (R-7 / d3.quantile) estimator.
-    *
-    * The exact path broadcasts its per-group boundary/offset tables
-    * (≤ [[RangeBuckets]] rows per group): right for the reference shape
-    * — tens of regions × a handful of metrics — since the broadcast
-    * grows linearly in group cardinality.
+    * The exact path (the oracle-parity R-7 / d3.quantile estimator, the
+    * default) holds no unbounded buffer: see [[rankPlan]]. It broadcasts
+    * its per-group stats and offset tables (≤ [[RangeBuckets]] rows per
+    * group): right for the reference shape — tens of regions × a handful
+    * of metrics — since the broadcast grows linearly in group
+    * cardinality. `approximate = true` swaps the ranks for a GK sketch
+    * (constant memory, ~1e-4 relative rank accuracy at 10k buckets —
+    * ample for choropleth scales).
     */
   def extentsBy(df: DataFrame, groupCol: String, metricCols: Seq[String],
                 lo: Double = 0.01, hi: Double = 0.99,
-                approximate: Boolean = false): DataFrame = {
-    val stackExpr = explodeToLong(metricCols)
-    val long = df.select(col(groupCol) +: stackExpr: _*)
-      .select(col(groupCol), col("id"), numericOrNull(col("value")).as("value"))
-      .filter(col("value").isNotNull)
-    val names = array(metricCols.map(lit): _*)
-    computeExtents(long, Seq(groupCol, "id"), lo, hi, approximate)
-      .withColumn("id", element_at(names, col("id") + 1))
+                approximate: Boolean = false): DataFrame =
+    computeExtents(numericLong(df, metricCols, Seq(groupCol)),
+        Seq(groupCol, "id"), lo, hi, approximate)
+      .withColumn("id", metricName(metricCols))
       .orderBy(groupCol, "id")
-  }
 
-  /** Distinct-value range buckets per group for the exact cumulative
-    * ranks: approximate-quantile boundaries balance the buckets, the
-    * EXACT result is unaffected by boundary placement (a bucket split
-    * only splits the running sum, never reorders it). Raise with cluster
-    * parallelism — each (group, bucket) cell is one window task.
+  /** Equal-width value buckets per group for the exact cumulative ranks.
+    * Bucket placement never changes the result (a bucket split only
+    * splits the running sum, never reorders it); it only spreads the
+    * in-bucket window over (group, bucket) tasks. Raise with cluster
+    * parallelism.
     */
   val RangeBuckets = 32
 
@@ -107,31 +88,21 @@ object Extents {
     *
     * EXACT path — distributed histogram quantile (R-7), not Spark's
     * `percentile` aggregate: `percentile` holds a group's ENTIRE value
-    * multiset in one in-memory aggregation buffer (the 100 TB OOM). Here:
-    *   1. value histogram: groupBy(group, value) count — fully
-    *      distributed, combines duplicates map-side (real metric columns
-    *      are heavily duplicated: rates, counts, flags);
-    *   2. cumulative ranks over each group's DISTINCT values — RANGE
-    *      PARTITIONED: per-group approximate-quantile boundaries cut the
-    *      distinct values into [[RangeBuckets]] balanced buckets, the
-    *      running sum is an in-bucket window (partitioned by
-    *      (group, bucket) — parallel across buckets) plus a per-bucket
-    *      offset from a second window over the TINY bucket-subtotal
-    *      table (≤ RangeBuckets rows per group). No operator ever sorts
-    *      a whole group's distinct values on one task — the 100 TB
-    *      continuous-metric skew this replaces;
-    *   3. the two bracketing values of each target rank are picked with
-    *      conditional aggregates and linearly interpolated — exactly
-    *      d3.quantile / DuckDB `quantile_cont` R-7:
-    *      h = (n-1)p, v = v⌊h⌋ + (h-⌊h⌋)(v⌊h⌋₊₁ - v⌊h⌋).
-    * Every step is a codegen'd relational operator; no unbounded
-    * aggregation buffer and no single-partition exchange anywhere
-    * (PlanAuditSpec).
+    * multiset in one in-memory aggregation buffer (the 100 TB OOM). The
+    * cumulative ranks come from [[rankPlan]]; only the ≤4 buckets whose
+    * rank span holds a target rank join into the in-bucket window (the
+    * offset table brackets each bucket's span), so the other distinct
+    * values never sort. The two bracketing values of each target rank
+    * are picked with conditional aggregates and linearly interpolated —
+    * exactly d3.quantile / DuckDB `quantile_cont` R-7:
+    * h = (n-1)p, v = v⌊h⌋ + (h-⌊h⌋)(v⌊h⌋₊₁ - v⌊h⌋). The pick aggregate
+    * groups by (group, n, vmin, vmax), so n, min and max come through
+    * as keys with no join. No unbounded aggregation buffer and no
+    * single-partition exchange anywhere (PlanAuditSpec).
     *
-    * APPROXIMATE path — `percentile_approx` sketch (constant memory,
-    * ~1e-4 relative rank accuracy at 10k buckets) for when even the
-    * distinct-value histogram is too hot; both quantiles share one
-    * sketch buffer.
+    * APPROXIMATE path — GK sketch (constant memory, ~1e-4 relative rank
+    * accuracy at 10k buckets) for when even the distinct-value histogram
+    * is too hot; both quantiles share one sketch buffer.
     */
   private def computeExtents(long: DataFrame, groupCols: Seq[String],
                              lo: Double, hi: Double,
@@ -158,139 +129,88 @@ object Extents {
           element_at(col("qq"), 1).as("q1"),
           element_at(col("qq"), 2).as("q99")): _*)
     } else {
-      val (hist, bucketed, offs, bounds) =
-        cumulativeHistogram(long, groupCols)
-      // RANK-TARGETED window (round 10): the two quantiles need the
-      // exact rank of only 4 target positions per group, and the
-      // offset table already brackets each bucket's rank span — so
-      // only the ≤4 buckets containing a target ever join into the
-      // window. The other ~⅞ of the distinct values skip the sort
-      // entirely (measured ~20%/~10% end-to-end at sf0.1/10× — the
-      // histogram build dominates what remains); vmin/vmax come from
-      // the histogram directly. Bucket-hit predicate and pick expressions share the
-      // same floor arithmetic, so the picked values are bit-identical
-      // to the full-window formulation (spec- and oracle-covered).
-      def bucketHit(p: Double): Column = {
-        val h = (col("n") - 1) * p
-        val kLo = floor(h) + 1
-        val kHi = least(floor(h) + 2, col("n"))
-        (col("__off") < kLo && kLo <= col("__off") + col("bsum")) ||
-          (col("__off") < kHi && kHi <= col("__off") + col("bsum"))
-      }
-      val cum = cumFrom(bucketed, offs.where(bucketHit(lo) || bucketHit(hi)),
-        groupCols)
+      val (bucketed, offs) = rankPlan(long, groupCols)
       // rank targets (1-based): kLo = ⌊h⌋+1 and its successor, clamped
-      def picks(p: Double, name: String): Seq[Column] = {
+      def targets(p: Double): Seq[Column] = {
         val h = (col("n") - 1) * p
-        val kLo = floor(h) + 1
-        val kHi = least(floor(h) + 2, col("n"))
-        Seq(
-          max(when(col("cum_before") < kLo && kLo <= col("cum"), col("value")))
-            .as(s"${name}_lo"),
-          max(when(col("cum_before") < kHi && kHi <= col("cum"), col("value")))
-            .as(s"${name}_hi"))
+        Seq(floor(h) + 1, least(floor(h) + 2, col("n")))
       }
+      val ks = targets(lo) ++ targets(hi)
+      val hit = ks.map(k => col("__off") < k && k <= col("__off") + col("bsum"))
+      val cum = cumFrom(bucketed, offs.where(hit.reduce(_ || _)), groupCols)
+      val Seq(aLo, aHi, bLo, bHi) = ks.map(k =>
+        max(when(col("cum_before") < k && k <= col("cum"), col("value"))))
       def interp(p: Double, name: String): Column = {
         val h = (col("n") - 1) * p
         val frac = h - floor(h)
         col(s"${name}_lo") + frac * (col(s"${name}_hi") - col(s"${name}_lo"))
       }
-      // vmin/vmax ride the boundary-sketch aggregation (r19): the old
-      // separate `ranges = hist.groupBy(g).agg(min, max)` re-scanned
-      // the whole persisted histogram and paid its own exchange plus a
-      // sort-merge join with pickAgg — the same per-group pass the
-      // bounds agg already makes. One hist pass fewer at any scale;
-      // the final attach is a broadcast join of ≤|groups| rows.
-      val pickAgg = cum.groupBy(gcols: _*)
-        .agg(first("n").as("n"),
-          picks(lo, "a") ++ picks(hi, "b"): _*)
-      val minmax = bounds.select(gcols ++
-        Seq(col("__vmin").as("vmin"), col("__vmax").as("vmax")): _*)
-      val out = pickAgg
-        .join(broadcast(minmax), groupCols)
+      cum.groupBy((groupCols ++ Seq("n", "vmin", "vmax")).map(col): _*)
+        .agg(aLo.as("a_lo"), aHi.as("a_hi"), bLo.as("b_lo"), bHi.as("b_hi"))
         .select(gcols ++ Seq(col("vmin"), col("vmax"),
           interp(lo, "a").as("q1"), interp(hi, "b").as("q99")): _*)
-      unpersistAfterUse(Seq(hist, bounds), out)
     }
   }
 
-  /** The shared exact-rank kernel: distinct-value histogram +
-    * RANGE-BUCKETED cumulative ranks per group. Returns the PERSISTED
-    * histogram (route the final frame through [[unpersistAfterUse]]),
-    * the bucketed/offset frames — (groupCols..., bkt, value, cnt, cum,
-    * cum_before, n) — where `cum` is the exact 1-based cumulative row
-    * count through each distinct value and `n` the group total, and
-    * the per-group boundary frame (groupCols..., __bnds, __vmin,
-    * __vmax): exact min/max ride the boundary aggregation so
-    * [[computeExtents]] never re-scans hist for them (r19). No
-    * operator ever sorts a whole group's distinct values on one task:
-    * the in-bucket window partitions by (group, bkt) and the
-    * per-bucket offset comes from a second window over the TINY
-    * bucket-subtotal table (≤ [[RangeBuckets]] rows per group).
-    * Consumers: [[computeExtents]] (exact R-7 quantiles) and
-    * [[quantileBins]] (equal-frequency binning).
+  /** The exact-rank kernel over a pre-filtered long table of
+    * (groupCols..., value), one lazy plan that stores nothing:
+    *   1. `hist`: groupBy(group, value) count — fully distributed,
+    *      combines duplicates map-side (real metric columns are heavily
+    *      duplicated: rates, counts, flags);
+    *   2. `stats`: per-group min, max and row count `n` over hist. It
+    *      reads every hist column, so over a file scan AQE reuses the
+    *      hist exchange instead of running the unpivot again (over an
+    *      in-memory table scan it does not);
+    *   3. bucket = how many of the equal-width boundaries
+    *      vmin + i·(vmax−vmin)/[[RangeBuckets]], 0 < i < RangeBuckets,
+    *      lie below the value. Ranks stay exact under any monotone
+    *      bucketing; a NaN or ∞ span puts every value in bucket 0;
+    *   4. `offs`: per-(group, bkt, n) subtotal `bsum` and `__off`, the
+    *      running sum of the earlier buckets (≤ RangeBuckets rows per
+    *      group).
+    * Returns `bucketed` — (groupCols..., value, cnt, vmin, vmax, n, bkt)
+    * — and `offs`; [[cumFrom]] joins them into exact cumulative ranks.
+    * No operator ever sorts a whole group's distinct values on one task.
+    * Consumers: [[computeExtents]] (exact R-7 quantiles),
+    * [[quantileBins]] (equal-frequency binning) and [[cdfTransform]].
     */
-  private def cumulativeHistogram(long: DataFrame, groupCols: Seq[String])
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  private def rankPlan(long: DataFrame, groupCols: Seq[String])
+      : (DataFrame, DataFrame) = {
     val gcols = groupCols.map(col)
-    // cache barrier: the histogram (already the SMALL distinct-value
-    // table) feeds both the boundary sketch and the bucketed cumsum —
-    // without it the whole upstream unpivot + try_cast re-executes per
-    // reference (observed 3x at sf0.1). Same documented pattern as the
-    // q23 shingle cache; released by `unpersistAfterUse` once the
-    // first action over the result completes.
     val hist = long.groupBy((groupCols :+ "value").map(col): _*)
       .agg(count(lit(1)).as("cnt"))
-      .persist()
-    // deterministic range bucketing: per-group boundary sketch over the
-    // distinct values; bucket = #boundaries below the value (HOF over
-    // a tiny broadcast array)
-    val qs = array((1 until RangeBuckets)
-      .map(i => lit(i.toDouble / RangeBuckets)): _*)
-    // exact min/max share the boundary pass (r19): same groupBy, two
-    // extra tiny agg buffers — computeExtents attaches them at the end
-    // instead of re-scanning hist for a separate ranges aggregation.
-    // Persisted (≤ one row per group) because it feeds BOTH the bucket
-    // assignment and the final min/max attach: without the barrier
-    // Catalyst re-runs the whole sketch aggregation for each reference.
-    // Released alongside hist by [[unpersistAfterUse]].
-    val bounds = hist.groupBy(gcols: _*)
-      .agg(percentile_approx(col("value"), qs, lit(1000)).as("__bnds"),
-        min("value").as("__vmin"), max("value").as("__vmax"))
-      .persist()
-    // bounds/offs are ≤ RangeBuckets rows PER GROUP: broadcast, as the
-    // group cardinality is bounded (a handful of metrics × regions)
-    val bucketed = hist.join(
-        broadcast(bounds.drop("__vmin", "__vmax")), groupCols)
-      .withColumn("bkt", size(filter(col("__bnds"), b => b < col("value"))))
-      .drop("__bnds")
+    val stats = hist.groupBy(gcols: _*)
+      .agg(min("value").as("vmin"), max("value").as("vmax"),
+        sum("cnt").as("n"))
+    val width = (col("vmax") - col("vmin")) / RangeBuckets
+    val bounds = array((1 until RangeBuckets).map(i => col("vmin") + width * i): _*)
+    // stats is one row per group: broadcast, as the group cardinality is
+    // bounded (a handful of metrics × regions)
+    val bucketed = hist.join(broadcast(stats), groupCols)
+      .withColumn("bkt", size(filter(bounds, b => b < col("value"))))
     val bktCols = groupCols :+ "bkt"
-    // per-(group, bucket) subtotals: ≤ RangeBuckets rows per group, so
-    // the offset window's per-group partition is trivially small
-    val sub = bucketed.groupBy(bktCols.map(col): _*)
+    val offs = bucketed.groupBy((bktCols :+ "n").map(col): _*)
       .agg(sum("cnt").as("bsum"))
-    val offs = sub
       .withColumn("__off", coalesce(sum("bsum").over(
         Window.partitionBy(gcols: _*).orderBy("bkt")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum("bsum").over(Window.partitionBy(gcols: _*)))
-      .select(bktCols.map(col) ++ Seq(col("bsum"), col("__off"), col("n")): _*)
-    (hist, bucketed, offs, bounds)
+    (bucketed, offs)
   }
 
   /** In-bucket cumulative ranks over (a possibly bucket-FILTERED view
-    * of) the offset table: joining `bucketed` against fewer `offs`
-    * rows prunes whole buckets out of the window — the rank-targeted
-    * short-circuit [[computeExtents]] uses (only the ≤4 buckets
-    * containing a target rank ever sort), while [[quantileBins]]
-    * passes the full table because every distinct value needs its
-    * rank.
+    * of) the offset table: `cum` is the exact 1-based cumulative row
+    * count through each distinct value, `cum_before` the count before
+    * it. Joining `bucketed` against fewer `offs` rows prunes whole
+    * buckets out of the window — the rank-targeted short-circuit
+    * [[computeExtents]] uses, while [[quantileBins]] and
+    * [[cdfTransform]] pass the full table because every distinct value
+    * needs its rank.
     */
   private def cumFrom(bucketed: DataFrame, offs: DataFrame,
                       groupCols: Seq[String]): DataFrame = {
     val bktCols = groupCols :+ "bkt"
     val wIn = Window.partitionBy(bktCols.map(col): _*).orderBy("value")
-    bucketed.join(broadcast(offs), bktCols)
+    bucketed.join(broadcast(offs.drop("n")), bktCols)
       .withColumn("cum", sum("cnt").over(wIn) + col("__off"))
       .withColumn("cum_before", col("cum") - col("cnt"))
   }
@@ -310,88 +230,16 @@ object Extents {
     */
   def quantileBins(df: DataFrame, metricCols: Seq[String], k: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val stackExpr = explodeToLong(metricCols)
-    val long = df.select(stackExpr: _*)
-      .select(col("id"), numericOrNull(col("value")).as("value"))
-      .filter(col("value").isNotNull)
-    val names = array(metricCols.map(lit): _*)
-    val (hist, bucketed, offs, bounds) =
-      cumulativeHistogram(long, Seq("id"))
-    val out = cumFrom(bucketed, offs, Seq("id"))
+    val (bucketed, offs) = rankPlan(numericLong(df, metricCols), Seq("id"))
+    cumFrom(bucketed, offs, Seq("id"))
       .withColumn("bin",
         expr(s"least($k - 1, CAST((cum_before * $k) div n AS INT))"))
       .groupBy(col("id"), col("bin"))
       .agg(sum("cnt").as("n_rows"),
         min("value").as("lo"), max("value").as("hi"))
-      .withColumn("metric", element_at(names, col("id") + 1))
-      .select("metric", "bin", "n_rows", "lo", "hi")
+      .select(metricName(metricCols).as("metric"), col("bin"), col("n_rows"),
+        col("lo"), col("hi"))
       .orderBy("metric", "bin")
-    unpersistAfterUse(Seq(hist, bounds), out)
-  }
-
-  /** APPROXIMATE equal-frequency binning — [[quantileBins]]'s scale
-    * twin (the suite's exact path is its wall-clock leader purely from
-    * exactness; a discretizer for feature bucketing rarely needs exact
-    * rank balance). Same output shape and the same TIES-IN-ONE-BIN
-    * contract — bin is a pure function of the VALUE (the count of cut
-    * points strictly below it), so equal values always land together —
-    * but the k−1 cut points come from the histogram-fed GK sketch
-    * ([[graft.functions.WeightedPercentileApprox]], ε = 1/accuracy)
-    * instead of the exact cumulative-rank machinery.
-    *
-    * What it skips vs the exact path: the per-bucket offset windows
-    * and the in-bucket cumulative-rank window (a sort per
-    * (metric, bucket) cell) — after the shared distinct-value
-    * histogram, the only work is one sketch pass over distinct values
-    * and a broadcast of k−1 cuts per metric.
-    *
-    * ACCURACY contract: each cut's rank error is ≤ ε·n (GK bound), so
-    * a bin's row count deviates from n/k by at most 2ε·n plus tie
-    * mass at the cut values; bins remain disjoint, ordered, and
-    * exhaustive (every value maps to exactly one bin in [0, k−1]).
-    * Sketch cuts are engine-specific → rows-only driver check, no
-    * DuckDB oracle (the q94 precedent); the contract is spec-pinned
-    * against the exact path in CoreOperatorsSpec.
-    */
-  def approxQuantileBins(df: DataFrame, metricCols: Seq[String], k: Int,
-                         accuracy: Int = 10000): DataFrame = {
-    require(k >= 1, s"k must be positive, got $k")
-    val stackExpr = explodeToLong(metricCols)
-    val long = df.select(stackExpr: _*)
-      .select(col("id"), numericOrNull(col("value")).as("value"))
-      .filter(col("value").isNotNull)
-    val names = array(metricCols.map(lit): _*)
-    if (k == 1) {
-      // no cut points to sketch — the single bin is the histogram's
-      // own per-metric rollup (bit-identical to the exact path's k=1,
-      // which wpa cannot express: an empty percentages array types as
-      // array<null> and fails analysis)
-      return long.groupBy(col("id"))
-        .agg(count(lit(1)).as("n_rows"),
-          min("value").as("lo"), max("value").as("hi"))
-        .withColumn("bin", lit(0))
-        .withColumn("metric", element_at(names, col("id") + 1))
-        .select("metric", "bin", "n_rows", "lo", "hi")
-        .orderBy("metric", "bin")
-    }
-    val hist = long.groupBy(col("id"), col("value"))
-      .agg(count(lit(1)).as("cnt"))
-      .persist()
-    val cuts = hist.groupBy(col("id"))
-      .agg(graft.functions.WeightedPercentileApprox.wpa(
-        col("value"), col("cnt"),
-        (1 until k).map(_.toDouble / k), accuracy).as("__cuts"))
-    // ≤ k−1 doubles per metric — broadcast
-    val out = hist.join(broadcast(cuts), "id")
-      .withColumn("bin",
-        size(filter(col("__cuts"), c => c < col("value"))))
-      .groupBy(col("id"), col("bin"))
-      .agg(sum("cnt").as("n_rows"),
-        min("value").as("lo"), max("value").as("hi"))
-      .withColumn("metric", element_at(names, col("id") + 1))
-      .select("metric", "bin", "n_rows", "lo", "hi")
-      .orderBy("metric", "bin")
-    unpersistAfterUse(Seq(hist), out)
   }
 
   /** QUANTILE NORMALIZATION — the rank→CDF feature transform
@@ -411,38 +259,27 @@ object Extents {
     * engine-identical, merge-order-free.
     */
   def cdfTransform(df: DataFrame, metricCols: Seq[String]): DataFrame = {
-    val stackExpr = explodeToLong(metricCols)
-    val long = df.select(stackExpr: _*)
-      .select(col("id"), numericOrNull(col("value")).as("value"))
-      .filter(col("value").isNotNull)
-    val names = array(metricCols.map(lit): _*)
-    val (hist, bucketed, offs, bounds) =
-      cumulativeHistogram(long, Seq("id"))
-    val out = cumFrom(bucketed, offs, Seq("id"))
-      .select(element_at(names, col("id") + 1).as("metric"),
+    val (bucketed, offs) = rankPlan(numericLong(df, metricCols), Seq("id"))
+    cumFrom(bucketed, offs, Seq("id"))
+      .select(metricName(metricCols).as("metric"),
         col("value"), col("cnt").as("n_rows"),
         round((col("cum_before") + col("cnt") * 0.5) / col("n"), 6).as("cdf"))
       .orderBy("metric", "value")
-    unpersistAfterUse(Seq(hist, bounds), out)
   }
 
   /** LEARN half of the registry-split approximate binning: the k−1
     * GK cut points per metric, as a bounded driver-side artifact
     * (≤ (k−1)·|metricCols| doubles — the PQ-codebook class of load).
-    * Persist-and-apply callers (q116) route this through
+    * Store-and-apply callers (q116) route this through
     * [[ArtifactCache]]: GK merge order varies with shuffle fetch
-    * order, so the learned cuts are only STABLE once persisted — the
+    * order, so the learned cuts are only STABLE once stored — the
     * apply pass and the external oracle must both read the same
     * stored artifact, never re-learn.
     */
   def approxBinCuts(df: DataFrame, metricCols: Seq[String], k: Int,
                     accuracy: Int = 10000): Seq[(String, Seq[Double])] = {
     require(k >= 2, s"cut learning needs k >= 2, got $k")
-    val stackExpr = explodeToLong(metricCols)
-    val long = df.select(stackExpr: _*)
-      .select(col("id"), numericOrNull(col("value")).as("value"))
-      .filter(col("value").isNotNull)
-    long.groupBy(col("id"), col("value"))
+    numericLong(df, metricCols).groupBy(col("id"), col("value"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("id"))
       .agg(graft.functions.WeightedPercentileApprox.wpa(
@@ -467,27 +304,22 @@ object Extents {
     val byName = cuts.toMap
     require(metricCols.forall(byName.contains),
       s"missing cuts for ${metricCols.filterNot(byName.contains).mkString(",")}")
-    val stackExpr = explodeToLong(metricCols)
-    val long = df.select(stackExpr: _*)
-      .select(col("id"), numericOrNull(col("value")).as("value"))
-      .filter(col("value").isNotNull)
-    val names = array(metricCols.map(lit): _*)
     val cutsArr = array(metricCols.map(m =>
       array(byName(m).map(lit): _*)): _*)
-    long
+    numericLong(df, metricCols)
       .withColumn("bin", size(filter(element_at(cutsArr, col("id") + 1),
         c => c < col("value"))))
       .groupBy(col("id"), col("bin"))
       .agg(count(lit(1)).as("n_rows"),
         min("value").as("lo"), max("value").as("hi"))
-      .withColumn("metric", element_at(names, col("id") + 1))
-      .select("metric", "bin", "n_rows", "lo", "hi")
+      .select(metricName(metricCols).as("metric"), col("bin"), col("n_rows"),
+        col("lo"), col("hi"))
       .orderBy("metric", "bin")
   }
 
   /** LEARN half of the registry-split approximate extents (q94): the
     * raw (unrounded) sketch q-lo/q-hi per metric. Same rationale as
-    * [[approxBinCuts]] — the GK estimate is persisted once and then
+    * [[approxBinCuts]] — the GK estimate is stored once and then
     * only APPLIED, because re-learning is neither free nor
     * merge-order-stable.
     */
@@ -510,41 +342,43 @@ object Extents {
     val byName = qs.toMap
     require(metricCols.forall(byName.contains),
       s"missing quantiles for ${metricCols.filterNot(byName.contains).mkString(",")}")
-    val stackExpr = explodeToLong(metricCols)
-    val long = df.select(stackExpr: _*)
-      .select(col("id"), numericOrNull(col("value")).as("value"))
-      .filter(col("value").isNotNull)
-    val names = array(metricCols.map(lit): _*)
     val q1s = array(metricCols.map(m => lit(byName(m)._1)): _*)
     val q99s = array(metricCols.map(m => lit(byName(m)._2)): _*)
-    long.groupBy(col("id"))
+    numericLong(df, metricCols).groupBy(col("id"))
       .agg(min("value").as("vmin"), max("value").as("vmax"))
-      .select(element_at(names, col("id") + 1).as("id"),
+      .select(metricName(metricCols).as("id"),
         col("vmin"), col("vmax"),
         element_at(q1s, col("id") + 1).as("q1"),
         element_at(q99s, col("id") + 1).as("q99"))
       .orderBy("id")
   }
 
-  /** Releases the cached histogram once the first action consuming
-    * `out` completes — see [[CacheRelease]] (shared with the LSH
-    * pipeline's shingle barriers) for the full release/self-expiry
-    * contract.
-    */
-  private def unpersistAfterUse(cached: Seq[DataFrame], out: DataFrame): DataFrame =
-    CacheRelease.afterUse(cached, out)
-
   /** A2: wide→long unpivot via `stack` (one pass, no per-column scans).
     * Emits the metric as its int INDEX in `metricCols` — callers map it
     * back to the name after aggregating (the name would otherwise ride
     * every histogram row through every shuffle).
     */
-  private def explodeToLong(metricCols: Seq[String]): Seq[Column] = {
+  private def explodeToLong(metricCols: Seq[String]): Column = {
     val pairs = metricCols.zipWithIndex
       .map { case (c, i) => s"$i, try_cast(`$c` as double)" }
       .mkString(", ")
-    Seq(expr(s"stack(${metricCols.size}, $pairs) as (id, value)"))
+    expr(s"stack(${metricCols.size}, $pairs) as (id, value)")
   }
+
+  /** The numeric cells of `metricCols`, unpivoted to (keys..., id,
+    * value): empty, junk and NaN cells dropped
+    * (`extract-extents.js:23-29`).
+    */
+  private def numericLong(df: DataFrame, metricCols: Seq[String],
+                          keys: Seq[String] = Nil): DataFrame =
+    df.select(keys.map(col) :+ explodeToLong(metricCols): _*)
+      .select(keys.map(col) ++ Seq(col("id"),
+        numericOrNull(col("value")).as("value")): _*)
+      .filter(col("value").isNotNull)
+
+  /** The metric name of the unpivot's int `id`. */
+  private def metricName(metricCols: Seq[String]): Column =
+    element_at(array(metricCols.map(lit): _*), col("id") + 1)
 
   /** One-pass column PROFILING (the Deequ/data-quality shape a
     * training-data pipeline runs before trusting a new table): per
@@ -571,8 +405,7 @@ object Extents {
     * in both.
     */
   def profileColumns(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val long = df.select(explodeToLong(cols): _*)
-    profileCore(long, cols, Nil)
+    profileCore(df.select(explodeToLong(cols)), cols, Nil)
   }
 
   /** [[profileColumns]] with a SLICE key — one scan profiles every
@@ -584,8 +417,8 @@ object Extents {
     */
   def profileColumnsBy(df: DataFrame, cols: Seq[String],
                        sliceCol: String): DataFrame = {
-    val long = df.select(col(sliceCol) +: explodeToLong(cols): _*)
-    profileCore(long, cols, Seq(sliceCol))
+    profileCore(df.select(col(sliceCol), explodeToLong(cols)), cols,
+      Seq(sliceCol))
   }
 
   /** Shared profiling kernel over the unpivoted (sliceCols..., id,
@@ -607,7 +440,6 @@ object Extents {
     */
   private def profileCore(long: DataFrame, cols: Seq[String],
                           sliceCols: Seq[String]): DataFrame = {
-    val names = array(cols.map(lit): _*)
     val keys = sliceCols :+ "id"
     val hist = long.groupBy((keys :+ "value").map(col): _*)
       .agg(count(lit(1)).as("cnt"))
@@ -627,7 +459,7 @@ object Extents {
       .withColumn("mean_micro",
         expr("CAST(sum_micro div nullif(n - n_null, 0) AS BIGINT)"))
       .withColumn("sum_micro", col("sum_micro").cast("string"))
-      .withColumn("col_name", element_at(names, col("id") + 1))
+      .withColumn("col_name", metricName(cols))
       .select(((sliceCols :+ "col_name") ++ Seq("n", "n_null", "n_distinct",
         "vmin", "vmax", "sum_micro", "mean_micro")).map(col): _*)
   }

@@ -69,13 +69,54 @@ class CoreOperatorsSpec extends AnyFunSuite with SharedSpark {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val df = Seq(1.0, 2.0, 3.0, 4.0, 5.0).toDF("a")
     Extents.extents(df, Seq("a")).collect()
-    // the release listener fires asynchronously on the listener bus
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    val deadline = System.currentTimeMillis + 10000
-    while (leaked.nonEmpty && System.currentTimeMillis < deadline)
-      Thread.sleep(50)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(leaked.isEmpty,
       "the extents histogram must be unpersisted once the action completes")
+  }
+
+  test("extents plans that are never run leave no cache behind") {
+    // a built plan must not register anything: an explain or a plan
+    // audit builds plans it never runs, and a stale cache entry would be
+    // adopted by the next identical plan
+    val cm = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val df = Seq(("g1", 1.0, 2.0), ("g1", 3.0, 2.0), ("g2", 5.0, 7.0))
+      .toDF("g", "a", "b")
+    val plans = Seq(Extents.extents(df, Seq("a", "b")),
+      Extents.extentsBy(df, "g", Seq("a", "b")),
+      Extents.quantileBins(df, Seq("a", "b"), 2),
+      Extents.cdfTransform(df, Seq("a", "b")))
+    plans.foreach(_.queryExecution.executedPlan)
+    assert(cm.isEmpty, "building an extents plan must not register a cache")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "building an extents plan must not persist an RDD")
+  }
+
+  test("extents kernel: infinite, overflowing and single-value spans") {
+    // ±Infinity cells survive the numeric filter; NaN, junk and empty
+    // ones do not. A ±1e308 pair overflows the bucket width to ∞ and a
+    // single-value group has a zero width: every value then lands in
+    // one bucket, and the ranks stay exact
+    val df = Seq(("g1", "5", "1"), ("g1", "5", "Infinity"), ("g1", "5", "-3"),
+      ("g2", "5", "2"), ("g2", "x", ""), ("g2", "7", "-Infinity"),
+      ("g1", "5", "NaN"), ("g2", "1e308", "2"), ("g2", "-1e308", "2"))
+      .toDF("g", "a", "b")
+    def rows(out: org.apache.spark.sql.DataFrame) = out.collect().mkString(" ")
+    assert(rows(Extents.extents(df, Seq("a", "b"))) ==
+      "[a,-1.0E308,1.0E308,-9.3E307,9.299999999999997E307] " +
+      "[b,-Infinity,Infinity,NaN,Infinity]")
+    assert(rows(Extents.extentsBy(df, "g", Seq("a", "b"))) ==
+      "[g1,a,5.0,5.0,5.0,5.0] [g1,b,-3.0,Infinity,-2.92,Infinity] " +
+      "[g2,a,-1.0E308,1.0E308,-9.7E307,9.699999999999998E307] " +
+      "[g2,b,-Infinity,2.0,NaN,2.0]")
+    assert(rows(Extents.quantileBins(df, Seq("a", "b"), 3)) ==
+      "[a,0,6,-1.0E308,5.0] [a,2,2,7.0,1.0E308] [b,0,3,-Infinity,1.0] " +
+      "[b,1,3,2.0,2.0] [b,2,1,Infinity,Infinity]")
+    assert(rows(Extents.cdfTransform(df, Seq("a", "b"))) ==
+      "[a,-1.0E308,1,0.0625] [a,5.0,5,0.4375] [a,7.0,1,0.8125] " +
+      "[a,1.0E308,1,0.9375] [b,-Infinity,1,0.071429] [b,-3.0,1,0.214286] " +
+      "[b,1.0,1,0.357143] [b,2.0,3,0.642857] [b,Infinity,1,0.928571]")
   }
 
   test("extents quantile is R-7 (d3.quantile parity)") {
@@ -424,7 +465,7 @@ class CoreOperatorsSpec extends AnyFunSuite with SharedSpark {
     assert(tb.map(_.getAs[Long]("n_rows")).sum == 1000L)
   }
 
-  test("approxQuantileBins: GK-cut bins honor the exact path's contract") {
+  test("approxBinCuts: bins over GK cuts honor the exact path's contract") {
     // duplicated random multiset — ties are the hard part of the
     // contract. 400 distinct values, each repeated 1..80 times (seeded).
     val rnd = new scala.util.Random(7)
@@ -436,7 +477,8 @@ class CoreOperatorsSpec extends AnyFunSuite with SharedSpark {
     val k = 8
     val accuracy = 10000 // GK ε = 1e-4
     val df = scala.util.Random.shuffle(vals).toDF("a")
-    val bins = Extents.approxQuantileBins(df, Seq("a"), k, accuracy)
+    val bins = Extents.binByCuts(df, Seq("a"),
+        Extents.approxBinCuts(df, Seq("a"), k, accuracy))
       .collect().sortBy(_.getAs[Int]("bin"))
     // bins are disjoint, ordered, exhaustive: 0..m contiguous, value
     // ranges strictly increasing, counts sum to n
@@ -472,24 +514,12 @@ class CoreOperatorsSpec extends AnyFunSuite with SharedSpark {
     val ex = Extents.quantileBins(uni, Seq("a"), k).collect()
       .map(r => (r.getAs[Int]("bin"),
         (r.getAs[Long]("n_rows"), r.getAs[Double]("lo"), r.getAs[Double]("hi"))))
-    val ap = Extents.approxQuantileBins(uni, Seq("a"), k, accuracy).collect()
+    val ap = Extents.binByCuts(uni, Seq("a"),
+        Extents.approxBinCuts(uni, Seq("a"), k, accuracy)).collect()
       .map(r => (r.getAs[Int]("bin"),
         (r.getAs[Long]("n_rows"), r.getAs[Double]("lo"), r.getAs[Double]("hi"))))
     assert(ap.toMap == ex.toMap,
       "tie-free small-n bins must agree with the exact path")
-  }
-
-  test("approxQuantileBins: k=1 short-circuits to the single-bin rollup") {
-    // wpa cannot take an empty percentages array (types as array<null>);
-    // k=1 must come from the histogram directly and match the exact path
-    val df = Seq(3.0, 1.0, 4.0, 1.0, 5.0).toDF("a")
-    val ap = Extents.approxQuantileBins(df, Seq("a"), 1).collect()
-    val ex = Extents.quantileBins(df, Seq("a"), 1).collect()
-    assert(ap.length == 1 && ex.length == 1)
-    assert(ap(0).getAs[Int]("bin") == 0)
-    assert(ap(0).getAs[Long]("n_rows") == ex(0).getAs[Long]("n_rows"))
-    assert(ap(0).getAs[Double]("lo") == ex(0).getAs[Double]("lo"))
-    assert(ap(0).getAs[Double]("hi") == ex(0).getAs[Double]("hi"))
   }
 
   test("approximate extents stay within 2% of exact quantiles") {

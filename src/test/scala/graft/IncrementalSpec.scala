@@ -482,6 +482,27 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
       stats.toString)
   }
 
+  test("runRegion and an in-place delta release their checkpoints") {
+    // checkouts held past the call would pin the snapshot and the
+    // features in memory or on disk between regions of a long session
+    val oldCsv = writeLong(0 until 40, bumped = Set.empty)
+    val newCsv = writeLong(0 until 40, bumped = Set(3))
+    val feats40 = features.filter(
+      org.apache.spark.sql.functions.col("GEOID") < geoid(40))
+    val live = Files.createTempDirectory("incr-release").toString
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "block-groups",
+      features = Some(feats40), outDir = Some(live))
+    assert((persisted -- before).isEmpty,
+      s"runRegion left ${(persisted -- before).size} persisted RDDs")
+    val stats = Incremental.incrementalRegion(spark, oldCsv, newCsv, "raw",
+      metricLongNames, "block-groups", feats40, prevDir = live, outDir = live)
+    assert(!stats.fullRebuild && stats.changed == 1, stats.toString)
+    assert((persisted -- before).isEmpty,
+      s"the in-place delta left ${(persisted -- before).size} persisted RDDs")
+  }
+
   test("a fingerprint publish whose frame throws mid-write leaves the previous artifact") {
     val csv = writeLong(0 until 40, bumped = Set.empty)
     val regionDir = Files.createTempDirectory("incr-fp").resolve("block-groups")

@@ -109,8 +109,9 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
       "value histogram must partial-aggregate map-side")
     // NO exact Percentile aggregate anywhere: that operator buffers a
     // group's whole value multiset in memory — the 100 TB OOM this
-    // design avoids. (approx_percentile is fine: it is the constant-
-    // memory sketch that places the range-bucket boundaries.)
+    // design avoids. (approx_percentile would be fine: it is a constant-
+    // memory sketch. The exact path places its range-bucket boundaries
+    // at equal widths between the min and max of each group.)
     assert(!p.toLowerCase.replace("approx_percentile", "")
       .replace("percentile_approx", "").contains("percentile"),
       "exact extents must not use the in-memory percentile aggregate")
