@@ -89,8 +89,8 @@ object Bench {
     // a one-time per-plan cost any long-lived deployment amortizes to
     // zero. Its wall doubles as the first (conservative: includes
     // compilation) pass-time estimate for the budget arithmetic.
-    // Queries that cache intermediates must not leak storage into
-    // later timings — clear between runs, OUTSIDE the timed window.
+    // No query caches an intermediate (Pipeline.withCheckouts); the
+    // clear between runs, OUTSIDE the timed window, is a backstop.
     val warmT0 = System.nanoTime()
     val warmTimes = queries.map { case (name, _) =>
       // 3× deadline during warm-up: one-time artifact learns (BPE, PQ

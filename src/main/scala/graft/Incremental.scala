@@ -227,13 +227,6 @@ object Incremental {
                         maxChangedFraction: Double = 0.3): Stats = {
     val schema = Sources.longSchema(metricLongNames)
     val oldLong = Sources.readCsv(spark, oldCsvPath, schema)
-    // every checkout of this call, released in the finally below
-    val checkouts = scala.collection.mutable.Buffer.empty[DataFrame]
-    def checkout(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(eager = true)
-      checkouts += c
-      c
-    }
     // diff against the PREVIOUS run's stored fingerprint artifact when
     // it exists — the old corpus never re-scans (at 100 TB that scan
     // is most of the diff's cost); cold path hashes the old CSV once
@@ -249,8 +242,9 @@ object Incremental {
     // no .crc sidecars in the live tree (same contract as the sink)
     outFs.setWriteChecksum(false)
     // closed on EVERY exit path: a failed call must not leak the
-    // private instance in a long-lived session
-    try {
+    // private instance in a long-lived session; every checkout of the
+    // call is released when it returns (Pipeline.withCheckouts)
+    try Pipeline.withCheckouts { checkout =>
       // the new snapshot is read ONCE: this checkout feeds both the
       // fingerprints and the contributor pivot
       val newLong = checkout(Sources.readCsv(spark, newCsvPath, schema))
@@ -260,9 +254,9 @@ object Incremental {
       // one materialized copy serves the diff, the GEOID count and the
       // publish of the next delta's artifact
       val newFps = checkout(fingerprints(newLong))
-      // localCheckpoint, not persist: an in-place publish swaps out the
-      // stored artifact oldFps reads, and a cache-evicted lineage replay
-      // would re-read a deleted file
+      // a checkout, never a lazy diff: an in-place publish swaps out the
+      // stored artifact oldFps reads, and a lineage replay would re-read
+      // a deleted file
       val diff = checkout(diffFingerprints(oldFps, newFps))
       val byStatus = diff.groupBy("status").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -296,93 +290,81 @@ object Incremental {
             region, features = Some(features), outDir = Some(tree.getParent.toString))
           publishFingerprints(outFs, newFps, tree)
         }
-        return Stats(nChanged, nAdded, nRemoved, -1L, -1L, fullRebuild = true)
-      }
-
-      // one checkout of the features serves the fan, the edge-neighbour
-      // segments and both decades' tile builds; unlike persist, it never
-      // touches a cache the caller owns
-      val feats = checkout(features)
-      val fan = featureTileFan(feats, region)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // the bookkeeping sets live on the driver, SIZED BY CONTRACT, not
-      // by the tileset: |affected| = delta GEOIDs × per-feature tile
-      // fan-out, |contributors| = their renderers and edge-neighbours,
-      // and the delta path only runs when the changed fraction is under
-      // maxChangedFraction — a full-churn "delta" routed to the full
-      // rebuild above before reaching here
-      val ((affectedRows, affectedTiles), (contributorRows, contributors)) = try {
-        val affected = collectLocal(
-          fan.join(diff.select(col("GEOID")), Seq("GEOID"), "left_semi")
-            .select("z", "x", "y").distinct())
-        // renderers of affected tiles + their exact edge-neighbours
-        // (shared-border junction stability — see object scaladoc)
-        val renderers = fan.join(affected._2, Seq("z", "x", "y"), "left_semi")
-          .select("GEOID").distinct()
-        (affected, collectLocal(if (hasPolys) {
-          val segs = feats.select(col("GEOID"),
-            explode(Geometry.ringSegments(col("polys"))).as("seg"))
-          val rendererSegs = segs.join(renderers, Seq("GEOID"), "left_semi")
-            .select("seg").distinct()
-          val nbrs = segs.join(rendererSegs, Seq("seg"), "left_semi")
-            .select("GEOID")
-          renderers.unionByName(nbrs).distinct()
-        } else renderers))
-      } finally fan.unpersist()
-
-      val featC = feats.join(contributors, Seq("GEOID"), "left_semi")
-      val longC = newLong.join(contributors.withColumnRenamed("GEOID", "id"),
-        Seq("id"), "left_semi")
-      val wideC = Pipeline.shape(longC, inputType)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // IDENTICAL code path to runRegion (Pipeline.choroTileFeatures,
-      // then Pipeline.decadeTileset per decade): in particular the
-      // geometry stage runs over featC BEFORE any attribute join, so a
-      // data-less neighbour (e.g. a removed GEOID) still contributes its
-      // shared edges and border simplification reproduces byte-for-byte
-      val choroMaxZ = EtlConfig.choroplethZoom(region).maxZoom
-      val polyFeats = if (hasPolys)
-        Some(Pipeline.choroTileFeatures(featC, region, choroMaxZ)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else None
-      // the one tile update: delete the affected files first (a rebuilt
-      // tile that came out empty must VANISH, e.g. a removed GEOID's deep
-      // tile), then write the rebuilt set; unchanged tiles and the
-      // decade-level metadata.json already sit in `tree`
-      def update(tree: Path): Unit = {
-        for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
-          val rebuilt = Pipeline.decadeTileset(wideC, featC, polyFeats,
-            inputType, decade, region, bubbleMaxZ = None)
-            .join(affectedTiles, Seq("z", "x", "y"), "left_semi")
-          for (r <- affectedRows)
-            outFs.delete(new Path(tree, s"$decade/${r.getAs[Int]("z")}/" +
-              s"${r.getAs[Long]("x")}/${r.getAs[Long]("y")}.pbf"), false)
-          TileBuild.writePbfDirectory(rebuilt, s"$tree/$decade",
-            writeMetadata = false)
+        Stats(nChanged, nAdded, nRemoved, -1L, -1L, fullRebuild = true)
+      } else {
+        // one checkout of the features serves the fan, the edge-neighbour
+        // segments and both decades' tile builds
+        val feats = checkout(features)
+        val fan = checkout(featureTileFan(feats, region))
+        // the bookkeeping sets live on the driver, SIZED BY CONTRACT, not
+        // by the tileset: |affected| = delta GEOIDs × per-feature tile
+        // fan-out, |contributors| = their renderers and edge-neighbours,
+        // and the delta path only runs when the changed fraction is under
+        // maxChangedFraction — a full-churn "delta" routed to the full
+        // rebuild above before reaching here
+        val ((affectedRows, affectedTiles), (contributorRows, contributors)) = {
+          val affected = collectLocal(
+            fan.join(diff.select(col("GEOID")), Seq("GEOID"), "left_semi")
+              .select("z", "x", "y").distinct())
+          // renderers of affected tiles + their exact edge-neighbours
+          // (shared-border junction stability — see object scaladoc)
+          val renderers = fan.join(affected._2, Seq("z", "x", "y"), "left_semi")
+            .select("GEOID").distinct()
+          (affected, collectLocal(if (hasPolys) {
+            val segs = feats.select(col("GEOID"),
+              explode(Geometry.ringSegments(col("polys"))).as("seg"))
+            val rendererSegs = segs.join(renderers, Seq("GEOID"), "left_semi")
+              .select("seg").distinct()
+            val nbrs = segs.join(rendererSegs, Seq("seg"), "left_semi")
+              .select("GEOID")
+            renderers.unionByName(nbrs).distinct()
+          } else renderers))
         }
-        publishFingerprints(outFs, newFps, tree)
-      }
-      // in-place = outDir IS the previous tree (qualified-URI equality,
-      // scheme-agnostic); a copy never writes the tree it reads, so a
-      // symlink-aliased prevDir/outDir pair is still correct
-      val inPlace = outFs.makeQualified(new Path(outDir)) ==
-        prevFs.makeQualified(new Path(prevDir))
-      try {
+
+        val featC = feats.join(contributors, Seq("GEOID"), "left_semi")
+        val longC = newLong.join(contributors.withColumnRenamed("GEOID", "id"),
+          Seq("id"), "left_semi")
+        val wideC = checkout(Pipeline.shape(longC, inputType))
+        // IDENTICAL code path to runRegion (Pipeline.choroTileFeatures,
+        // then Pipeline.decadeTileset per decade): in particular the
+        // geometry stage runs over featC BEFORE any attribute join, so a
+        // data-less neighbour (e.g. a removed GEOID) still contributes its
+        // shared edges and border simplification reproduces byte-for-byte
+        val choroMaxZ = EtlConfig.choroplethZoom(region).maxZoom
+        val polyFeats = if (hasPolys)
+          Some(checkout(Pipeline.choroTileFeatures(featC, region, choroMaxZ)))
+        else None
+        // the one tile update: delete the affected files first (a rebuilt
+        // tile that came out empty must VANISH, e.g. a removed GEOID's deep
+        // tile), then write the rebuilt set; unchanged tiles and the
+        // decade-level metadata.json already sit in `tree`
+        def update(tree: Path): Unit = {
+          for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
+            val rebuilt = Pipeline.decadeTileset(wideC, featC, polyFeats,
+              inputType, decade, region, bubbleMaxZ = None)
+              .join(affectedTiles, Seq("z", "x", "y"), "left_semi")
+            for (r <- affectedRows)
+              outFs.delete(new Path(tree, s"$decade/${r.getAs[Int]("z")}/" +
+                s"${r.getAs[Long]("x")}/${r.getAs[Long]("y")}.pbf"), false)
+            TileBuild.writePbfDirectory(rebuilt, s"$tree/$decade",
+              writeMetadata = false)
+          }
+          publishFingerprints(outFs, newFps, tree)
+        }
+        // in-place = outDir IS the previous tree (qualified-URI equality,
+        // scheme-agnostic); a copy never writes the tree it reads, so a
+        // symlink-aliased prevDir/outDir pair is still correct
+        val inPlace = outFs.makeQualified(new Path(outDir)) ==
+          prevFs.makeQualified(new Path(prevDir))
         if (inPlace) update(new Path(s"$outDir/$region"))
         else staged(outFs, outDir, region) { tree =>
           if (!FileUtil.copy(prevFs, new Path(s"$prevDir/$region"), outFs,
               tree, false, hconf)) throw new java.io.IOException(s"cannot copy to $tree")
           update(tree)
         }
-      } finally {
-        polyFeats.foreach(_.unpersist())
-        wideC.unpersist()
+        Stats(nChanged, nAdded, nRemoved, affectedRows.length,
+          contributorRows.length, fullRebuild = false)
       }
-      Stats(nChanged, nAdded, nRemoved, affectedRows.length,
-        contributorRows.length, fullRebuild = false)
-    } finally {
-      checkouts.foreach(Pipeline.releaseCheckpoint)
-      outFs.close()
-    }
+    } finally outFs.close()
   }
 }

@@ -59,6 +59,37 @@ object Pipeline {
     checkpoint.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
       .foreach(_.unpersist(blocking = false))
 
+  /** The one materialization rule of this engine: an intermediate read
+    * more than once is CHECKED OUT — `localCheckpoint(eager = true)`,
+    * one job that computes its rows once into the block manager and
+    * leaves a plan that scans them (`Scan ExistingRDD`) — and is never
+    * cached. A checkout registers nothing with the session's cache
+    * manager, so a plan that is built and never run (an explain, a plan
+    * audit, a dropped frame) leaves nothing behind, and AQE reuses
+    * exchanges over its scan, which it does not over an
+    * `InMemoryTableScan`. Who releases it:
+    *  - a checkout returned inside a lazy frame lives as long as that
+    *    frame; the ContextCleaner drops its blocks once the frame is
+    *    unreferenced;
+    *  - a checkout whose last reader the caller knows is dropped then:
+    *    `body` receives `checkout`, and every frame it checks out is
+    *    released ([[releaseCheckpoint]]) when `body` exits, normally or
+    *    not. Nothing `body` returns may read one of them.
+    *
+    * The one exception is an edge list whose hash partitioning every
+    * round of an iteration rides: a checkpoint's scan reports unknown
+    * partitioning, so `Dedup.connectedComponents` and `Graph` persist
+    * that list and unpersist it before they return.
+    */
+  private[graft] def withCheckouts[A](body: (DataFrame => DataFrame) => A): A = {
+    val held = scala.collection.mutable.Buffer.empty[DataFrame]
+    try body { df =>
+      val c = df.localCheckpoint(eager = true)
+      held += c
+      c
+    } finally held.foreach(releaseCheckpoint)
+  }
+
   /** Stage d — feature derivation from source geometry
     * (`build.sh:111-118`: mapshaper `-points inner`): GeoJSON features →
     * parsed polygon rings + polylabel interior point, in one typed map.
@@ -202,15 +233,14 @@ object Pipeline {
     *
     * SCAN-ONCE discipline (SURVEY §3.1's "one lazy plan, the only true
     * barriers being the pivot shuffle and the tile groupBy shuffle"):
-    * when the run itself triggers more than one action over the wide
-    * frame — tiles for each decade, the stage-b/c CSV artifacts — the
-    * pivot output is persisted for the duration, so the long CSV is
-    * scanned exactly ONCE per region run and every downstream stage
-    * reads the cached wide rows (PipelineSpec pins this with a
-    * QueryExecutionListener over the composed run). The reference gets
-    * the same effect by materializing `data.wide.csv` between
-    * processes (`build.sh:80-81`); here it is one in-memory artifact
-    * with spill. A caller asking for no output gets a fully lazy wide frame.
+    * when the run reads the wide frame more than once — tiles for each
+    * decade, the stage-b/c CSV artifacts — the pivot is checked out
+    * ([[withCheckouts]]), so the long CSV is scanned exactly ONCE per
+    * region run and every downstream stage reads the checked-out wide
+    * rows (PipelineSpec pins this with a QueryExecutionListener over the
+    * composed run). The reference gets the same effect by materializing
+    * `data.wide.csv` between processes (`build.sh:80-81`). The returned
+    * wide frame is always the lazy pivot, never a released checkout.
     *
     * @param extendBudget densest-tile feature budget driving the
     *                     `--extend-zooms-if-still-dropping` decision for
@@ -235,28 +265,20 @@ object Pipeline {
                 extentsOut: Option[String] = None): DataFrame = {
     val long = Sources.readCsv(spark, longCsvPath,
       Sources.longSchema(metricLongNames))
-    val multiAction = (features.isDefined && outDir.isDefined) ||
-      wideOut.isDefined || extentsOut.isDefined
-    val wide = {
-      val w = shape(long, inputType)
-      if (multiAction)
-        w.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else w
-    }
-    // the scan-once cache is released on every exit; the returned frame
-    // stays valid and simply recomputes lazily if evaluated later
-    try {
+    val pivot = shape(long, inputType)
+    val tiles = features.isDefined && outDir.isDefined
+    withCheckouts { checkout =>
+      val wide = if (tiles || (wideOut.isDefined && extentsOut.isDefined))
+        checkout(pivot) else pivot
       wideOut.foreach(p => Sources.writeCsv(wide, p))
       extentsOut.foreach(p => Sources.writeCsv(extents(wide), p, singleFile = true))
       for (supplied <- features; out <- outDir) {
         // one checkout of the features serves the extend-zooms probes, the
-        // polygon geometry, the bounds and every decade's bubble layer;
-        // unlike persist, it never touches a cache the caller owns, and
-        // it is released when the tiles are written
-        val f = supplied.localCheckpoint(eager = true)
+        // polygon geometry, the bounds and every decade's bubble layer
+        val f = checkout(supplied)
         val hasPolys = f.columns.contains("polys")
         // base choropleth GEOMETRY is decade-independent — built ONCE and
-        // persisted, exactly the reference's base-tileset + per-decade
+        // checked out, exactly the reference's base-tileset + per-decade
         // `tile-join` split (`build.sh:139-160` once, `:208-211` per
         // decade); only the attribute join + encode re-run per decade
         val zoom = EtlConfig.choroplethZoom(region)
@@ -272,52 +294,47 @@ object Pipeline {
             zoom.maxZoom, zoom.maxZoom + 2, budget = extendBudget)
         else zoom.maxZoom
         val polyFeats = if (hasPolys)
-          Some(choroTileFeatures(f, region, choroMaxZ).persist())
+          Some(checkout(choroTileFeatures(f, region, choroMaxZ)))
         else None
-        try {
-          // tileset bounds/center (decade-independent, one small aggregate):
-          // tile-join's metadata.json carries them (`build.sh:220,226`) —
-          // polygon regions use the true geometry bbox, point regions the
-          // bubble centers
-          val bounds: Option[(Double, Double, Double, Double)] = {
-            val r = (if (hasPolys)
-              Geometry.withBbox(f.select("polys"), "polys").select(min("lon_min"),
-                min("lat_min"), max("lon_max"), max("lat_max"))
-            else f.select(min(col("lon")), min(col("lat")),
-              max(col("lon")), max(col("lat")))).head()
-            // zero features ⇒ the min/max aggregate returns one all-null row;
-            // skip the bounds/center metadata keys rather than NPE on getDouble
-            if (r.isNullAt(0)) None
-            else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-          }
-          // `--extend-zooms-if-still-dropping`: decided ONCE per region from
-          // the geometry (decade-independent), then reused by every decade
-          val bz = EtlConfig.bubbleZoom(region)
-          val bubbleMaxZ = if (bz.extend)
-            Some(Tiling.extendMaxZoom(f, "lon", "lat",
-              bz.maxZoom, bz.maxZoom + 2, budget = extendBudget))
-          else None
-          for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
-            val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
-            val meta = Map("name" -> s"$region-$decade",
-              "type" -> "overlay",
-              "minzoom" -> math.min(bz.minZoom, zoom.minZoom).toString,
-              "maxzoom" -> maxZoomOut.toString,
-              "layers" -> (s"$region-$decade-bubble" +
-                (if (hasPolys) s",$region-$decade-choropleth" else ""))) ++
-              bounds.map { case (x0, y0, x1, y1) =>
-                Map("bounds" -> s"$x0,$y0,$x1,$y1",
-                  "center" -> s"${(x0 + x1) / 2},${(y0 + y1) / 2},$maxZoomOut")
-              }.getOrElse(Map.empty)
-            TileBuild.writePbfDirectory(decadeTileset(wide, f, polyFeats,
-              inputType, decade, region, bubbleMaxZ), s"$out/$region/$decade", meta)
-          }
-        } finally {
-          polyFeats.foreach(_.unpersist())
-          releaseCheckpoint(f)
+        // tileset bounds/center (decade-independent, one small aggregate):
+        // tile-join's metadata.json carries them (`build.sh:220,226`) —
+        // polygon regions use the true geometry bbox, point regions the
+        // bubble centers
+        val bounds: Option[(Double, Double, Double, Double)] = {
+          val r = (if (hasPolys)
+            Geometry.withBbox(f.select("polys"), "polys").select(min("lon_min"),
+              min("lat_min"), max("lon_max"), max("lat_max"))
+          else f.select(min(col("lon")), min(col("lat")),
+            max(col("lon")), max(col("lat")))).head()
+          // zero features ⇒ the min/max aggregate returns one all-null row;
+          // skip the bounds/center metadata keys rather than NPE on getDouble
+          if (r.isNullAt(0)) None
+          else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+        }
+        // `--extend-zooms-if-still-dropping`: decided ONCE per region from
+        // the geometry (decade-independent), then reused by every decade
+        val bz = EtlConfig.bubbleZoom(region)
+        val bubbleMaxZ = if (bz.extend)
+          Some(Tiling.extendMaxZoom(f, "lon", "lat",
+            bz.maxZoom, bz.maxZoom + 2, budget = extendBudget))
+        else None
+        for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
+          val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
+          val meta = Map("name" -> s"$region-$decade",
+            "type" -> "overlay",
+            "minzoom" -> math.min(bz.minZoom, zoom.minZoom).toString,
+            "maxzoom" -> maxZoomOut.toString,
+            "layers" -> (s"$region-$decade-bubble" +
+              (if (hasPolys) s",$region-$decade-choropleth" else ""))) ++
+            bounds.map { case (x0, y0, x1, y1) =>
+              Map("bounds" -> s"$x0,$y0,$x1,$y1",
+                "center" -> s"${(x0 + x1) / 2},${(y0 + y1) / 2},$maxZoomOut")
+            }.getOrElse(Map.empty)
+          TileBuild.writePbfDirectory(decadeTileset(wide, f, polyFeats,
+            inputType, decade, region, bubbleMaxZ), s"$out/$region/$decade", meta)
         }
       }
-    } finally if (multiAction) wide.unpersist()
-    wide
+    }
+    pivot
   }
 }

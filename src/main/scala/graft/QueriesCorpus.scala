@@ -101,14 +101,17 @@ object QueriesCorpus {
   def q134BloomFpAudit(s: SparkSession, d: String): DataFrame = {
     import graft.functions.BloomAnyExpr.bloomAny
     val probes = 7
+    // each frame below feeds several passes: checked out
+    // (Pipeline.withCheckouts)
     val evalSh = evalDocs(s, d)
       .select(explode(Dedup.hashedWordShingles("text", DecontamK)).as("h"))
-      .distinct().persist()
+      .distinct().localCheckpoint(eager = true)
     val tr = trainDocs(s, d)
       .select(col("doc_id"),
         Dedup.hashedWordShingles("text", DecontamK).as("shs"))
-      .persist()
-    val trSh = tr.select(explode(col("shs")).as("h")).distinct().persist()
+      .localCheckpoint(eager = true)
+    val trSh = tr.select(explode(col("shs")).as("h")).distinct()
+      .localCheckpoint(eager = true)
     // eval shingles and the confirmed-doc list are drop-list-sized by
     // the q55 contract — broadcast them; the train side never shuffles
     val docTrue = tr.select(col("doc_id"), explode(col("shs")).as("h"))
@@ -153,7 +156,7 @@ object QueriesCorpus {
     def armRow(label: String, mBits: Int, pos: String, sus: String) =
       struct(lit(label).as("sizing"), lit(mBits.toLong).as("m_bits"),
         col(pos).as("n_sh_pos"), col(sus).as("n_suspect"))
-    val out = sh.crossJoin(doc)
+    sh.crossJoin(doc)
       .select(col("n_train_sh"), col("n_sh_true"), col("n_docs"),
         col("n_confirmed"),
         explode(array(
@@ -170,7 +173,6 @@ object QueriesCorpus {
         round((col("r.n_suspect") - col("n_confirmed")) /
           (col("n_docs") - col("n_confirmed")), 6).as("doc_fp_rate"))
       .orderBy("sizing")
-    graft.operators.CacheRelease.afterUse(Seq(evalSh, tr, trSh), out)
   }
 
   val q134Sql: String = {

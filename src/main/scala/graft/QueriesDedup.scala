@@ -90,7 +90,7 @@ object QueriesDedup {
   private def minhashLshPipeline(s: SparkSession, d: String,
       mode: graft.operators.TextStats.HashMode): DataFrame =
     // Shingles are pre-hashed to 60-bit longs (ONE digest per shingle);
-    // the shared pipeline (Dedup.lshNearDupPairs — cache barriers,
+    // the shared pipeline (Dedup.lshNearDupPairs — checkouts,
     // affine signatures, banded buckets, Jaccard verify) does the rest.
     Dedup.lshNearDupPairs(
       nearCorpus(s, d).withColumn("sh", Dedup.hashedWordShingles("text", 3, mode)),
@@ -184,8 +184,9 @@ object QueriesDedup {
   // blocking key), word-3-gram Jaccard >= 0.2. The block join is an
   // equi-join on source — never an unblocked cross join.
   def q25NgramJaccard(s: SparkSession, d: String): DataFrame = {
-    // cache(): same CollapseProject trap as q23 — without the barrier
-    // the shingle pipeline is re-evaluated per PAIR on both join sides.
+    // checkout (Pipeline.withCheckouts): same CollapseProject trap as
+    // q23 — without the barrier the shingle pipeline is re-evaluated per
+    // PAIR on both join sides.
     // Shingles are 60-bit hashes, not strings: the pairwise
     // intersect/union then compares longs (~4x faster at sf0.1; Jaccard
     // over a collision-free hash set is identical, and the oracle hashes
@@ -193,7 +194,7 @@ object QueriesDedup {
     val sh = nearCorpus(s, d)
       .select(col("doc_id"), col("source"),
         Dedup.hashedWordShingles("text", 3).as("sh"))
-      .cache()
+      .localCheckpoint(eager = true)
     // Scalable all-pairs Jaccard: explode shingles, equi-join on
     // (source, shingle) so only pairs sharing >= 1 shingle ever
     // materialize, count the matches (= |A∩B|, arrays are distinct),
@@ -256,7 +257,7 @@ object QueriesDedup {
         concat_ws(":", lit("cal1"), col("doc_id").cast("string"))) % 2 === 0)
       .select(col("doc_id"), col("source"),
         Dedup.hashedWordShingles("text", 3).as("sh"))
-      .cache()
+      .localCheckpoint(eager = true)
     val ex = sh.select(col("doc_id"), col("source"), explode(col("sh")).as("h"))
     val inter = ex.as("x").join(ex.as("y"),
         col("x.source") === col("y.source") && col("x.h") === col("y.h")
@@ -265,7 +266,7 @@ object QueriesDedup {
       .agg(count(lit(1)).as("c"))
     val stats = sh.select(col("doc_id"), size(col("sh")).as("n"),
       Dedup.minhashSignatureArray(col("sh"), NumHashes).as("sig"))
-    val out = inter
+    inter
       .join(broadcast(stats.select(col("doc_id").as("a"), col("n").as("na"),
         col("sig").as("siga"))), "a")
       .join(broadcast(stats.select(col("doc_id").as("b"), col("n").as("nb"),
@@ -283,10 +284,6 @@ object QueriesDedup {
         round(avg("exact"), 6).as("mean_exact"),
         round(avg(abs(col("est") - col("exact"))), 6).as("mean_abs_err"))
       .orderBy("jband")
-    // release the shingle barrier once the audit materializes (the
-    // q134 discipline) — repeated invocations in a long session must
-    // not accumulate cached shingle frames
-    graft.operators.CacheRelease.afterUse(Seq(sh), out)
   }
 
   val q131Sql: String = {

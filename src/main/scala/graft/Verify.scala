@@ -20,7 +20,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that cache intermediates must not leak storage between runs
+      // a backstop: no query caches an intermediate (Pipeline.withCheckouts)
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -144,20 +144,18 @@ object Curation {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__bkt").orderBy(idCol)
       .rowsBetween(Long.MinValue, 0)
-    // cache barrier AFTER the windowed cumsum: the bucket-offset branch
-    // and the final join both consume it, and without the barrier the
-    // scan + tokenization + bucket shuffle + window execute twice (AQE
-    // does not stage-reuse across the two window consumers — verified).
-    // The cached row is (id, tokens, bkt, cum) = four longs; the corpus
-    // TEXT is long gone, so at 100 TB this is ~32 B/doc — and it is
-    // released deterministically once the first action over the result
-    // completes ([[CacheRelease]], same contract as the extents
-    // histogram). bucket total = MAX of the running sum (no second
-    // aggregation over the raw input).
+    // checkout ([[graft.Pipeline.withCheckouts]]) AFTER the windowed
+    // cumsum: the bucket-offset branch and the final join both consume
+    // it, and without the barrier the scan + tokenization + bucket
+    // shuffle + window execute twice (AQE does not stage-reuse across
+    // the two window consumers — verified). The row is (id, tokens,
+    // bkt, cum) = four longs; the corpus TEXT is long gone, so at
+    // 100 TB this is ~32 B/doc. bucket total = MAX of the running sum
+    // (no second aggregation over the raw input).
     val withCum = df
       .withColumn("__bkt", expr(s"`$idCol` div $bucketWidth"))
       .withColumn("__cum_in_bkt", sum(tokenCol).over(w))
-      .cache()
+      .localCheckpoint(eager = true)
     val bktSums = withCum.groupBy("__bkt")
       .agg(max("__cum_in_bkt").as("__bkt_sum"))
     // the documented ONE acceptable single-partition window — rows =
@@ -171,7 +169,7 @@ object Curation {
       .orderBy("__bkt").rowsBetween(Long.MinValue, -1)
     val offsets = bktSums.select(col("__bkt"),
       coalesce(sum("__bkt_sum").over(wOff), lit(0L)).as("__off"))
-    val out = withCum.join(broadcast(offsets), "__bkt")
+    withCum.join(broadcast(offsets), "__bkt")
       .withColumn("cum_end", (col("__off") + col("__cum_in_bkt")).cast("long"))
       .withColumn("first_window",
         expr(s"(cum_end - `$tokenCol`) div $windowSize"))
@@ -179,7 +177,6 @@ object Curation {
       .withColumn("n_windows",
         (col("last_window") - col("first_window") + 1).cast("long"))
       .drop("__bkt", "__cum_in_bkt", "__off")
-    CacheRelease.afterUse(Seq(withCum), out)
   }
 
   /** Next-fit BIN packing of documents into fixed token-capacity
@@ -278,8 +275,8 @@ object Curation {
     *  - ONE corpus token scan feeds both distributions (target counts
     *    ride as a conditional aggregate of the same groupBy — the
     *    target subset is identified by a per-row predicate, not a
-    *    second scan) and is persisted for the scoring pass (q67's
-    *    single-scan pattern, released by [[CacheRelease]]).
+    *    second scan) and is checked out for the scoring pass (q67's
+    *    single-scan pattern, [[graft.Pipeline.withCheckouts]]).
     *  - the learned object is `buckets` rows — broadcast; the per-token
     *    scoring work is an integer lookup + long sum (all log10 happens
     *    once per BUCKET on the tiny weight frame, never per token —
@@ -300,7 +297,7 @@ object Curation {
       .filter(length(col("__tok")) > 0)
       .select(col(idCol), col("__tgt"),
         hashBucket(col("__tok"), buckets).as("__b"))
-      .persist()
+      .localCheckpoint(eager = true)
     val bucketCounts = toks.groupBy("__b")
       .agg(count(lit(1)).as("__cr"),
         count(when(col("__tgt"), lit(1))).as("__ct"))
@@ -310,7 +307,7 @@ object Curation {
         round((log10((col("__ct") + 1.0) / (col("__nt") + buckets)) -
           log10((col("__cr") + 1.0) / (col("__nr") + buckets))) * 1000000.0)
           .cast("long").as("__lw_micro"))
-    val out = toks
+    toks
       .join(broadcast(weights), Seq("__b"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_tokens"), sum("__lw_micro").as("__sum_micro"))
@@ -319,7 +316,6 @@ object Curation {
         round(col("__sum_micro") / (col("n_tokens") * 1000000.0), 6)
           .as("avg_logw"),
         (col("__sum_micro") > 0L).as("selected"))
-    CacheRelease.afterUse(Seq(toks), out)
   }
 
   /** Fixed-width histogram of a numeric column: bucket i covers

@@ -145,16 +145,11 @@ object Dedup {
     * exact Jaccard verify over the shingle sets, emitting
     * (a, b, jaccard) for pairs at/above `minJaccard`.
     *
-    * cache() barriers: the LSH self-join and the Jaccard verify both
-    * reuse the shingle arrays, and without a materialization barrier
-    * CollapseProject would inline the whole shingle pipeline into EVERY
-    * downstream expression (observed 10x at sf0.1). At cluster scale
-    * the same barrier is a checkpoint/persisted table. Both barriers
-    * are released deterministically once the FIRST action over the
-    * returned plan completes ([[CacheRelease]]) — a long-lived session
-    * does not accumulate two cached corpora per call; a caller running
-    * several actions over the returned (small) pair frame should
-    * persist that result itself rather than re-trigger the pipeline.
+    * The shingle arrays and the bucketed signatures are checked out
+    * ([[graft.Pipeline.withCheckouts]]): the LSH self-join and the
+    * Jaccard verify both reuse them, and without a materialization
+    * barrier CollapseProject would inline the whole shingle pipeline
+    * into EVERY downstream expression (observed 10x at sf0.1).
     */
   def lshNearDupPairs(shingled: DataFrame, idCol: String, shCol: String,
                       numHashes: Int, bands: Int, rowsPerBand: Int,
@@ -162,22 +157,21 @@ object Dedup {
                       mode: HashMode = HashMode.OracleMd5): DataFrame = {
     require(numHashes == bands * rowsPerBand,
       s"numHashes ($numHashes) must equal bands*rowsPerBand (${bands * rowsPerBand})")
-    val base = shingled.select(col(idCol), col(shCol).as("sh")).cache()
+    val base = shingled.select(col(idCol), col(shCol).as("sh"))
+      .localCheckpoint(eager = true)
     val withSig = minhashSignature(col("sh"), numHashes)
       .foldLeft(base) { case (df, (n, c)) => df.withColumn(n, c) }
     val withBuckets = withSig
       .withColumn("buckets", lshBuckets(bands, rowsPerBand, mode))
       .drop((0 until numHashes).map(i => s"sig$i"): _*)
-      .cache()
-    val pairs = lshCandidatePairs(withBuckets, idCol, maxBucket)
-    val out = pairs
+      .localCheckpoint(eager = true)
+    lshCandidatePairs(withBuckets, idCol, maxBucket)
       .join(base.select(col(idCol).as("a"), col("sh").as("sa")), "a")
       .join(base.select(col(idCol).as("b"), col("sh").as("sb")), "b")
       .select(col("a"), col("b"),
         round(jaccard(col("sa"), col("sb")), 6).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
       .orderBy("a", "b")
-    CacheRelease.afterUse(Seq(base, withBuckets), out)
   }
 
   /** MinHash signature as ONE array<long> column — the storage form of
@@ -276,8 +270,10 @@ object Dedup {
                        idCol: String, numHashes: Int, tau: Double,
                        maxBucket: Int = Int.MaxValue,
                        intraBatch: Boolean = false): DataFrame = {
+    // the batch feeds every branch below: checked out
+    // ([[graft.Pipeline.withCheckouts]])
     val bfp = batchFp.select(col(idCol).as("new_id"), col("text_md5"),
-      col("sig"), col("buckets")).cache()
+      col("sig"), col("buckets")).localCheckpoint(eager = true)
     // exact: broadcast the batch digest set against the registry scan
     val exact = registry
       .join(broadcast(bfp.select("text_md5").distinct()), Seq("text_md5"))
@@ -333,7 +329,7 @@ object Dedup {
             when(col("batch_of") < col("new_id"), col("batch_of")))
       else base.withColumn("batch_of",
         lit(null).cast(bfp.schema("new_id").dataType))
-    val out = withBatch
+    withBatch
       .select(col("new_id"),
         when(col("exact_of").isNotNull || col("batch_of").isNotNull,
             lit("exact"))
@@ -342,7 +338,6 @@ object Dedup {
         coalesce(col("exact_of"), col("batch_of"), col("near_of"))
           .as("dup_of"),
         col("est_jaccard"))
-    CacheRelease.afterUse(Seq(bfp), out)
   }
 
   /** Test-set decontamination: ids of `train` documents sharing at
@@ -471,10 +466,12 @@ object Dedup {
                            numProbes: Int = 7,
                            mBitsOverride: Option[Int] = None,
                            mode: HashMode = HashMode.OracleMd5): DataFrame = {
+    // the eval shingle set sizes the filter, fills it and confirms the
+    // suspects: checked out ([[graft.Pipeline.withCheckouts]])
     val evalSh = evalDocs
       .select(explode(hashedWordShingles(textCol, k, mode)).as("__sh"))
       .distinct()
-      .persist()
+      .localCheckpoint(eager = true)
     // Bounded driver-side artifact build (the quantizer-learn shape):
     // one count to size the filter, one bit_or aggregation to fill it.
     val (bits, mBits) = bloomBits(evalSh, "__sh", numProbes, mBitsOverride)
@@ -483,11 +480,10 @@ object Dedup {
       .filter(graft.functions.BloomAnyExpr.bloomAny(
         col("__shs"), bits, mBits, numProbes))
       .select(col(idCol), explode(col("__shs")).as("__sh"))
-    val out = evalSh
+    evalSh
       .join(broadcast(suspectSh), Seq("__sh"))
       .select(idCol)
       .distinct()
-    CacheRelease.afterUse(Seq(evalSh), out)
   }
 
   /** Multi-width decontamination stats: one row per (train doc, k) with
@@ -623,11 +619,12 @@ object Dedup {
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
                           rounds: Int = 3): DataFrame = {
-    // cache barrier: the final lineage references the edge list once per
-    // round (plus the node seed) — without it, an expensive upstream
-    // (LSH candidate generation) re-executes ~2×rounds times. The edge
-    // list itself is tiny (two longs per pair). Same documented pattern
-    // as the q23 shingle cache; callers clear cache between queries.
+    // the final lineage references the edge list once per round (plus
+    // the node seed) — without a barrier, an expensive upstream (LSH
+    // candidate generation) re-executes ~2×rounds times. The edge list
+    // itself is tiny (two longs per pair). It is persisted, not checked
+    // out — the one exception to [[graft.Pipeline.withCheckouts]]: a
+    // checkpoint's scan drops the partitioning every round rides.
     // dst-partitioned (r19, the Graph.scala discipline): every round
     // joins und on dst, so one up-front repartition lets all `rounds`
     // joins ride the cached partitioning — the edge list never moves
@@ -662,9 +659,8 @@ object Dedup {
         .groupBy("id").agg(min("cluster").as("cluster"))
         .localCheckpoint()
     }
-    // the final round is resident, so the expensive edge upstream is no
-    // longer reachable from the returned plan — release it now rather
-    // than waiting for the caller's cache clear
+    // the final round is resident, so the returned plan no longer
+    // reaches the edge list
     und.unpersist()
     labels.withColumn("keep", col("id") === col("cluster"))
   }

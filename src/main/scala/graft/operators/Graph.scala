@@ -37,7 +37,9 @@ object Graph {
     * plan depth for long convergence budgets. Convergence-checked
     * loops (tol > 0 / maxChanged ≥ 0) still cut every round: their
     * per-round count/delta ACTION would otherwise re-execute the whole
-    * chain each round (O(R²) work).
+    * chain each round (O(R²) work). The LAST round is always resident,
+    * so the returned vector never reaches the transition matrix and the
+    * matrix is unpersisted before the operator returns.
     */
   private val CheckpointEvery = 8
 
@@ -149,7 +151,8 @@ object Graph {
     // exchange count changes)
     val small = forceBroadcast.getOrElse(nodes.count() <= BroadcastNodeLimit)
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // persist, NOT localCheckpoint: an AQE-executed checkpoint records
+    // persist, NOT a checkout — the one exception to the rule of
+    // [[graft.Pipeline.withCheckouts]]: an AQE-executed checkpoint records
     // UnknownPartitioning on its ExistingRDD scan (measured r19 — the
     // repartition key was invisible downstream and every round paid the
     // vote exchange anyway), while a cached plan keeps its partitioning
@@ -189,7 +192,6 @@ object Graph {
     // callers (q125's DuckDB twin unrolls exactly 4 rounds).
     var changed = Long.MaxValue
     var i = 0
-    var resident = true // labels is a checkpoint/seed, not a live chain
     while (i < iters && (maxChanged < 0 || changed > maxChanged)) {
       // the winning label via a second aggregation instead of a
       // row_number window (r19): min_by over the lexicographic
@@ -204,8 +206,9 @@ object Graph {
           struct((-col("wv")).as("nw"), col("label"))).as("label"))
         .select(col("dst").as("node"), col("label"))
       // lineage cut cadence: see [[CheckpointEvery]]
-      resident = maxChanged >= 0 || (i + 1) % CheckpointEvery == 0
-      val next = if (resident) voted.localCheckpoint(eager = true) else voted
+      val next = if (maxChanged >= 0 || (i + 1) % CheckpointEvery == 0 ||
+          i + 1 == iters) voted.localCheckpoint(eager = true)
+        else voted
       if (maxChanged >= 0)
         changed = next.join(
             labels.select(col("node").as("n0"), col("label").as("l0")),
@@ -215,11 +218,10 @@ object Graph {
       i += 1
     }
     lastLpaIters.set(i)
-    // release the cached matrix: immediately when the final round is a
-    // resident checkpoint (the returned plan no longer reaches it),
-    // otherwise after the caller's first action over the live chain
-    if (resident) { trans.unpersist(); labels }
-    else CacheRelease.afterUse(Seq(trans), labels)
+    // the final round is resident, so the returned plan no longer
+    // reaches the matrix
+    trans.unpersist()
+    labels
   }
 
   /** `symmetricEdges = true` asserts the caller built the edge list
@@ -285,7 +287,6 @@ object Graph {
     // callers (q121's DuckDB twin unrolls exactly 5 iterations).
     var delta = Double.MaxValue
     var i = 0
-    var resident = true // ranks is a checkpoint-derived seed so far
     while (i < iters && (tol <= 0 || delta >= tol)) {
       val inflow = trans.join(bc(ranks), col("src") === col("node"))
         .groupBy(col("dst"))
@@ -302,8 +303,8 @@ object Graph {
             (lit((1.0 - damping) / n) +
               lit(damping) * coalesce(col("inflow"), lit(0.0))).as("r"))
       // lineage cut cadence: see [[CheckpointEvery]]
-      resident = tol > 0 || (i + 1) % CheckpointEvery == 0
-      val next = if (resident) updated.localCheckpoint(eager = true)
+      val next = if (tol > 0 || (i + 1) % CheckpointEvery == 0 ||
+          i + 1 == iters) updated.localCheckpoint(eager = true)
         else updated
       if (tol > 0)
         delta = next.join(
@@ -314,10 +315,8 @@ object Graph {
       i += 1
     }
     lastPageRankIters.set(i)
-    // release the cached matrix: immediately when the final ranks are a
-    // resident checkpoint, otherwise after the caller's first action
-    // over the live chain (labelPropagation discipline)
-    if (resident) { trans.unpersist(); ranks }
-    else CacheRelease.afterUse(Seq(trans), ranks)
+    // the final round is resident: see labelPropagation
+    trans.unpersist()
+    ranks
   }
 }

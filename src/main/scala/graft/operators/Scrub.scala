@@ -199,12 +199,11 @@ object Scrub {
     *    suffix-chain) → explode → broadcast LEFT-SEMI against the
     *    blocklist (yields the blocked ids) → LEFT-ANTI of the corpus
     *    against those ids, with the anti-join side SIZE-GATED at
-    *    runtime (persist + count once — at or under `maxBroadcastIds`
-    *    it BROADCASTS and the subtraction stays map-side; above it,
-    *    where a forced broadcast would overflow executor memory, it
-    *    flips to a shuffle anti-join — slower, bounded everywhere).
-    *    The persisted set is released by [[CacheRelease]] after the
-    *    first consuming action.
+    *    runtime (checked out once — [[graft.Pipeline.withCheckouts]] —
+    *    and counted: at or under `maxBroadcastIds` it BROADCASTS and the
+    *    subtraction stays map-side; above it, where a forced broadcast
+    *    would overflow executor memory, it flips to a shuffle anti-join
+    *    — slower, bounded everywhere).
     *
     * Both paths assume `idCol` is a per-row identity (unique): the
     * inline path drops a row on ITS OWN url, the join path drops by
@@ -226,17 +225,14 @@ object Scrub {
           explode(hostSuffixChain(hostOf(col(urlCol)))).as("__dom"))
         .join(broadcast(blocked), Seq("__dom"), "left_semi")
         .select(idCol).distinct()
-        .persist()
+        .localCheckpoint(eager = true)
       // one eager pass over the corpus scan computes the set for BOTH the
-      // gate count and the anti-join (persist barrier; MEMORY_AND_DISK, so
-      // an over-threshold set spills rather than OOMs)
-      val nBlocked = blockedIds.count()
-      val kept =
-        if (nBlocked <= maxBroadcastIds)
-          df.join(broadcast(blockedIds), Seq(idCol), "left_anti")
-        else
-          df.join(blockedIds.hint("shuffle_merge"), Seq(idCol), "left_anti")
-      CacheRelease.afterUse(Seq(blockedIds), kept)
+      // gate count and the anti-join (MEMORY_AND_DISK, so an
+      // over-threshold set spills rather than OOMs)
+      if (blockedIds.count() <= maxBroadcastIds)
+        df.join(broadcast(blockedIds), Seq(idCol), "left_anti")
+      else
+        df.join(blockedIds.hint("shuffle_merge"), Seq(idCol), "left_anti")
     }
   }
 }

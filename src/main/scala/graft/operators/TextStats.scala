@@ -238,11 +238,11 @@ object TextStats {
     * the corpus re-scores via a BROADCAST left join on the tiny vocab
     * and one per-doc mean — the corpus text never shuffles; only
     * (id, token-log) pairs move into the final aggregation. The
-    * exploded (id, token) frame is PERSISTED across its two consumers
-    * (the vocabulary count and the re-score — [[CacheRelease]]d after
-    * the first action), so the corpus is tokenized ONCE: at 100 TB the
-    * tokenizing projection is the single most expensive per-row pass,
-    * and the un-persisted plan ran it twice.
+    * exploded (id, token) frame is CHECKED OUT for its two consumers
+    * (the vocabulary count and the re-score —
+    * [[graft.Pipeline.withCheckouts]]), so the corpus is tokenized ONCE:
+    * at 100 TB the tokenizing projection is the single most expensive
+    * per-row pass, and the lazy plan ran it twice.
     *
     * Emits (idCol, n_tokens, avg_logp); zero-token docs are excluded
     * (no tokens to average).
@@ -255,13 +255,13 @@ object TextStats {
     // the zero-token contract) and keeps "" out of the vocabulary
     val toks = df.select(col(idCol), explode(tokens(col(textCol))).as("__tok"))
       .filter(length(col("__tok")) > 0)
-      .persist()
+      .localCheckpoint(eager = true)
     val counts = toks.groupBy("__tok").agg(count(lit(1)).as("__c"))
     val total = counts.agg(sum("__c").as("__n"))
     val vocab = counts
       .orderBy(col("__c").desc, col("__tok").asc)
       .limit(vocabSize)
-    val out = toks
+    toks
       .join(broadcast(vocab), Seq("__tok"), "left")
       .crossJoin(broadcast(total))
       .select(col(idCol),
@@ -272,7 +272,6 @@ object TextStats {
       .agg(count(lit(1)).as("n_tokens"),
         round(sum("__lp_micro") / (count(lit(1)) * 1000000.0), 6)
           .as("avg_logp"))
-    CacheRelease.afterUse(Seq(toks), out)
   }
 
   /** Bigram language-model quality score with back-off to the unigram
@@ -298,8 +297,9 @@ object TextStats {
     *
     * Scale shape: the (id, cur, prev) pair frame is built by ONE
     * zip-with-shifted-self projection (no window function, no
-    * self-join — the corpus never shuffles) and PERSISTED across its
-    * two consumers (count tables and re-score; [[CacheRelease]]d).
+    * self-join — the corpus never shuffles) and CHECKED OUT for its
+    * two consumers (count tables and re-score;
+    * [[graft.Pipeline.withCheckouts]]).
     * Only (token, count) / (prev, cur, count) pairs shuffle, both
     * partial-agg'd map-side.
     *
@@ -323,7 +323,7 @@ object TextStats {
           slice(col("__toks"), lit(1), size(col("__toks")) - 1)),
         (cur, prev) => struct(cur.as("cur"), prev.as("prev")))).as("__p"))
       .select(col(idCol), col("__p.cur").as("__cur"), col("__p.prev").as("__prev"))
-      .persist()
+      .localCheckpoint(eager = true)
     val uni = pairs.groupBy("__cur").agg(count(lit(1)).as("__c"))
     val total = uni.agg(sum("__c").as("__n"))
     val vocab = uni.orderBy(col("__c").desc, col("__cur").asc).limit(vocabSize)
@@ -339,7 +339,7 @@ object TextStats {
     val lpUnigram =
       log10((coalesce(col("__ccur"), lit(0L)) + 1.0) /
         (col("__n") + vocabSize + 1.0))
-    val out = pairs
+    pairs
       .join(broadcast(vocabC), Seq("__cur"), "left")
       .join(broadcast(vocabP), Seq("__prev"), "left")
       .join(broadcast(bigrams), Seq("__prev", "__cur"), "left")
@@ -353,7 +353,6 @@ object TextStats {
         sum("__hit").as("n_bigram_hits"),
         round(sum("__lp_micro") / (count(lit(1)) * 1000000.0), 6)
           .as("avg_logp_bi"))
-    CacheRelease.afterUse(Seq(pairs), out)
   }
 
   /** BM25 relevance of every document against a fixed query-term set —

@@ -65,13 +65,13 @@ class CoreOperatorsSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("extents releases its histogram cache after the first action") {
+  test("an extents action leaves no persisted RDD behind") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val df = Seq(1.0, 2.0, 3.0, 4.0, 5.0).toDF("a")
     Extents.extents(df, Seq("a")).collect()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(leaked.isEmpty,
-      "the extents histogram must be unpersisted once the action completes")
+      "an extents action must leave no persisted RDD behind")
   }
 
   test("extents plans that are never run leave no cache behind") {

@@ -8,7 +8,7 @@ import graft.operators.Graph
 /** PageRank: closed-form fixtures, mass conservation, the no-dangling
   * contract, and the bounded-lineage discipline.
   */
-class GraphSpec extends AnyFunSuite with SharedSpark {
+class GraphSpec extends AnyFunSuite with SharedSpark with PlanCapture {
   import spark.implicits._
 
   private def ranksOf(edges: Seq[(String, String, Double)], iters: Int,
@@ -133,14 +133,33 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
   test("lineage is linear in rounds (constant exchanges per extra round)") {
     val edges = Seq(("a", "b", 1.0), ("b", "a", 1.0), ("b", "c", 2.0),
       ("c", "b", 2.0)).toDF("src", "dst", "weight")
+    // the last round is checked out, so its execution (the last one the
+    // call runs) holds every round since the previous lineage cut
     def exchanges(rounds: Int): Int = {
-      val p = Graph.pageRank(edges, rounds, 0.85)
-        .queryExecution.executedPlan.toString
+      val p = capturePlans(Graph.pageRank(edges, rounds, 0.85)).last.toString
       "Exchange".r.findAllIn(p).size
     }
     val (e2, e3, e4) = (exchanges(2), exchanges(3), exchanges(4))
     assert(e3 - e2 == e4 - e3,
       s"exchange growth must be constant per round: $e2, $e3, $e4")
+  }
+
+  test("pageRank and labelPropagation release the transition matrix before returning") {
+    // q121's 5 rounds and q125's 4 both end between lineage cuts
+    // (CheckpointEvery = 8): the persisted matrix must not outlive the call
+    val rnd = new scala.util.Random(11)
+    val e0 = Seq.fill(60)((s"n${rnd.nextInt(12)}", s"n${rnd.nextInt(12)}",
+      (rnd.nextInt(3) + 1).toDouble))
+    val edges = (e0 ++ e0.map { case (a, b, w) => (b, a, w) })
+      .toDF("src", "dst", "weight")
+    def persisted = spark.sparkContext.getPersistentRDDs.values
+      .filterNot(_.isCheckpointed).map(_.id).toSet
+    val before = persisted
+    Graph.pageRank(edges, 5, 0.85)
+    assert(persisted == before, s"pageRank left RDDs ${persisted -- before}")
+    Graph.labelPropagation(edges, 4)
+    assert(persisted == before,
+      s"labelPropagation left RDDs ${persisted -- before}")
   }
 
   private def lpa(edges: Seq[(String, String, Double)], iters: Int,
@@ -205,9 +224,9 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
   test("labelPropagation: lineage linear in rounds (constant exchange growth)") {
     val edges = Seq(("a", "b", 1.0), ("b", "a", 1.0), ("b", "c", 2.0),
       ("c", "b", 2.0)).toDF("src", "dst", "weight")
+    // the last round's checkout holds every round (see pageRank's test)
     def exchanges(rounds: Int): Int = {
-      val p = Graph.labelPropagation(edges, rounds)
-        .queryExecution.executedPlan.toString
+      val p = capturePlans(Graph.labelPropagation(edges, rounds)).last.toString
       "Exchange".r.findAllIn(p).size
     }
     val (e2, e3, e4) = (exchanges(2), exchanges(3), exchanges(4))

@@ -4,8 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -262,15 +261,17 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
   private def directCsvScans(plans: Seq[SparkPlan]): Seq[FileSourceScanExec] =
     fileScans(plans, "data.csv")
 
-  /** Plans that read metric-year columns from the cached pivot. */
-  private def wideCacheConsumers(plans: Seq[SparkPlan]): Int =
+  /** Plans that read metric-year columns from the checked-out pivot
+    * (`Scan ExistingRDD`).
+    */
+  private def wideCheckoutConsumers(plans: Seq[SparkPlan]): Int =
     plans.count(p => allNodes(p).exists {
-      case s: InMemoryTableScanExec =>
+      case s: RDDScanExec =>
         s.output.exists(_.name.matches("(er|p)-\\d\\d"))
       case _ => false
     })
 
-  test("composed runRegion is scan-once: every stage reuses one cached pivot (SURVEY §3.1)") {
+  test("composed runRegion is scan-once: every stage reuses one checked-out pivot (SURVEY §3.1)") {
     val features = Pipeline.geometryFeatures(
       graft.sources.Sources.readGeoJson(spark, fixtureGeoJson)).persist()
     features.count() // geometry parse outside the capture window
@@ -282,18 +283,18 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     }
     features.unpersist()
 
-    // wide CSV, extents CSV, decade-00 pbf, decade-10 pbf + cache fills
+    // wide CSV, extents CSV, decade-00 pbf, decade-10 pbf + checkouts
     assert(all.size >= 4, s"expected >=4 composed actions, saw ${all.size}")
     val directCsv = directCsvScans(all)
     assert(directCsv.size <= 1,
-      s"the long CSV must feed ONE cache build, not per-stage re-scans; " +
+      s"the long CSV must feed ONE checkout, not per-stage re-scans; " +
         s"found ${directCsv.size} direct scans")
-    // wide-table cache consumers: the stage-b artifact write, extents,
+    // wide-table checkout consumers: the stage-b artifact write, extents,
     // and both decade tile builds all read metric-year columns from the
-    // InMemoryRelation, never from the file
-    val consumers = wideCacheConsumers(all)
+    // checked-out rows, never from the file
+    val consumers = wideCheckoutConsumers(all)
     assert(consumers >= 3,
-      s"stages must reuse the cached pivot, saw $consumers consumers")
+      s"stages must reuse the checked-out pivot, saw $consumers consumers")
     assert(!all.flatMap(allNodes).exists(_.nodeName.contains("CartesianProduct")),
       "no stage of the composed pipeline may plan a cartesian product")
   }
@@ -324,8 +325,8 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(geoScans <= 1,
       s"Main must derive its features from ONE GeoJSON scan per region, " +
         s"found $geoScans")
-    assert(wideCacheConsumers(all) >= 3,
-      "Main's wide/extents writes and tile builds must read the cached pivot")
+    assert(wideCheckoutConsumers(all) >= 3,
+      "Main's wide/extents writes and tile builds must read the checked-out pivot")
     def parts(p: String) = Option(new java.io.File(p).listFiles).toSeq.flatten
       .filter(_.getName.startsWith("part-"))
     assert(parts(s"$out/counties.wide").nonEmpty, "wide CSV missing")
