@@ -84,47 +84,23 @@ object BenchFormat {
     }
   }
 
-  /** The host-speed calibration line ([[Canary]]) — one short JSON
-    * line carrying the min-over-samples probe timings, placed directly
-    * before the total line so it survives inside the driver's stdout
-    * tail alongside the per-query parts (≈85 chars — budgeted in the
-    * same ~2 KB window the part lines are chunked for).
+  /** The host-speed context line ([[Canary]]): one short JSON line
+    * carrying each probe's minimum over the bracket's two samples,
+    * placed directly before the per-query parts and the total line so
+    * it survives inside the 2 KB stdout tail with them (≈85 chars,
+    * budgeted in the same ~2 KB window the part lines are chunked for).
     */
   def canaryLine(probes: Seq[(String, Double)], sf: String): String = {
     val entries = probes
       .map { case (k, v) => "\"" + k + "\":" + ms3(v) }.mkString(",")
-    // "p" not "probes": the r17 tail lever (the deflated total joined
-    // the window; every repeated char in a fixed line is budget)
+    // "p" not "probes": every repeated char in a fixed line is budget
     s"""{"metric":"canary","sf":"${sfTag(sf)}","p":{$entries}}"""
   }
 
-  /** The final total-only line — SHORT by construction so the tail
-    * always holds it in full; must stay the last stdout line.
-    *
-    * When the suite's canary bracket measured a parallel-capacity
-    * ratio (`mcpuCpu` = mcpu/cpu, ≈1.0–1.1 on an unthrottled host —
-    * Canary.scala), the line also carries `deflated` = the raw total
-    * divided by that ratio: the r16 episode's correction, published
-    * next to the raw number so a throttled driver window no longer
-    * leaves the round without a readable perf artifact. `deflated` ≥
-    * raw/ratio is clamped at ratio 1.0 — an unusually HEALTHY window
-    * never inflates the total. The ratio itself is NOT repeated here
-    * (tail budget: at 152 queries every repeated character costs).
-    * NOTE for consumers recovering the deflator: Bench passes the kept
-    * run's WORST-BRACKET ratio (max of pre/post mcpu/cpu, the gate's
-    * own signal — stderr `canary_pre`/`canary_post` carry both
-    * brackets), while the adjacent stdout canary line publishes
-    * min(pre, post) per probe; recomputing mcpu/cpu from the canary
-    * line therefore yields a SMALLER ratio than `value / deflated`.
-    * The field is also OMITTED entirely when the kept run's brackets
-    * disagree by more than 2× ([[BenchProtocol.stationary]]) — a
-    * moving window has no meaningful scalar correction, and a stderr
-    * `deflation_gate` line records why.
+  /** The final total-only line: the raw sum of the reported per-query
+    * seconds. SHORT by construction so the tail always holds it in
+    * full; it must stay the last stdout line.
     */
-  def totalLine(total: Double, sf: String, mcpuCpu: Double = 0.0): String = {
-    val extra = if (mcpuCpu > 0)
-      s""","deflated":${ms3(total / math.max(1.0, mcpuCpu))}"""
-    else ""
-    s"""{"metric":"total","value":${ms3(total)},"unit":"sec","sf":"$sf"$extra}"""
-  }
+  def totalLine(total: Double, sf: String): String =
+    s"""{"metric":"total","value":${ms3(total)},"unit":"sec","sf":"$sf"}"""
 }

@@ -1,110 +1,50 @@
 package graft
 
-/** Pure decision logic for the bench's throttle/budget protocol.
-  *
-  * r17 post-mortem: the throttle gate (pre-probe → cooldown →
-  * re-run-once) is up to FIVE suite passes plus 180 s of sleeps on a
-  * persistently-throttled host, and the old harness printed nothing
-  * until the very end — so a driver timeout (BENCH_r17 rc=124) left
-  * zero perf data for the round. Two structural fixes live here:
-  *
-  *  1. every protocol decision is a pure function of (observed ratio,
-  *     elapsed wall, wall budget, pass-time estimate) so the decision
-  *     table is unit-testable (BenchProtocolSpec) — the r17 failure
-  *     was a protocol-shape bug no test could catch because the
-  *     protocol had no seams;
-  *  2. every decision is BUDGET-AWARE: a cooldown or re-run that the
-  *     remaining wall budget cannot fit is skipped (and logged), so
-  *     the protocol degrades to fewer samples instead of degrading to
-  *     a killed, artifact-less run.
-  *
-  * The harness side of the fix — streaming each pass's per-query lines
-  * and a provisional total the moment the pass completes — lives in
-  * [[Bench]]; this object only decides.
+/** The bench protocol's decisions as pure functions, so the spec
+  * (BenchProtocolSpec) can pin them without running a suite:
+  * whether a second timed pass fits the wall budget, which samples a
+  * query's reported time is taken from, and the spacer that keeps a
+  * completed run's stdout tail free of provisional values. [[Bench]]
+  * runs the queries and prints; this object only decides.
   */
 object BenchProtocol {
 
-  /** @param gate      mcpu/cpu above this = throttled window (the r16
-    *                  episode's signature: scalar probes healthy,
-    *                  32-thread capacity halved; ~1.0–1.1 healthy)
-    * @param cooldownS sleep before a retry, to let a transient
-    *                  contention window pass
-    * @param margin    safety factor on pass-time estimates — an
-    *                  estimate taken in a fast window must not green-
-    *                  light a pass that a slightly slower window
-    *                  pushes past the budget
+  /** Safety factor on the pass-time estimate: an estimate taken in a
+    * fast window must not green-light a pass that a slightly slower
+    * window pushes past the budget.
     */
-  final case class Knobs(gate: Double = 1.3, cooldownS: Double = 90.0,
-                         margin: Double = 1.2)
+  val Margin = 1.2
 
-  /** Cool down before the first timed suite? Only when the pre-probe
-    * shows throttle AND the budget still fits the sleep plus at least
-    * one timed pass afterwards — burning budget on a sleep that leaves
-    * no room to measure is exactly the r17 failure shape.
+  /** Run another timed pass? (Pass 1 always runs; this gates pass 2.)
+    * The estimate is the wall of the latest completed pass, so a
+    * throttled host that doubles pass time halves the sample count
+    * instead of overrunning the budget.
     */
-  def preCooldown(preRatio: Double, elapsedS: Double, budgetS: Double,
-                  estPassS: Double, k: Knobs): Boolean =
-    preRatio > k.gate &&
-      elapsedS + k.cooldownS + estPassS * k.margin <= budgetS
+  def nextPassFits(elapsedS: Double, budgetS: Double,
+                   estPassS: Double): Boolean =
+    elapsedS + estPassS * Margin <= budgetS
 
-  /** Attempt another timed pass over the suite? (Pass 1 always runs —
-    * this gates passes 2..n.) The estimate is the WALL of the latest
-    * completed pass, so a throttled host that doubles pass time
-    * automatically halves the sample count instead of overrunning.
-    */
-  def nextPassFits(elapsedS: Double, budgetS: Double, estPassS: Double,
-                   k: Knobs): Boolean =
-    elapsedS + estPassS * k.margin <= budgetS
+  /** One query's wall time in one pass, and whether it succeeded. */
+  final case class Sample(query: String, seconds: Double, ok: Boolean)
 
-  /** After a completed run whose own canary bracket still shows
-    * throttle: re-run the timed suite once, but only if the cooldown
-    * plus a full re-run (estimated at the completed run's wall) fits.
-    * A skipped re-run keeps run 1 and says so — a worse number beats
-    * no number.
+  /** Each query's reported time: its minimum over the passes in which
+    * it succeeded, in the order the passes ran the queries. A failed sample's time is how
+    * long the query took to fail (near 0 for an immediate throw, the
+    * deadline for a watchdog kill), not a measurement, so it never
+    * counts; a query that failed in every pass is left out.
     */
-  def rerun(worstRatio: Double, elapsedS: Double, budgetS: Double,
-            estSuiteS: Double, k: Knobs): Boolean =
-    worstRatio > k.gate &&
-      elapsedS + k.cooldownS + estSuiteS * k.margin <= budgetS
-
-  /** Deflator for the published total: the kept run's own WORST
-    * bracket ratio — the same signal the gate judges the window by.
-    * (r17 ADVICE: deflating by min(mcpuPre,mcpuPost)/min(cpuPre,
-    * cpuPost) can pair probes from different samples; a window
-    * throttled at only one bracket then deflates by ≈1.0 even though
-    * the gate itself flagged it.) Clamped at 1.0 — an unusually
-    * healthy window never inflates the total.
-    */
-  def deflator(worstRatio: Double): Double = math.max(1.0, worstRatio)
-
-  /** Deflation is only MEANINGFUL when the window was STATIONARY —
-    * pre and post brackets within `bound` (default 2×) of each other.
-    * The scalar model (`deflated = raw / worstRatio`) is validated at
-    * 2.5% suite-level error on a window whose bracket (2.21) matched
-    * the suite's true average inflation (2.16, SURVEY §6 r19 note) —
-    * i.e. when the bracket REPRESENTS the window the suite ran in. A
-    * 10.73-vs-1.38 bracket pair (r19, live run) proves the opposite
-    * regime: the pre probe caught a transient spike most of the suite
-    * never experienced, and deflating 250 s by 10.73 published a
-    * nonsense 23 s. Non-stationary windows publish the raw total and
-    * both brackets only; consumers get the honest "window was moving"
-    * signal instead of a false precision. Ratios below 1 clamp to 1
-    * (a healthy bracket is ~1.0–1.1; the comparison is about
-    * disagreement, not health).
-    */
-  def stationary(preRatio: Double, postRatio: Double,
-                 bound: Double = 2.0): Boolean = {
-    val lo = math.max(1.0, math.min(preRatio, postRatio))
-    val hi = math.max(1.0, math.max(preRatio, postRatio))
-    hi <= bound * lo
+  def minOverSuccesses(passes: Seq[Seq[Sample]]): Seq[(String, Double)] = {
+    val all = passes.flatten
+    val best = all.filter(_.ok).groupMapReduce(_.query)(_.seconds)(math.min)
+    all.map(_.query).distinct.flatMap(q => best.get(q).map(q -> _))
   }
 
-  /** The tail-safety spacer printed immediately before the final kept
-    * block: the driver keeps only the last ~2 KB of output, and the
+  /** The tail-safety spacer printed immediately before the final
+    * block: only the last ~2 KB of stdout is kept, and the
     * provisional blocks streamed after each pass use the same line
     * format as the final block — without the spacer, a surviving
-    * provisional `per_query_cs` fragment (single-pass sample, not the
-    * min) could alias into the driver's position-independent entry
+    * provisional `per_query_cs` fragment (a single-pass sample, not
+    * the min) could alias into the tail reader's position-independent entry
     * recovery. 2 KB of padding guarantees the tail window contains
     * only final-block lines (plus inert padding).
     */

@@ -27,17 +27,14 @@ import org.apache.spark.sql.functions._
   *    multi-core throttling — a measured r16 episode had cpu/sort/shuf
   *    FASTER than the prior round while the 32-thread suite ran 1.74×
   *    slower (hypervisor steal visible only under parallel load). On an
-  *    unthrottled host `mcpu ≈ cpu`; the `mcpu/cpu` ratio is the
-  *    parallel-capacity deflator for exactly that confound.
+  *    unthrottled host `mcpu ≈ cpu`; a higher `mcpu/cpu` ratio says the
+  *    window was short of parallel capacity.
   *
-  * Protocol: one untimed warm run (JIT + codegen land outside the
-  * samples, same policy as the suite warm-up), then a timed sample
-  * BEFORE pass 1 and another AFTER pass 2, min of the two — the
-  * canaries bracket the same host window the per-query timings live in.
-  * A round-over-round per-query ratio should be read DEFLATED by the
-  * matching canary ratio (cpu for compute-bound queries, shuf for
-  * shuffle-bound ones, mcpu for whole-suite parallel throughput);
-  * SURVEY §6 records the per-round values.
+  * Protocol ([[bracketed]]): one untimed warm run (JIT + codegen land
+  * outside the samples, same policy as the suite warm-up), then one
+  * timed sample before the measured body and one after it. The bracket
+  * is context for reading the body's timings: nothing is corrected by
+  * it. SURVEY §6 records the per-round values.
   */
 object Canary {
 
@@ -99,31 +96,32 @@ object Canary {
     results.get()
   }
 
-  /** One untimed warm run of every probe. */
-  def warm(spark: SparkSession): Unit = {
+  private def warm(spark: SparkSession): Unit = {
     sink ^= cpuProbe(); sink ^= sortProbe(); sink ^= shufProbe(spark)
     sink ^= mcpuProbe()
   }
 
-  /** One timed sample of every probe, in declaration order. */
-  def sample(spark: SparkSession): Map[String, Double] = Map(
+  /** One timed sample of every probe. */
+  private def sample(spark: SparkSession): Map[String, Double] = Map(
     "cpu" -> time(cpuProbe()),
     "sort" -> time(sortProbe()),
     "shuf" -> time(shufProbe(spark)),
     "mcpu" -> time(mcpuProbe()))
 
-  /** Run `body` inside a canary bracket and print it as one stderr
-    * JSON line. The r17/r18 lesson, made structural: every
-    * measurement TOOL (OneQ — not just the bench) should carry its
-    * own window tag, so an absolute number can never again be
-    * published without the throttle context that decides whether it
-    * is an anchor or an upper bound.
+  /** Run `body` inside a canary bracket, print the bracket as one
+    * stderr JSON line, and return `body`'s result with each probe's
+    * minimum over the two samples (in [[names]] order). Every
+    * measurement tool (Bench, OneQ) carries its own window tag, so an
+    * absolute number is never published without the throttle context
+    * that decides whether it is an anchor or an upper bound.
     */
-  def bracketed[T](spark: SparkSession, label: String)(body: => T): T = {
+  def bracketed[T](spark: SparkSession, label: String)
+                  (body: => T): (T, Seq[(String, Double)]) = {
     warm(spark)
     val pre = sample(spark)
-    try body finally {
-      val post = sample(spark)
+    var post = pre
+    val result = try body finally {
+      post = sample(spark)
       def j(m: Map[String, Double]) = m.toSeq.sortBy(_._1)
         .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
       val worst = math.max(pre("mcpu") / pre("cpu"),
@@ -131,5 +129,6 @@ object Canary {
       System.err.println(f"""{"bracket":"$label","worst_mcpu_cpu":$worst%.2f,"pre":${
         j(pre)},"post":${j(post)}}""")
     }
+    (result, names.map(n => n -> math.min(pre(n), post(n))))
   }
 }

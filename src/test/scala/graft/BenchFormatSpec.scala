@@ -20,9 +20,7 @@ class BenchFormatSpec extends AnyFunSuite {
   }
   private val sf = "/root/testdata/sf0.1"
   private val lines = BenchFormat.perQueryLines(fake)
-  // the real bench emits the deflated-total fields — budget the tail
-  // with them present (worst-case 4-digit ratio)
-  private val total = BenchFormat.totalLine(fake.map(_._2).sum, sf, 1.234)
+  private val total = BenchFormat.totalLine(fake.map(_._2).sum, sf)
   // the canary line lives in the same tail window — budget it with the
   // rest (4 probes incl. r16's mcpu, worst-case 2-digit seconds)
   private val canary = BenchFormat.canaryLine(
@@ -57,7 +55,7 @@ class BenchFormatSpec extends AnyFunSuite {
     // at 160 queries EVERYTHING — parts, canary, total — co-exists
     val s160 = synthAt(160)
     val f160 = (BenchFormat.perQueryLines(s160) :+ canary :+
-      BenchFormat.totalLine(s160.map(_._2).sum, sf, 1.234))
+      BenchFormat.totalLine(s160.map(_._2).sum, sf))
       .map(_.length + 1).sum
     assert(f160 <= 1900,
       s"160 synthetic queries + canary overflow at $f160 — next lever needed")
@@ -67,7 +65,7 @@ class BenchFormatSpec extends AnyFunSuite {
     // in the driver log even after the stdout copy scrolls out
     val synth = synthAt(170)
     val sLines = BenchFormat.perQueryLines(synth)
-    val sTotal = BenchFormat.totalLine(synth.map(_._2).sum, sf, 1.234)
+    val sTotal = BenchFormat.totalLine(synth.map(_._2).sum, sf)
     val footprint = (sLines :+ sTotal).map(_.length + 1).sum
     assert(footprint <= 1900,
       s"170 synthetic queries overflow at $footprint — next lever needed")
@@ -91,20 +89,6 @@ class BenchFormatSpec extends AnyFunSuite {
     for (l <- lines) assert(l.contains(""""metric":"per_query_cs""""), l)
   }
 
-  test("deflated total = raw / mcpu-cpu ratio, clamped at 1.0") {
-    val t = BenchFormat.totalLine(200.0, sf, 1.6)
-    assert(t.contains(""""value":200.000"""), t)
-    assert(t.contains(""""deflated":125.000"""), t)
-    assert(!t.contains("mcpu_cpu"),
-      "ratio lives on the canary line only (tail budget)")
-    // an unusually HEALTHY window (ratio < 1) must never inflate
-    val h = BenchFormat.totalLine(200.0, sf, 0.9)
-    assert(h.contains(""""deflated":200.000"""), h)
-    // no ratio measured -> plain line, no deflated fields
-    val plain = BenchFormat.totalLine(200.0, sf)
-    assert(!plain.contains("deflated"), plain)
-  }
-
   test("every line is valid standalone JSON with the per_query_cs marker") {
     // no JSON lib on the unmanaged classpath — structural smoke checks
     for (l <- lines) {
@@ -113,5 +97,7 @@ class BenchFormatSpec extends AnyFunSuite {
       assert(l.count(_ == '{') == l.count(_ == '}'))
     }
     assert(total.startsWith("""{"metric":"total","value":"""))
+    assert(""""(\w+)":""".r.findAllMatchIn(total).map(_.group(1)).toSeq ==
+      Seq("metric", "value", "unit", "sf"), total)
   }
 }

@@ -2,106 +2,57 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench protocol's decision table ([[BenchProtocol]]).
+/** Pins the bench protocol's decisions ([[BenchProtocol]]): the
+  * budget gate, the min-over-successful-samples rule and the stdout
+  * tail discipline.
   *
   * The r17 failure was a protocol-SHAPE bug no test could catch
-  * because the protocol had no seams: on a persistently-throttled
-  * host the gate doubled a protocol that already brushed the driver's
-  * kill threshold, and the harness printed nothing until the end —
-  * rc=124, zero perf data. Every branch of the gate is now a pure
-  * function of (ratio, elapsed, budget, estimate); this spec is the
-  * decision table.
+  * because the protocol had no seams: the harness printed nothing until
+  * the end and a kill left rc=124 and zero perf data. Every
+  * decision is now a pure function; this spec is the decision table.
   */
 class BenchProtocolSpec extends AnyFunSuite {
 
-  private val k = BenchProtocol.Knobs() // gate 1.3, cooldown 90, margin 1.2
+  import BenchProtocol.Sample
 
-  // ---- pre-run cooldown ----------------------------------------------
-
-  test("healthy pre-probe: no cooldown regardless of budget") {
-    assert(!BenchProtocol.preCooldown(1.05, 100, 1500, 150, k))
-    assert(!BenchProtocol.preCooldown(1.3, 100, 1e9, 150, k)) // at gate = healthy
-  }
-
-  test("throttled pre-probe + budget fits cooldown and a pass: cool down") {
-    // 100 + 90 + 150*1.2 = 370 <= 1500
-    assert(BenchProtocol.preCooldown(1.5, 100, 1500, 150, k))
-  }
-
-  test("throttled pre-probe but cooldown+pass overruns: skip the sleep") {
-    // 1300 + 90 + 180 = 1570 > 1500 — sleeping would eat the budget
-    // that the one affordable pass needs (the r17 failure shape)
-    assert(!BenchProtocol.preCooldown(1.5, 1300, 1500, 150, k))
-  }
-
-  // ---- pass admission -------------------------------------------------
+  // ---- pass admission (margin 1.2) --------------------------------------
 
   test("second pass runs while budget fits it with margin") {
-    assert(BenchProtocol.nextPassFits(500, 1500, 150, k)) // 680 <= 1500
+    assert(BenchProtocol.nextPassFits(500, 1500, 150)) // 680 <= 1500
     // boundary is inclusive: exactly-at-budget still runs
-    assert(BenchProtocol.nextPassFits(1500 - 150 * 1.2, 1500, 150, k))
+    assert(BenchProtocol.nextPassFits(1500 - 150 * 1.2, 1500, 150))
   }
 
   test("second pass skipped when it would overrun") {
-    assert(!BenchProtocol.nextPassFits(1400, 1500, 150, k)) // 1580 > 1500
+    assert(!BenchProtocol.nextPassFits(1400, 1500, 150)) // 1580 > 1500
   }
 
   test("a throttled host that doubles pass time halves the sample count") {
     // clean host: warm-up estimated 150 s/pass, pass 2 fits at t=400
-    assert(BenchProtocol.nextPassFits(400, 1000, 150, k))
+    assert(BenchProtocol.nextPassFits(400, 1000, 150))
     // throttled host: same suite measured 450 s/pass — pass 2 must NOT
     // be attempted at t=900 (the protocol degrades to fewer samples
     // instead of degrading to a killed run)
-    assert(!BenchProtocol.nextPassFits(900, 1000, 450, k))
+    assert(!BenchProtocol.nextPassFits(900, 1000, 450))
   }
 
-  // ---- throttle re-run ------------------------------------------------
+  // ---- reported time per query ------------------------------------------
 
-  test("healthy bracket: no re-run") {
-    assert(!BenchProtocol.rerun(1.1, 100, 1500, 300, k))
-  }
-
-  test("throttled bracket + budget fits cooldown and a full re-run: re-run") {
-    // 600 + 90 + 400*1.2 = 1170 <= 1500
-    assert(BenchProtocol.rerun(1.6, 600, 1500, 400, k))
-  }
-
-  test("throttled bracket but no budget: keep run 1 (worse number beats none)") {
-    // 1000 + 90 + 480 = 1570 > 1500
-    assert(!BenchProtocol.rerun(1.6, 1000, 1500, 400, k))
-  }
-
-  // ---- deflation -------------------------------------------------------
-
-  test("deflator is the kept run's worst bracket ratio, clamped at 1.0") {
-    assert(BenchProtocol.deflator(1.5) == 1.5)
-    assert(BenchProtocol.deflator(1.0) == 1.0)
-    // an unusually healthy window never INFLATES the total
-    assert(BenchProtocol.deflator(0.9) == 1.0)
-  }
-
-  test("deflator matches the gate's own signal (the r17 ADVICE case)") {
-    // window throttled at ONE bracket only: pre healthy, post 1.7.
-    // min-of-pairs deflation would see ratio ~1.0 and correct nothing;
-    // worstRatio — the number the gate itself judged by — corrects.
-    val worst = math.max(1.02, 1.7)
-    assert(BenchProtocol.deflator(worst) == 1.7)
-  }
-
-  test("stationarity gate: deflation publishes only when the brackets agree") {
-    // agreeing brackets — the validated regime (2.21 bracket vs 2.16
-    // true suite inflation, 2.5% error): deflate
-    assert(BenchProtocol.stationary(2.21, 1.86))
-    assert(BenchProtocol.stationary(1.62, 1.62))
-    // the r19 live case: pre caught a transient 10.73 spike, post read
-    // 1.38 — deflating 250 s by 10.73 published a nonsense 23 s
-    assert(!BenchProtocol.stationary(10.73, 1.38))
-    assert(!BenchProtocol.stationary(1.38, 10.73)) // symmetric
-    // sub-1.0 ratios clamp to 1: two healthy brackets always agree
-    assert(BenchProtocol.stationary(0.9, 1.05))
-    // exactly at the 2x bound: still publishable
-    assert(BenchProtocol.stationary(1.0, 2.0))
-    assert(!BenchProtocol.stationary(1.0, 2.01))
+  test("a query reports its min over successful samples; all-failed is left out") {
+    val p1 = Seq(Sample("q01_a", 0.50, ok = true),
+      Sample("q02_b", 0.01, ok = false), // threw at once
+      Sample("q03_c", 300.0, ok = false), // watchdog kill at the deadline
+      Sample("q04_d", 0.90, ok = true))
+    val p2 = Seq(Sample("q01_a", 0.40, ok = true),
+      Sample("q02_b", 0.70, ok = true),
+      Sample("q03_c", 0.02, ok = false),
+      Sample("q04_d", 0.05, ok = false))
+    // a failed sample's time-to-failure never wins the min, and q03,
+    // failed in both passes, reports no time at all
+    assert(BenchProtocol.minOverSuccesses(Seq(p1, p2)) ==
+      Seq("q01_a" -> 0.40, "q02_b" -> 0.70, "q04_d" -> 0.90))
+    assert(BenchProtocol.minOverSuccesses(Seq(p1)) ==
+      Seq("q01_a" -> 0.50, "q04_d" -> 0.90))
   }
 
   // ---- tail-safety spacer ----------------------------------------------
@@ -154,7 +105,7 @@ class BenchProtocolSpec extends AnyFunSuite {
   // spacer guarantees every provisional line has scrolled out.
   test("a completed run's 2KB tail holds only the final kept block") {
     val prov = (1 to 152).map(i => (f"q$i%03d_name", 0.99)) // pass-1 sample
-    val fin = (1 to 152).map(i => (f"q$i%03d_name", 0.42)) // kept mins
+    val fin = (1 to 152).map(i => (f"q$i%03d_name", 0.42)) // final mins
     val out = new StringBuilder
     def emit(l: String): Unit = { out.append(l).append('\n') }
     BenchFormat.perQueryLines(prov).foreach(emit)
@@ -162,7 +113,7 @@ class BenchProtocolSpec extends AnyFunSuite {
     emit(BenchProtocol.spacerLine())
     emit(BenchFormat.canaryLine(Canary.names.map(_ -> 0.15), "sf0.1"))
     BenchFormat.perQueryLines(fin).foreach(emit)
-    emit(BenchFormat.totalLine(fin.map(_._2).sum, "sf0.1", 1.4))
+    emit(BenchFormat.totalLine(fin.map(_._2).sum, "sf0.1"))
     val tail = out.toString.takeRight(2048)
     // no provisional value (99 cs) survives; final values (42 cs) do
     assert(!tail.contains(":99"), s"provisional entry leaked into tail")

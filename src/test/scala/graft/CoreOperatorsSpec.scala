@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -466,47 +466,56 @@ class CoreOperatorsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("approxBinCuts: bins over GK cuts honor the exact path's contract") {
+    val k = 8
+    val accuracy = 10000 // GK ε = 1e-4
+    // the contract for the bins of column c of df
+    def honorsContract(df: DataFrame, c: String): Unit = {
+      val groups = df.groupBy(c).count().collect()
+        .map(r => r.getDouble(0) -> r.getLong(1)).toMap
+      val n = groups.values.sum
+      val bins = Extents.binByCuts(df, Seq(c),
+          Extents.approxBinCuts(df, Seq(c), k, accuracy))
+        .collect().sortBy(_.getAs[Int]("bin"))
+      // bins are disjoint, ordered, exhaustive: 0..m contiguous, value
+      // ranges strictly increasing, counts sum to n
+      assert(bins.map(_.getAs[Int]("bin")).toSeq == (0 until bins.length),
+        s"$c: bin ids must be contiguous from 0")
+      assert(bins.map(_.getAs[Long]("n_rows")).sum == n, c)
+      bins.sliding(2).foreach {
+        case Array(x, y) =>
+          assert(x.getAs[Double]("hi") < y.getAs[Double]("lo"),
+            s"$c: bin value-ranges must be disjoint and ordered")
+        case _ =>
+      }
+      // ties in one bin: every distinct value's range containment is
+      // unique (bin is a pure function of the value)
+      for (v <- groups.keys)
+        assert(bins.count(r => r.getAs[Double]("lo") <= v &&
+          v <= r.getAs[Double]("hi")) == 1, s"$c: value $v split across bins")
+      // per-bin balance: |count − n/k| ≤ 2ε·n + tie mass. Each bin has
+      // two cuts; each cut's rank error is ≤ ε·n and ties at a cut value
+      // move that value's whole mass to one side — bound the tie term by
+      // the heaviest value's multiplicity per cut.
+      val maxTie = groups.values.max
+      val slack = math.ceil(2 * n / accuracy.toDouble).toLong + 2 * maxTie
+      for (b <- bins) {
+        val cnt = b.getAs[Long]("n_rows")
+        assert(math.abs(cnt - n / k) <= slack,
+          s"$c: bin ${b.getAs[Int]("bin")} count $cnt vs n/k=${n / k} slack $slack")
+      }
+    }
     // duplicated random multiset — ties are the hard part of the
     // contract. 400 distinct values, each repeated 1..80 times (seeded).
     val rnd = new scala.util.Random(7)
-    val groups = (0 until 400).map { _ =>
+    val vals = (0 until 400).map { _ =>
       ((rnd.nextInt(4000) - 2000).toDouble / 7, 1 + rnd.nextInt(80))
     }.toMap // Map dedups colliding draws — (value -> count) histogram
-    val vals = groups.toSeq.flatMap { case (v, c) => Seq.fill(c)(v) }
-    val n = vals.size.toLong
-    val k = 8
-    val accuracy = 10000 // GK ε = 1e-4
-    val df = scala.util.Random.shuffle(vals).toDF("a")
-    val bins = Extents.binByCuts(df, Seq("a"),
-        Extents.approxBinCuts(df, Seq("a"), k, accuracy))
-      .collect().sortBy(_.getAs[Int]("bin"))
-    // bins are disjoint, ordered, exhaustive: 0..m contiguous, value
-    // ranges strictly increasing, counts sum to n
-    assert(bins.map(_.getAs[Int]("bin")).toSeq == (0 until bins.length),
-      "bin ids must be contiguous from 0")
-    assert(bins.map(_.getAs[Long]("n_rows")).sum == n)
-    bins.sliding(2).foreach {
-      case Array(x, y) =>
-        assert(x.getAs[Double]("hi") < y.getAs[Double]("lo"),
-          "bin value-ranges must be disjoint and ordered")
-      case _ =>
-    }
-    // ties in one bin: every distinct value's range containment is
-    // unique (bin is a pure function of the value)
-    for (v <- groups.keys)
-      assert(bins.count(r => r.getAs[Double]("lo") <= v &&
-        v <= r.getAs[Double]("hi")) == 1, s"value $v split across bins")
-    // per-bin balance: |count − n/k| ≤ 2ε·n + tie mass. Each bin has
-    // two cuts; each cut's rank error is ≤ ε·n and ties at a cut value
-    // move that value's whole mass to one side — bound the tie term by
-    // the heaviest value's multiplicity per cut.
-    val maxTie = groups.values.max.toLong
-    val slack = math.ceil(2 * n / accuracy.toDouble).toLong + 2 * maxTie
-    for (b <- bins) {
-      val c = b.getAs[Long]("n_rows")
-      assert(math.abs(c - n / k) <= slack,
-        s"bin ${b.getAs[Int]("bin")} count $c vs n/k=${n / k} slack $slack")
-    }
+      .toSeq.flatMap { case (v, c) => Seq.fill(c)(v) }
+    honorsContract(scala.util.Random.shuffle(vals).toDF("a"), "a")
+    // real columns with heavy ties: sf0.001 lineitem's 6,000 rows hold
+    // 50 distinct quantities and 11 distinct discounts
+    val li = Tables.lineitem(spark, "/root/testdata/sf0.001")
+    for (c <- Seq("l_quantity", "l_discount")) honorsContract(li.select(c), c)
     // agreement with the exact path: on a tie-free uniform multiset the
     // ε=1e-4 sketch is rank-exact at this n, so the two paths must
     // produce the SAME bins (count and value range, bit-for-bit)

@@ -1035,6 +1035,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(c.get("spark.sql.session.timeZone") == "UTC")
     assert(c.get("spark.sql.optimizer.windowGroupLimitThreshold") == "100000")
     assert(c.get("spark.sql.extensions") == "graft.functions.GraftExtensions")
+    assert(c.get("spark.sql.codegen.cache.maxEntries") == "5000")
     // every main goes through graft.Session except Smoke, which builds a
     // bare session on purpose (the entry smoke runs with no confs)
     import scala.jdk.CollectionConverters._
