@@ -24,43 +24,34 @@ import graft.BenchProtocol.Sample
   *  - one short timestamped stderr line per query, so a killed run's
   *    tail shows exactly where it died.
   *
-  * The final block is the spacer, the canary line (the host-speed
-  * bracket around the timed passes, context only), the `per_query_cs`
-  * lines and the short total line last.
+  * The final block is the spacer, the `per_query_cs` lines and the
+  * short total line last. The host-speed bracket around the timed
+  * passes (context only) goes to stderr, so under `sbt runMain`, whose
+  * `[info] ` prefixes and `[success]` line share the 2 KB tail, the
+  * tail still holds the whole block (BenchFormatSpec).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - t0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Wall budget for the WHOLE protocol, calibrated to the driver's
-    // OBSERVED kill horizon rather than a guess. Every measured point
-    // so far: r16 completed at 1946 s sbt wall (horizon > 1946 s);
-    // r17's longer protocol was killed rc=124 at some T beyond that;
-    // r18 completed at 872 s sbt wall under this default. So the
-    // horizon is bracketed at (1946, r17_wall] and 1500 in-JVM +
-    // ~60 s sbt overhead sits under the proven-safe 1946 floor with
-    // ~25% margin. Leaving headroom is the point — a self-truncated
+    // Wall budget for the WHOLE protocol, under the kill horizon observed
+    // for bench runs (a 1946 s sbt run completed, a longer one was killed):
+    // 1500 s in-JVM + ~60 s sbt leaves ~25% margin — a self-truncated
     // run with data beats a killed run without.
     val budgetS = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S")
       .map(_.toDouble).getOrElse(1500.0)
-    // 300 s: the watchdog exists for HANGS, not slow windows — the r18
-    // shakedown saw a 5.25× throttled window push two legitimate
-    // multi-job queries (q50 connected components, q146 entity diff)
-    // past a 120 s deadline into false FAILEDs; at 300 s a real hang
-    // still costs only a fifth of the default budget once per pass
+    // 300 s: the watchdog exists for HANGS, not slow windows (a 5.25×
+    // throttled window pushed q50 and q146 past a 120 s deadline); a
+    // real hang still costs only a fifth of the budget per pass
     val queryTimeoutS = sys.env.get("SPARK_GRAFT_BENCH_QUERY_TIMEOUT_S")
       .map(_.toDouble).getOrElse(300.0)
     val spark = Session.builder(Session.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // The r17 driver tail was consumed by `WindowExec: No Partition
-    // Defined` spam from the engine's deliberate bounded-frame
-    // single-partition windows (keySkewProfile's histogram,
-    // packingOffsets' bucket sums — all documented at their sites).
-    // This logger config IS the fix: the partitionBy(lit(1)) spelling
-    // does not survive Catalyst's constant folding (measured, r18), so
-    // the warning cannot be suppressed at the source without changing
-    // plans. Verified: zero such lines across full bench runs.
+    // `WindowExec: No Partition Defined` spam from the engine's
+    // deliberate single-partition windows (keySkewProfile,
+    // packingOffsets) would fill the stdout tail; Catalyst folds a
+    // partitionBy(lit(1)) spelling away, so the logger level is the fix.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
@@ -148,7 +139,7 @@ object Bench {
     // Up to two timed passes, min per query ACROSS passes (pass-
     // separated samples: back-to-back samples of one query share any
     // transient contention window).
-    val (mins, probes) = Canary.bracketed(spark, "bench") {
+    val mins = Canary.bracketed(spark, "bench") {
       val (p1, p1S) = pass("p1", queryTimeoutS)
       printBlock(BenchProtocol.minOverSuccesses(Seq(p1)))
       val passes = if (BenchProtocol.nextPassFits(elapsedS, budgetS, p1S)) {
@@ -167,7 +158,6 @@ object Bench {
     System.err.println(s"[bench] failed in every timed pass, left out: ${
       names.filterNot(measured).mkString(" ")}")
     println(BenchProtocol.spacerLine())
-    println(BenchFormat.canaryLine(probes, sfDir))
     BenchFormat.perQueryLines(mins).foreach(println)
     println(BenchFormat.totalLine(mins.map(_._2).sum, sfDir))
     spark.stop()

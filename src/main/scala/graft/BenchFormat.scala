@@ -18,11 +18,9 @@ package graft
 object BenchFormat {
 
   /** "q01_pricing_summary" → "01" (names without an underscore pass
-    * through minus the prefix). The leading "q" was dropped as the r16
-    * tail lever — the digits alone are unique across the catalog
-    * (spec-pinned) and join back to full names via
-    * CORRECTNESS_r{N}.json's qNN prefixes; at 145+ queries that one
-    * character per entry is ~150 chars of the ~2000-char window.
+    * through minus the prefix): the digits alone are unique across the
+    * catalog (spec-pinned), and each char per entry is ~150 chars of the
+    * tail.
     */
   def compactKey(name: String): String =
     name.takeWhile(_ != '_').stripPrefix("q")
@@ -30,33 +28,18 @@ object BenchFormat {
   def ms3(v: Double): String = f"$v%.3f"
 
   /** Per-query entries are INTEGER CENTISECONDS, declared per line
-    * ("unit":"cs"): at 135 registered queries even 2-decimal seconds
-    * overflowed the 2 KB tail (the guard spec's history: 3-decimal
-    * broke at 127, 2-decimal at 135). Integers drop the fixed ".xx"
-    * cost — sub-second queries (most of the suite) go from 4 chars to
-    * 2 — and 10 ms resolution is noise-level against the ≥10% ambient
-    * drift the canary documents. The total and canary lines keep
-    * 3-decimal seconds (few chars; the canary's ~0.15 s probes need
-    * them).
+    * ("unit":"cs"): 2-decimal seconds overflowed the 2 KB tail at 135
+    * queries, and 10 ms resolution is noise-level against the ≥10%
+    * ambient drift the canary documents. The total line keeps 3-decimal
+    * seconds.
     */
   def cs(v: Double): String = math.round(v * 100).toString
-
-  /** "/root/testdata/sf0.1" → "sf0.1" — used by the canary line; the
-    * per-query part lines carry no sf at all anymore (one bench run is
-    * one sf, the total line has the full dir — every repeated char was
-    * tail-budget cost).
-    */
-  def sfTag(sf: String): String = sf.split('/').last
 
   /** The per-query timing map as 1..n JSON lines, each ≤ `maxLine`
     * chars. Every line is self-describing — the metric name
     * `per_query_cs` declares the unit, and each line is standalone
     * JSON — so the driver can regex-recover all entries from the tail
-    * without needing one parseable super-line. The r14 tail levers
-    * (the catalog crossed the previous skeleton's budget at 144
-    * queries): the `part` label is gone (the driver never consumed
-    * it — lines are position-independent), and the per-line unit
-    * field folded into the metric name.
+    * without needing one parseable super-line.
     */
   def perQueryLines(results: Seq[(String, Double)],
                     maxLine: Int = 900): Seq[String] = {
@@ -82,19 +65,6 @@ object BenchFormat {
     chunks.map { c =>
       s"""{"metric":"per_query_cs","q":{${c.mkString(",")}}}"""
     }
-  }
-
-  /** The host-speed context line ([[Canary]]): one short JSON line
-    * carrying each probe's minimum over the bracket's two samples,
-    * placed directly before the per-query parts and the total line so
-    * it survives inside the 2 KB stdout tail with them (≈85 chars,
-    * budgeted in the same ~2 KB window the part lines are chunked for).
-    */
-  def canaryLine(probes: Seq[(String, Double)], sf: String): String = {
-    val entries = probes
-      .map { case (k, v) => "\"" + k + "\":" + ms3(v) }.mkString(",")
-    // "p" not "probes": every repeated char in a fixed line is budget
-    s"""{"metric":"canary","sf":"${sfTag(sf)}","p":{$entries}}"""
   }
 
   /** The final total-only line: the raw sum of the reported per-query

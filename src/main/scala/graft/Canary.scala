@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Host-speed calibration probes for the bench tail.
+/** Host-speed calibration probes bracketing a bench run (stderr).
   *
   * Cross-round per-query comparisons have one confound the suite itself
   * cannot observe: the wall speed of the host window the driver happened
@@ -37,8 +37,6 @@ import org.apache.spark.sql.functions._
   * it. SURVEY §6 records the per-round values.
   */
 object Canary {
-
-  val names: Seq[String] = Seq("cpu", "sort", "shuf", "mcpu")
 
   // JIT blackhole: the probes' results fold in here so dead-code
   // elimination can't hollow out the measured loops
@@ -109,19 +107,16 @@ object Canary {
     "mcpu" -> time(mcpuProbe()))
 
   /** Run `body` inside a canary bracket, print the bracket as one
-    * stderr JSON line, and return `body`'s result with each probe's
-    * minimum over the two samples (in [[names]] order). Every
+    * stderr JSON line, and return `body`'s result. Every
     * measurement tool (Bench, OneQ) carries its own window tag, so an
     * absolute number is never published without the throttle context
     * that decides whether it is an anchor or an upper bound.
     */
-  def bracketed[T](spark: SparkSession, label: String)
-                  (body: => T): (T, Seq[(String, Double)]) = {
+  def bracketed[T](spark: SparkSession, label: String)(body: => T): T = {
     warm(spark)
     val pre = sample(spark)
-    var post = pre
-    val result = try body finally {
-      post = sample(spark)
+    try body finally {
+      val post = sample(spark)
       def j(m: Map[String, Double]) = m.toSeq.sortBy(_._1)
         .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
       val worst = math.max(pre("mcpu") / pre("cpu"),
@@ -129,6 +124,5 @@ object Canary {
       System.err.println(f"""{"bracket":"$label","worst_mcpu_cpu":$worst%.2f,"pre":${
         j(pre)},"post":${j(post)}}""")
     }
-    (result, names.map(n => n -> math.min(pre(n), post(n))))
   }
 }

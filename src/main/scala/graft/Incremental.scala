@@ -38,32 +38,28 @@ import graft.sources.Sources
   *    affected tile encodes, and their shared-border arc splits
   *    ([[Geometry.withSharedSegments]]) are a function of their
   *    neighbour set — the neighbours pin the junctions without
-  *    rendering anywhere new. An earlier tile-hop expansion
-  *    (features of the renderers' tiles) was transitively flooded by
-  *    coarse-zoom tiles — one changed cell's z8 tile pulled ~300
-  *    renderers whose own z8 tiles pulled the continent (measured:
-  *    215k of 217k cells "contributing" to a 217-cell delta);
+  *    rendering anywhere new (a tile-hop expansion flooded through
+  *    coarse-zoom tiles: 215k of 217k cells for a 217-cell delta);
   *  - the pivot runs over the contributor subset only; unchanged
   *    tiles never re-encode and never pass through Spark: an in-place
   *    delta leaves them where they lie, and copy mode copies the
   *    previous tree file for file before updating the copy;
+  *  - the rebuild is [[Pipeline.runRegion]]'s own tile plan
+  *    ([[Pipeline.regionTiles]]: both decades, both layers, one encode
+  *    shuffle) over the contributors, cut to the affected (z, x, y) by
+  *    one semi-join before that shuffle, written by one sink pass;
   *  - every input is derived once: the new snapshot, its fingerprints
   *    and the features are each checked out by one job and read back
   *    from there; the affected tiles and the contributor GEOIDs are
   *    driver-local sets (one collect each), bounded by
   *    `maxChangedFraction`, fed back as local frames.
   *
-  * Geometry changes are out of scope by design: the census shape
-  * tables the reference tiles change once a decade — a geometry delta
-  * is the full-rebuild case, and [[incrementalRegion]]'s fraction
-  * gate already routes mass change there. A tree deepened by
-  * `--extend-zooms-if-still-dropping` (a previous run that extended
-  * past the region's configured maxZoom) is likewise out of the fan's
-  * reach — [[incrementalRegion]] DETECTS it from the tree's own
-  * deepest z directory ([[treeMaxZoom]]) and routes to the full
-  * rebuild rather than silently stranding stale deep tiles; the
-  * national block-groups case this is built for does not extend (the
-  * density budget holds at z10).
+  * Geometry changes are out of scope by design: census shapes change once
+  * a decade, a full-rebuild case the fraction gate routes. A tree
+  * deepened by `--extend-zooms-if-still-dropping` is out of the fan's
+  * reach too: [[incrementalRegion]] detects it from the tree's deepest z
+  * directory ([[treeMaxZoom]]) and rebuilds in full rather than strand
+  * stale deep tiles.
   */
 object Incremental {
 
@@ -210,7 +206,8 @@ object Incremental {
   /** Rebuild only what changed between `oldCsvPath` and `newCsvPath` in
     * `prevDir`'s tree (a prior [[Pipeline.runRegion]] output), leaving
     * the result at `outDir`. One update path: delete the affected tile
-    * files, write the rebuilt ones, publish the new fingerprints.
+    * files of both decades, write the rebuilt ones of both in one pass,
+    * publish the new fingerprints last.
     * `outDir == prevDir` updates the live tree IN PLACE, IO proportional
     * to the delta, not the tileset (the deployment mode perfbench's
     * `nightly-delta` measures); otherwise the previous region tree is
@@ -235,9 +232,8 @@ object Incremental {
     val hconf = spark.sessionState.newHadoopConf()
     val prevFs = new Path(prevDir).getFileSystem(hconf)
     // the OUT end mutates the checksum flag below, so it gets a PRIVATE
-    // instance (closed in the finally below) — flipping the flag on the
-    // JVM-cached FileSystem would silently disable .crc sidecars for
-    // every other writer of the scheme in the process (r17 ADVICE)
+    // instance: the flag on the JVM-cached FileSystem would disable .crc
+    // sidecars for every other writer of the scheme in the process
     val outFs = FileSystem.newInstance(new Path(outDir).toUri, hconf)
     // no .crc sidecars in the live tree (same contract as the sink)
     outFs.setWriteChecksum(false)
@@ -263,12 +259,9 @@ object Incremental {
       val (nChanged, nAdded, nRemoved) = (byStatus.getOrElse("changed", 0L),
         byStatus.getOrElse("added", 0L), byStatus.getOrElse("removed", 0L))
       val nTotal = newFps.count()
-      // a previous run that EXTENDED past the configured fan maxZoom
-      // (`--extend-zooms-if-still-dropping` on dense point regions)
-      // wrote deeper tiles than [[featureTileFan]] covers: affected deep
-      // tiles would be neither rebuilt nor deleted — a silently
-      // corrupted tree. Detect the condition from the tree's own
-      // deepest z directory and route to the full rebuild instead.
+      // a previous run that EXTENDED past the configured fan maxZoom wrote
+      // deeper tiles than [[featureTileFan]] covers, which would be neither
+      // rebuilt nor deleted: route such a tree to the full rebuild
       val hasPolys = features.columns.contains("polys")
       val fanMaxZ = {
         val bz = EtlConfig.bubbleZoom(region).maxZoom
@@ -293,15 +286,12 @@ object Incremental {
         Stats(nChanged, nAdded, nRemoved, -1L, -1L, fullRebuild = true)
       } else {
         // one checkout of the features serves the fan, the edge-neighbour
-        // segments and both decades' tile builds
+        // segments and the tile build
         val feats = checkout(features)
         val fan = checkout(featureTileFan(feats, region))
         // the bookkeeping sets live on the driver, SIZED BY CONTRACT, not
-        // by the tileset: |affected| = delta GEOIDs × per-feature tile
-        // fan-out, |contributors| = their renderers and edge-neighbours,
-        // and the delta path only runs when the changed fraction is under
-        // maxChangedFraction — a full-churn "delta" routed to the full
-        // rebuild above before reaching here
+        // by the tileset: delta GEOIDs × tile fan-out, and their renderers
+        // and edge-neighbours, under maxChangedFraction
         val ((affectedRows, affectedTiles), (contributorRows, contributors)) = {
           val affected = collectLocal(
             fan.join(diff.select(col("GEOID")), Seq("GEOID"), "left_semi")
@@ -326,29 +316,25 @@ object Incremental {
           Seq("id"), "left_semi")
         val wideC = checkout(Pipeline.shape(longC, inputType))
         // IDENTICAL code path to runRegion (Pipeline.choroTileFeatures,
-        // then Pipeline.decadeTileset per decade): in particular the
-        // geometry stage runs over featC BEFORE any attribute join, so a
-        // data-less neighbour (e.g. a removed GEOID) still contributes its
-        // shared edges and border simplification reproduces byte-for-byte
+        // then Pipeline.regionTiles): in particular the geometry stage
+        // runs over featC BEFORE any attribute join, so a data-less
+        // neighbour (e.g. a removed GEOID) still contributes its shared
+        // edges and border simplification reproduces byte-for-byte
         val choroMaxZ = EtlConfig.choroplethZoom(region).maxZoom
         val polyFeats = if (hasPolys)
-          Some(checkout(Pipeline.choroTileFeatures(featC, region, choroMaxZ)))
-        else None
-        // the one tile update: delete the affected files first (a rebuilt
-        // tile that came out empty must VANISH, e.g. a removed GEOID's deep
-        // tile), then write the rebuilt set; unchanged tiles and the
-        // decade-level metadata.json already sit in `tree`
+          Some(Pipeline.choroTileFeatures(featC, region, choroMaxZ)) else None
+        // the one tile update: delete the affected files of both decades
+        // first (a rebuilt tile that came out empty must VANISH, e.g. a
+        // removed GEOID's deep tile), then write the rebuilt set of both
+        // decades in one pass; unchanged tiles and the decade-level
+        // metadata.json already sit in `tree`
         def update(tree: Path): Unit = {
-          for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
-            val rebuilt = Pipeline.decadeTileset(wideC, featC, polyFeats,
-              inputType, decade, region, bubbleMaxZ = None)
-              .join(affectedTiles, Seq("z", "x", "y"), "left_semi")
-            for (r <- affectedRows)
-              outFs.delete(new Path(tree, s"$decade/${r.getAs[Int]("z")}/" +
-                s"${r.getAs[Long]("x")}/${r.getAs[Long]("y")}.pbf"), false)
-            TileBuild.writePbfDirectory(rebuilt, s"$tree/$decade",
-              writeMetadata = false)
-          }
+          val rebuilt = Pipeline.regionTiles(wideC, Some(featC), polyFeats,
+            inputType, region, bubbleMaxZ = None, tiles = Some(affectedTiles))
+          for (r <- affectedRows; decade <- EtlConfig.decades.keys)
+            outFs.delete(new Path(tree, s"$decade/${r.getAs[Int]("z")}/" +
+              s"${r.getAs[Long]("x")}/${r.getAs[Long]("y")}.pbf"), false)
+          TileBuild.writeTiles(rebuilt, tree.toString, Pipeline.TreeLevels)
           publishFingerprints(outFs, newFps, tree)
         }
         // in-place = outDir IS the previous tree (qualified-URI equality,

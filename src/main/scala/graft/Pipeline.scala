@@ -16,8 +16,10 @@ import graft.sources.Sources
   * Stage boundaries in the reference are OS processes exchanging CSV
   * files (SURVEY.md §3.1 — "the IR is a CSV file"); here every stage is
   * a `DataFrame => DataFrame` and the only materialization barriers are
-  * the pivot shuffle and the per-tile groupBy shuffle. Regions and
-  * decades are embarrassingly parallel (`build.sh:69,163`) — on a
+  * the pivot shuffle and the ONE tile shuffle per region: both decades
+  * and both layers of a region's tileset meet in one
+  * `groupBy(decade, z, x, y)` ([[regionTiles]]) and are written by one
+  * sink pass. Regions are embarrassingly parallel (`build.sh:69`) — on a
   * cluster, submit them as parallel jobs over one shared SparkSession.
   */
 object Pipeline {
@@ -63,18 +65,13 @@ object Pipeline {
     * more than once is CHECKED OUT — `localCheckpoint(eager = true)`,
     * one job that computes its rows once into the block manager and
     * leaves a plan that scans them (`Scan ExistingRDD`) — and is never
-    * cached. A checkout registers nothing with the session's cache
-    * manager, so a plan that is built and never run (an explain, a plan
-    * audit, a dropped frame) leaves nothing behind, and AQE reuses
-    * exchanges over its scan, which it does not over an
-    * `InMemoryTableScan`. Who releases it:
-    *  - a checkout returned inside a lazy frame lives as long as that
-    *    frame; the ContextCleaner drops its blocks once the frame is
-    *    unreferenced;
-    *  - a checkout whose last reader the caller knows is dropped then:
-    *    `body` receives `checkout`, and every frame it checks out is
-    *    released ([[releaseCheckpoint]]) when `body` exits, normally or
-    *    not. Nothing `body` returns may read one of them.
+    * cached: a checkout registers nothing with the cache manager, so an
+    * unrun plan leaves nothing behind, and AQE reuses exchanges over its
+    * scan (not over an `InMemoryTableScan`). `body` receives `checkout`,
+    * and every frame it checks out is released ([[releaseCheckpoint]])
+    * when `body` exits, normally or not, so nothing `body` returns may
+    * read one; a checkout inside a returned lazy frame is left to the
+    * ContextCleaner.
     *
     * The one exception is an edge list whose hash partitioning every
     * round of an iteration rides: a checkpoint's scan reports unknown
@@ -110,35 +107,23 @@ object Pipeline {
     * layer encodes the polygon rings themselves
     * (`build.sh:139-160` — requires a `polys` column, see
     * [[geometryFeatures]]) through [[choroTileFeatures]] and
-    * [[choroDecadeEncode]], the path [[runRegion]] ships.
+    * [[choroDecadeEncode]]. Each is one layer of one decade of
+    * [[regionTiles]], the plan [[runRegion]] ships.
     *
     * @param features GEOID + lon/lat (bubble center) and, for the
     *                 choropleth layer, the parsed `polys` column
+    * @return (z, x, y, n_features, tile_bytes)
     */
   def decadeTiles(wide: DataFrame, features: DataFrame, inputType: String,
                   decade: String, layer: String, region: String,
                   maxZoomOverride: Option[Int] = None): DataFrame =
-    if (layer == "bubble") {
-      val zoom = EtlConfig.bubbleZoom(region)
-      val fields = EtlConfig.decadeFields(EtlConfig.bubbleVars(inputType), decade)
-        .filter(f => wide.columns.contains(f))
-      val joined = Joins.attributeJoin(features, Shape.decadeSlice(wide, fields),
-          "GEOID", ifMatched = true)
-        .withColumn("fid", col("GEOID").cast("long")) // P5/T5 numeric feature id
-      // `--base-zoom` (`build.sh:121-126`): zooms below the region's base
-      // thin at ~2.5×/level — how 217k block-group dots stay readable at
-      // z4; the flat density budget only caps the residue
-      TileBuild.buildPointTiles(joined, "fid", "lon", "lat",
-        fields.filterNot(_ == "GEOID"), s"$region-$decade-$layer",
-        zoom.minZoom, maxZoomOverride.getOrElse(zoom.maxZoom),
-        baseZoom = Some(zoom.baseZoom))
-    } else {
+    if (layer == "bubble")
+      regionTiles(wide, Some(features), None, inputType, region,
+        maxZoomOverride, Seq(decade)).drop("decade")
+    else {
       require(features.columns.contains("polys"),
         "choropleth layer needs polygon geometry: supply GeoJSON-derived " +
           "features (Pipeline.geometryFeatures), not bare lon/lat points")
-      // the same geometry-before-join split runRegion writes (see
-      // [[choroTileFeatures]]), so a one-off decade build is byte-identical
-      // to the choropleth layer of the shipped tileset
       val maxZ = maxZoomOverride.getOrElse(EtlConfig.choroplethZoom(region).maxZoom)
       choroDecadeEncode(wide, choroTileFeatures(features, region, maxZ),
         inputType, decade, region)
@@ -167,80 +152,102 @@ object Pipeline {
 
   /** One decade's choropleth attribute join + encode over a prepared
     * [[choroTileFeatures]] frame (`tile-join --if-matched`,
-    * `build.sh:208-211`). Shared by both rebuild modes — see
-    * [[choroTileFeatures]].
+    * `build.sh:208-211`): the choropleth layer of [[regionTiles]] alone.
     */
   private[graft] def choroDecadeEncode(wide: DataFrame, polyFeats: DataFrame,
                                        inputType: String, decade: String,
-                                       region: String): DataFrame = {
-    val knobs = EtlConfig.choroplethBuild(region)
-    val fields = EtlConfig.decadeFields(
-      EtlConfig.choroplethVars(inputType), decade)
-      .filter(wide.columns.contains)
-    val slice = Shape.decadeSlice(wide, fields)
-    val attrCols = fields.filterNot(_ == "GEOID")
-    val attrPairs = attrCols.flatMap(c => Seq(lit(c), col(c).cast("string")))
-    val attrsRaw = slice.select(col("GEOID").cast("long").as("fid"),
-      map(attrPairs: _*).as("attrs"))
-    // size-gate on the SLICE, not the map projection: MapType's default
-    // per-row size estimate (~tens of bytes) hides the real ~payload of
-    // a 217k×110-attr map, so Catalyst would auto-broadcast a ~500 MB
-    // build and OOM the driver (the PipeScale r15 finding — same class
-    // as attributeJoin's gate). Small regions broadcast; national-scale
-    // slices pin the shuffle-hash join, which AQE only upgrades back to
-    // broadcast from REAL runtime sizes.
-    val est = slice.queryExecution.optimizedPlan.stats.sizeInBytes
-    val attrs = if (est <= (64L << 20)) broadcast(attrsRaw)
-      else attrsRaw.hint("shuffle_hash")
-    TileBuild.encodePolygonTiles(polyFeats.join(attrs, Seq("fid")),
-      s"$region-$decade-choropleth", coalesce = knobs.coalesce)
-  }
+                                       region: String): DataFrame =
+    regionTiles(wide, None, Some(polyFeats), inputType, region, None,
+      Seq(decade)).drop("decade")
 
-  /** One decade's shipped tileset: the bubble layer, the choropleth
-    * layer over a prepared [[choroTileFeatures]] frame when there is
-    * one, and the J3 layer union-merge (`tile-join` `build.sh:214`):
-    * align on (z,x,y), concatenate layer bytes at the protobuf level.
-    * Without polygons the bubble layer IS the tileset. Shared by
-    * [[runRegion]] and [[Incremental.incrementalRegion]], so the two
-    * rebuild modes write the same bytes.
+  /** The directory levels of a region's tile tree: `decade/z/x/y.pbf`. */
+  private[graft] val TreeLevels = Seq("decade", "z", "x", "y")
+
+  /** A region's tilesets as ONE lazy plan (`build.sh:121-231`: the base
+    * tilesets, split per decade by `tile-join`): every decade in
+    * `decades`, the bubble layer of `points` and the choropleth layer of
+    * `polyFeats` ([[choroTileFeatures]]), met in one encode shuffle
+    * ([[TileBuild.encodeTiles]]). [[runRegion]] and
+    * [[Incremental.incrementalRegion]] build both layers of both decades
+    * through it, so the two rebuild modes write the same bytes.
     *
-    * @return (z, x, y, tile_bytes)
+    * Everything but the attribute maps is decade-independent and built
+    * once: the bubble fan and its density budget (over the features the
+    * snapshot has data for — `--if-matched`; `wide` has one row per
+    * GEOID, so every decade matches the same features, and the budget
+    * ranks by fid), and the choropleth geometry. The attribute maps are
+    * one frame with a row per (GEOID, decade), joined onto every (tile,
+    * feature) row; each (decade, z, x, y) group encodes the bubble layer,
+    * then the choropleth layer.
+    *
+    * @param tiles the (z, x, y) keys to encode, None = all: the rows of
+    *              other tiles leave before the encode shuffle (a tile's
+    *              bytes depend on its own rows only)
+    * @return (decade, z, x, y, n_features, tile_bytes)
     */
-  private[graft] def decadeTileset(wide: DataFrame, features: DataFrame,
-                                   polyFeats: Option[DataFrame],
-                                   inputType: String, decade: String,
-                                   region: String,
-                                   bubbleMaxZ: Option[Int]): DataFrame = {
-    val bubble = decadeTiles(wide, features, inputType, decade, "bubble",
-      region, maxZoomOverride = bubbleMaxZ).select("z", "x", "y", "tile_bytes")
-    polyFeats.fold(bubble) { tf =>
-      val choro = choroDecadeEncode(wide, tf, inputType, decade, region)
-      bubble.withColumnRenamed("tile_bytes", "bubble_bytes")
-        .join(choro.select(col("z"), col("x"), col("y"),
-          col("tile_bytes").as("choro_bytes")), Seq("z", "x", "y"), "full_outer")
-        .select(col("z"), col("x"), col("y"),
-          concat(coalesce(col("bubble_bytes"), lit(Array.empty[Byte])),
-            coalesce(col("choro_bytes"), lit(Array.empty[Byte]))).as("tile_bytes"))
-    }
+  private[graft] def regionTiles(wide: DataFrame, points: Option[DataFrame],
+                                 polyFeats: Option[DataFrame],
+                                 inputType: String, region: String,
+                                 bubbleMaxZ: Option[Int],
+                                 decades: Seq[String] = EtlConfig.decades.keys.toSeq.sorted,
+                                 tiles: Option[DataFrame] = None): DataFrame = {
+    val bz = EtlConfig.bubbleZoom(region)
+    val geom = Seq("z", "x", "y", "layer", "density_rank", "fid", "rings_flat",
+      "ring_sizes").map(col)
+    // `--base-zoom` (`build.sh:121-126`): zooms below the region's base
+    // thin at ~2.5×/level — how 217k block-group dots stay readable at
+    // z4; the flat density budget only caps the residue
+    val bubble = points.map(p => TileBuild.pointTileRows(
+        Joins.attributeJoin(p, wide.select("GEOID"), "GEOID")
+          .withColumn("fid", col("GEOID").cast("long")), // P5/T5 numeric id
+        "fid", "lon", "lat", bz.minZoom, bubbleMaxZ.getOrElse(bz.maxZoom),
+        baseZoom = Some(bz.baseZoom))
+      .withColumn("layer", lit(0)).select(geom: _*))
+    val choro = polyFeats.map(_.withColumn("layer", lit(1)).select(geom: _*))
+    // per decade, each layer's `csvcut` columns (`build.sh:163-207`) as one
+    // MVT attribute map, GEOID left out (it is the feature id)
+    val layerVars = Seq(EtlConfig.bubbleVars(inputType),
+      EtlConfig.choroplethVars(inputType))
+    def fields(vars: Seq[String], decade: String): Seq[String] =
+      EtlConfig.decadeFields(vars, decade).filter(wide.columns.contains)
+    val attrsRaw = decades.map(d => wide.select(
+        Seq(col("GEOID").cast("long").as("fid"), lit(d).as("decade")) ++
+          layerVars.zipWithIndex.map { case (vars, i) =>
+            map(fields(vars, d).filterNot(_ == "GEOID")
+              .flatMap(c => Seq(lit(c), col(c).cast("string"))): _*).as(s"attrs$i")
+          }: _*))
+      .reduce(_ unionByName _)
+    // size-gate on the SLICE: MapType's default per-row estimate hides a
+    // 217k×110-attr map's ~500 MB, so Catalyst would auto-broadcast it
+    // and run out of heap. Big slices pin the shuffle-hash join, which AQE
+    // upgrades back to broadcast only from REAL runtime sizes.
+    val slice = wide.select((for (d <- decades; v <- layerVars; f <- fields(v, d))
+      yield f).distinct.map(col): _*)
+    val attrs = if (slice.queryExecution.optimizedPlan.stats.sizeInBytes <= (64L << 20))
+      broadcast(attrsRaw) else attrsRaw.hint("shuffle_hash")
+    val rows = (bubble ++ choro).reduce(_ unionByName _)
+    TileBuild.encodeTiles(tiles.fold(rows)(rows.join(_, Seq("z", "x", "y"), "left_semi"))
+        .join(attrs, Seq("fid"))
+        .withColumn("attrs", when(col("layer") === 0, col("attrs0"))
+          .otherwise(col("attrs1"))),
+        Seq(TileBuild.Layer(d => s"$region-$d-bubble", polygons = false),
+          TileBuild.Layer(d => s"$region-$d-choropleth", polygons = true,
+            coalesce = EtlConfig.choroplethBuild(region).coalesce)))
   }
 
-  /** Full region run (`build.sh:69-233`): returns the wide frame and
-    * writes tiles per decade under `outDir` when features are given.
-    * Extents are built only for `extentsOut` ([[extents]] of the returned
-    * frame gives them). With GeoJSON-derived features
-    * ([[geometryFeatures]]) both layers build; with bare lon/lat points
-    * only the bubble layer can.
+  /** Full region run (`build.sh:69-233`): returns the wide frame and,
+    * when features are given, writes the region's tile tree under
+    * `outDir` — both decades in one plan ([[regionTiles]]) and one sink
+    * pass, plus each decade's metadata.json. Extents are built only for
+    * `extentsOut`. With GeoJSON-derived features ([[geometryFeatures]])
+    * both layers build; with bare lon/lat points only the bubble layer.
     *
-    * SCAN-ONCE discipline (SURVEY §3.1's "one lazy plan, the only true
-    * barriers being the pivot shuffle and the tile groupBy shuffle"):
-    * when the run reads the wide frame more than once — tiles for each
-    * decade, the stage-b/c CSV artifacts — the pivot is checked out
-    * ([[withCheckouts]]), so the long CSV is scanned exactly ONCE per
-    * region run and every downstream stage reads the checked-out wide
-    * rows (PipelineSpec pins this with a QueryExecutionListener over the
-    * composed run). The reference gets the same effect by materializing
-    * `data.wide.csv` between processes (`build.sh:80-81`). The returned
-    * wide frame is always the lazy pivot, never a released checkout.
+    * SCAN-ONCE (SURVEY §3.1): when the run reads the wide frame more than
+    * once — the tiles, the stage-b/c CSV artifacts — the pivot is checked
+    * out ([[withCheckouts]]), so the long CSV is scanned exactly ONCE per
+    * region run (PipelineSpec pins this over the composed run), as the
+    * reference's `data.wide.csv` between processes does
+    * (`build.sh:80-81`). The returned wide frame is the lazy pivot.
     *
     * @param extendBudget densest-tile feature budget driving the
     *                     `--extend-zooms-if-still-dropping` decision for
@@ -274,28 +281,30 @@ object Pipeline {
       extentsOut.foreach(p => Sources.writeCsv(extents(wide), p, singleFile = true))
       for (supplied <- features; out <- outDir) {
         // one checkout of the features serves the extend-zooms probes, the
-        // polygon geometry, the bounds and every decade's bubble layer
+        // polygon geometry, the bounds and the bubble layer
         val f = checkout(supplied)
         val hasPolys = f.columns.contains("polys")
-        // base choropleth GEOMETRY is decade-independent — built ONCE and
-        // checked out, exactly the reference's base-tileset + per-decade
-        // `tile-join` split (`build.sh:139-160` once, `:208-211` per
-        // decade); only the attribute join + encode re-run per decade
         val zoom = EtlConfig.choroplethZoom(region)
-        val knobs = EtlConfig.choroplethBuild(region)
-        // `--extend-zooms-if-still-dropping` applies to the CHOROPLETH too
-        // (`build.sh:148-152`) — but only the drop-densest strategy ever
-        // drops (cities); coalesce regions merge instead of dropping, so
-        // extension is a no-op there and is skipped. Density is measured
-        // on the decade-independent interior points (one per polygon —
-        // the same features that overflow a tile's feature budget).
-        val choroMaxZ = if (zoom.extend && !knobs.coalesce)
-          Tiling.extendMaxZoom(f, "lon", "lat",
-            zoom.maxZoom, zoom.maxZoom + 2, budget = extendBudget)
-        else zoom.maxZoom
-        val polyFeats = if (hasPolys)
-          Some(checkout(choroTileFeatures(f, region, choroMaxZ)))
-        else None
+        val bz = EtlConfig.bubbleZoom(region)
+        // `--extend-zooms-if-still-dropping` (`build.sh:124-126,148-152`):
+        // decided ONCE per region from the decade-independent interior
+        // points (one per polygon — the features that overflow a tile's
+        // feature budget), one aggregate per distinct base maxZoom — the
+        // cities layers share theirs
+        val extended = scala.collection.mutable.Map.empty[Int, Int]
+        def extendFrom(maxZ: Int): Int = extended.getOrElseUpdate(maxZ,
+          Tiling.extendMaxZoom(f, "lon", "lat", maxZ, maxZ + 2, budget = extendBudget))
+        // the choropleth extends only under drop-densest (cities):
+        // coalesce regions merge instead of dropping, so extension is a
+        // no-op there and is skipped
+        val choroMaxZ = if (zoom.extend && !EtlConfig.choroplethBuild(region).coalesce)
+          extendFrom(zoom.maxZoom) else zoom.maxZoom
+        val bubbleMaxZ = if (bz.extend) Some(extendFrom(bz.maxZoom)) else None
+        // base choropleth GEOMETRY is decade-independent: the one tile plan
+        // reads it once, the reference's base tileset split per decade by
+        // `tile-join` (`build.sh:139-160` once, `:208-211` per decade)
+        val polyFeats =
+          if (hasPolys) Some(choroTileFeatures(f, region, choroMaxZ)) else None
         // tileset bounds/center (decade-independent, one small aggregate):
         // tile-join's metadata.json carries them (`build.sh:220,226`) —
         // polygon regions use the true geometry bbox, point regions the
@@ -311,28 +320,23 @@ object Pipeline {
           if (r.isNullAt(0)) None
           else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
         }
-        // `--extend-zooms-if-still-dropping`: decided ONCE per region from
-        // the geometry (decade-independent), then reused by every decade
-        val bz = EtlConfig.bubbleZoom(region)
-        val bubbleMaxZ = if (bz.extend)
-          Some(Tiling.extendMaxZoom(f, "lon", "lat",
-            bz.maxZoom, bz.maxZoom + 2, budget = extendBudget))
-        else None
-        for (decade <- EtlConfig.decades.keys.toSeq.sorted) {
-          val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
-          val meta = Map("name" -> s"$region-$decade",
-            "type" -> "overlay",
-            "minzoom" -> math.min(bz.minZoom, zoom.minZoom).toString,
-            "maxzoom" -> maxZoomOut.toString,
-            "layers" -> (s"$region-$decade-bubble" +
-              (if (hasPolys) s",$region-$decade-choropleth" else ""))) ++
-            bounds.map { case (x0, y0, x1, y1) =>
-              Map("bounds" -> s"$x0,$y0,$x1,$y1",
-                "center" -> s"${(x0 + x1) / 2},${(y0 + y1) / 2},$maxZoomOut")
-            }.getOrElse(Map.empty)
-          TileBuild.writePbfDirectory(decadeTileset(wide, f, polyFeats,
-            inputType, decade, region, bubbleMaxZ), s"$out/$region/$decade", meta)
-        }
+        // the whole tree, both decades, in one encode shuffle and one
+        // sink pass; then each decade's metadata.json
+        TileBuild.writeTiles(regionTiles(wide, Some(f), polyFeats, inputType,
+          region, bubbleMaxZ), s"$out/$region", TreeLevels)
+        val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
+        for (decade <- EtlConfig.decades.keys.toSeq.sorted)
+          TileBuild.writeMetadataJson(spark, s"$out/$region/$decade",
+            Map("name" -> s"$region-$decade",
+              "type" -> "overlay",
+              "minzoom" -> math.min(bz.minZoom, zoom.minZoom).toString,
+              "maxzoom" -> maxZoomOut.toString,
+              "layers" -> (s"$region-$decade-bubble" +
+                (if (hasPolys) s",$region-$decade-choropleth" else ""))) ++
+              bounds.map { case (x0, y0, x1, y1) =>
+                Map("bounds" -> s"$x0,$y0,$x1,$y1",
+                  "center" -> s"${(x0 + x1) / 2},${(y0 + y1) / 2},$maxZoomOut")
+              }.getOrElse(Map.empty))
       }
     }
     pivot

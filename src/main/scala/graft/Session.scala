@@ -14,7 +14,9 @@ import org.apache.spark.sql.SparkSession
   *  - `windowGroupLimitThreshold` 100000, so ranked top-k windows plan
   *    as WindowGroupLimit (PlanAuditSpec pins the shapes);
   *  - [[graft.functions.GraftExtensions]] (the SQL function surface);
-  *  - a codegen cache of [[CodegenCacheEntries]] classes.
+  *  - a codegen cache of [[CodegenCacheEntries]] classes;
+  *  - status stores that keep [[StatusRetention]] jobs, stages and SQL
+  *    executions.
   *
   * Callers add only what is theirs (app name, `SPARK_MASTER`, the
   * tests' warehouse dir) and call `getOrCreate()`.
@@ -35,6 +37,14 @@ object Session {
     */
   val CodegenCacheEntries = 5000
 
+  /** Finished jobs, stages and SQL executions the status stores keep
+    * (static `spark.ui.retainedJobs`/`Stages`,
+    * `spark.sql.ui.retainedExecutions`; Spark's default 1000 let a
+    * long-lived session grow ~210 executions per catalogue pass). The UI
+    * is off and nothing reads them (StatusStoreSpec).
+    */
+  val StatusRetention = 50
+
   def builder(cpus: Int): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.adaptive.enabled", true)
@@ -44,4 +54,7 @@ object Session {
     .config("spark.sql.optimizer.windowGroupLimitThreshold", 100000L)
     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+    .config("spark.ui.retainedJobs", StatusRetention.toLong)
+    .config("spark.ui.retainedStages", StatusRetention.toLong)
+    .config("spark.sql.ui.retainedExecutions", StatusRetention.toLong)
 }

@@ -1,6 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Geometry, TextStats, Tiling}
@@ -11,10 +12,12 @@ import graft.operators.{Geometry, TextStats, Tiling}
   *
   * Spark-first design notes (100 TB scale):
   *  - features fan out to tile keys ([[Tiling.assignTiles]]), then ONE
-  *    `groupBy(z,x,y)` shuffle brings each tile's features together and
-  *    a per-group fold encodes the MVT bytes — `mapGroups` over the
-  *    KeyValueGroupedDataset, the typed-Aggregator shape from
-  *    SURVEY.md §2.11.
+  *    `groupBy(decade,z,x,y)` shuffle brings each tile's features of
+  *    every layer together and one per-group fold encodes the MVT bytes
+  *    ([[encodeTiles]] — `mapGroups` over the KeyValueGroupedDataset,
+  *    the typed-Aggregator shape from SURVEY.md §2.11). A region's
+  *    whole tree (both decades, bubble + choropleth) is one such
+  *    shuffle; a single-layer build is the same kernel with one layer.
   *  - per-tile feature order is pinned (importance desc, id) so tile
   *    bytes are deterministic; the density budget (O4) is applied
   *    BEFORE the shuffle would explode — the window prunes map-side via
@@ -23,10 +26,10 @@ import graft.operators.{Geometry, TextStats, Tiling}
   *    every session builder in this repo raises it to 100000 so the
   *    default 10000 budget stays rank-limit-optimizable — keep that
   *    conf when embedding the library elsewhere.
-  *  - the directory sink writes `z/x/y.pbf` straight from executors
-  *    (`foreachPartition`), exactly the reference's exploded tile tree
-  *    (`build.sh:220`); on a cluster the same code targets a shared
-  *    filesystem / object store.
+  *  - the directory sink writes `[decade/]z/x/y.pbf` straight from
+  *    executors (one `foreachPartition`, [[writeTiles]]), exactly the
+  *    reference's exploded tile tree (`build.sh:220`); on a cluster the
+  *    same code targets a shared filesystem / object store.
   */
 object TileBuild {
 
@@ -41,7 +44,8 @@ object TileBuild {
     */
   val ByteBudget: Int = 500 * 1024
 
-  /** Encode point features into per-tile MVT byte blobs.
+  /** Encode point features into per-tile MVT byte blobs: one point layer
+    * through [[encodeTiles]].
     *
     * @param points     DataFrame with id, lon, lat and `attrCols`
     * @param attrCols   attribute columns carried into tiles (null cells
@@ -59,9 +63,25 @@ object TileBuild {
                       budget: Int = FeatureBudget,
                       byteBudget: Int = ByteBudget,
                       baseZoom: Option[Int] = None): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
+    val attrPairs = attrCols.flatMap(c => Seq(lit(c), col(c).cast("string")))
+    encodeTiles(pointTileRows(points, idCol, lonCol, latCol, minZoom, maxZoom,
+        importanceCol, budget, baseZoom).withColumn("attrs", map(attrPairs: _*))
+        .withColumn("decade", lit("")).withColumn("layer", lit(0)),
+      Seq(Layer(_ => layerName, polygons = false)), byteBudget).drop("decade")
+  }
 
+  /** The decade-independent half of the point build: [[pointTileFan]],
+    * MVT pixel coordinates, the density budget ([[Tiling.dropDensest]],
+    * map-side). Adds z, x, y, density_rank, the long `fid` and the point
+    * in [[encodeTiles]]' wire format (`rings_flat` = [px, py],
+    * `ring_sizes` = [1]).
+    */
+  private[graft] def pointTileRows(points: DataFrame, idCol: String,
+                                   lonCol: String, latCol: String,
+                                   minZoom: Int, maxZoom: Int,
+                                   importanceCol: Option[String] = None,
+                                   budget: Int = FeatureBudget,
+                                   baseZoom: Option[Int] = None): DataFrame = {
     val assigned = pointTileFan(points, idCol, lonCol, latCol, minZoom,
       maxZoom, baseZoom)
     // pixel coords per zoom: computed per-row from the already-assigned z
@@ -79,31 +99,11 @@ object TileBuild {
         floor((col("fx") - col("x")) * 4096))).cast("int"))
       .withColumn("py", least(lit(4095), greatest(lit(0),
         floor((col("fy") - col("y")) * 4096))).cast("int"))
-    val budgeted = Tiling.dropDensest(withPx,
-      col(importanceCol.getOrElse(idCol)), col(idCol), budget)
-
-    val attrPairs = attrCols.flatMap(c => Seq(lit(c), col(c).cast("string")))
-    val rows = budgeted.select(col("z"), col("x"), col("y"),
-      col("density_rank"), col(idCol).cast("long").as("fid"),
-      col("px"), col("py"), map(attrPairs: _*).as("attrs"))
-
-    rows.as[(Int, Long, Long, Int, Long, Int, Int, Map[String, String])]
-      .groupByKey { case (z, x, y, _, _, _, _, _) => (z, x, y) }
-      .mapGroups { (key: (Int, Long, Long),
-                    it: Iterator[(Int, Long, Long, Int, Long, Int, Int, Map[String, String])]) =>
-        val (z, x, y) = key
-        // pinned order: density_rank already encodes (importance desc,
-        // tie id) — renderers that draw/drop in feature order see the
-        // most important features first (tippecanoe discipline)
-        val feats = it.toSeq.sortBy(t => (t._4, t._5)).map {
-          case (_, _, _, _, fid, px, py, attrs) =>
-            Mvt.Feature(fid, Mvt.PointGeom, Seq(Seq((px, py))),
-              attrs.toSeq.filter(_._2 != null).sortBy(_._1))
-        }
-        val (kept, bytes) = fitToByteBudget(layerName, feats, byteBudget)
-        (z, x, y, kept, bytes)
-      }
-      .toDF("z", "x", "y", "n_features", "tile_bytes")
+    Tiling.dropDensest(withPx, col(importanceCol.getOrElse(idCol)), col(idCol),
+        budget)
+      .withColumn("fid", col(idCol).cast("long"))
+      .withColumn("rings_flat", array(col("px"), col("py")))
+      .withColumn("ring_sizes", array(lit(1)))
   }
 
   /** The tiles a point lands in: one row per (z, x, y), z in
@@ -264,8 +264,9 @@ object TileBuild {
     *
     * The reference builds its base choropleth tileset exactly once and
     * then `tile-join`s each decade's CSV onto it (`:208-211` per
-    * decade); persisting this stage's output and re-running only
-    * [[encodePolygonTiles]] per decade reproduces that shape — the
+    * decade); checking this stage's output out once and joining each
+    * decade's attributes onto it before the one encode shuffle
+    * ([[graft.Pipeline.regionTiles]]) reproduces that shape — the
     * geometry pipeline (the expensive half) never re-runs.
     *
     * @param polys         DataFrame with id and a parsed polygons column
@@ -315,12 +316,11 @@ object TileBuild {
       .filter(size(col("rings_flat")) > 0)
   }
 
-  /** Stage 2 — MVT encode: one groupBy(z,x,y) shuffle, per-group
-    * byte-budget fold ([[ByteBudget]]); tiles left with zero features
-    * are dropped. The input is [[polygonTileFeatures]]' output plus an
-    * `attrs` map column — the pipeline attaches it with the per-decade
-    * `tile-join --if-matched` join on fid (`build.sh:208`,
-    * [[graft.Pipeline.choroDecadeEncode]]).
+  /** Stage 2 — MVT encode: one polygon layer through [[encodeTiles]];
+    * tiles left with zero features are dropped. The input is
+    * [[polygonTileFeatures]]' output plus an `attrs` map column — the
+    * pipeline attaches it with the per-decade `tile-join --if-matched`
+    * join on fid (`build.sh:208`, [[graft.Pipeline.choroDecadeEncode]]).
     *
     * @param coalesce over-budget strategy: true =
     *                 `--coalesce-smallest-as-needed` (merge attr-identical
@@ -330,36 +330,81 @@ object TileBuild {
     * @return DataFrame (z, x, y, n_features, tile_bytes)
     */
   def encodePolygonTiles(tileFeatures: DataFrame, layerName: String,
-                         coalesce: Boolean = false): DataFrame = {
-    val spark = tileFeatures.sparkSession
+                         coalesce: Boolean = false): DataFrame =
+    encodeTiles(tileFeatures.withColumn("decade", lit(""))
+        .withColumn("layer", lit(0)),
+      Seq(Layer(_ => layerName, polygons = true, coalesce = coalesce)))
+      .drop("decade")
+
+  /** One MVT layer of [[encodeTiles]]: rows tagged `layer = i` encode as
+    * `layers(i)`, named `name(decade)`. A polygon layer that kept no
+    * feature is left out of its tile; a point layer always encodes.
+    */
+  private[graft] final case class Layer(name: String => String,
+                                        polygons: Boolean,
+                                        coalesce: Boolean = false)
+
+  /** One (tile, feature) row of [[encodeTiles]]. */
+  private type TileRow = (String, Int, Long, Long, Int, Int, Long, Array[Int],
+    Array[Int], Map[String, String])
+
+  /** THE encode kernel of every tile build: ONE `groupBy(decade, z, x,
+    * y)` shuffle brings a tile's rows of every layer together, and one
+    * `mapGroups` fold encodes each layer in `layers` order — features in
+    * (density_rank, fid) order, over budget through
+    * [[coalesceToByteBudget]] or [[fitToByteBudget]] — and concatenates
+    * the layers at the protobuf level (the J3 `tile-join` merge,
+    * `build.sh:214`). A tile none of whose layers encodes is dropped.
+    *
+    * @param rows (decade, z, x, y, layer, density_rank, fid, rings_flat,
+    *             ring_sizes, attrs), geometry in [[polygonTileFeatures]]'
+    *             flat wire format (a point is a one-point ring); a
+    *             single-layer build passes an empty `decade`
+    * @return (decade, z, x, y, n_features, tile_bytes)
+    */
+  private[graft] def encodeTiles(rows: DataFrame, layers: Seq[Layer],
+                                 byteBudget: Int = ByteBudget): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    tileFeatures
-      .select(col("z"), col("x"), col("y"), col("density_rank"), col("fid"),
-        col("rings_flat"), col("ring_sizes"), col("attrs"))
-      .as[(Int, Long, Long, Int, Long, Array[Int], Array[Int], Map[String, String])]
-      .groupByKey { case (z, x, y, _, _, _, _, _) => (z, x, y) }
-      .mapGroups { (key: (Int, Long, Long),
-                    it: Iterator[(Int, Long, Long, Int, Long, Array[Int], Array[Int], Map[String, String])]) =>
-        val (z, x, y) = key
-        val feats = it.toSeq.sortBy(t => (t._4, t._5)).map {
-          case (_, _, _, _, fid, flat, ringSizes, attrs) =>
-            var ci = 0
-            val rings = ringSizes.toIndexedSeq.map { n =>
-              val ring = new Array[(Int, Int)](n)
-              var j = 0
-              while (j < n) { ring(j) = (flat(ci), flat(ci + 1)); ci += 2; j += 1 }
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(ring): Seq[(Int, Int)]
+    rows.select("decade", "z", "x", "y", "layer", "density_rank", "fid",
+        "rings_flat", "ring_sizes", "attrs")
+      .as[TileRow]
+      .groupByKey(t => (t._1, t._2, t._3, t._4))
+      .mapGroups { (key: (String, Int, Long, Long), it: Iterator[TileRow]) =>
+        val byLayer = it.toSeq.groupBy(_._5)
+        var kept = 0
+        val parts = layers.indices.flatMap { i =>
+          byLayer.get(i).flatMap { rs =>
+            val layer = layers(i)
+            val geomType = if (layer.polygons) Mvt.PolygonGeom else Mvt.PointGeom
+            // pinned order: density_rank already encodes (importance desc,
+            // tie id) — renderers that draw/drop in feature order see the
+            // most important features first (tippecanoe discipline)
+            val feats = rs.sortBy(t => (t._6, t._7)).map { t =>
+              val (flat, ringSizes) = (t._8, t._9)
+              var ci = 0
+              val rings = ringSizes.toIndexedSeq.map { n =>
+                val ring = new Array[(Int, Int)](n)
+                var j = 0
+                while (j < n) { ring(j) = (flat(ci), flat(ci + 1)); ci += 2; j += 1 }
+                scala.collection.immutable.ArraySeq.unsafeWrapArray(ring): Seq[(Int, Int)]
+              }
+              Mvt.Feature(t._7, geomType, rings,
+                t._10.toSeq.filter(_._2 != null).sortBy(_._1))
             }
-            Mvt.Feature(fid, Mvt.PolygonGeom, rings,
-              attrs.toSeq.filter(_._2 != null).sortBy(_._1))
+            val name = layer.name(key._1)
+            val (n, bytes) =
+              if (layer.coalesce) coalesceToByteBudget(name, feats, byteBudget)
+              else fitToByteBudget(name, feats, byteBudget)
+            kept += n
+            if (n > 0 || !layer.polygons) Some(bytes) else None
+          }
         }
-        val (kept, bytes) =
-          if (coalesce) coalesceToByteBudget(layerName, feats, ByteBudget)
-          else fitToByteBudget(layerName, feats, ByteBudget)
-        (z, x, y, kept, bytes)
+        (key._1, key._2, key._3, key._4, kept,
+          if (parts.isEmpty) null else Array.concat(parts: _*))
       }
-      .toDF("z", "x", "y", "n_features", "tile_bytes")
-      .filter(col("n_features") > 0)
+      .toDF("decade", "z", "x", "y", "n_features", "tile_bytes")
+      .filter(col("tile_bytes").isNotNull)
   }
 
   /** `--coalesce-smallest-as-needed` (`build.sh:139-160`): when a tile
@@ -436,28 +481,29 @@ object TileBuild {
   }
 
   /** S7: explode tiles to a `z/x/y.pbf` directory tree + metadata.json
-    * (`build.sh:219-228`). Executor-side writes THROUGH THE HADOOP
-    * FILESYSTEM API (r17): `outDir` takes any configured scheme — a
-    * local path, a shared mount, hdfs://, s3a:// — because this is the
-    * tree the reference deploys to an object store
-    * (`deploy-source.sh:38-45`, `build.sh:222-228` aws s3 sync). The
-    * session's Hadoop conf (scheme→impl mappings, credentials set via
-    * `spark.hadoop.*`) ships to executors as plain entries; checksum
-    * sidecars are disabled so the local layout stays byte-identical to
-    * the previous direct-IO writer (IncrementalSpec's tree parity
-    * rides on that). Scheme-pluggability is spec-proven offline
-    * through a foreign `mock://` filesystem (SchemeFsSpec) — s3a is
-    * the same seam with credentials, which the sandbox cannot reach.
-    *
-    * @param writeMetadata false for the delta's tile update, live tree or
-    *                      staged copy alike ([[graft.Incremental]]): the
-    *                      tree's metadata.json is decade-level and already
-    *                      correct — rewriting it from this call's (empty)
-    *                      map would clobber bounds/zooms/layers
+    * (`build.sh:219-228`) — [[writeTiles]] over (z, x, y, tile_bytes),
+    * then [[writeMetadataJson]].
     */
   def writePbfDirectory(tiles: DataFrame, outDir: String,
-                        metadata: Map[String, String] = Map.empty,
-                        writeMetadata: Boolean = true): Unit = {
+                        metadata: Map[String, String] = Map.empty): Unit = {
+    writeTiles(tiles, outDir, Seq("z", "x", "y"))
+    writeMetadataJson(tiles.sparkSession, outDir, metadata)
+  }
+
+  /** The one tile writer: each row's `tile_bytes` lands at
+    * `outDir/l1/…/ln.pbf`, its values of the `levels` columns — (z, x, y)
+    * for one tileset, (decade, z, x, y) for a region's whole tree
+    * ([[graft.Pipeline.regionTiles]]) — in one `foreachPartition` pass.
+    * Executors write THROUGH THE HADOOP FILESYSTEM API, so `outDir`
+    * takes any configured scheme (a local path, hdfs://, s3a:// — the
+    * reference deploys the tree to an object store,
+    * `deploy-source.sh:38-45`); the session's Hadoop conf ships to
+    * executors as plain entries, and checksum sidecars are off so the
+    * local layout holds only the tiles. SchemeFsSpec proves the seam
+    * through a foreign `mock://` filesystem.
+    */
+  private[graft] def writeTiles(tiles: DataFrame, outDir: String,
+                                levels: Seq[String]): Unit = {
     // Configuration is not serializable: ship the entries BROADCAST
     // (once per executor, not per task — ~100 KB of strings); the
     // per-partition cost is one fsCache lookup after the first
@@ -469,61 +515,53 @@ object TileBuild {
       while (it.hasNext) { val e = it.next(); buf += e.getKey -> e.getValue }
       buf.toSeq
     }
-    def writeFile(fs: org.apache.hadoop.fs.FileSystem,
-                  path: org.apache.hadoop.fs.Path,
-                  bytes: Array[Byte]): Unit = {
-      // create(overwrite = true) makes parents and truncate-overwrites —
-      // the idempotent re-run contract Incremental relies on
-      val out = fs.create(path, true)
-      try out.write(bytes) finally out.close()
-    }
     // the ~100 KB conf broadcast is per-CALL state: destroy it once the
-    // action finishes — SUCCESS OR FAILURE (r18 ADVICE: a destroy after
-    // the action leaked the broadcast on every failed call, the exact
-    // accumulation it exists to prevent in the nightly loop)
+    // action finishes, success or failure
     try {
-      tiles.select("z", "x", "y", "tile_bytes").foreachPartition {
+      val n = levels.size
+      tiles.select((levels :+ "tile_bytes").map(col): _*).foreachPartition {
         (it: Iterator[Row]) =>
           // cached per executor JVM — do NOT close; see [[ExecutorFs]]
           val fs = ExecutorFs.forPath(confEntries.value, outDir)
           it.foreach { r =>
-            writeFile(fs, new org.apache.hadoop.fs.Path(
-              s"$outDir/${r.getAs[Any]("z")}/${r.getAs[Any]("x")}/" +
-                s"${r.getAs[Any]("y")}.pbf"),
-              r.getAs[Array[Byte]]("tile_bytes"))
+            writeFile(fs, new Path(
+              (0 until n).map(r.get).mkString(s"$outDir/", "/", ".pbf")),
+              r.getAs[Array[Byte]](n))
           }
       }
     } finally confEntries.destroy()
-    if (writeMetadata) {
-      val meta = (metadata + ("format" -> "pbf"))
-        .map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
-      val conf = tiles.sparkSession.sessionState.newHadoopConf()
-      val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-        new org.apache.hadoop.fs.Path(outDir).toUri, conf)
-      try {
-        fs.setWriteChecksum(false)
-        writeFile(fs,
-          new org.apache.hadoop.fs.Path(s"$outDir/metadata.json"),
-          meta.getBytes("UTF-8"))
-      } finally fs.close()
-    }
+  }
+
+  /** A tileset's `metadata.json` (tile-join's flat string map, plus
+    * `"format": "pbf"`), written once, not per task.
+    */
+  private[graft] def writeMetadataJson(spark: SparkSession, outDir: String,
+                                       metadata: Map[String, String]): Unit = {
+    val meta = (metadata + ("format" -> "pbf"))
+      .map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
+    val fs = FileSystem.newInstance(new Path(outDir).toUri,
+      spark.sessionState.newHadoopConf())
+    try {
+      fs.setWriteChecksum(false)
+      writeFile(fs, new Path(s"$outDir/metadata.json"), meta.getBytes("UTF-8"))
+    } finally fs.close()
+  }
+
+  private def writeFile(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
+    // create(overwrite = true) makes parents and truncate-overwrites —
+    // the idempotent re-run contract Incremental relies on
+    val out = fs.create(path, true)
+    try out.write(bytes) finally out.close()
   }
 }
 
 /** Executor-JVM-wide cache of PRIVATE checksum-disabled FileSystem
-  * instances, keyed by (scheme, authority, conf fingerprint). This
-  * restores the amortization the shared Hadoop FileSystem CACHE used to
-  * give — one client per scheme per JVM; an object-store client build
-  * (connection pools, signer setup) costs tens of ms, and per-PARTITION
-  * construction multiplies that by the tile partition count — without
-  * the r17 hazard of mutating the SHARED cached instance's checksum
-  * flag. Instances live for the executor's life, one per distinct key
-  * (the same lifecycle Hadoop's own cache gives); a conf change mints a
-  * new key, so a stale instance can never serve fresh credentials — the
-  * superseded one idles, bounded by the number of distinct confs the
-  * JVM ever sees. A standalone top-level object so closures calling
-  * [[forPath]] reference `ExecutorFs$.MODULE$` statically instead of
-  * capturing the (non-serializable) enclosing sink object.
+  * instances, keyed by (scheme, authority, conf fingerprint): one client
+  * per scheme per JVM (an object-store client build costs tens of ms per
+  * partition otherwise), without mutating the checksum flag of Hadoop's
+  * SHARED cached instance. Instances live for the executor's life; a
+  * conf change mints a new key, so a stale instance never serves fresh
+  * credentials.
   */
 private[sinks] object ExecutorFs {
   private val cache = new java.util.concurrent.ConcurrentHashMap[

@@ -111,7 +111,6 @@ class BenchProtocolSpec extends AnyFunSuite {
     BenchFormat.perQueryLines(prov).foreach(emit)
     emit(BenchFormat.totalLine(prov.map(_._2).sum, "sf0.1"))
     emit(BenchProtocol.spacerLine())
-    emit(BenchFormat.canaryLine(Canary.names.map(_ -> 0.15), "sf0.1"))
     BenchFormat.perQueryLines(fin).foreach(emit)
     emit(BenchFormat.totalLine(fin.map(_._2).sum, "sf0.1"))
     val tail = out.toString.takeRight(2048)

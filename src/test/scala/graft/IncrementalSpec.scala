@@ -482,6 +482,32 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
       stats.toString)
   }
 
+  test("job count: a warm in-place delta rebuilds both decades in one sink pass") {
+    val oldCsv = writeLong((0 until NCells - 1), bumped = Set.empty)
+    val newCsv = writeLong((0 until NCells).filterNot(_ == 7), bumped = Set(5))
+    def tree(): String = {
+      val live = Files.createTempDirectory("incr-jobs").toString
+      Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "block-groups",
+        features = Some(features), outDir = Some(live))
+      live
+    }
+    def delta(live: String): Unit = Incremental.incrementalRegion(spark, oldCsv,
+      newCsv, "raw", metricLongNames, "block-groups", features, prevDir = live,
+      outDir = live)
+    delta(tree()) // warm
+    val live = tree()
+    val executions = captureJobs(delta(live))
+    val writes = executions.filter(_._1.startsWith("foreachPartition at TileBuild.scala"))
+    assert(writes.size == 1, s"one sink execution for both decades: $executions")
+    val jobs = executions.map(_._2).sum
+    assert(jobs == DeltaJobs, s"$jobs jobs per warm in-place delta: $executions")
+  }
+
+  /** Jobs of a warm in-place delta on the 1% mutation fixture (the
+    * per-decade tile plans and their two sink passes took 58).
+    */
+  private val DeltaJobs = 43
+
   test("runRegion and an in-place delta release their checkpoints") {
     // checkouts held past the call would pin the snapshot and the
     // features in memory or on disk between regions of a long session

@@ -335,6 +335,27 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(new java.io.File(s"$out/tiles/counties/00/metadata.json").exists)
   }
 
+  test("job count: a warm runRegion plans both decades as one tile plan and one sink pass") {
+    val features = Pipeline.geometryFeatures(
+      graft.sources.Sources.readGeoJson(spark, fixtureGeoJson)).persist()
+    features.count()
+    def run(): Unit = Pipeline.runRegion(spark, fixtureCsv, "raw", metricLongNames,
+      "counties", features = Some(features),
+      outDir = Some(Files.createTempDirectory("jobs").toString))
+    run() // warm
+    val executions = captureJobs(run())
+    features.unpersist()
+    val writes = executions.filter(_._1.startsWith("foreachPartition at TileBuild.scala"))
+    assert(writes.size == 1, s"one sink execution for both decades: $executions")
+    val jobs = executions.map(_._2).sum
+    assert(jobs == RunRegionJobs, s"$jobs jobs per warm runRegion: $executions")
+  }
+
+  /** Jobs of a warm tiles-only runRegion on the polygon fixture (the
+    * per-decade tile plans and their two sink passes took 28).
+    */
+  private val RunRegionJobs = 16
+
   test("decadeTiles choropleth without polygon geometry fails fast") {
     val wide = Pipeline.runRegion(spark, fixtureCsv, "raw",
       metricLongNames, "counties")

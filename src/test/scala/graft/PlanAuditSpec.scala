@@ -1036,6 +1036,9 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(c.get("spark.sql.optimizer.windowGroupLimitThreshold") == "100000")
     assert(c.get("spark.sql.extensions") == "graft.functions.GraftExtensions")
     assert(c.get("spark.sql.codegen.cache.maxEntries") == "5000")
+    for (k <- Seq("spark.ui.retainedJobs", "spark.ui.retainedStages",
+        "spark.sql.ui.retainedExecutions"))
+      assert(c.get(k) == Session.StatusRetention.toString, k)
     // every main goes through graft.Session except Smoke, which builds a
     // bare session on purpose (the entry smoke runs with no confs)
     import scala.jdk.CollectionConverters._

@@ -2,9 +2,11 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Executed plans of a composed run, for scan-count and plan-shape
@@ -25,16 +27,51 @@ trait PlanCapture { self: SharedSpark =>
     spark.listenerManager.register(listener)
     try {
       body
-      // the execution listener bus is async — poll until the capture
-      // count is stable for a second
-      var last = -1; var stable = 0
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (stable < 4 && System.nanoTime < deadline) {
-        if (plans.size == last) stable += 1 else { stable = 0; last = plans.size }
-        Thread.sleep(250)
-      }
+      awaitStable(plans.size)
     } finally spark.listenerManager.unregister(listener)
     plans.asScala.toSeq
+  }
+
+  /** The listener buses are async — poll until `count` is stable for a
+    * second.
+    */
+  def awaitStable(count: => Int): Unit = {
+    var last = -1; var stable = 0
+    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+    while (stable < 4 && System.nanoTime < deadline) {
+      if (count == last) stable += 1 else { stable = 0; last = count }
+      Thread.sleep(250)
+    }
+  }
+
+  /** Jobs of every action `body` triggers, counted by an `onJobStart`
+    * listener and grouped by `spark.sql.execution.id`: one (description,
+    * jobs) pair per SQL execution, in execution order, labelled by its
+    * `SparkListenerSQLExecutionStart` description (the call site, e.g.
+    * `foreachPartition at TileBuild.scala:…`); jobs outside any
+    * execution count under "".
+    */
+  def captureJobs(body: => Unit): Seq[(String, Int)] = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val described = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.sql.execution.id"))).fold(-1L)(_.toLong))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          described.put(s.executionId, s.description)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      awaitStable(jobs.size)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.asScala.toSeq.groupBy(identity).toSeq.sortBy(_._1).map { case (id, js) =>
+      (if (id < 0) "" else described.getOrDefault(id, s"execution $id"), js.size)
+    }
   }
 
   /** Structural traversal: descend through AQE wrappers, STOP at
