@@ -216,6 +216,12 @@ object Incremental {
     * pipeline when the changed-GEOID fraction exceeds
     * `maxChangedFraction` — q135's fraction readout is the signal that
     * the incremental machinery costs more than it saves.
+    *
+    * The diff chain (new snapshot → fingerprints → diff and its counts)
+    * runs beside the features → fan checkouts
+    * ([[Pipeline.concurrently]]); everything after them is one chain:
+    * the affected tiles and contributors, the deletes, the one write,
+    * the fingerprint publish.
     */
   def incrementalRegion(spark: SparkSession, oldCsvPath: String,
                         newCsvPath: String, inputType: String,
@@ -241,24 +247,35 @@ object Incremental {
     // private instance in a long-lived session; every checkout of the
     // call is released when it returns (Pipeline.withCheckouts)
     try Pipeline.withCheckouts { checkout =>
-      // the new snapshot is read ONCE: this checkout feeds both the
-      // fingerprints and the contributor pivot
-      val newLong = checkout(Sources.readCsv(spark, newCsvPath, schema))
-      val fpPath = new Path(s"$prevDir/$region/fingerprints.parquet")
-      val oldFps = if (prevFs.exists(fpPath)) spark.read.parquet(fpPath.toString)
-        else fingerprints(oldLong)
-      // one materialized copy serves the diff, the GEOID count and the
-      // publish of the next delta's artifact
-      val newFps = checkout(fingerprints(newLong))
-      // a checkout, never a lazy diff: an in-place publish swaps out the
-      // stored artifact oldFps reads, and a lineage replay would re-read
-      // a deleted file
-      val diff = checkout(diffFingerprints(oldFps, newFps))
-      val byStatus = diff.groupBy("status").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // the diff chain beside the feature fan (Pipeline.concurrently): the
+      // fan reads no snapshot; a mass change that routes to the full
+      // rebuild below leaves only the fan unread
+      val ((newLong, newFps, diff, byStatus, nTotal), (feats, fan)) =
+        Pipeline.concurrently({
+          // the new snapshot is read ONCE: this checkout feeds both the
+          // fingerprints and the contributor pivot
+          val newLong = checkout(Sources.readCsv(spark, newCsvPath, schema))
+          val fpPath = new Path(s"$prevDir/$region/fingerprints.parquet")
+          val oldFps = if (prevFs.exists(fpPath)) spark.read.parquet(fpPath.toString)
+            else fingerprints(oldLong)
+          // one materialized copy serves the diff, the GEOID count and the
+          // publish of the next delta's artifact
+          val newFps = checkout(fingerprints(newLong))
+          // a checkout, never a lazy diff: an in-place publish swaps out the
+          // stored artifact oldFps reads, and a lineage replay would re-read
+          // a deleted file
+          val diff = checkout(diffFingerprints(oldFps, newFps))
+          val byStatus = diff.groupBy("status").count().collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+          (newLong, newFps, diff, byStatus, newFps.count())
+        }, {
+          // one checkout of the features serves the fan, the edge-neighbour
+          // segments and the tile build
+          val feats = checkout(features)
+          (feats, checkout(featureTileFan(feats, region)))
+        })
       val (nChanged, nAdded, nRemoved) = (byStatus.getOrElse("changed", 0L),
         byStatus.getOrElse("added", 0L), byStatus.getOrElse("removed", 0L))
-      val nTotal = newFps.count()
       // a previous run that EXTENDED past the configured fan maxZoom wrote
       // deeper tiles than [[featureTileFan]] covers, which would be neither
       // rebuilt nor deleted: route such a tree to the full rebuild
@@ -280,15 +297,11 @@ object Incremental {
         // leave STALE tiles for (z,x,y)s the new data no longer produces)
         staged(outFs, outDir, region) { tree =>
           Pipeline.runRegion(spark, newCsvPath, inputType, metricLongNames,
-            region, features = Some(features), outDir = Some(tree.getParent.toString))
+            region, features = Some(feats), outDir = Some(tree.getParent.toString))
           publishFingerprints(outFs, newFps, tree)
         }
         Stats(nChanged, nAdded, nRemoved, -1L, -1L, fullRebuild = true)
       } else {
-        // one checkout of the features serves the fan, the edge-neighbour
-        // segments and the tile build
-        val feats = checkout(features)
-        val fan = checkout(featureTileFan(feats, region))
         // the bookkeeping sets live on the driver, SIZED BY CONTRACT, not
         // by the tileset: delta GEOIDs × tile fan-out, and their renderers
         // and edge-neighbours, under maxChangedFraction

@@ -21,6 +21,15 @@ import graft.sources.Sources
   * `groupBy(decade, z, x, y)` ([[regionTiles]]) and are written by one
   * sink pass. Regions are embarrassingly parallel (`build.sh:69`) — on a
   * cluster, submit them as parallel jobs over one shared SparkSession.
+  *
+  * Within a region, plans that read none of each other's output run side
+  * by side ([[concurrently]]): a region run is dozens of small jobs, most
+  * of them one task, so a serial chain leaves the cores idle through
+  * every job's planning, code generation and JIT warm-up.
+  * [[runRegion]] overlaps the pivot with the features, then the wide
+  * CSV, the extents CSV and the tile tree;
+  * [[Incremental.incrementalRegion]] overlaps its feature fan with its
+  * diff chain.
   */
 object Pipeline {
 
@@ -80,11 +89,62 @@ object Pipeline {
     */
   private[graft] def withCheckouts[A](body: (DataFrame => DataFrame) => A): A = {
     val held = scala.collection.mutable.Buffer.empty[DataFrame]
+    // `checkout` may be called from [[concurrently]]'s branches
     try body { df =>
       val c = df.localCheckpoint(eager = true)
-      held += c
+      held.synchronized(held += c)
       c
-    } finally held.foreach(releaseCheckpoint)
+    } finally held.synchronized(held.foreach(releaseCheckpoint))
+  }
+
+  /** Runs independent branches side by side and returns their results in
+    * argument order. Each branch gets a thread of its own, created by
+    * this call from the calling thread, so it inherits what the caller
+    * set there: Spark's local properties (the job group a watchdog
+    * cancels and a trace span groups by, the job description) and the
+    * active session. The call returns only once every branch has ended,
+    * on every exit path — an interrupt of the caller does not cut the
+    * wait short (it is restored afterwards) — so no branch outlives the
+    * checkouts of an enclosing [[withCheckouts]]. When branches fail,
+    * the first failure is rethrown with the others suppressed on it; a
+    * failure does not stop its siblings.
+    *
+    * The branch count is fixed by the caller (two or three); there is no
+    * pool, so nested calls stay bounded by their own arity.
+    */
+  private[graft] def concurrently[A, B](a: => A, b: => B): (A, B) = {
+    val r = branches(Seq(() => a, () => b))
+    (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
+  }
+
+  /** [[concurrently]] over three branches. */
+  private[graft] def concurrently[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
+    val r = branches(Seq(() => a, () => b, () => c))
+    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
+  }
+
+  private def branches(bodies: Seq[() => Any]): Seq[Any] = {
+    val results = new Array[Any](bodies.size)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = bodies.zipWithIndex.map { case (body, i) =>
+      new Thread(() =>
+        try results(i) = body() catch { case e: Throwable => failures.add(e) },
+        s"graft-branch-$i")
+    }
+    try threads.foreach(_.start())
+    finally {
+      // a thread that never started is not alive and is not waited for
+      var interrupted = false
+      for (t <- threads) while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread.interrupt()
+    }
+    failures.poll() match {
+      case null => results.toSeq
+      case first =>
+        failures.forEach(e => first.addSuppressed(e))
+        throw first
+    }
   }
 
   /** Stage d — feature derivation from source geometry
@@ -204,32 +264,36 @@ object Pipeline {
         baseZoom = Some(bz.baseZoom))
       .withColumn("layer", lit(0)).select(geom: _*))
     val choro = polyFeats.map(_.withColumn("layer", lit(1)).select(geom: _*))
-    // per decade, each layer's `csvcut` columns (`build.sh:163-207`) as one
-    // MVT attribute map, GEOID left out (it is the feature id)
-    val layerVars = Seq(EtlConfig.bubbleVars(inputType),
-      EtlConfig.choroplethVars(inputType))
+    // per decade, each ENCODED layer's `csvcut` columns (`build.sh:163-207`)
+    // as one MVT attribute map `attrs<layer>`, GEOID left out (it is the
+    // feature id)
+    val layerVars = Seq(points.map(_ => EtlConfig.bubbleVars(inputType) -> 0),
+      polyFeats.map(_ => EtlConfig.choroplethVars(inputType) -> 1)).flatten
     def fields(vars: Seq[String], decade: String): Seq[String] =
       EtlConfig.decadeFields(vars, decade).filter(wide.columns.contains)
     val attrsRaw = decades.map(d => wide.select(
         Seq(col("GEOID").cast("long").as("fid"), lit(d).as("decade")) ++
-          layerVars.zipWithIndex.map { case (vars, i) =>
+          layerVars.map { case (vars, i) =>
             map(fields(vars, d).filterNot(_ == "GEOID")
               .flatMap(c => Seq(lit(c), col(c).cast("string"))): _*).as(s"attrs$i")
           }: _*))
       .reduce(_ unionByName _)
+    val attrsOfLayer = layerVars.map(_._2) match {
+      case Seq(i) => col(s"attrs$i")
+      case _ => when(col("layer") === 0, col("attrs0")).otherwise(col("attrs1"))
+    }
     // size-gate on the SLICE: MapType's default per-row estimate hides a
     // 217k×110-attr map's ~500 MB, so Catalyst would auto-broadcast it
     // and run out of heap. Big slices pin the shuffle-hash join, which AQE
     // upgrades back to broadcast only from REAL runtime sizes.
-    val slice = wide.select((for (d <- decades; v <- layerVars; f <- fields(v, d))
+    val slice = wide.select((for (d <- decades; (v, _) <- layerVars; f <- fields(v, d))
       yield f).distinct.map(col): _*)
     val attrs = if (slice.queryExecution.optimizedPlan.stats.sizeInBytes <= (64L << 20))
       broadcast(attrsRaw) else attrsRaw.hint("shuffle_hash")
     val rows = (bubble ++ choro).reduce(_ unionByName _)
     TileBuild.encodeTiles(tiles.fold(rows)(rows.join(_, Seq("z", "x", "y"), "left_semi"))
         .join(attrs, Seq("fid"))
-        .withColumn("attrs", when(col("layer") === 0, col("attrs0"))
-          .otherwise(col("attrs1"))),
+        .withColumn("attrs", attrsOfLayer),
         Seq(TileBuild.Layer(d => s"$region-$d-bubble", polygons = false),
           TileBuild.Layer(d => s"$region-$d-choropleth", polygons = true,
             coalesce = EtlConfig.choroplethBuild(region).coalesce)))
@@ -248,6 +312,13 @@ object Pipeline {
     * region run (PipelineSpec pins this over the composed run), as the
     * reference's `data.wide.csv` between processes does
     * (`build.sh:80-81`). The returned wide frame is the lazy pivot.
+    *
+    * The run is two phases of independent plans ([[concurrently]]):
+    * first the pivot checkout beside the features checkout with its
+    * bounds aggregate and extend-zooms probes ([[prepareTree]]), then the
+    * wide CSV beside the extents CSV beside the tile tree and its
+    * metadata.json files. Every plan is the one a serial run makes; only
+    * their order in time changes.
     *
     * @param extendBudget densest-tile feature budget driving the
     *                     `--extend-zooms-if-still-dropping` decision for
@@ -275,70 +346,82 @@ object Pipeline {
     val pivot = shape(long, inputType)
     val tiles = features.isDefined && outDir.isDefined
     withCheckouts { checkout =>
-      val wide = if (tiles || (wideOut.isDefined && extentsOut.isDefined))
-        checkout(pivot) else pivot
-      wideOut.foreach(p => Sources.writeCsv(wide, p))
-      extentsOut.foreach(p => Sources.writeCsv(extents(wide), p, singleFile = true))
-      for (supplied <- features; out <- outDir) {
-        // one checkout of the features serves the extend-zooms probes, the
-        // polygon geometry, the bounds and the bubble layer
-        val f = checkout(supplied)
-        val hasPolys = f.columns.contains("polys")
-        val zoom = EtlConfig.choroplethZoom(region)
-        val bz = EtlConfig.bubbleZoom(region)
-        // `--extend-zooms-if-still-dropping` (`build.sh:124-126,148-152`):
-        // decided ONCE per region from the decade-independent interior
-        // points (one per polygon — the features that overflow a tile's
-        // feature budget), one aggregate per distinct base maxZoom — the
-        // cities layers share theirs
-        val extended = scala.collection.mutable.Map.empty[Int, Int]
-        def extendFrom(maxZ: Int): Int = extended.getOrElseUpdate(maxZ,
-          Tiling.extendMaxZoom(f, "lon", "lat", maxZ, maxZ + 2, budget = extendBudget))
-        // the choropleth extends only under drop-densest (cities):
-        // coalesce regions merge instead of dropping, so extension is a
-        // no-op there and is skipped
-        val choroMaxZ = if (zoom.extend && !EtlConfig.choroplethBuild(region).coalesce)
-          extendFrom(zoom.maxZoom) else zoom.maxZoom
-        val bubbleMaxZ = if (bz.extend) Some(extendFrom(bz.maxZoom)) else None
-        // base choropleth GEOMETRY is decade-independent: the one tile plan
-        // reads it once, the reference's base tileset split per decade by
-        // `tile-join` (`build.sh:139-160` once, `:208-211` per decade)
-        val polyFeats =
-          if (hasPolys) Some(choroTileFeatures(f, region, choroMaxZ)) else None
-        // tileset bounds/center (decade-independent, one small aggregate):
-        // tile-join's metadata.json carries them (`build.sh:220,226`) —
-        // polygon regions use the true geometry bbox, point regions the
-        // bubble centers
-        val bounds: Option[(Double, Double, Double, Double)] = {
-          val r = (if (hasPolys)
-            Geometry.withBbox(f.select("polys"), "polys").select(min("lon_min"),
-              min("lat_min"), max("lon_max"), max("lat_max"))
-          else f.select(min(col("lon")), min(col("lat")),
-            max(col("lon")), max(col("lat")))).head()
-          // zero features ⇒ the min/max aggregate returns one all-null row;
-          // skip the bounds/center metadata keys rather than NPE on getDouble
-          if (r.isNullAt(0)) None
-          else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
-        }
-        // the whole tree, both decades, in one encode shuffle and one
-        // sink pass; then each decade's metadata.json
-        TileBuild.writeTiles(regionTiles(wide, Some(f), polyFeats, inputType,
-          region, bubbleMaxZ), s"$out/$region", TreeLevels)
-        val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
-        for (decade <- EtlConfig.decades.keys.toSeq.sorted)
-          TileBuild.writeMetadataJson(spark, s"$out/$region/$decade",
-            Map("name" -> s"$region-$decade",
-              "type" -> "overlay",
-              "minzoom" -> math.min(bz.minZoom, zoom.minZoom).toString,
-              "maxzoom" -> maxZoomOut.toString,
-              "layers" -> (s"$region-$decade-bubble" +
-                (if (hasPolys) s",$region-$decade-choropleth" else ""))) ++
-              bounds.map { case (x0, y0, x1, y1) =>
-                Map("bounds" -> s"$x0,$y0,$x1,$y1",
-                  "center" -> s"${(x0 + x1) / 2},${(y0 + y1) / 2},$maxZoomOut")
-              }.getOrElse(Map.empty))
-      }
+      val (wide, writeTree) = concurrently(
+        if (tiles || (wideOut.isDefined && extentsOut.isDefined)) checkout(pivot)
+        else pivot,
+        for (supplied <- features; out <- outDir) yield
+          prepareTree(checkout(supplied), inputType, region, out, extendBudget))
+      concurrently(
+        wideOut.foreach(p => Sources.writeCsv(wide, p)),
+        extentsOut.foreach(p => Sources.writeCsv(extents(wide), p, singleFile = true)),
+        writeTree.foreach(_(wide)))
     }
     pivot
+  }
+
+  /** Everything of a region's tile tree that does not read the pivot,
+    * over the checked-out features `f` (one checkout serves the
+    * extend-zooms probes, the polygon geometry, the bounds and the bubble
+    * layer); returns the writer of the tree under `out/region` given the
+    * wide frame.
+    */
+  private def prepareTree(f: DataFrame, inputType: String, region: String,
+                          out: String, extendBudget: Int): DataFrame => Unit = {
+    val hasPolys = f.columns.contains("polys")
+    val zoom = EtlConfig.choroplethZoom(region)
+    val bz = EtlConfig.bubbleZoom(region)
+    // `--extend-zooms-if-still-dropping` (`build.sh:124-126,148-152`):
+    // decided ONCE per region from the decade-independent interior
+    // points (one per polygon — the features that overflow a tile's
+    // feature budget), one aggregate per distinct base maxZoom — the
+    // cities layers share theirs
+    val extended = scala.collection.mutable.Map.empty[Int, Int]
+    def extendFrom(maxZ: Int): Int = extended.getOrElseUpdate(maxZ,
+      Tiling.extendMaxZoom(f, "lon", "lat", maxZ, maxZ + 2, budget = extendBudget))
+    // the choropleth extends only under drop-densest (cities):
+    // coalesce regions merge instead of dropping, so extension is a
+    // no-op there and is skipped
+    val choroMaxZ = if (zoom.extend && !EtlConfig.choroplethBuild(region).coalesce)
+      extendFrom(zoom.maxZoom) else zoom.maxZoom
+    val bubbleMaxZ = if (bz.extend) Some(extendFrom(bz.maxZoom)) else None
+    // base choropleth GEOMETRY is decade-independent: the one tile plan
+    // reads it once, the reference's base tileset split per decade by
+    // `tile-join` (`build.sh:139-160` once, `:208-211` per decade)
+    val polyFeats =
+      if (hasPolys) Some(choroTileFeatures(f, region, choroMaxZ)) else None
+    // tileset bounds/center (decade-independent, one small aggregate):
+    // tile-join's metadata.json carries them (`build.sh:220,226`) —
+    // polygon regions use the true geometry bbox, point regions the
+    // bubble centers
+    val bounds: Option[(Double, Double, Double, Double)] = {
+      val r = (if (hasPolys)
+        Geometry.withBbox(f.select("polys"), "polys").select(min("lon_min"),
+          min("lat_min"), max("lon_max"), max("lat_max"))
+      else f.select(min(col("lon")), min(col("lat")),
+        max(col("lon")), max(col("lat")))).head()
+      // zero features ⇒ the min/max aggregate returns one all-null row;
+      // skip the bounds/center metadata keys rather than NPE on getDouble
+      if (r.isNullAt(0)) None
+      else Some((r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+    }
+    val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
+    // the whole tree, both decades, in one encode shuffle and one sink
+    // pass; then each decade's metadata.json
+    wide => {
+      TileBuild.writeTiles(regionTiles(wide, Some(f), polyFeats, inputType,
+        region, bubbleMaxZ), s"$out/$region", TreeLevels)
+      for (decade <- EtlConfig.decades.keys.toSeq.sorted)
+        TileBuild.writeMetadataJson(f.sparkSession, s"$out/$region/$decade",
+          Map("name" -> s"$region-$decade",
+            "type" -> "overlay",
+            "minzoom" -> math.min(bz.minZoom, zoom.minZoom).toString,
+            "maxzoom" -> maxZoomOut.toString,
+            "layers" -> (s"$region-$decade-bubble" +
+              (if (hasPolys) s",$region-$decade-choropleth" else ""))) ++
+            bounds.map { case (x0, y0, x1, y1) =>
+              Map("bounds" -> s"$x0,$y0,$x1,$y1",
+                "center" -> s"${(x0 + x1) / 2},${(y0 + y1) / 2},$maxZoomOut")
+            }.getOrElse(Map.empty))
+    }
   }
 }

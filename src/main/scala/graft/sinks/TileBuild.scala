@@ -1,6 +1,8 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -547,11 +549,25 @@ object TileBuild {
     } finally fs.close()
   }
 
+  /** Makes `path`'s parents and truncate-overwrites it — the idempotent
+    * re-run contract Incremental relies on. On local disk this goes
+    * through java.nio: without the native Hadoop library, the local
+    * filesystem's `create` forks a `chmod` for the file and for every
+    * directory it makes (~5 ms each); java.nio gives the same bytes and,
+    * under the default umask, the same modes.
+    */
   private def writeFile(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit = {
-    // create(overwrite = true) makes parents and truncate-overwrites —
-    // the idempotent re-run contract Incremental relies on
-    val out = fs.create(path, true)
-    try out.write(bytes) finally out.close()
+    def writeLocal(file: java.io.File): Unit = {
+      Files.createDirectories(file.toPath.getParent)
+      Files.write(file.toPath, bytes)
+    }
+    fs match {
+      case raw: RawLocalFileSystem => writeLocal(raw.pathToFile(path))
+      case checked: LocalFileSystem => writeLocal(checked.pathToFile(path))
+      case _ =>
+        val out = fs.create(path, true)
+        try out.write(bytes) finally out.close()
+    }
   }
 }
 

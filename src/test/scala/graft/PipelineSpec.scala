@@ -371,6 +371,23 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(bubble.count() > 0)
   }
 
+  test("a bubble-only tile plan builds no choropleth attribute map") {
+    val wide = Pipeline.runRegion(spark, fixtureCsv, "raw",
+      metricLongNames, "counties")
+    import spark.implicits._
+    val pts = Seq(("01001", -86.6, 32.5)).toDF("GEOID", "lon", "lat")
+    val plan = Pipeline.decadeTiles(wide, pts, "raw", "00", "bubble", "counties")
+      .queryExecution.analyzed
+    val mapKeys = plan.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case m: org.apache.spark.sql.catalyst.expressions.CreateMap =>
+        m.keys.map(_.eval().toString) })
+    val bubbleFields = graft.config.EtlConfig.decadeFields(
+      graft.config.EtlConfig.bubbleVars("raw"), "00")
+    assert(mapKeys.nonEmpty, "the bubble attribute map is missing")
+    assert(mapKeys.forall(_.forall(bubbleFields.contains)),
+      s"a map holds non-bubble fields: ${mapKeys.map(_.filterNot(bubbleFields.contains))}")
+  }
+
   test("decadeTiles layer by layer, J3-merged, matches runRegion's tree tile for tile") {
     // brick-laid shared-border grid (IncrementalSpec's fixture pattern,
     // rows offset by half a cell): every border carries a T-junction

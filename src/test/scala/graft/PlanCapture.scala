@@ -46,18 +46,21 @@ trait PlanCapture { self: SharedSpark =>
 
   /** Jobs of every action `body` triggers, counted by an `onJobStart`
     * listener and grouped by `spark.sql.execution.id`: one (description,
-    * jobs) pair per SQL execution, in execution order, labelled by its
-    * `SparkListenerSQLExecutionStart` description (the call site, e.g.
-    * `foreachPartition at TileBuild.scala:…`); jobs outside any
+    * jobs, job groups) triple per SQL execution, in execution order,
+    * labelled by its `SparkListenerSQLExecutionStart` description (the
+    * call site, e.g. `foreachPartition at TileBuild.scala:…`), with the
+    * `spark.jobGroup.id` of its jobs ("" for none); jobs outside any
     * execution count under "".
     */
-  def captureJobs(body: => Unit): Seq[(String, Int)] = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+  def captureJobs(body: => Unit): Seq[(String, Int, Set[String])] = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
     val described = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.sql.execution.id"))).fold(-1L)(_.toLong))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.add(prop("spark.sql.execution.id").fold(-1L)(_.toLong) ->
+          prop("spark.jobGroup.id").getOrElse(""))
+      }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
           described.put(s.executionId, s.description)
@@ -69,8 +72,9 @@ trait PlanCapture { self: SharedSpark =>
       body
       awaitStable(jobs.size)
     } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.asScala.toSeq.groupBy(identity).toSeq.sortBy(_._1).map { case (id, js) =>
-      (if (id < 0) "" else described.getOrDefault(id, s"execution $id"), js.size)
+    jobs.asScala.toSeq.groupBy(_._1).toSeq.sortBy(_._1).map { case (id, js) =>
+      (if (id < 0) "" else described.getOrDefault(id, s"execution $id"), js.size,
+        js.map(_._2).toSet)
     }
   }
 

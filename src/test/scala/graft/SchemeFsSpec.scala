@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +14,24 @@ import org.scalatest.funsuite.AnyFunSuite
 class MockSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "mock"
   override def getUri: java.net.URI = java.net.URI.create("mock:///")
+}
+
+/** Local disk under a `permcount://` scheme that counts the
+  * `setPermission` calls made on it: without the native Hadoop library
+  * each one forks a `chmod`.
+  */
+class PermCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "permcount"
+  override def getUri: java.net.URI = java.net.URI.create("permcount:///")
+  override def setPermission(p: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+    PermCountingFs.calls.incrementAndGet()
+    super.setPermission(p, permission)
+  }
+}
+
+object PermCountingFs {
+  val calls = new java.util.concurrent.atomic.AtomicInteger()
 }
 
 /** The s3a seam, proven offline: the deployment sink
@@ -149,6 +169,48 @@ class SchemeFsSpec extends AnyFunSuite with SharedSpark {
       md5tree(s"$localNew/block-groups"),
       "in-place delta through the foreign scheme must equal the full rebuild")
     feats.unpersist()
+  }
+
+  test("the local tile sink sets no permissions: same bytes and modes as the Hadoop create path") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.permcount.impl", classOf[PermCountingFs].getName)
+    val tiles = Seq(
+      (0, 0L, 0L, Array[Byte](1, 2, 3)),
+      (1, 0L, 1L, Array[Byte](4, 5)),
+      (1, 1L, 1L, Array.tabulate[Byte](4096)(_.toByte))
+    ).toDF("z", "x", "y", "tile_bytes")
+    val base = Files.createTempDirectory("permcount").toString
+    // the Hadoop path: FileSystem.create per tile, parents made by it
+    val hadoopFs = org.apache.hadoop.fs.FileSystem.newInstance(
+      java.net.URI.create("permcount:///"), spark.sparkContext.hadoopConfiguration)
+    PermCountingFs.calls.set(0)
+    try {
+      hadoopFs.setWriteChecksum(false)
+      for (r <- tiles.collect()) {
+        val out = hadoopFs.create(new org.apache.hadoop.fs.Path(
+          s"permcount://$base/hadoop/${r.getInt(0)}/${r.getLong(1)}/${r.getLong(2)}.pbf"), true)
+        try out.write(r.getAs[Array[Byte]](3)) finally out.close()
+      }
+    } finally hadoopFs.close()
+    def walk(dir: String): Map[String, (String, Seq[Byte])] = {
+      val root = Paths.get(dir)
+      Files.walk(root).iterator().asScala.map { p =>
+        root.relativize(p).toString ->
+          (java.nio.file.attribute.PosixFilePermissions.toString(
+            Files.getPosixFilePermissions(p)),
+            if (Files.isRegularFile(p)) Files.readAllBytes(p).toSeq else Seq.empty)
+      }.toMap
+    }
+    val hadoop = walk(s"$base/hadoop")
+    // one call per file and per directory (the tree's root included)
+    assert(PermCountingFs.calls.get == hadoop.size,
+      s"${PermCountingFs.calls.get} setPermission calls for ${hadoop.size} entries")
+
+    PermCountingFs.calls.set(0)
+    graft.sinks.TileBuild.writeTiles(tiles, s"permcount://$base/sink", Seq("z", "x", "y"))
+    assert(PermCountingFs.calls.get == 0,
+      s"the sink made ${PermCountingFs.calls.get} setPermission calls")
+    assert(walk(s"$base/sink") == hadoop)
   }
 
   test("local writes are byte-identical to the pre-FS-API layout") {
