@@ -59,7 +59,7 @@ object Pipeline {
     */
   def extents(wide: DataFrame): DataFrame = {
     val metricCols = wide.columns.filterNot(EtlConfig.idColumns.contains).toSeq
-    Extents.extents(wide, metricCols).orderBy("id")
+    Extents.extents(wide, metricCols)
   }
 
   /** Drops the blocks of a `localCheckpoint`ed frame now, rather than

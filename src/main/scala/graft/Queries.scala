@@ -69,11 +69,10 @@ object Queries {
   private val extentCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
   def q03Extents(s: SparkSession, d: String): DataFrame =
-    Extents.extents(lineitem(s, d), extentCols)
+    Extents.extents(lineitem(s, d), extentCols) // rows come ordered by id
       .select(col("id"),
         round(col("vmin"), 6).as("vmin"), round(col("vmax"), 6).as("vmax"),
         round(col("q1"), 6).as("q1"), round(col("q99"), 6).as("q99"))
-      .orderBy("id")
 
   val q03Sql: String = {
     val branches = extentCols
@@ -90,7 +89,7 @@ object Queries {
   // ---------------------------------------------------------------------
   // q94: the APPROXIMATE extents deployment path as a first-class
   // bench entry. q03 is the exact oracle-parity twin (R-7 / d3
-  // semantics via the range-bucketed distinct-value histogram) and a
+  // semantics via the range-partitioned distinct-value histogram) and a
   // suite cost leader purely from that exactness; the documented scale
   // path for choropleth extents is the percentile_approx sketch
   // (constant memory per group, one pass, ~1e-4 relative accuracy —
@@ -220,12 +219,11 @@ object Queries {
   // Grouped extents: per-returnflag choropleth scales (the reference's
   // one-extents-file-per-region, as one grouped shuffle).
   def q44ExtentsByGroup(s: SparkSession, d: String): DataFrame =
-    Extents.extentsBy(lineitem(s, d), "l_returnflag",
+    Extents.extentsBy(lineitem(s, d), "l_returnflag", // ordered by (flag, id)
         Seq("l_quantity", "l_extendedprice"))
       .select(col("l_returnflag"), col("id"),
         round(col("vmin"), 6).as("vmin"), round(col("vmax"), 6).as("vmax"),
         round(col("q1"), 6).as("q1"), round(col("q99"), 6).as("q99"))
-      .orderBy("l_returnflag", "id")
 
   val q44Sql: String =
     """WITH long AS (
@@ -352,7 +350,7 @@ object Queries {
   // feature-discretization operator over the same metric columns as
   // q03: k bins of near-equal row count per metric, ties kept in one
   // bin (the histogram-granularity ntile: bin = (cum_before·k) div n
-  // over the range-bucketed cumulative histogram — all-integer rank
+  // over the range-partitioned exact ranks — all-integer rank
   // arithmetic, no whole-metric sort on one task, oracle-exact by
   // construction since DuckDB computes the identical integer formula
   // over the identical distinct-value cumsum).
@@ -441,7 +439,7 @@ object Queries {
   // produce (a deployment normalizes such a column with the GK-cut
   // fixture instead, the q116 path). Emits the per-distinct-value
   // mapping table a deployment broadcasts back onto rows; ties share
-  // one midrank cdf. Same range-bucketed histogram kernel as the
+  // one midrank cdf. Same exact rank kernel as the
   // exact extents — the oracle recomputes the identical integer
   // cumsum and the one double division.
   private val NormCols = Seq("l_quantity", "l_discount", "l_tax")

@@ -733,7 +733,7 @@ object QueriesStream {
   // output feeds the exact grouped-quantile machinery unchanged):
   // sessionizeBatch (q34, one user-window pass over the corpus) →
   // per-day min/max/median/p90 of session length via Extents.extentsBy
-  // (the q44 range-bucketed R-7 kernel — no percentile buffer, no
+  // (the q44 exact-rank R-7 kernel — no percentile buffer, no
   // single-partition sort, however many sessions a day has). Durations
   // are exact micro differences divided by 1e6 — bit-identical doubles
   // in both engines, so the R-7 interpolation hashes cleanly (the q03
@@ -745,12 +745,11 @@ object QueriesStream {
       .select(date_format(col("session_start"), "yyyy-MM-dd").as("day"),
         ((unix_micros(col("session_end")) - unix_micros(col("session_start")))
           / lit(1000000.0)).as("dur_s"))
-    graft.operators.Extents.extentsBy(sess, "day", Seq("dur_s"),
+    graft.operators.Extents.extentsBy(sess, "day", Seq("dur_s"), // ordered by day
         lo = 0.5, hi = 0.9)
       .select(col("day"),
         round(col("vmin"), 6).as("dmin"), round(col("vmax"), 6).as("dmax"),
         round(col("q1"), 6).as("p50"), round(col("q99"), 6).as("p90"))
-      .orderBy("day")
   }
 
   val q142Sql: String =

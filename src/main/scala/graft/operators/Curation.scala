@@ -128,13 +128,13 @@ object Curation {
     *
     * Scale shape: the textbook `sum() over (order by id)` cumsum puts
     * the WHOLE corpus into one task — the single-partition trap. Here
-    * the prefix sum is range-bucketed exactly like Extents' cumulative
-    * ranks: the corpus-side running sum windows partition BY BUCKET
-    * (`id div bucketWidth`), per-bucket totals aggregate to one tiny
-    * row each, the cumulative pass over those (bucket, sum) rows is
-    * the ONE acceptable single-partition window (corpus_size /
-    * bucketWidth rows — thousands at 100 TB with a ~1e6 width; recurse
-    * the same trick if that ever stops being tiny), and the resulting
+    * the prefix sum is range-bucketed: the corpus-side running sum
+    * windows partition BY BUCKET (`id div bucketWidth`), per-bucket
+    * totals aggregate to one tiny row each, the cumulative pass over
+    * those (bucket, sum) rows is the ONE acceptable single-partition
+    * window (corpus_size / bucketWidth rows — thousands at 100 TB with
+    * a ~1e6 width; recurse the same trick if that ever stops being
+    * tiny), and the resulting
     * offsets broadcast-join back. Plan-audited: the only
     * SinglePartition exchange carries bucket sums, never corpus rows.
     */

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.Pipeline
 
 /** Per-column extents (min / max / 1st / 99th percentile), used by the
   * reference front end to build choropleth scales.
@@ -20,16 +24,17 @@ import org.apache.spark.sql.types.DoubleType
   * Spark-first design notes (100 TB scale):
   *  - the reference materializes the whole file in memory
   *    (`extract-extents.js:14,34`); here the wide table is unpivoted with
-  *    `stack` into (metric, value) pairs and aggregated in ONE shuffle
-  *    keyed by metric — constant memory per partition, spills externally.
-  *  - exact quantiles are computed with a DISTRIBUTED histogram (groupBy
-  *    (metric, value) → cumulative ranks over distinct values in
-  *    equal-width buckets → R-7 interpolation), never Spark's
+  *    `stack` into (metric, value) pairs and collapsed to a count
+  *    histogram with map-side partial counts.
+  *  - exact ranks come from ONE kernel ([[ranks]]), never Spark's
   *    `percentile` aggregate, whose buffer holds a group's entire value
-  *    multiset (OOM at 100 TB). It is one lazy plan that stores
-  *    nothing, so a plan that is built and never run leaves nothing
-  *    behind. See [[rankPlan]]. `approximate = true` switches to a
-  *    histogram-fed GK sketch for when even the distinct-value
+  *    multiset (OOM at 100 TB): the histogram's range shuffle on (group,
+  *    value), checked out, then two Scala folds over the checkout whose
+  *    compiled code does not grow with the metric count. So the exact
+  *    kernels run their count pass when called: extents, extentsBy and
+  *    quantileBins return a driver-side frame and release the checkout,
+  *    and cdfTransform's frame holds it. `approximate = true` switches
+  *    to a histogram-fed GK sketch for when even the distinct-value
   *    histogram is hot (choropleth scales only need ~1% accuracy).
   */
 object Extents {
@@ -49,223 +54,195 @@ object Extents {
   def extents(df: DataFrame, metricCols: Seq[String],
               lo: Double = 0.01, hi: Double = 0.99,
               approximate: Boolean = false): DataFrame =
-    computeExtents(numericLong(df, metricCols), Seq("id"), lo, hi, approximate)
-      .withColumn("id", metricName(metricCols))
-      .orderBy("id")
+    computeExtents(df, Nil, metricCols, lo, hi, approximate)
 
-  /** Grouped extents: per (group, metric) min/max/q1/q99 — the
-    * reference's per-region extents files (`build.sh:69,84-88` — one
-    * extents CSV per region table) generalized to a grouping column in
-    * one shuffle.
-    *
-    * The exact path (the oracle-parity R-7 / d3.quantile estimator, the
-    * default) holds no unbounded buffer: see [[rankPlan]]. It broadcasts
-    * its per-group stats and offset tables (≤ [[RangeBuckets]] rows per
-    * group): right for the reference shape — tens of regions × a handful
-    * of metrics — since the broadcast grows linearly in group
-    * cardinality. `approximate = true` swaps the ranks for a GK sketch
-    * (constant memory, ~1e-4 relative rank accuracy at 10k buckets —
-    * ample for choropleth scales).
+  /** Grouped extents: per (group, metric) min/max/q1/q99, ordered by
+    * (group, metric) — the reference's per-region extents files
+    * (`build.sh:69,84-88`) generalized to a grouping column in one pass.
+    * The exact path's driver holds a few numbers per (group, metric) and
+    * range partition: right for tens of regions × a handful of metrics.
     */
   def extentsBy(df: DataFrame, groupCol: String, metricCols: Seq[String],
                 lo: Double = 0.01, hi: Double = 0.99,
                 approximate: Boolean = false): DataFrame =
-    computeExtents(numericLong(df, metricCols, Seq(groupCol)),
-        Seq(groupCol, "id"), lo, hi, approximate)
-      .withColumn("id", metricName(metricCols))
-      .orderBy(groupCol, "id")
+    computeExtents(df, Seq(groupCol), metricCols, lo, hi, approximate)
 
-  /** Equal-width value buckets per group for the exact cumulative ranks.
-    * Bucket placement never changes the result (a bucket split only
-    * splits the running sum, never reorders it); it only spreads the
-    * in-bucket window over (group, bucket) tasks. Raise with cluster
-    * parallelism.
-    */
-  val RangeBuckets = 32
-
-  /** Shared extents engine over a pre-filtered long table of
-    * (groupCols..., value).
+  /** Shared extents engine: (groupCols..., id, vmin, vmax, q1, q99).
     *
-    * EXACT path — distributed histogram quantile (R-7), not Spark's
-    * `percentile` aggregate: `percentile` holds a group's ENTIRE value
-    * multiset in one in-memory aggregation buffer (the 100 TB OOM). The
-    * cumulative ranks come from [[rankPlan]]; only the ≤4 buckets whose
-    * rank span holds a target rank join into the in-bucket window (the
-    * offset table brackets each bucket's span), so the other distinct
-    * values never sort. The two bracketing values of each target rank
-    * are picked with conditional aggregates and linearly interpolated —
-    * exactly d3.quantile / DuckDB `quantile_cont` R-7:
-    * h = (n-1)p, v = v⌊h⌋ + (h-⌊h⌋)(v⌊h⌋₊₁ - v⌊h⌋). The pick aggregate
-    * groups by (group, n, vmin, vmax), so n, min and max come through
-    * as keys with no join. No unbounded aggregation buffer and no
-    * single-partition exchange anywhere (PlanAuditSpec).
+    * EXACT path — [[ranks]] gives each group's n, min and max; its rank
+    * pass picks only the values at the ≤ 4 target ranks ⌊h⌋+1 and ⌊h⌋+2
+    * (clamped to n), h = (n-1)p, and the driver interpolates them as
+    * d3.quantile / DuckDB `quantile_cont` (R-7) do:
+    * v = v⌊h⌋ + (h-⌊h⌋)(v⌊h⌋₊₁ - v⌊h⌋).
     *
-    * APPROXIMATE path — GK sketch (constant memory, ~1e-4 relative rank
-    * accuracy at 10k buckets) for when even the distinct-value histogram
-    * is too hot; both quantiles share one sketch buffer.
+    * APPROXIMATE path — a GK sketch (ε = 1e-4) fed by the histogram, so
+    * it updates once per DISTINCT value with weight `cnt`
+    * ([[graft.functions.WeightedPercentileApprox]]); both quantiles share
+    * one sketch buffer.
     */
-  private def computeExtents(long: DataFrame, groupCols: Seq[String],
-                             lo: Double, hi: Double,
+  private def computeExtents(df: DataFrame, groupCols: Seq[String],
+                             metricCols: Seq[String], lo: Double, hi: Double,
                              approximate: Boolean): DataFrame = {
-    val gcols = groupCols.map(col)
+    val names = sortedNames(metricCols)
+    val long = numericLong(df, names, groupCols)
+    val keys = groupCols :+ "id"
     if (approximate) {
-      // HISTOGRAM-FED sketch (round 10): the per-row GK update re-pays
-      // its buffer/compress cycle for every duplicate value, while a
-      // `groupBy(value)` histogram map-combines duplicates before the
-      // shuffle — real metric columns (rates, counts, flags) are
-      // heavily duplicated, so the weighted sketch
-      // ([[graft.functions.WeightedPercentileApprox]], weight-w
-      // insertion O(1)) updates once per DISTINCT value. The histogram
-      // hash-agg spills (never OOMs) on near-unique columns; the final
-      // per-group state is still one ε-bounded summary. Accuracy
-      // contract unchanged: GK, ε = 1e-4.
-      val hist = long.groupBy((groupCols :+ "value").map(col): _*)
+      long.groupBy((keys :+ "value").map(col): _*)
         .agg(count(lit(1)).as("cnt"))
-      hist.groupBy(gcols: _*)
+        .groupBy(keys.map(col): _*)
         .agg(min("value").as("vmin"), max("value").as("vmax"),
           graft.functions.WeightedPercentileApprox.wpa(
             col("value"), col("cnt"), Seq(lo, hi), 10000).as("qq"))
-        .select(gcols ++ Seq(col("vmin"), col("vmax"),
-          element_at(col("qq"), 1).as("q1"),
+        .select(groupCols.map(col) ++ Seq(metricName(names).as("id"),
+          col("vmin"), col("vmax"), element_at(col("qq"), 1).as("q1"),
           element_at(col("qq"), 2).as("q99")): _*)
+        .orderBy(keys.map(col): _*)
     } else {
-      val (bucketed, offs) = rankPlan(long, groupCols)
-      // rank targets (1-based): kLo = ⌊h⌋+1 and its successor, clamped
-      def targets(p: Double): Seq[Column] = {
-        val h = (col("n") - 1) * p
-        Seq(floor(h) + 1, least(floor(h) + 2, col("n")))
+      def targets(n: Long, p: Double): Seq[Long] = {
+        val f = math.floor((n - 1) * p).toLong
+        Seq(f + 1, math.min(f + 2, n))
       }
-      val ks = targets(lo) ++ targets(hi)
-      val hit = ks.map(k => col("__off") < k && k <= col("__off") + col("bsum"))
-      val cum = cumFrom(bucketed, offs.where(hit.reduce(_ || _)), groupCols)
-      val Seq(aLo, aHi, bLo, bHi) = ks.map(k =>
-        max(when(col("cum_before") < k && k <= col("cum"), col("value"))))
-      def interp(p: Double, name: String): Column = {
-        val h = (col("n") - 1) * p
-        val frac = h - floor(h)
-        col(s"${name}_lo") + frac * (col(s"${name}_hi") - col(s"${name}_lo"))
+      val rows = Pipeline.withCheckouts { checkout =>
+        val (hist, stats, walk) = ranks(checkout, long, keys)
+        val want = stats.map { case (k, (n, _, _)) =>
+          k -> (targets(n, lo) ++ targets(n, hi)) }.toMap
+        val picked = hist.rdd.mapPartitions(walk).flatMap(r =>
+          want(r.key).filter(t => r.before < t && t <= r.before + r.cnt)
+            .map(t => (r.key, t) -> r.value)).collect().toMap
+        for ((k, (n, vmin, vmax)) <- stats) yield {
+          def q(p: Double): Double = {
+            val h = (n - 1) * p
+            val Seq(a, b) = targets(n, p).map(t => picked((k, t)))
+            a + (h - math.floor(h)) * (b - a)
+          }
+          Row.fromSeq(k.init ++ Seq(names(k.last.asInstanceOf[Int]),
+            vmin, vmax, q(lo), q(hi)))
+        }
       }
-      cum.groupBy((groupCols ++ Seq("n", "vmin", "vmax")).map(col): _*)
-        .agg(aLo.as("a_lo"), aHi.as("a_hi"), bLo.as("b_lo"), bHi.as("b_hi"))
-        .select(gcols ++ Seq(col("vmin"), col("vmax"),
-          interp(lo, "a").as("q1"), interp(hi, "b").as("q99")): _*)
+      df.sparkSession.createDataFrame(rows.asJava, StructType(
+        groupCols.map(long.schema(_)) ++ Seq(StructField("id", StringType)) ++
+          Seq("vmin", "vmax", "q1", "q99").map(StructField(_, DoubleType))))
     }
   }
 
-  /** The exact-rank kernel over a pre-filtered long table of
-    * (groupCols..., value), one lazy plan that stores nothing:
-    *   1. `hist`: groupBy(group, value) count — fully distributed,
-    *      combines duplicates map-side (real metric columns are heavily
-    *      duplicated: rates, counts, flags);
-    *   2. `stats`: per-group min, max and row count `n` over hist. It
-    *      reads every hist column, so over a file scan AQE reuses the
-    *      hist exchange instead of running the unpivot again (over an
-    *      in-memory table scan it does not);
-    *   3. bucket = how many of the equal-width boundaries
-    *      vmin + i·(vmax−vmin)/[[RangeBuckets]], 0 < i < RangeBuckets,
-    *      lie below the value. Ranks stay exact under any monotone
-    *      bucketing; a NaN or ∞ span puts every value in bucket 0;
-    *   4. `offs`: per-(group, bkt, n) subtotal `bsum` and `__off`, the
-    *      running sum of the earlier buckets (≤ RangeBuckets rows per
-    *      group).
-    * Returns `bucketed` — (groupCols..., value, cnt, vmin, vmax, n, bkt)
-    * — and `offs`; [[cumFrom]] joins them into exact cumulative ranks.
-    * No operator ever sorts a whole group's distinct values on one task.
-    * Consumers: [[computeExtents]] (exact R-7 quantiles),
-    * [[quantileBins]] (equal-frequency binning) and [[cdfTransform]].
-    */
-  private def rankPlan(long: DataFrame, groupCols: Seq[String])
-      : (DataFrame, DataFrame) = {
-    val gcols = groupCols.map(col)
-    val hist = long.groupBy((groupCols :+ "value").map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
-    val stats = hist.groupBy(gcols: _*)
-      .agg(min("value").as("vmin"), max("value").as("vmax"),
-        sum("cnt").as("n"))
-    val width = (col("vmax") - col("vmin")) / RangeBuckets
-    val bounds = array((1 until RangeBuckets).map(i => col("vmin") + width * i): _*)
-    // stats is one row per group: broadcast, as the group cardinality is
-    // bounded (a handful of metrics × regions)
-    val bucketed = hist.join(broadcast(stats), groupCols)
-      .withColumn("bkt", size(filter(bounds, b => b < col("value"))))
-    val bktCols = groupCols :+ "bkt"
-    val offs = bucketed.groupBy((bktCols :+ "n").map(col): _*)
-      .agg(sum("cnt").as("bsum"))
-      .withColumn("__off", coalesce(sum("bsum").over(
-        Window.partitionBy(gcols: _*).orderBy("bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    (bucketed, offs)
+  private type Key = Seq[Any] // the group columns' values, metric index last
+  private type Span = (Long, Double, Double) // row count, min, max
+
+  /** A distinct value of `key`: `cnt` of its `n` rows hold it, `before` less. */
+  private final case class Rank(key: Key, value: Double, cnt: Long,
+                                before: Long, n: Long)
+
+  /** Merges the spans of equal keys, keys in first-seen order. */
+  private def foldSpans[K](spans: Iterator[(K, Span)]): Iterator[(K, Span)] = {
+    val acc = scala.collection.mutable.LinkedHashMap.empty[K, Span]
+    for ((k, (n, lo, hi)) <- spans) acc.updateWith(k) {
+      case Some((n0, lo0, hi0)) => Some((n0 + n, math.min(lo0, lo), math.max(hi0, hi)))
+      case None => Some((n, lo, hi))
+    }
+    acc.iterator
   }
 
-  /** In-bucket cumulative ranks over (a possibly bucket-FILTERED view
-    * of) the offset table: `cum` is the exact 1-based cumulative row
-    * count through each distinct value, `cum_before` the count before
-    * it. Joining `bucketed` against fewer `offs` rows prunes whole
-    * buckets out of the window — the rank-targeted short-circuit
-    * [[computeExtents]] uses, while [[quantileBins]] and
-    * [[cdfTransform]] pass the full table because every distinct value
-    * needs its rank.
+  /** The (keys..., value) count histogram of a pre-filtered long table
+    * (map-side partial counts, so only distinct values shuffle),
+    * range-partitioned and sorted on (keys..., value), each row tagged
+    * with its partition `pid`.
     */
-  private def cumFrom(bucketed: DataFrame, offs: DataFrame,
-                      groupCols: Seq[String]): DataFrame = {
-    val bktCols = groupCols :+ "bkt"
-    val wIn = Window.partitionBy(bktCols.map(col): _*).orderBy("value")
-    bucketed.join(broadcast(offs.drop("n")), bktCols)
-      .withColumn("cum", sum("cnt").over(wIn) + col("__off"))
-      .withColumn("cum_before", col("cum") - col("cnt"))
+  private[graft] def rangedHist(long: DataFrame, keys: Seq[String]): DataFrame = {
+    val order = (keys :+ "value").map(col)
+    long.groupBy(order: _*).agg(count(lit(1)).as("cnt"))
+      .repartitionByRange(order: _*).sortWithinPartitions(order: _*)
+      .withColumn("pid", spark_partition_id())
   }
 
-  /** Equal-frequency (quantile) BINNING — the feature-discretization /
-    * balanced-bucketing operator (Spark ML's QuantileDiscretizer shape,
-    * exact instead of sketched): each metric's values split into `k`
-    * bins of near-equal row count. Bin of a distinct value =
-    * `(cum_before · k) div n` — the histogram-granularity ntile, so
-    * TIES STAY IN ONE BIN (a discretizer must map equal values
-    * equally; row-ntile splits them arbitrarily) and bins are balanced
-    * up to tie granularity. All arithmetic is integer (exact at any n,
-    * no double rank), the ranks come from the same range-bucketed
-    * cumulative histogram as the exact extents — no whole-group sort
-    * on one task — and the output is one row per (metric, bin) with
-    * count and value range.
+  /** The exact-rank kernel over the (keys..., value) of a pre-filtered
+    * long table. Checks out its [[rangedHist]] and runs the COUNT pass
+    * now: a fold per partition gives each key's row count, min and max
+    * there. Returns the checkout, each key's (n, vmin, vmax) in the
+    * histogram's key order, and the RANK pass: a fold over one
+    * partition's rows giving each distinct value its exact cumulative
+    * rank — the key's rows in earlier partitions (the driver's offsets)
+    * plus a running sum. The rank pass must read THIS checkout: a
+    * recomputed range shuffle samples new bounds, and the offsets hold
+    * only for the partitions they were counted on. No group ever sorts
+    * on one task; the driver holds a few numbers per (key, partition).
+    */
+  private def ranks(checkout: DataFrame => DataFrame, long: DataFrame, keys: Seq[String])
+      : (DataFrame, Seq[(Key, Span)], Iterator[Row] => Iterator[Rank]) = {
+    val hist = checkout(rangedHist(long, keys))
+    val g = keys.size
+    val spans = hist.rdd.mapPartitions(rows => foldSpans(rows.map(r =>
+      ((r.getInt(g + 2), (0 until g).map(r.get)), (r.getLong(g + 1),
+        r.getDouble(g), r.getDouble(g)))))).collect().sortBy(_._1._1)
+    val stats = foldSpans(spans.iterator.map { case ((_, k), s) => k -> s }).toSeq
+    val seen = scala.collection.mutable.Map.empty[Key, Long].withDefaultValue(0L)
+    val offset = spans.map { case ((pid, k), (n, _, _)) =>
+      val off = seen(k); seen(k) = off + n; (pid, k) -> off }.toMap
+    val total = stats.map { case (k, (n, _, _)) => k -> n }.toMap
+    (hist, stats, rows => {
+      var (key, cum) = (null: Key, 0L)
+      rows.map { r =>
+        val k = (0 until g).map(r.get)
+        if (k != key) { key = k; cum = offset((r.getInt(g + 2), k)) }
+        val cnt = r.getLong(g + 1)
+        cum += cnt
+        Rank(k, r.getDouble(g), cnt, cum - cnt, total(k))
+      }
+    })
+  }
+
+  /** Equal-frequency (quantile) BINNING — Spark ML's QuantileDiscretizer
+    * shape, exact: each metric's values split into `k` bins of near-equal
+    * row count. Bin of a distinct value = `(cum_before · k) div n`, so
+    * TIES STAY IN ONE BIN (a discretizer must map equal values equally)
+    * and bins are balanced up to tie granularity; all rank arithmetic is
+    * integer. Output: a driver-side frame of one row per (metric, bin)
+    * with count and value range, ordered by (metric, bin).
     */
   def quantileBins(df: DataFrame, metricCols: Seq[String], k: Int): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val (bucketed, offs) = rankPlan(numericLong(df, metricCols), Seq("id"))
-    cumFrom(bucketed, offs, Seq("id"))
-      .withColumn("bin",
-        expr(s"least($k - 1, CAST((cum_before * $k) div n AS INT))"))
-      .groupBy(col("id"), col("bin"))
-      .agg(sum("cnt").as("n_rows"),
-        min("value").as("lo"), max("value").as("hi"))
-      .select(metricName(metricCols).as("metric"), col("bin"), col("n_rows"),
-        col("lo"), col("hi"))
-      .orderBy("metric", "bin")
+    val names = sortedNames(metricCols)
+    val rows = Pipeline.withCheckouts { checkout =>
+      val (hist, _, walk) = ranks(checkout, numericLong(df, names), Seq("id"))
+      val bins = hist.rdd.mapPartitions(rows => foldSpans(walk(rows).map(r =>
+        (r.key.head.asInstanceOf[Int], math.min(k - 1L, r.before * k / r.n).toInt) ->
+          (r.cnt, r.value, r.value)))).collect()
+      foldSpans(bins.iterator).map { case ((id, bin), (n, lo, hi)) =>
+        Row(names(id), bin, n, lo, hi) }.toSeq
+    }
+    df.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("metric", StringType), StructField("bin", IntegerType),
+      StructField("n_rows", LongType), StructField("lo", DoubleType),
+      StructField("hi", DoubleType))))
   }
 
-  /** QUANTILE NORMALIZATION — the rank→CDF feature transform
-    * (sklearn's QuantileTransformer shape, exact): every distinct
-    * value maps to its MIDRANK cdf position (cum_before + cnt/2)/n,
-    * so ties share one position (a transformer must map equal values
-    * equally — the quantileBins tie discipline), the output is
-    * uniform on (0,1) up to tie mass, and downstream models see a
-    * scale-free feature whatever the raw distribution. Rides the
-    * same range-bucketed cumulative histogram as the exact extents
-    * and binning — duplicates collapse map-side, no whole-metric
-    * sort on one task — and emits the per-DISTINCT-VALUE mapping
-    * table (metric, value, n_rows, cdf): the artifact a deployment
-    * broadcasts back onto rows (values repeat heavily in real fact
-    * tables, so the mapping is far smaller than the corpus). All
-    * inputs to the one double division are exact integers —
-    * engine-identical, merge-order-free.
+  /** QUANTILE NORMALIZATION — sklearn's QuantileTransformer shape, exact:
+    * every distinct value maps to its MIDRANK cdf (cum_before + cnt/2)/n,
+    * so ties share one position (the quantileBins tie discipline) and the
+    * output is uniform on (0,1) up to tie mass. Emits the per-distinct-
+    * value mapping table (metric, value, n_rows, cdf), ordered by
+    * (metric, value) — the artifact a deployment broadcasts back onto
+    * rows. It stays distributed: its rank pass reads the histogram's
+    * checkout, which the returned frame holds. The one double division
+    * is of exact integers — engine-identical, merge-order-free.
     */
   def cdfTransform(df: DataFrame, metricCols: Seq[String]): DataFrame = {
-    val (bucketed, offs) = rankPlan(numericLong(df, metricCols), Seq("id"))
-    cumFrom(bucketed, offs, Seq("id"))
-      .select(metricName(metricCols).as("metric"),
-        col("value"), col("cnt").as("n_rows"),
-        round((col("cum_before") + col("cnt") * 0.5) / col("n"), 6).as("cdf"))
-      .orderBy("metric", "value")
+    val names = sortedNames(metricCols)
+    val (hist, _, walk) = ranks(_.localCheckpoint(eager = true),
+      numericLong(df, names), Seq("id"))
+    // the histogram is in (id, value) order, and id order is name order
+    hist.mapPartitions(rows => walk(rows).map(r =>
+        Row(r.key.head, r.value, r.cnt, r.before, r.n)))(Encoders.row(StructType(
+        Seq(StructField("id", IntegerType), StructField("value", DoubleType)) ++
+          Seq("cnt", "before", "n").map(StructField(_, LongType)))))
+      .select(metricName(names).as("metric"), col("value"), col("cnt").as("n_rows"),
+        round((col("before") + col("cnt") * 0.5) / col("n"), 6).as("cdf"))
   }
+
+  /** `metricCols` in Spark's string order: the unpivot's metric index
+    * then orders rows as the metric name does.
+    */
+  private def sortedNames(metricCols: Seq[String]): Seq[String] =
+    metricCols.sortBy(UTF8String.fromString)
 
   /** LEARN half of the registry-split approximate binning: the k−1
     * GK cut points per metric, as a bounded driver-side artifact
@@ -369,8 +346,8 @@ object Extents {
     * value): empty, junk and NaN cells dropped
     * (`extract-extents.js:23-29`).
     */
-  private def numericLong(df: DataFrame, metricCols: Seq[String],
-                          keys: Seq[String] = Nil): DataFrame =
+  private[graft] def numericLong(df: DataFrame, metricCols: Seq[String],
+                                keys: Seq[String] = Nil): DataFrame =
     df.select(keys.map(col) :+ explodeToLong(metricCols): _*)
       .select(keys.map(col) ++ Seq(col("id"),
         numericOrNull(col("value")).as("value")): _*)

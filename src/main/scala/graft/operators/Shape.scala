@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The long→wide pivot at the heart of the reference pipeline.
   *
@@ -20,13 +21,11 @@ import org.apache.spark.sql.types.StringType
   *    (`shape-data.js:54-58,105`).
   *
   * Spark-first design notes (100 TB scale):
-  *  - the pivot is ONE hash aggregation (`groupBy(id)` with conditional
-  *    `max_by` cells) — a single shuffle on the id key with map-side
-  *    partial aggregation; no `Dataset.pivot` double-pass, no second
-  *    shuffle for carry columns.
-  *  - last-wins is made deterministic with an explicit ordering column
-  *    (`max_by(value, ord)`) instead of Spark's order-nondeterministic
-  *    `first()`/`last()`.
+  *  - the pivot ([[pivotWide]]) is ONE range shuffle on the id and a
+  *    Scala fold, so its compiled code does not grow with the metric ×
+  *    year column count, and the range exchange is also the
+  *    presentation sort; last-wins follows an explicit ordering column,
+  *    not Spark's order-nondeterministic `first()`/`last()`.
   *  - the output column set is declared up front (metrics × years), so the
   *    plan's schema is static; the reference's first-row-derived schema
   *    quirk (`shape-data.js:107`) is deliberately NOT replicated
@@ -50,7 +49,12 @@ object Shape {
   def defaultParentLocation(pl: Column, default: String): Column =
     coalesce(pl, lit(default))
 
-  /** A1: long→wide pivot in a single hash aggregation.
+  /** A1: long→wide pivot. The rows of an id meet on one task sorted by
+    * `ordCol` and fold last-wins: the carry columns take the last row's
+    * values, each `metric-YY` cell the last value of its year (null if
+    * none). Rows with a null `ordCol` are skipped, as `max_by(value,
+    * ord)` skips them. Rows come out in ascending id order (O1: binary
+    * string order = LC_ALL=C), as the range partitions are id ranges.
     *
     * @param long     input with one row per (id, year)
     * @param idCol    group key (GEOID)
@@ -64,19 +68,37 @@ object Shape {
   def pivotWide(long: DataFrame, idCol: String, carry: Seq[String],
                 yearCol: String, metrics: Seq[String], years: Seq[String],
                 ordCol: String): DataFrame = {
-    val carryAggs: Seq[Column] =
-      carry.map(c => max_by(col(c), col(ordCol)).as(c))
-    val cellAggs: Seq[Column] = for {
-      m <- metrics
-      y <- years
-    } yield max_by(
-      when(col(yearCol) === lit(y), col(m)),
-      when(col(yearCol) === lit(y), col(ordCol))
-    ).as(s"$m-$y")
-    val aggs = carryAggs ++ cellAggs
-    long.groupBy(col(idCol))
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy(col(idCol)) // O1: ascending binary string order (= LC_ALL=C)
+    // layout: id, carry..., metrics..., year, ord
+    val in = long.select(((idCol +: carry) ++ metrics).map(col) ++
+      Seq(col(yearCol).cast(StringType), col(ordCol)): _*)
+    val (field, nc, nm, ny) = (in.schema.fields, 1 + carry.size, metrics.size, years.size)
+    val (yIdx, oIdx) = (nc + nm, nc + nm + 1)
+    val out = StructType(field(0) +: (field.slice(1, nc) ++
+      (for (m <- metrics.indices; y <- years) yield field(nc + m).copy(name = s"${metrics(m)}-$y")))
+      .map(_.copy(nullable = true)))
+    // output slot of (metric m, year y) = nc + m·|years| + (index of y)
+    val slots: Map[String, Seq[Int]] = years.zipWithIndex.groupMap(_._1)(_._2)
+    in.repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol), col(ordCol))
+      .mapPartitions { (rows: Iterator[Row]) =>
+        val it = rows.buffered
+        new Iterator[Row] {
+          def hasNext: Boolean = it.hasNext
+          def next(): Row = {
+            val cells = new Array[Any](out.size)
+            cells(0) = it.head.get(0)
+            while (it.hasNext && it.head.get(0) == cells(0)) {
+              val r = it.next()
+              if (!r.isNullAt(oIdx)) {
+                for (c <- 1 until nc) cells(c) = r.get(c)
+                if (!r.isNullAt(yIdx))
+                  for (y <- slots.getOrElse(r.getString(yIdx), Nil); m <- 0 until nm)
+                    cells(nc + m * ny + y) = r.get(nc + m)
+              }
+            }
+            new GenericRow(cells)
+          }
+        }
+      }(Encoders.row(out))
   }
 
   /** T6/P3: slice a wide table to one decade's column group

@@ -75,22 +75,32 @@ class CoreOperatorsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("extents plans that are never run leave no cache behind") {
-    // a built plan must not register anything: an explain or a plan
-    // audit builds plans it never runs, and a stale cache entry would be
-    // adopted by the next identical plan
+    // a built plan must not register a cache entry: an explain or a plan
+    // audit builds plans it never runs, and a stale entry would be
+    // adopted by the next identical plan. The exact rank kernels run
+    // their count pass when called over a checkout, never a cache:
+    // extents, extentsBy and quantileBins release it before they return,
+    // and cdfTransform's frame holds it until it is released
     val cm = spark.sharedState.cacheManager
     spark.catalog.clearCache()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
     val df = Seq(("g1", 1.0, 2.0), ("g1", 3.0, 2.0), ("g2", 5.0, 7.0))
       .toDF("g", "a", "b")
     val plans = Seq(Extents.extents(df, Seq("a", "b")),
       Extents.extentsBy(df, "g", Seq("a", "b")),
       Extents.quantileBins(df, Seq("a", "b"), 2),
-      Extents.cdfTransform(df, Seq("a", "b")))
+      Extents.extents(df, Seq("a", "b"), approximate = true))
     plans.foreach(_.queryExecution.executedPlan)
     assert(cm.isEmpty, "building an extents plan must not register a cache")
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      "building an extents plan must not persist an RDD")
+    assert(persisted == before, "building an extents plan must not persist an RDD")
+    val cdf = Extents.cdfTransform(df, Seq("a", "b"))
+    cdf.queryExecution.executedPlan
+    assert(cm.isEmpty, "building a cdfTransform plan must not register a cache")
+    assert(persisted.diff(before).size == 1,
+      "a cdfTransform frame holds exactly its histogram checkout")
+    Pipeline.releaseCheckpoint(cdf)
+    assert(persisted == before, "releasing the cdfTransform frame drops its checkout")
   }
 
   test("extents kernel: infinite, overflowing and single-value spans") {

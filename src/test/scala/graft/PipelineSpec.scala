@@ -242,19 +242,17 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(viaLines.map(_.toSeq).toSeq == viaDoc.map(_.toSeq).toSeq)
   }
 
-  test("shape pivot plan: one CSV scan; pivot hash + presentation sort only exchanges") {
+  test("shape pivot plan: one CSV scan; the GEOID range exchange is the only exchange") {
     val long = graft.sources.Sources.readCsv(spark, fixtureCsv,
       graft.sources.Sources.longSchema(metricLongNames))
     val p = Pipeline.shape(long, "raw").queryExecution.executedPlan.toString
     assert("FileScan csv".r.findAllIn(p).size == 1,
       "the long CSV must be read exactly once by the pivot plan")
     val ex = p.linesIterator.filter(_.contains("Exchange ")).toSeq
-    assert(ex.size == 2, s"pivot must shuffle exactly twice:\n${ex.mkString("\n")}")
-    assert(ex.exists(_.contains("hashpartitioning(GEOID")),
-      "the pivot aggregation exchange must key on GEOID")
-    assert(ex.exists(_.contains("rangepartitioning")),
-      "the GEOID presentation sort is the only other exchange")
-    assert(p.contains("partial_max_by"), "pivot must partial-aggregate map-side")
+    assert(ex.size == 1 && ex.head.contains("rangepartitioning(GEOID"),
+      s"the pivot fold's GEOID range exchange must be its only shuffle:\n${ex.mkString("\n")}")
+    assert(!p.contains("max_by") && p.contains("MapPartitions"),
+      s"the pivot must be a fold over the range partitions, not an aggregate:\n$p")
   }
 
   /** File scans of the long CSV (every fixture names it `data.csv`). */
@@ -351,10 +349,30 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(jobs == RunRegionJobs, s"$jobs jobs per warm runRegion: $executions")
   }
 
-  /** Jobs of a warm tiles-only runRegion on the polygon fixture (the
-    * per-decade tile plans and their two sink passes took 28).
+  test("job count: warm extents over a checked-out wide frame: one checkout, two folds") {
+    val executions = Pipeline.withCheckouts { checkout =>
+      val wide = checkout(Pipeline.runRegion(spark, fixtureCsv, "raw",
+        metricLongNames, "counties"))
+      Pipeline.extents(wide) // warm
+      captureJobs(Pipeline.extents(wide).collect())
+    }
+    // the rank passes are RDD jobs outside any SQL execution
+    assert(executions.map(_._1) == Seq("", "localCheckpoint at Pipeline.scala:94"),
+      s"extents must be one histogram checkout plus its folds: $executions")
+    val jobs = executions.map(_._2).sum
+    assert(jobs == ExtentsJobs, s"$jobs jobs per warm extents: $executions")
+  }
+
+  /** Jobs of warm extents over a checked-out wide frame (the
+    * equal-width-bucket rank plan took 11).
     */
-  private val RunRegionJobs = 16
+  private val ExtentsJobs = 6
+
+  /** Jobs of a warm tiles-only runRegion on the polygon fixture (the
+    * per-decade tile plans and their two sink passes took 28, and the
+    * hash-aggregate pivot's checkout one more).
+    */
+  private val RunRegionJobs = 15
 
   test("decadeTiles choropleth without polygon geometry fails fast") {
     val wide = Pipeline.runRegion(spark, fixtureCsv, "raw",

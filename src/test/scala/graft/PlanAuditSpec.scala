@@ -72,11 +72,13 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark with PlanCapture {
       "column pruning must drop unused lineitem columns")
   }
 
-  test("q02 pivot: exactly one aggregation pass (hash + presentation sort)") {
+  test("q02 pivot: one range exchange on the id feeds the fold; no aggregate") {
     val p = plan("q02_shape_pivot")
-    assert(p.contains("partial_max_by"), "pivot must partial-aggregate map-side")
-    assert("Exchange".r.findAllIn(p).size <= 3,
-      s"pivot needs one hash shuffle + one range sort, got:\n$p")
+    val ex = p.linesIterator.filter(_.contains("Exchange ")).toSeq
+    assert(ex.size == 1 && ex.head.contains("rangepartitioning(user_id"),
+      s"the pivot's id range exchange must be its only shuffle:\n$p")
+    assert(!p.contains("max_by") && p.contains("MapPartitions"),
+      s"the pivot must be a fold over the range partitions, not an aggregate:\n$p")
   }
 
   test("q07: global sort+limit plans as TakeOrderedAndProject") {
@@ -149,34 +151,32 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(p.contains("Union"))
   }
 
-  test("q03: exact extents = distributed histogram, no percentile buffer") {
-    val p = plan("q03_extents")
-    // the histogram groupBy(id, value) must combine duplicates map-side
-    assert(p.contains("partial_count"),
-      "value histogram must partial-aggregate map-side")
-    // NO exact Percentile aggregate anywhere: that operator buffers a
-    // group's whole value multiset in memory — the 100 TB OOM this
-    // design avoids. (approx_percentile would be fine: it is a constant-
-    // memory sketch. The exact path places its range-bucket boundaries
-    // at equal widths between the min and max of each group.)
+  /** The exact rank kernel's plan contract, over every plan a build and
+    * run of `q` executes (the histogram checkout runs while the frame is
+    * built): the value histogram partial-counts map-side, its one range
+    * exchange keys on (`keys`..., value) — never the group alone, so no
+    * group sorts on one task — nothing single-partitions, and there is
+    * no exact `percentile` aggregate, which buffers a group's whole
+    * value multiset in memory (the 100 TB OOM this design avoids).
+    */
+  private def assertRankKernel(q: String, keys: String*): Unit = {
+    val p = builtAndRun(q)._2.mkString("\n")
+    assert(p.contains("partial_count"), s"$q: value histogram must partial-aggregate map-side")
+    val range = keys.map(k => s"$k#\\d+ ASC NULLS FIRST, ").mkString("rangepartitioning\\(", "", "value#")
+    assert(range.r.findFirstIn(p).isDefined,
+      s"$q: the histogram must range-partition on (${keys.mkString(", ")}, value):\n$p")
+    assert(!p.contains("SinglePartition"), s"$q: no single-partition exchange:\n$p")
     assert(!p.toLowerCase.replace("approx_percentile", "")
       .replace("percentile_approx", "").contains("percentile"),
-      "exact extents must not use the in-memory percentile aggregate")
-    // the cumulative-rank window must be range-bucketed: its exchange
-    // partitions by (group, bkt), never by the group alone — a 100 TB
-    // continuous metric would otherwise sort on one task
-    assert("hashpartitioning\\([^)]*bkt".r.findFirstIn(p).isDefined,
-      s"cumulative window must partition by (group, bkt):\n$p")
-    assert(!p.contains("SinglePartition"),
-      "no single-partition exchange anywhere in exact extents")
+      s"$q: exact ranks must not use the in-memory percentile aggregate")
+  }
+
+  test("q03: exact extents = distributed histogram, no percentile buffer") {
+    assertRankKernel("q03_extents", "id")
   }
 
   test("q44: grouped extents keeps the same range-bucketed shape") {
-    val p = plan("q44_extents_by_group")
-    assert("hashpartitioning\\([^)]*bkt".r.findFirstIn(p).isDefined,
-      s"grouped cumulative window must partition by (group, metric, bkt):\n$p")
-    assert(!p.contains("SinglePartition"),
-      "no single-partition exchange in grouped extents")
+    assertRankKernel("q44_extents_by_group", "l_returnflag", "id")
   }
 
   test("q22: exact dedup shuffles only the digest — md5 computed map-side") {
@@ -561,13 +561,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark with PlanCapture {
   }
 
   test("q112: quantile binning keeps the range-bucketed rank shape") {
-    val p = plan("q112_quantile_bins")
-    // same kernel contract as q03: the cumulative window partitions by
-    // (metric, bkt), never the metric alone, and nothing single-partitions
-    assert("hashpartitioning\\([^)]*bkt".r.findFirstIn(p).isDefined,
-      s"binning cumsum must partition by (id, bkt):\n$p")
-    assert(!p.contains("SinglePartition"),
-      "no single-partition exchange in quantile binning")
+    assertRankKernel("q112_quantile_bins", "id")
   }
 
   test("q116: approx binning serves stored cuts — no windows, no joins") {

@@ -34,6 +34,29 @@ object PermCountingFs {
   val calls = new java.util.concurrent.atomic.AtomicInteger()
 }
 
+/** Local disk under a `filtered://` scheme, seen through a
+  * `FilterFileSystem`: not a `RawLocalFileSystem` or `LocalFileSystem`,
+  * so the tile sink writes through `FileSystem.create` — as it does on an
+  * object store — and this counts the creates.
+  */
+class FilteredFs extends org.apache.hadoop.fs.FilterFileSystem(new FilteredFs.Local) {
+  override def create(f: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    FilteredFs.creates.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FilteredFs {
+  class Local extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getScheme: String = "filtered"
+    override def getUri: java.net.URI = java.net.URI.create("filtered:///")
+  }
+  val creates = new java.util.concurrent.atomic.AtomicInteger()
+}
+
 /** The s3a seam, proven offline: the deployment sink
   * ([[graft.sinks.TileBuild.writePbfDirectory]] — the tree the
   * reference `aws s3 sync`s, `build.sh:222-228`) and the tree scan
@@ -211,6 +234,29 @@ class SchemeFsSpec extends AnyFunSuite with SharedSpark {
     assert(PermCountingFs.calls.get == 0,
       s"the sink made ${PermCountingFs.calls.get} setPermission calls")
     assert(walk(s"$base/sink") == hadoop)
+  }
+
+  test("a non-local FileSystem gets every tile byte through FileSystem.create") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.filtered.impl", classOf[FilteredFs].getName)
+    val tiles = Seq(
+      (0, 0L, 0L, Array[Byte](1, 2, 3)),
+      (1, 0L, 1L, Array[Byte](4, 5)),
+      (1, 1L, 1L, Array.tabulate[Byte](70000)(i => (i * 31).toByte))
+    ).toDF("z", "x", "y", "tile_bytes")
+    val base = Files.createTempDirectory("filtered").toString
+    FilteredFs.creates.set(0)
+    graft.sinks.TileBuild.writeTiles(tiles, s"filtered://$base/t", Seq("z", "x", "y"))
+    assert(FilteredFs.creates.get == 3,
+      s"${FilteredFs.creates.get} FileSystem.create calls for 3 tiles")
+    val root = Paths.get(s"$base/t")
+    val written = Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p)).toMap
+    val expected = tiles.collect().map(r => s"${r.getInt(0)}/${r.getLong(1)}/${r.getLong(2)}.pbf" ->
+      r.getAs[Array[Byte]](3)).toMap
+    assert(written.keySet == expected.keySet)
+    for ((p, bytes) <- expected) assert(java.util.Arrays.equals(written(p), bytes),
+      s"$p: ${written(p).length} bytes written of ${bytes.length}")
   }
 
   test("local writes are byte-identical to the pre-FS-API layout") {
