@@ -187,22 +187,6 @@ object Incremental {
     (rows, df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema))
   }
 
-  /** `build` writes a region tree at the path it is given, inside a
-    * hidden staging sibling of `$outDir/$region`; the finished tree is
-    * swapped in whole ([[ArtifactCache.swapDir]]) and the staging dir
-    * deleted on every exit, so a failed build leaves the region as it was.
-    */
-  private def staged(fs: FileSystem, outDir: String, region: String)(
-      build: Path => Unit): Unit = {
-    val tag = java.util.UUID.randomUUID()
-    val staging = new Path(s"$outDir/.$region.$tag.staging")
-    try {
-      build(new Path(staging, region))
-      ArtifactCache.swapDir(fs, new Path(staging, region),
-        new Path(s"$outDir/$region"), new Path(s"$outDir/.$region.$tag.old"))
-    } finally fs.delete(staging, true)
-  }
-
   /** Rebuild only what changed between `oldCsvPath` and `newCsvPath` in
     * `prevDir`'s tree (a prior [[Pipeline.runRegion]] output), leaving
     * the result at `outDir`. One update path: delete the affected tile
@@ -212,8 +196,8 @@ object Incremental {
     * to the delta, not the tileset (the deployment mode perfbench's
     * `nightly-delta` measures); otherwise the previous region tree is
     * copied into a staging sibling, updated there and swapped in whole
-    * (`staged`), so `prevDir` is never written. Falls back to the full
-    * pipeline when the changed-GEOID fraction exceeds
+    * ([[Pipeline.staged]]), so `prevDir` is never written. Falls back to
+    * the full pipeline when the changed-GEOID fraction exceeds
     * `maxChangedFraction` — q135's fraction readout is the signal that
     * the incremental machinery costs more than it saves.
     *
@@ -295,7 +279,7 @@ object Incremental {
         // a fresh tree replaces the whole region subtree (the reference's
         // own `rm -rf _proc` semantics — an overwrite-only rebuild would
         // leave STALE tiles for (z,x,y)s the new data no longer produces)
-        staged(outFs, outDir, region) { tree =>
+        Pipeline.staged(outFs, outDir, region) { tree =>
           Pipeline.runRegion(spark, newCsvPath, inputType, metricLongNames,
             region, features = Some(feats), outDir = Some(tree.getParent.toString))
           publishFingerprints(outFs, newFps, tree)
@@ -356,7 +340,7 @@ object Incremental {
         val inPlace = outFs.makeQualified(new Path(outDir)) ==
           prevFs.makeQualified(new Path(prevDir))
         if (inPlace) update(new Path(s"$outDir/$region"))
-        else staged(outFs, outDir, region) { tree =>
+        else Pipeline.staged(outFs, outDir, region) { tree =>
           if (!FileUtil.copy(prevFs, new Path(s"$prevDir/$region"), outFs,
               tree, false, hconf)) throw new java.io.IOException(s"cannot copy to $tree")
           update(tree)

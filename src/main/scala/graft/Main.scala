@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.config.EtlConfig
@@ -63,20 +64,25 @@ object Main {
   def run(spark: SparkSession, args: Args): Unit = {
     val metricNames = EtlConfig.columnMap(args.inputType).map(_._1)
       .filterNot(Seq("id", "year", "name", "parent_location").contains)
+    val fs = new Path(args.out).getFileSystem(spark.sessionState.newHadoopConf())
     for (region <- args.regions) {
-      val features = args.geo.map { g =>
+      val features = if (!args.tiles) None else args.geo.map { g =>
         if (g.endsWith(".geojson") || g.endsWith(".json"))
           Pipeline.geometryFeatures(graft.sources.Sources.readGeoJson(spark, g))
         else if (g.endsWith(".parquet")) spark.read.parquet(g)
         else spark.read.option("header", true).csv(g)
       }
-      val wide = Pipeline.runRegion(spark, args.data, args.inputType,
-        metricNames, region,
-        features = if (args.tiles) features else None,
-        outDir = if (args.tiles) Some(s"${args.out}/tiles") else None,
+      def runInto(treeDir: Option[String]) = Pipeline.runRegion(spark,
+        args.data, args.inputType, metricNames, region, features = features,
+        outDir = treeDir,
         wideOut = Some(s"${args.out}/$region.wide"),
         extentsOut =
           if (args.extents) Some(s"${args.out}/$region.extents") else None)
+      // the region's tree is built aside and swapped in whole, so a re-run
+      // over an existing --out leaves no tile the new data does not produce
+      val wide = if (features.isEmpty) runInto(None)
+        else Pipeline.staged(fs, s"${args.out}/tiles", region)(tree =>
+          runInto(Some(tree.getParent.toString)))
       val metricCols = wide.columns.count(c => !EtlConfig.idColumns.contains(c))
       println(s"[graft] $region: wide=${wide.columns.length} cols" +
         (if (args.extents) s", extents over $metricCols metric-year cols" else ""))

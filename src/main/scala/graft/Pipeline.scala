@@ -1,11 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.config.EtlConfig
-import graft.operators.{Extents, Geometry, Joins, Shape, Tiling}
+import graft.operators.{ArtifactCache, Extents, Geometry, Joins, Shape, Tiling}
 import graft.sinks.TileBuild
 import graft.sources.Sources
 
@@ -222,6 +223,24 @@ object Pipeline {
 
   /** The directory levels of a region's tile tree: `decade/z/x/y.pbf`. */
   private[graft] val TreeLevels = Seq("decade", "z", "x", "y")
+
+  /** `build` writes a region tree at the path it is given, inside a
+    * hidden staging sibling of `$outDir/$region`; the finished tree is
+    * swapped in whole ([[ArtifactCache.swapDir]]) and the staging dir
+    * deleted on every exit, so a failed build leaves the region as it was
+    * and a tile the new build no longer produces does not survive it.
+    */
+  private[graft] def staged[T](fs: FileSystem, outDir: String, region: String)(
+      build: Path => T): T = {
+    val tag = java.util.UUID.randomUUID()
+    val staging = new Path(s"$outDir/.$region.$tag.staging")
+    try {
+      val built = build(new Path(staging, region))
+      ArtifactCache.swapDir(fs, new Path(staging, region),
+        new Path(s"$outDir/$region"), new Path(s"$outDir/.$region.$tag.old"))
+      built
+    } finally fs.delete(staging, true)
+  }
 
   /** A region's tilesets as ONE lazy plan (`build.sh:121-231`: the base
     * tilesets, split per decade by `tile-join`): every decade in

@@ -30,9 +30,10 @@ object QueriesTile {
       |  CAST((c_custkey * 13) % 160 - 80 + 0.5 AS DOUBLE) AS lat
       |FROM customer""".stripMargin
 
-  /** DuckDB web-mercator tile formulas (must mirror Tiling.tileX/tileY
-    * including the 6-decimal pre-floor round), over an arbitrary
-    * lon/lat SQL expression.
+  /** DuckDB web-mercator tile formulas — the oracle's own twin of
+    * Tiling's one projection (`worldX`/`worldY`, clamped by
+    * `tileX`/`tileY`), same operation order including the 6-decimal
+    * pre-floor round — over an arbitrary lon/lat SQL expression.
     */
   private def tileXExprSql(lonE: String, z: Int): String = {
     val n = 1L << z
@@ -170,9 +171,11 @@ object QueriesTile {
     val feats = squareFeatures(s, d).select(
       col("c_custkey").as("fid"),
       Geometry.parsePolygons(col("geometry_json")).as("polys"))
-    TileBuild.encodePolygonTiles(
+    TileBuild.encodeTiles(
         TileBuild.polygonTileFeatures(feats, "fid", "polys", 3, 5)
-          .withColumn("attrs", typedLit(Map.empty[String, String])), "sq")
+          .withColumn("attrs", typedLit(Map.empty[String, String]))
+          .withColumn("decade", lit("")).withColumn("layer", lit(0)),
+        Seq(TileBuild.Layer(_ => "sq", polygons = true)))
       .select(col("z"), col("x"), col("y"), col("n_features"))
       .orderBy("z", "x", "y")
   }

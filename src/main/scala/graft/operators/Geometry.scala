@@ -21,9 +21,11 @@ import org.apache.spark.sql.types._
   *  - bbox extraction is `flatten` + `transform` + `array_min/max` over
   *    the (small, per-feature) coordinate arrays.
   *  - tile-cover fan-out is explode(sequence(x0,x1)) × explode(sequence
-  *    (y0,y1)) over the bbox range — a pure Generate chain, no join. The
-  *    fan-out factor is the feature's tile footprint, which is the
-  *    output size of any tiling scheme, not overhead.
+  *    (y0,y1)) over the bbox range — a pure Generate chain, no join — with
+  *    the bbox corners' tiles from the point fan's own projection
+  *    ([[Tiling.tileX]]/[[Tiling.tileY]]). The fan-out factor is the
+  *    feature's tile footprint, which is the output size of any tiling
+  *    scheme, not overhead.
   */
 object Geometry {
 
@@ -60,21 +62,6 @@ object Geometry {
       .withColumn("lat_max", array_max(lats))
   }
 
-  /** Column-z tile x index (same rounded web-mercator discipline as
-    * [[Tiling.tileX]], with `n = 2^z` carried as a column).
-    */
-  def tileXz(lon: Column, n: Column): Column =
-    least(n - 1, greatest(lit(0L),
-      floor(round((lon + 180.0) / 360.0 * n, 6)).cast("long")))
-
-  /** Column-z tile y index (see [[Tiling.tileY]]). */
-  def tileYz(lat: Column, n: Column): Column = {
-    val latC = least(lit(Tiling.MaxLat), greatest(lit(-Tiling.MaxLat), lat))
-    val latRad = radians(latC)
-    val merc = (lit(1.0) - log(tan(latRad) + lit(1.0) / cos(latRad)) / lit(math.Pi)) / 2.0
-    least(n - 1, greatest(lit(0L), floor(round(merc * n, 6)).cast("long")))
-  }
-
   /** T4 for area features: fan each polygon feature out to every (z,x,y)
     * tile its bbox covers, for z in [minZoom, maxZoom]. The bbox cover is
     * tippecanoe's candidate set; exact-intersection refinement happens in
@@ -84,13 +71,13 @@ object Geometry {
     * Expects the [[withBbox]] columns to be present; emits z, x, y.
     */
   def coverTiles(df: DataFrame, minZoom: Int, maxZoom: Int): DataFrame = {
-    val n = pow(lit(2.0), col("z")).cast("long")
+    val z = col("z")
     df.withColumn("z", explode(array((minZoom to maxZoom).map(lit): _*)))
-      .withColumn("x0", tileXz(col("lon_min"), n))
-      .withColumn("x1", tileXz(col("lon_max"), n))
+      .withColumn("x0", Tiling.tileX(col("lon_min"), z))
+      .withColumn("x1", Tiling.tileX(col("lon_max"), z))
       // north edge (lat_max) has the SMALLER tile y
-      .withColumn("y0", tileYz(col("lat_max"), n))
-      .withColumn("y1", tileYz(col("lat_min"), n))
+      .withColumn("y0", Tiling.tileY(col("lat_max"), z))
+      .withColumn("y1", Tiling.tileY(col("lat_min"), z))
       .withColumn("x", explode(sequence(col("x0"), col("x1"))))
       .withColumn("y", explode(sequence(col("y0"), col("y1"))))
       .drop("x0", "x1", "y0", "y1")
@@ -158,7 +145,9 @@ object Geometry {
   /** Continuous web-mercator "world pixel" coordinates at zoom z: the
     * whole world spans [0, 2^z * extent) in both axes, y growing south.
     * Tile (x, y) owns the square [x*extent, (x+1)*extent) ×
-    * [y*extent, (y+1)*extent).
+    * [y*extent, (y+1)*extent). Un-rounded: the clip's space, where the
+    * tile index and point pixel use the rounded Column projection
+    * ([[Tiling.worldX]]/[[Tiling.worldY]]).
     */
   def worldPx(lon: Double, lat: Double, z: Int, extent: Int = 4096)
       : (Double, Double) = {
@@ -298,11 +287,8 @@ object Geometry {
       : DataFrame = {
     val segs = df.select(col(idCol),
       explode(ringSegments(col(polygonsCol))).as("seg"))
-    val shared = segs.groupBy("seg")
-      .agg(count_distinct(col(idCol)).as("n_owners"))
-      .filter(col("n_owners") >= 2)
-      .select("seg")
-    val perFeature = segs.join(shared, Seq("seg"), "left_semi")
+    val perFeature = segs.join(sharedBorders(df, idCol, polygonsCol).select("seg"),
+        Seq("seg"), "left_semi")
       .groupBy(idCol)
       .agg(collect_set(array(col("seg.a"), col("seg.b"))).as("shared_segs"))
     df.join(perFeature, Seq(idCol), "left")

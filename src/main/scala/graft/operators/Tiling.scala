@@ -22,10 +22,14 @@ import org.apache.spark.sql.functions._
   *    factor is bounded by the zoom range, and the subsequent
   *    `groupBy(z,x,y)` is the tile-build shuffle — the ONE unavoidable
   *    shuffle of the tiling pipeline (`SURVEY.md §3.1`).
-  *  - the web-mercator y formula rounds to 6 decimals BEFORE floor so
-  *    the tile id is reproducible across libm implementations (JVM vs
-  *    the oracle's C library); a documented deviation of < 1e-6 tiles
-  *    only matters for points within ~10 cm of a tile edge.
+  *  - ONE Column-level web-mercator projection ([[worldX]]/[[worldY]],
+  *    zoom as a column) feeds the point fan ([[assignTiles]]), the
+  *    polygon bbox cover ([[Geometry.coverTiles]]) and the point pixel
+  *    ([[pixelIn]]). It rounds to 6 decimals BEFORE floor so the tile id
+  *    is reproducible across libm implementations (JVM vs the oracle's C
+  *    library); a documented deviation of < 1e-6 tiles only matters for
+  *    points within ~10 cm of a tile edge. The clip's un-rounded
+  *    projection is [[Geometry.worldPx]].
   *  - polylabel (pole of inaccessibility) is a driver-free per-row
   *    computation implemented as a typed map; the centroid fast path is
   *    a plain aggregate.
@@ -35,23 +39,44 @@ object Tiling {
   /** Web-mercator latitude limit (tile y in [0, 2^z)). */
   val MaxLat = 85.05112878
 
-  /** T4: tile x index for a longitude at zoom z. */
-  def tileX(lon: Column, z: Int): Column = {
-    val n = 1L << z
-    least(lit(n - 1), greatest(lit(0L),
-      floor(round((lon + 180.0) / 360.0 * n, 6)).cast("long")))
+  /** T4: the rounded web-mercator x of a longitude at zoom `z`, in tile
+    * units: the one projection behind the tile index ([[tileX]]) and the
+    * point's pixel ([[pixelIn]]), rounded before any floor (class doc).
+    */
+  def worldX(lon: Column, z: Column): Column =
+    round((lon + 180.0) / 360.0 * tilesPerAxis(z), 6)
+
+  /** T4: the rounded web-mercator y of a latitude at zoom `z`, in tile
+    * units (y grows south; the latitude clamps to ±[[MaxLat]]).
+    */
+  def worldY(lat: Column, z: Column): Column = {
+    val latRad = radians(least(lit(MaxLat), greatest(lit(-MaxLat), lat)))
+    round((lit(1.0) - log(tan(latRad) + lit(1.0) / cos(latRad)) / lit(math.Pi)) /
+      2.0 * tilesPerAxis(z), 6)
   }
 
-  /** T4: tile y index for a latitude at zoom z (rounded web-mercator,
-    * see class doc).
+  /** 2^z as a long column. */
+  private def tilesPerAxis(z: Column): Column = pow(lit(2.0), z).cast("long")
+
+  /** The tile index of a [[worldX]]/[[worldY]] coordinate, clamped to
+    * [0, 2^z - 1].
     */
-  def tileY(lat: Column, z: Int): Column = {
-    val n = 1L << z
-    val latC = least(lit(MaxLat), greatest(lit(-MaxLat), lat))
-    val latRad = radians(latC)
-    val merc = (lit(1.0) - log(tan(latRad) + lit(1.0) / cos(latRad)) / lit(math.Pi)) / 2.0
-    least(lit(n - 1), greatest(lit(0L), floor(round(merc * n, 6)).cast("long")))
-  }
+  private def tileOf(w: Column, z: Column): Column =
+    least(tilesPerAxis(z) - 1, greatest(lit(0L), floor(w).cast("long")))
+
+  /** T4: tile x index for a longitude at zoom z. */
+  def tileX(lon: Column, z: Column): Column = tileOf(worldX(lon, z), z)
+
+  /** T4: tile y index for a latitude at zoom z. */
+  def tileY(lat: Column, z: Column): Column = tileOf(worldY(lat, z), z)
+
+  /** The MVT pixel (extent 4096) of a [[worldX]]/[[worldY]] coordinate
+    * inside `tile`, its clamped index: the antimeridian (lon=180) and the
+    * south clamp reach fraction 1.0 of the last tile, so the pixel is
+    * pinned to [0, 4095] instead of landing one past the extent.
+    */
+  def pixelIn(w: Column, tile: Column): Column =
+    least(lit(4095), greatest(lit(0), floor((w - tile) * 4096))).cast("int")
 
   /** Z-order (Morton) key of tile coordinates: bit-interleave x and y
     * (x in even positions) so tiles adjacent on the plane stay adjacent
@@ -79,8 +104,8 @@ object Tiling {
   def assignTiles(df: DataFrame, lonCol: String, latCol: String,
                   minZoom: Int, maxZoom: Int): DataFrame = {
     val tiles = array((minZoom to maxZoom).map { z =>
-      struct(lit(z).as("z"), tileX(col(lonCol), z).as("x"),
-        tileY(col(latCol), z).as("y"))
+      struct(lit(z).as("z"), tileX(col(lonCol), lit(z)).as("x"),
+        tileY(col(latCol), lit(z)).as("y"))
     }: _*)
     df.withColumn("tile", explode(tiles))
       .withColumn("z", col("tile.z"))
@@ -117,29 +142,6 @@ object Tiling {
       acc || (z === zz &&
         idHash % 1000000L < baseZoomThreshold(baseZoom - zz, gamma))
     }
-
-  /** MVT pixel coordinates of a point within its tile (extent 4096):
-    * the quantization step of tile encoding.
-    */
-  def pixelInTile(lon: Column, lat: Column, z: Int, extent: Int = 4096)
-      : (Column, Column) = {
-    val n = 1L << z
-    val fx = round((lon + 180.0) / 360.0 * n, 6)
-    val latC = least(lit(MaxLat), greatest(lit(-MaxLat), lat))
-    val latRad = radians(latC)
-    val fy = round((lit(1.0) - log(tan(latRad) + lit(1.0) / cos(latRad)) / lit(math.Pi)) / 2.0 * n, 6)
-    // pixel offset is taken against the CLAMPED tile index (consistent
-    // with tileX/tileY), then pinned to [0, extent-1] — lon=180 / the
-    // south mercator clamp would otherwise floor() into tile n with
-    // pixel 0 instead of tile n-1 with pixel extent-1.
-    val xIdx = least(lit(n - 1), greatest(lit(0L), floor(fx).cast("long")))
-    val yIdx = least(lit(n - 1), greatest(lit(0L), floor(fy).cast("long")))
-    val px = least(lit(extent - 1), greatest(lit(0),
-      floor((fx - xIdx) * extent))).cast("int")
-    val py = least(lit(extent - 1), greatest(lit(0),
-      floor((fy - yIdx) * extent))).cast("int")
-    (px, py)
-  }
 
   /** O4: per-tile density drop — keep the `budget` most important
     * features of each tile (tippecanoe --drop-densest-as-needed).

@@ -24,12 +24,13 @@ object Mvt {
   case object PolygonGeom extends GeomType { val code = 3 }
 
   /** One feature: integer id (the reference's `--use-attribute-for-id`),
-    * pixel-space rings (a single point for PointGeom), and typed
-    * attributes. Null attribute values must be pre-dropped (the
-    * reference's `--empty-csv-columns-are-null`).
+    * pixel-space rings in the tile shuffle's flat layout — `coords`
+    * interleaved x,y, `ringSizes` the points per ring (a point is one
+    * one-point ring) — and typed attributes. Null attribute values must
+    * be pre-dropped (the reference's `--empty-csv-columns-are-null`).
     */
   case class Feature(id: Long, geomType: GeomType,
-                     rings: Seq[Seq[(Int, Int)]],
+                     coords: Array[Int], ringSizes: Array[Int],
                      attrs: Seq[(String, Any)])
 
   // ---------------------------------------------------------------- wire
@@ -77,30 +78,31 @@ object Mvt {
   }
 
   // ------------------------------------------------------------ geometry
-  private[graft] def encodeGeometry(geomType: GeomType,
-                                    rings: Seq[Seq[(Int, Int)]]): Seq[Long] = {
+  private[graft] def encodeGeometry(geomType: GeomType, coords: Array[Int],
+                                    ringSizes: Array[Int]): Seq[Long] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     var cx = 0; var cy = 0
+    def delta(i: Int): Unit = {
+      out += zigzag(coords(i) - cx); out += zigzag(coords(i + 1) - cy)
+      cx = coords(i); cy = coords(i + 1)
+    }
     geomType match {
       case PointGeom =>
-        val pts = rings.flatten
-        out += ((1L /*MoveTo*/ ) | (pts.length.toLong << 3))
-        pts.foreach { case (x, y) =>
-          out += zigzag(x - cx); out += zigzag(y - cy); cx = x; cy = y
-        }
+        out += ((1L /*MoveTo*/ ) | ((coords.length / 2).toLong << 3))
+        coords.indices.by(2).foreach(delta)
       case PolygonGeom =>
-        rings.foreach { ring =>
+        var start = 0
+        ringSizes.foreach { n =>
+          val end = start + 2 * n
           // drop the duplicate closing vertex if present; ClosePath closes
-          val rr = if (ring.length > 1 && ring.head == ring.last)
-            ring.dropRight(1) else ring
+          val open = if (n > 1 && coords(start) == coords(end - 2) &&
+            coords(start + 1) == coords(end - 1)) n - 1 else n
           out += (1L | (1L << 3)) // MoveTo 1
-          val (x0, y0) = rr.head
-          out += zigzag(x0 - cx); out += zigzag(y0 - cy); cx = x0; cy = y0
-          out += (2L | ((rr.length - 1).toLong << 3)) // LineTo n-1
-          rr.tail.foreach { case (x, y) =>
-            out += zigzag(x - cx); out += zigzag(y - cy); cx = x; cy = y
-          }
+          delta(start)
+          out += (2L | ((open - 1).toLong << 3)) // LineTo n-1
+          (1 until open).foreach(j => delta(start + 2 * j))
           out += 7L // ClosePath
+          start = end
         }
     }
     out.toSeq
@@ -130,7 +132,7 @@ object Mvt {
       writeBytesField(o, 2, tagStream.toByteArray)
       writeVarintField(o, 3, f.geomType.code.toLong)
       val geomStream = new ByteArrayOutputStream()
-      encodeGeometry(f.geomType, f.rings).foreach(writeVarint(geomStream, _))
+      encodeGeometry(f.geomType, f.coords, f.ringSizes).foreach(writeVarint(geomStream, _))
       writeBytesField(o, 4, geomStream.toByteArray)
       o.toByteArray
     }

@@ -19,7 +19,8 @@ import graft.operators.{Geometry, TextStats, Tiling}
   *    ([[encodeTiles]] — `mapGroups` over the KeyValueGroupedDataset,
   *    the typed-Aggregator shape from SURVEY.md §2.11). A region's
   *    whole tree (both decades, bubble + choropleth) is one such
-  *    shuffle; a single-layer build is the same kernel with one layer.
+  *    shuffle, and every tile build takes this one path: the rows of
+  *    [[pointTileRows]] or [[polygonTileFeatures]], then [[encodeTiles]].
   *  - per-tile feature order is pinned (importance desc, id) so tile
   *    bytes are deterministic; the density budget (O4) is applied
   *    BEFORE the shuffle would explode — the window prunes map-side via
@@ -46,63 +47,23 @@ object TileBuild {
     */
   val ByteBudget: Int = 500 * 1024
 
-  /** Encode point features into per-tile MVT byte blobs: one point layer
-    * through [[encodeTiles]].
-    *
-    * @param points     DataFrame with id, lon, lat and `attrCols`
-    * @param attrCols   attribute columns carried into tiles (null cells
-    *                   dropped per-feature — `--empty-csv-columns-are-null`)
-    * @param budget     per-tile feature-COUNT cap ([[FeatureBudget]])
-    * @param byteBudget per-tile encoded-BYTE cap ([[ByteBudget]])
-    * @param baseZoom   tippecanoe `--base-zoom` (`build.sh:121-126`), see
-    *                   [[pointTileFan]]
-    * @return DataFrame (z, x, y, n_features, tile_bytes)
-    */
-  def buildPointTiles(points: DataFrame, idCol: String, lonCol: String,
-                      latCol: String, attrCols: Seq[String], layerName: String,
-                      minZoom: Int, maxZoom: Int,
-                      importanceCol: Option[String] = None,
-                      budget: Int = FeatureBudget,
-                      byteBudget: Int = ByteBudget,
-                      baseZoom: Option[Int] = None): DataFrame = {
-    val attrPairs = attrCols.flatMap(c => Seq(lit(c), col(c).cast("string")))
-    encodeTiles(pointTileRows(points, idCol, lonCol, latCol, minZoom, maxZoom,
-        importanceCol, budget, baseZoom).withColumn("attrs", map(attrPairs: _*))
-        .withColumn("decade", lit("")).withColumn("layer", lit(0)),
-      Seq(Layer(_ => layerName, polygons = false)), byteBudget).drop("decade")
-  }
-
   /** The decade-independent half of the point build: [[pointTileFan]],
-    * MVT pixel coordinates, the density budget ([[Tiling.dropDensest]],
-    * map-side). Adds z, x, y, density_rank, the long `fid` and the point
-    * in [[encodeTiles]]' wire format (`rings_flat` = [px, py],
-    * `ring_sizes` = [1]).
+    * MVT pixel coordinates ([[Tiling.pixelIn]] of the fan's own rounded
+    * projection), the density budget ([[Tiling.dropDensest]], map-side:
+    * importance is the id, capped at [[FeatureBudget]]). Adds z, x, y,
+    * density_rank, the long `fid` and the point in [[encodeTiles]]' flat
+    * geometry format (`rings_flat` = [px, py], `ring_sizes` = [1]).
     */
   private[graft] def pointTileRows(points: DataFrame, idCol: String,
                                    lonCol: String, latCol: String,
                                    minZoom: Int, maxZoom: Int,
-                                   importanceCol: Option[String] = None,
-                                   budget: Int = FeatureBudget,
                                    baseZoom: Option[Int] = None): DataFrame = {
-    val assigned = pointTileFan(points, idCol, lonCol, latCol, minZoom,
-      maxZoom, baseZoom)
-    // pixel coords per zoom: computed per-row from the already-assigned z
-    val withPx = assigned.withColumn("fx",
-        round((col(lonCol) + 180.0) / 360.0 * pow(lit(2.0), col("z")), 6))
-      .withColumn("latc",
-        least(lit(Tiling.MaxLat), greatest(lit(-Tiling.MaxLat), col(latCol))))
-      .withColumn("fy",
-        round((lit(1.0) - log(tan(radians(col("latc"))) + lit(1.0) / cos(radians(col("latc"))))
-          / lit(math.Pi)) / 2.0 * pow(lit(2.0), col("z")), 6))
-      // clamp: tile x/y are clamped to [0, n-1] but fx/fy are not, so the
-      // antimeridian (lon=180) / south-clamp (merc=1) edge lands at pixel
-      // 4096 — one past the MVT extent. Pin to [0, 4095].
-      .withColumn("px", least(lit(4095), greatest(lit(0),
-        floor((col("fx") - col("x")) * 4096))).cast("int"))
-      .withColumn("py", least(lit(4095), greatest(lit(0),
-        floor((col("fy") - col("y")) * 4096))).cast("int"))
-    Tiling.dropDensest(withPx, col(importanceCol.getOrElse(idCol)), col(idCol),
-        budget)
+    val z = col("z")
+    val withPx = pointTileFan(points, idCol, lonCol, latCol, minZoom,
+        maxZoom, baseZoom)
+      .withColumn("px", Tiling.pixelIn(Tiling.worldX(col(lonCol), z), col("x")))
+      .withColumn("py", Tiling.pixelIn(Tiling.worldY(col(latCol), z), col("y")))
+    Tiling.dropDensest(withPx, col(idCol), col(idCol), FeatureBudget)
       .withColumn("fid", col(idCol).cast("long"))
       .withColumn("rings_flat", array(col("px"), col("py")))
       .withColumn("ring_sizes", array(lit(1)))
@@ -112,7 +73,7 @@ object TileBuild {
     * [minZoom, maxZoom] ([[Tiling.assignTiles]]); below `baseZoom` only
     * the rows tippecanoe's `--base-zoom` keeps ([[Tiling.baseZoomKeep]],
     * keyed on the hash of the id's string form, BEFORE the tile
-    * shuffle). [[buildPointTiles]] encodes these rows and
+    * shuffle). [[pointTileRows]] encodes these rows and
     * [[graft.Incremental.featureTileFan]] reads them as the tiles a
     * changed feature touches.
     */
@@ -141,40 +102,13 @@ object TileBuild {
       minZoom, maxZoom)
 
   // -------------------------------------------------------------------
-  // Flattened geometry wire format. The per-(tile, feature) rows that
-  // cross the tile shuffle carried array<array<array<array<double>>>> —
-  // and the Catalyst codec for nested Seqs was measured at ~95% of the
-  // whole tile-build kernel's cost (the geometry math is cheap). The
-  // shuffle rows now carry primitive arrays (coords interleaved
-  // lon,lat; per-ring point counts; per-polygon ring counts), which use
-  // the fast primitive-array encoders, and the nested structure is
-  // rebuilt with plain Scala inside the kernel.
-
-  /** coords/sizes → the nested polygons layout [[tileRings]] consumes. */
-  private def unflatten(coords: Array[Double], ringSizes: Array[Int],
-                        polySizes: Array[Int]): Seq[Seq[Seq[Seq[Double]]]] = {
-    val polys = Vector.newBuilder[Seq[Seq[Seq[Double]]]]
-    var ri = 0
-    var ci = 0
-    var pi = 0
-    while (pi < polySizes.length) {
-      val rings = Vector.newBuilder[Seq[Seq[Double]]]
-      var r = 0
-      while (r < polySizes(pi)) {
-        val npts = ringSizes(ri); ri += 1
-        val pts = new Array[Seq[Double]](npts)
-        var j = 0
-        while (j < npts) {
-          pts(j) = Seq(coords(ci), coords(ci + 1)); ci += 2; j += 1
-        }
-        rings += scala.collection.immutable.ArraySeq.unsafeWrapArray(pts)
-        r += 1
-      }
-      polys += rings.result()
-      pi += 1
-    }
-    polys.result()
-  }
+  // Flat geometry format. Geometry crosses the tile shuffle as primitive
+  // arrays — coords interleaved (lon,lat before the clip, x,y after),
+  // per-ring point counts, per-polygon ring counts — because the
+  // Catalyst codec for nested Seqs was measured at ~95% of the whole
+  // tile-build kernel's cost (the geometry math is cheap). The clip
+  // reads the arrays straight into tuple rings ([[tileRings]]) and
+  // [[Mvt.Feature]] carries the clipped arrays as they are.
 
   /** Flat (ax,ay,bx,by)* segment array → canonical segment set. */
   private def toSegSetFlat(flat: Array[Double])
@@ -188,7 +122,7 @@ object TileBuild {
     b.result()
   }
 
-  /** Add the flat wire format of the nested polygons + shared_segs
+  /** Add the flat geometry format of the nested polygons + shared_segs
     * columns (shared_segs dropped; [[polygonTileFan]] drops the
     * polygons) — applied BEFORE the tile fan-out, so the flattening
     * runs once per FEATURE and only primitive arrays ride the
@@ -212,22 +146,27 @@ object TileBuild {
     * direction, so the border's two owners emit identical simplified
     * polylines (gap-free across features, per zoom).
     */
-  private def tileRings(z: Int, x: Long, y: Long,
-                        polygons: Seq[Seq[Seq[Seq[Double]]]],
+  private def tileRings(z: Int, x: Long, y: Long, coords: Array[Double],
+                        ringSizes: Array[Int], polySizes: Array[Int],
                         simplifyPx: Double,
-                        sharedSegs: Option[Set[((Double, Double), (Double, Double))]] = None)
-      : Seq[Seq[(Int, Int)]] = {
+                        sharedSegs: Option[Set[((Double, Double), (Double, Double))]])
+      : (Array[Int], Array[Int]) = {
     val ox = x * 4096.0; val oy = y * 4096.0
-    polygons.flatMap { poly =>
-      val quantized = poly.map { ring =>
+    val outCoords = Array.newBuilder[Int]
+    val outSizes = Array.newBuilder[Int]
+    var ri = 0
+    var ci = 0
+    polySizes.foreach { nRings =>
+      val quantized = Seq.fill(nRings) {
+        val (c0, n) = (ci, ringSizes(ri))
+        ri += 1; ci += 2 * n
+        val ring = IndexedSeq.tabulate(n)(j => (coords(c0 + 2 * j), coords(c0 + 2 * j + 1)))
         val simp = sharedSegs match {
           case Some(set) if simplifyPx > 0 =>
             // open the ring; flags from LONLAT canonical pairs, geometry
             // simplified in projected world-px (same tolerance space as
             // the plain path)
-            val open = if (ring.length > 1 && ring.head == ring.last)
-              ring.dropRight(1) else ring
-            val pts = open.map(p => (p(0), p(1))).toIndexedSeq
+            val pts = if (n > 1 && ring.head == ring.last) ring.dropRight(1) else ring
             val flags = pts.indices.map { i =>
               val a = pts(i); val b = pts((i + 1) % pts.length)
               val canon = if (Ordering[(Double, Double)].lteq(a, b)) (a, b)
@@ -237,18 +176,22 @@ object TileBuild {
             val proj = pts.map { case (lo, la) => Geometry.worldPx(lo, la, z) }
             Geometry.simplifySharedAware(proj, flags, simplifyPx)
           case _ =>
-            val proj = ring.map(p => Geometry.worldPx(p(0), p(1), z))
+            val proj = ring.map { case (lo, la) => Geometry.worldPx(lo, la, z) }
             if (simplifyPx > 0) Tiling.simplify(proj, simplifyPx) else proj
         }
         Geometry.quantizeRing(
           Geometry.clipRing(simp, ox, oy, ox + 4096, oy + 4096), ox, oy)
       }
       // exterior gone ⇒ whole polygon gone; holes keep MVT winding
-      if (quantized.isEmpty || quantized.head.isEmpty) Seq.empty
-      else Geometry.orient(quantized.head, exterior = true) +:
-        quantized.tail.filter(_.nonEmpty)
-          .map(Geometry.orient(_, exterior = false))
+      if (quantized.nonEmpty && quantized.head.nonEmpty)
+        (Geometry.orient(quantized.head, exterior = true) +:
+          quantized.tail.filter(_.nonEmpty)
+            .map(Geometry.orient(_, exterior = false))).foreach { r =>
+          r.foreach { case (px, py) => outCoords += px; outCoords += py }
+          outSizes += r.length
+        }
     }
+    (outCoords.result(), outSizes.result())
   }
 
   /** Stage 1 of the polygon build — the choropleth half of the
@@ -280,9 +223,8 @@ object TileBuild {
     *                      found over THIS frame, so pass the full feature
     *                      table, before any attribute join
     * @return (z, x, y, density_rank, fid, rings_flat, ring_sizes) —
-    *         tile-local integer rings in MVT winding order, flattened
-    *         (interleaved x,y + per-ring point counts: the primitive-
-    *         array wire format, see [[unflatten]] notes)
+    *         tile-local integer rings in MVT winding order in the flat
+    *         geometry format (interleaved x,y + per-ring point counts)
     */
   def polygonTileFeatures(polys: DataFrame, idCol: String,
                           polygonsCol: String, minZoom: Int, maxZoom: Int,
@@ -304,39 +246,13 @@ object TileBuild {
 
     rows.as[(Int, Long, Long, Int, Long, Array[Double], Array[Int], Array[Int], Array[Double])]
       .map { case (z, x, y, rank, fid, coords, ringSizes, polySizes, sharedFlat) =>
-        val rings = tileRings(z, x, y,
-          unflatten(coords, ringSizes, polySizes), simplifyPx,
-          if (sharedBorders) Some(toSegSetFlat(sharedFlat)) else None)
-        val flat = new Array[Int](rings.map(_.length).sum * 2)
-        var i = 0
-        rings.foreach(_.foreach { p =>
-          flat(i) = p._1; flat(i + 1) = p._2; i += 2
-        })
-        (z, x, y, rank, fid, flat, rings.map(_.length).toArray)
+        val (flat, sizes) = tileRings(z, x, y, coords, ringSizes, polySizes,
+          simplifyPx, if (sharedBorders) Some(toSegSetFlat(sharedFlat)) else None)
+        (z, x, y, rank, fid, flat, sizes)
       }
       .toDF("z", "x", "y", "density_rank", "fid", "rings_flat", "ring_sizes")
       .filter(size(col("rings_flat")) > 0)
   }
-
-  /** Stage 2 — MVT encode: one polygon layer through [[encodeTiles]];
-    * tiles left with zero features are dropped. The input is
-    * [[polygonTileFeatures]]' output plus an `attrs` map column — the
-    * pipeline attaches it with the per-decade `tile-join --if-matched`
-    * join on fid (`build.sh:208`, [[graft.Pipeline.choroDecadeEncode]]).
-    *
-    * @param coalesce over-budget strategy: true =
-    *                 `--coalesce-smallest-as-needed` (merge attr-identical
-    *                 features, keep coverage — the reference's choropleth
-    *                 setting), false = `--drop-densest-as-needed` prefix
-    *                 drop
-    * @return DataFrame (z, x, y, n_features, tile_bytes)
-    */
-  def encodePolygonTiles(tileFeatures: DataFrame, layerName: String,
-                         coalesce: Boolean = false): DataFrame =
-    encodeTiles(tileFeatures.withColumn("decade", lit(""))
-        .withColumn("layer", lit(0)),
-      Seq(Layer(_ => layerName, polygons = true, coalesce = coalesce)))
-      .drop("decade")
 
   /** One MVT layer of [[encodeTiles]]: rows tagged `layer = i` encode as
     * `layers(i)`, named `name(decade)`. A polygon layer that kept no
@@ -359,13 +275,13 @@ object TileBuild {
     * `build.sh:214`). A tile none of whose layers encodes is dropped.
     *
     * @param rows (decade, z, x, y, layer, density_rank, fid, rings_flat,
-    *             ring_sizes, attrs), geometry in [[polygonTileFeatures]]'
-    *             flat wire format (a point is a one-point ring); a
-    *             single-layer build passes an empty `decade`
+    *             ring_sizes, attrs), geometry in the flat format (a
+    *             point is a one-point ring), which [[Mvt.Feature]] takes
+    *             as it is; a build without decades passes an empty
+    *             `decade`
     * @return (decade, z, x, y, n_features, tile_bytes)
     */
-  private[graft] def encodeTiles(rows: DataFrame, layers: Seq[Layer],
-                                 byteBudget: Int = ByteBudget): DataFrame = {
+  private[graft] def encodeTiles(rows: DataFrame, layers: Seq[Layer]): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
     rows.select("decade", "z", "x", "y", "layer", "density_rank", "fid",
@@ -382,22 +298,13 @@ object TileBuild {
             // pinned order: density_rank already encodes (importance desc,
             // tie id) — renderers that draw/drop in feature order see the
             // most important features first (tippecanoe discipline)
-            val feats = rs.sortBy(t => (t._6, t._7)).map { t =>
-              val (flat, ringSizes) = (t._8, t._9)
-              var ci = 0
-              val rings = ringSizes.toIndexedSeq.map { n =>
-                val ring = new Array[(Int, Int)](n)
-                var j = 0
-                while (j < n) { ring(j) = (flat(ci), flat(ci + 1)); ci += 2; j += 1 }
-                scala.collection.immutable.ArraySeq.unsafeWrapArray(ring): Seq[(Int, Int)]
-              }
-              Mvt.Feature(t._7, geomType, rings,
-                t._10.toSeq.filter(_._2 != null).sortBy(_._1))
-            }
+            val feats = rs.sortBy(t => (t._6, t._7)).map(t =>
+              Mvt.Feature(t._7, geomType, t._8, t._9,
+                t._10.toSeq.filter(_._2 != null).sortBy(_._1)))
             val name = layer.name(key._1)
             val (n, bytes) =
-              if (layer.coalesce) coalesceToByteBudget(name, feats, byteBudget)
-              else fitToByteBudget(name, feats, byteBudget)
+              if (layer.coalesce) coalesceToByteBudget(name, feats, ByteBudget)
+              else fitToByteBudget(name, feats, ByteBudget)
             kept += n
             if (n > 0 || !layer.polygons) Some(bytes) else None
           }
@@ -428,12 +335,13 @@ object TileBuild {
     // smallest total vertex count first (deterministic tie on min id)
     val groups = feats.zipWithIndex.groupBy(_._1.attrs).values
       .filter(_.length >= 2).toSeq
-      .sortBy(g => (g.map(_._1.rings.map(_.length).sum).sum, g.map(_._1.id).min))
+      .sortBy(g => (g.map(_._1.ringSizes.sum).sum, g.map(_._1.id).min))
     def coalesced(k: Int): Seq[Mvt.Feature] = {
       val merged = groups.take(k).map { g =>
         val members = g.sortBy(_._2) // keep importance order
-        (members.head._2, Mvt.Feature(members.map(_._1.id).min,
-          Mvt.PolygonGeom, members.flatMap(_._1.rings), members.head._1.attrs))
+        (members.head._2, Mvt.Feature(members.map(_._1.id).min, Mvt.PolygonGeom,
+          Array.concat(members.map(_._1.coords): _*),
+          Array.concat(members.map(_._1.ringSizes): _*), members.head._1.attrs))
       }.toMap
       val dropIdx = groups.take(k).flatMap(_.drop(1).map(_._2)).toSet
       feats.indices.collect {

@@ -297,9 +297,10 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
       "no stage of the composed pipeline may plan a cartesian product")
   }
 
-  test("graft.Main -e -t is scan-once too: wide, extents and tiles share one pivot") {
-    // Main reads every raw metric column, so its fixture carries the
-    // full raw header, with scattered empty cells
+  /** Main reads every raw metric column, so its fixture carries the full
+    * raw header, with scattered empty cells.
+    */
+  private lazy val mainFixtureCsv: String = {
     val metrics = graft.config.EtlConfig.columnMapRaw.map(_._1)
       .filterNot(Seq("id", "year", "name", "parent_location").contains)
     val header = ("id,year,name,parent_location" +: metrics).mkString(",")
@@ -310,8 +311,12 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     val csv = java.nio.file.Paths.get(
       Files.createTempDirectory("main-fixture").toString, "data.csv")
     Files.write(csv, (header +: rows).mkString("", "\n", "\n").getBytes("UTF-8"))
+    csv.toString
+  }
+
+  test("graft.Main -e -t is scan-once too: wide, extents and tiles share one pivot") {
     val out = Files.createTempDirectory("main-out").toString
-    val args = Main.parseArgs(Seq("--data", csv.toString, "--out", out,
+    val args = Main.parseArgs(Seq("--data", mainFixtureCsv, "--out", out,
       "-e", "-t", "--geo", fixtureGeoJson))
     val all = capturePlans(Main.run(spark, args))
 
@@ -331,6 +336,36 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     assert(parts(s"$out/counties.extents").size == 1,
       "extents CSV is one part file")
     assert(new java.io.File(s"$out/tiles/counties/00/metadata.json").exists)
+  }
+
+  /** Relative path → SHA-256 (hex) of every file under `dir`. */
+  private def treeDigests(dir: String): Map[String, String] = {
+    val base = Paths.get(dir)
+    Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => base.relativize(p).toString -> sha256(Files.readAllBytes(p))).toMap
+  }
+
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .map("%02x".format(_)).mkString
+
+  test("graft.Main re-run over an existing --out leaves no stale tile behind") {
+    def runMain(out: String): Unit = Main.run(spark, Main.parseArgs(Seq(
+      "--data", mainFixtureCsv, "--out", out, "-t", "--geo", fixtureGeoJson)))
+    val fresh = Files.createTempDirectory("main-fresh").toString
+    runMain(fresh)
+    // a tile counties never produces (its zooms stop at 7), planted as an
+    // earlier run over other data would have left it
+    val out = Files.createTempDirectory("main-rerun").toString
+    val stale = Paths.get(s"$out/tiles/counties/00/9/0/0.pbf")
+    Files.createDirectories(stale.getParent)
+    Files.write(stale, Array[Byte](26, 0))
+    runMain(out)
+    assert(!Files.exists(stale), "the stale tile survived the re-run")
+    assert(treeDigests(s"$out/tiles/counties") == treeDigests(s"$fresh/tiles/counties"),
+      "a re-run must leave the tree a fresh run writes")
+    assert(new java.io.File(s"$out/tiles").list().toSeq == Seq("counties"),
+      "no staging directory may remain beside the tree")
   }
 
   test("job count: a warm runRegion plans both decades as one tile plan and one sink pass") {
@@ -357,7 +392,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
       captureJobs(Pipeline.extents(wide).collect())
     }
     // the rank passes are RDD jobs outside any SQL execution
-    assert(executions.map(_._1) == Seq("", "localCheckpoint at Pipeline.scala:94"),
+    assert(executions.map(_._1) == Seq("", "localCheckpoint at Pipeline.scala:95"),
       s"extents must be one histogram checkout plus its folds: $executions")
     val jobs = executions.map(_._2).sum
     assert(jobs == ExtentsJobs, s"$jobs jobs per warm extents: $executions")
@@ -406,12 +441,15 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
       s"a map holds non-bubble fields: ${mapKeys.map(_.filterNot(bubbleFields.contains))}")
   }
 
-  test("decadeTiles layer by layer, J3-merged, matches runRegion's tree tile for tile") {
-    // brick-laid shared-border grid (IncrementalSpec's fixture pattern,
-    // rows offset by half a cell): every border carries a T-junction
-    // vertex, so shared-border simplification depends on the full
-    // neighbour set. The middle cell has geometry but no data row.
-    val dir = Files.createTempDirectory("one-choro").toString
+  private val brickMetrics = Seq("population", "filing_rate")
+
+  /** A brick-laid shared-border grid (IncrementalSpec's fixture pattern,
+    * rows offset by half a cell) under `dir`: every border carries a
+    * T-junction vertex, so shared-border simplification depends on the
+    * full neighbour set. The middle cell has geometry but no data row.
+    * Returns the features and the long CSV of [[brickMetrics]].
+    */
+  private def brickGrid(dir: String): (org.apache.spark.sql.DataFrame, String) = {
     val (cols, rows, hole) = (6, 5, 14)
     def geoid(c: Int) = f"$c%05d"
     // lattice coordinates from integer steps, so both owners of a border
@@ -430,19 +468,21 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     Files.write(Paths.get(dir, "f.jsonl"), gj.getBytes("UTF-8"))
     val features = Pipeline.geometryFeatures(
       graft.sources.Sources.readGeoJsonLines(spark, s"$dir/f.jsonl"))
-    val metrics = Seq("population", "filing_rate")
     val csv = new StringBuilder(
       "id,year,name,parent_location,population,filing_rate\n")
     for (c <- 0 until cols * rows if c != hole; y <- 2000 to 2018)
       csv.append(s"${geoid(c)},$y,Cell $c,Gridland," +
         s"${(c * 31 + y) % 97 + 1},${(c * 7 + y) % 13 + 1}\n")
     Files.write(Paths.get(dir, "data.csv"), csv.toString.getBytes("UTF-8"))
+    (features, s"$dir/data.csv")
+  }
 
+  test("decadeTiles layer by layer, J3-merged, matches runRegion's tree tile for tile") {
+    val dir = Files.createTempDirectory("one-choro").toString
+    val (features, csv) = brickGrid(dir)
     val out = s"$dir/tiles"
-    val wide = Pipeline.runRegion(spark, s"$dir/data.csv", "raw", metrics,
+    val wide = Pipeline.runRegion(spark, csv, "raw", brickMetrics,
       "counties", features = Some(features), outDir = Some(out))
-    def md5(b: Array[Byte]) = java.security.MessageDigest.getInstance("MD5")
-      .digest(b).map("%02x".format(_)).mkString
     for (decade <- Seq("00", "10")) {
       def layer(name: String) = Pipeline.decadeTiles(wide, features, "raw",
           decade, name, "counties").collect()
@@ -450,14 +490,11 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
           s"${r.getAs[Long]("y")}.pbf" -> r.getAs[Array[Byte]]("tile_bytes")).toMap
       val (bubble, choro) = (layer("bubble"), layer("choropleth"))
       val merged = (bubble.keySet ++ choro.keySet).map { k =>
-        k -> md5(bubble.getOrElse(k, Array.empty[Byte]) ++
+        k -> sha256(bubble.getOrElse(k, Array.empty[Byte]) ++
           choro.getOrElse(k, Array.empty[Byte]))
       }.toMap
-      val base = Paths.get(s"$out/counties/$decade")
-      val tree = Files.walk(base).iterator().asScala
-        .filter(_.toString.endsWith(".pbf"))
-        .map(p => base.relativize(p).toString ->
-          md5(Files.readAllBytes(p))).toMap
+      val tree = treeDigests(s"$out/counties/$decade")
+        .filter(_._1.endsWith(".pbf"))
       assert(choro.nonEmpty && tree.nonEmpty)
       assert(merged == tree, s"decade $decade: " +
         s"missing=${(tree.keySet -- merged.keySet).take(3)} " +
@@ -465,4 +502,71 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
         s"changed=${tree.count { case (k, v) => merged.get(k).exists(_ != v) }}")
     }
   }
+
+  test("tile bytes: the brick-grid tree and the edge-point tile hash to their recorded SHA-256 digests") {
+    // absolute pins, so drift shared by every tile path shows (a
+    // comparison of two paths cannot see it): both decades, both layers,
+    // shared borders and the data-less cell of the brick grid, and the
+    // lon=180 / lat=-86 point clamped into the last tile's last pixel
+    val dir = Files.createTempDirectory("digests").toString
+    val (features, csv) = brickGrid(dir)
+    Pipeline.runRegion(spark, csv, "raw", brickMetrics, "counties",
+      features = Some(features), outDir = Some(s"$dir/tiles"))
+    val tree = treeDigests(s"$dir/tiles/counties")
+    import spark.implicits._
+    val pts = Seq((1L, 180.0, -86.0, "edge"), (2L, 0.5, 0.5, "mid"))
+      .toDF("id", "lon", "lat", "tag")
+    val edge = TilingSpec.pointTiles(pts, Seq("tag"), "edge-layer", 1, 1)
+      .filter(col("x") === 1 && col("y") === 1)
+      .select("tile_bytes").as[Array[Byte]].collect()
+    assert(edge.length == 1, "one edge tile at 1/1/1")
+    val got = tree + ("edge-point 1/1/1.pbf" -> sha256(edge(0)))
+    val drift = (got.keySet ++ TileDigests.keySet).toSeq.sorted
+      .filter(k => got.get(k) != TileDigests.get(k))
+    assert(drift.isEmpty, "tile bytes drifted (file, digest now):" +
+      drift.map(k => s"\n$k ${got.getOrElse(k, "-")}").mkString)
+  }
+
+  /** SHA-256 of every file of the brick-grid tree, and of the edge-point
+    * tile.
+    */
+  private val TileDigests = Map(
+    "00/0/0/0.pbf" ->
+      "dc46ad8af33cbd5fb153f575d036b85a599cef4592471a0b733eb670822b6fd5",
+    "00/1/0/0.pbf" ->
+      "23e534abb1086d37d1186067295491bcff42ba45f8f2863ed8b61417d2047bae",
+    "00/2/0/1.pbf" ->
+      "745e0c3150cdb0f4d051812356c2105197d947f4f35703a207f64b047fc8b4c5",
+    "00/3/1/3.pbf" ->
+      "2fcbc57bbfa10e54c50b781b8593935340f5d1a518014d6fb81f65f975185aa6",
+    "00/4/3/6.pbf" ->
+      "bc8149ae597627801e5326cd1246bb3d32e97297c15f15eec3ca5fe2eaa6e889",
+    "00/5/7/13.pbf" ->
+      "0ec8633b86d6091070cfd5c1f3674cda7aa76e716f6b707807ff951907459d03",
+    "00/6/14/26.pbf" ->
+      "0a1e580197c063b88f7a0df627a98854853c5266b78b68501bf88d7c3bda9fef",
+    "00/7/28/52.pbf" ->
+      "7b7731a02fcf317becd71b6ca09d5b60a5376e8efd9f8ad71541d9d6051e7283",
+    "00/metadata.json" ->
+      "87f20db0672d6d1b26d2de35354928d79b162b726f05698286babd8d98b620b3",
+    "10/0/0/0.pbf" ->
+      "28f97c6430b7f3bcfca1488a6d96d97bc23012e0196ecee620494346c00b881e",
+    "10/1/0/0.pbf" ->
+      "c53b8395f37992c94cc3638d314cf0e532bde74b8a58f549c1259493dcdd8453",
+    "10/2/0/1.pbf" ->
+      "bd3ce778a0798363479e91a59963f5ff8c33f038b29371ced1e34432343f4a66",
+    "10/3/1/3.pbf" ->
+      "d2bc53ec27398384453c4570763a3dbcb64b233a2f7fc729f0db916d387b7915",
+    "10/4/3/6.pbf" ->
+      "0771f7cd03073ab11d9934910da22a5e8fc50e3dc0b53eb3c56f5e65a154bb54",
+    "10/5/7/13.pbf" ->
+      "28499645d2794cb11cdef39e081b766e6f6df2ea348a719f8f593df6506fe95c",
+    "10/6/14/26.pbf" ->
+      "f4ad15415d890f37430b86458ffdc0cf28df6d69ff53792db6d67dff9fb2b268",
+    "10/7/28/52.pbf" ->
+      "a28085d559d85e27f10194e64c6a51598f5e5792bbb1f04e986127d69a297757",
+    "10/metadata.json" ->
+      "87c41cb4583468817f42306dfc96c9dfcf6f43a88f27ded34e8cadae4d67182e",
+    "edge-point 1/1/1.pbf" ->
+      "39bd38a79d77dea8c27e97b649cac53de730b0a8e32642ae646a8e0fd524a589")
 }

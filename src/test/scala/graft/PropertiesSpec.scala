@@ -75,7 +75,8 @@ object TilingProperties extends Properties("tiling") {
   property("MVT point geometry roundtrips through zigzag deltas") =
     forAll(Gen.listOfN(5, Gen.zip(Gen.choose(0, 4095), Gen.choose(0, 4095)))) {
       pts =>
-        val cmds = Mvt.encodeGeometry(Mvt.PointGeom, Seq(pts))
+        val cmds = Mvt.encodeGeometry(Mvt.PointGeom,
+          pts.flatMap(p => Seq(p._1, p._2)).toArray, Array(pts.length))
         def unzig(v: Long): Long = (v >>> 1) ^ -(v & 1)
         val decoded = cmds.tail.grouped(2).scanLeft((0L, 0L)) {
           case ((x, y), Seq(dx, dy)) => (x + unzig(dx), y + unzig(dy))

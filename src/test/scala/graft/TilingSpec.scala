@@ -12,12 +12,13 @@ import graft.sinks.{Mvt, TileBuild}
   */
 class TilingSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
+  import TilingSpec.{encodeOne, pointTiles}
 
   test("tile math: known anchors (0,0)->center tile, clamps at poles") {
     val df = Seq((0.0, 0.0), (-180.0, 85.06), (179.9, -85.06))
       .toDF("lon", "lat")
     val out = df.select(
-      Tiling.tileX($"lon", 2).as("x"), Tiling.tileY($"lat", 2).as("y"))
+      Tiling.tileX($"lon", lit(2)).as("x"), Tiling.tileY($"lat", lit(2)).as("y"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out(0) == (2L, 2L)) // greenwich/equator at z2 = tile (2,2)
     assert(out(1) == (0L, 0L)) // NW corner clamped
@@ -34,47 +35,47 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
   test("tile x/y doubles when zoom increments") {
     val df = Seq((100.3, 45.7)).toDF("lon", "lat")
     val r = df.select(
-      Tiling.tileX($"lon", 5).as("x5"), Tiling.tileX($"lon", 6).as("x6"),
-      Tiling.tileY($"lat", 5).as("y5"), Tiling.tileY($"lat", 6).as("y6"))
+      Tiling.tileX($"lon", lit(5)).as("x5"), Tiling.tileX($"lon", lit(6)).as("x6"),
+      Tiling.tileY($"lat", lit(5)).as("y5"), Tiling.tileY($"lat", lit(6)).as("y6"))
       .collect()(0)
     assert(r.getLong(1) / 2 == r.getLong(0))
     assert(r.getLong(3) / 2 == r.getLong(2))
   }
 
-  test("pixelInTile pins antimeridian/pole edges inside [0, 4095]") {
-    // lon=180 -> fx = 2^z exactly; lat <= -85.05112878 -> merc = 1, fy = 2^z.
-    // Both must land at pixel 4095 of the LAST tile, never pixel 4096.
-    val df = Seq((180.0, -86.0), (-180.0, 85.06), (0.0, 0.0))
-      .toDF("lon", "lat")
-    val (px, py) = Tiling.pixelInTile($"lon", $"lat", z = 3)
-    val out = df.select(px.as("px"), py.as("py")).collect()
-    assert(out(0).getInt(0) == 4095 && out(0).getInt(1) == 4095)
-    assert(out(1).getInt(0) == 0 && out(1).getInt(1) == 0)
-    out.foreach { r =>
-      assert(r.getInt(0) >= 0 && r.getInt(0) <= 4095)
-      assert(r.getInt(1) >= 0 && r.getInt(1) <= 4095)
-    }
-  }
+  /** An [[Mvt.Feature]] from nested rings, flattened to its format. */
+  private def feature(id: Long, geom: Mvt.GeomType, rings: Seq[Seq[(Int, Int)]],
+                      attrs: Seq[(String, Any)]): Mvt.Feature =
+    Mvt.Feature(id, geom, rings.flatten.flatMap(p => Seq(p._1, p._2)).toArray,
+      rings.map(_.length).toArray, attrs)
 
-  test("buildPointTiles clamps edge features to the MVT extent") {
-    val pts = Seq((1L, 180.0, -86.0, "edge"), (2L, 0.5, 0.5, "mid"))
+  test("point tiles clamp edge features to the MVT extent") {
+    val pts = Seq((1L, 180.0, -86.0, "edge"), (2L, 0.5, 0.5, "mid"),
+        (3L, -180.0, 85.06, "corner"))
       .toDF("id", "lon", "lat", "tag")
-    val tiles = TileBuild.buildPointTiles(pts, "id", "lon", "lat",
-      Seq("tag"), "edge-layer", minZoom = 1, maxZoom = 1)
-    // decode-back: every MoveTo param must zigzag-decode to [0, 4095]
-    tiles.select("tile_bytes").collect().foreach { r =>
-      val bytes = r.getAs[Array[Byte]](0)
-      // crude varint scan is overkill; instead re-encode the expected
-      // clamped feature and check the edge tile matches it exactly
-      assert(bytes.length > 0)
+    // lon=180 -> fx = 2^z exactly; lat <= -85.05112878 -> merc = 1, fy =
+    // 2^z. Both must land at pixel 4095 of the LAST tile, never pixel
+    // 4096; the NW corner is pixel (0, 0) of tile (0, 0)
+    val px = TileBuild.pointTileRows(pts, "id", "lon", "lat", 3, 3)
+      .select("id", "x", "y", "px", "py").as[(Long, Long, Long, Int, Int)]
+      .collect().map(r => r._1 -> r).toMap
+    assert(px(1L) == ((1L, 7L, 7L, 4095, 4095)))
+    assert(px(3L) == ((3L, 0L, 0L, 0, 0)))
+    px.values.foreach { case (_, _, _, x, y) =>
+      assert(x >= 0 && x <= 4095 && y >= 0 && y <= 4095)
     }
-    val edgeTile = tiles.filter($"z" === 1 && $"x" === 1 && $"y" === 1)
-    assert(edgeTile.count() == 1) // lon=180 lands in tile x=1 (clamped), not x=2
-    val expected = Mvt.encodeLayer("edge-layer",
-      Seq(Mvt.Feature(1L, Mvt.PointGeom, Seq(Seq((4095, 4095))),
-        Seq("tag" -> "edge"))))
-    assert(edgeTile.select("tile_bytes").collect()(0)
-      .getAs[Array[Byte]](0).sameElements(expected))
+    val tiles = pointTiles(pts, Seq("tag"), "edge-layer", minZoom = 1, maxZoom = 1)
+    def tileAt(x: Long, y: Long): Array[Byte] = {
+      val t = tiles.filter($"z" === 1 && $"x" === x && $"y" === y)
+        .select("tile_bytes").as[Array[Byte]].collect()
+      assert(t.length == 1, s"one tile at 1/$x/$y")
+      t(0)
+    }
+    // lon=180 lands in tile x=1 (clamped), not x=2: the encoded tile holds
+    // exactly the clamped feature
+    assert(tileAt(1, 1).sameElements(Mvt.encodeLayer("edge-layer",
+      Seq(feature(1L, Mvt.PointGeom, Seq(Seq((4095, 4095))), Seq("tag" -> "edge"))))))
+    assert(tileAt(0, 0).sameElements(Mvt.encodeLayer("edge-layer",
+      Seq(feature(3L, Mvt.PointGeom, Seq(Seq((0, 0))), Seq("tag" -> "corner"))))))
   }
 
   test("base-zoom thinning: ~2.5x/zoom below base, nested, base+ untouched") {
@@ -102,13 +103,12 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
       assert(byZoom(z).subsetOf(byZoom(z + 1)), s"z=$z not nested in z=${z + 1}")
   }
 
-  test("buildPointTiles applies --base-zoom before the tile shuffle") {
+  test("point tiles apply --base-zoom before the tile shuffle") {
     val pts = (1L to 500L).map(i =>
         (i, (i * 7 % 360 - 180 + 0.5).toDouble, (i * 13 % 160 - 80 + 0.5).toDouble))
       .toDF("id", "lon", "lat")
     def perZoom(baseZoom: Option[Int]): Map[Int, Long] =
-      TileBuild.buildPointTiles(pts, "id", "lon", "lat", Nil, "bz",
-          minZoom = 1, maxZoom = 4, baseZoom = baseZoom)
+      pointTiles(pts, Nil, "bz", minZoom = 1, maxZoom = 4, baseZoom = baseZoom)
         .groupBy("z").agg(sum("n_features").as("n"))
         .as[(Int, Long)].collect().toMap
     val thinned = perZoom(Some(4)); val flat = perZoom(None)
@@ -149,22 +149,22 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("MVT varint geometry: point encodes MoveTo + zigzag coords") {
-    val cmds = Mvt.encodeGeometry(Mvt.PointGeom, Seq(Seq((10, 7))))
+    val cmds = Mvt.encodeGeometry(Mvt.PointGeom, Array(10, 7), Array(1))
     assert(cmds == Seq((1L | (1L << 3)), 20L, 14L)) // MoveTo(1), zz(10), zz(7)
   }
 
   test("MVT polygon geometry closes ring without duplicate vertex") {
-    val ring = Seq((0, 0), (10, 0), (10, 10), (0, 0)) // closed input
-    val cmds = Mvt.encodeGeometry(Mvt.PolygonGeom, Seq(ring))
+    val ring = Array(0, 0, 10, 0, 10, 10, 0, 0) // closed input
+    val cmds = Mvt.encodeGeometry(Mvt.PolygonGeom, ring, Array(4))
     // MoveTo 1, 2 params, LineTo 2, 4 params, ClosePath
     assert(cmds == Seq(9L, 0L, 0L, (2L | (2L << 3)), 20L, 0L, 0L, 20L, 7L))
   }
 
   test("encodeLayer produces parseable deterministic bytes with interned keys") {
     val feats = Seq(
-      Mvt.Feature(1L, Mvt.PointGeom, Seq(Seq((100, 200))),
+      feature(1L, Mvt.PointGeom, Seq(Seq((100, 200))),
         Seq("name" -> "a", "v" -> 1.5)),
-      Mvt.Feature(2L, Mvt.PointGeom, Seq(Seq((300, 400))),
+      feature(2L, Mvt.PointGeom, Seq(Seq((300, 400))),
         Seq("name" -> "b", "v" -> 1.5)))
     val b1 = Mvt.encodeLayer("test", feats)
     val b2 = Mvt.encodeLayer("test", feats)
@@ -177,27 +177,24 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("byte budget drops densest features until the tile fits") {
-    // 200 points in ONE z0 tile, importance = id: the byte cap must keep
-    // an importance-ordered prefix and the encoded tile must fit
-    val pts = (1 to 200)
-      .map(i => (i.toLong, i * 0.01, i * 0.01, s"val-${i}-end", i.toDouble))
-      .toDF("id", "lon", "lat", "tag", "imp")
+    // 200 points in ONE tile in importance order (id desc, as the point
+    // build's density_rank orders them): the byte cap must keep the
+    // largest importance-ordered prefix and the encoded tile must fit
+    val feats = (200 to 1 by -1).map(i => feature(i.toLong, Mvt.PointGeom,
+      Seq(Seq((i * 10, i * 10))), Seq("tag" -> s"val-$i-end")))
     val cap = 1500
-    val tiles = TileBuild.buildPointTiles(pts, "id", "lon", "lat",
-      Seq("tag"), "dense", minZoom = 0, maxZoom = 0,
-      importanceCol = Some("imp"), byteBudget = cap)
-    val r = tiles.collect()(0)
-    val kept = r.getAs[Int]("n_features")
-    val bytes = r.getAs[Array[Byte]]("tile_bytes")
+    val (kept, bytes) = TileBuild.fitToByteBudget("dense", feats, cap)
     assert(bytes.length <= cap, s"tile ${bytes.length}B over the ${cap}B cap")
     assert(kept > 0 && kept < 200, s"expected a proper prefix, kept=$kept")
+    assert(bytes.sameElements(Mvt.encodeLayer("dense", feats.take(kept))))
     // keeping one more feature must overflow (largest fitting prefix)
-    val uncapped = TileBuild.buildPointTiles(pts, "id", "lon", "lat",
-      Seq("tag"), "dense", 0, 0, importanceCol = Some("imp"))
-    assert(uncapped.collect()(0).getAs[Int]("n_features") == 200)
-    // the kept features are the HIGHEST-importance ones (imp = id desc
-    // => ids 200, 199, ...): the encoded tile must contain the top id's
-    // attr string and not the lowest id's
+    assert(Mvt.encodeLayer("dense", feats.take(kept + 1)).length > cap)
+    // a layer that fits passes through whole
+    val full = Mvt.encodeLayer("dense", feats)
+    val (all, allBytes) = TileBuild.fitToByteBudget("dense", feats, full.length)
+    assert(all == 200 && allBytes.sameElements(full))
+    // the kept features are the HIGHEST-importance ones: the encoded tile
+    // must contain the top id's attr string and not the lowest id's
     val s = new String(bytes.map(b => (b & 0xff).toChar))
     assert(s.contains("val-200-end") && !s.contains("val-1-end"))
   }
@@ -266,9 +263,9 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
     val attrs = df.select($"id".cast("long").as("fid"),
       map(attrCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*)
         .as("attrs"))
-    TileBuild.encodePolygonTiles(TileBuild.polygonTileFeatures(df, "id",
+    encodeOne(TileBuild.polygonTileFeatures(df, "id",
         "polys", minZoom, maxZoom, simplifyPx, sharedBorders)
-      .join(attrs, Seq("fid")), layer)
+      .join(attrs, Seq("fid")), TileBuild.Layer(_ => layer, polygons = true))
   }
 
   test("polygon build: clip splits a straddling square; bytes decode back") {
@@ -297,7 +294,7 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
       Geometry.clipRing(Tiling.simplify(proj, 1.0), ox, oy, ox + 4096, oy + 4096),
       ox, oy), exterior = true)
     val ne = got.find(t => t._2 == 1L && t._3 == 0L).get
-    val expBytes = Mvt.encodeLayer("choro", Seq(Mvt.Feature(7L,
+    val expBytes = Mvt.encodeLayer("choro", Seq(feature(7L,
       Mvt.PolygonGeom, Seq(expRing), Seq("color" -> "blue"))))
     assert(ne._5.sameElements(expBytes),
       s"tile bytes differ: got ${ne._5.length}B want ${expBytes.length}B")
@@ -336,7 +333,7 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
     val outer = ring(Seq((-60.0, -50.0), (60.0, -50.0), (60.0, 50.0), (-60.0, 50.0)), ext = true)
     val hole = ring(Seq((-20.0, -15.0), (20.0, -15.0), (20.0, 15.0), (-20.0, 15.0)), ext = false)
     assert(Geometry.intArea2(outer) > 0 && Geometry.intArea2(hole) < 0)
-    val exp = Mvt.encodeLayer("t", Seq(Mvt.Feature(1L, Mvt.PolygonGeom,
+    val exp = Mvt.encodeLayer("t", Seq(feature(1L, Mvt.PolygonGeom,
       Seq(outer, hole), Nil)))
     assert(bytes.sameElements(exp))
   }
@@ -344,7 +341,7 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
   test("coalesceToByteBudget merges attr-identical features, keeps coverage") {
     val feats = (1 to 20).map { i =>
       val g = if (i <= 10) "grp-A" else "grp-B"
-      Mvt.Feature(i.toLong, Mvt.PolygonGeom,
+      feature(i.toLong, Mvt.PolygonGeom,
         Seq(Seq((i * 50, i * 50), (i * 50 + 40, i * 50), (i * 50 + 40, i * 50 + 40))),
         Seq("grp" -> g))
     }
@@ -430,12 +427,11 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
     assert(shared(0).getLong(1) == 2L)
   }
 
-  test("buildPointTiles + writePbfDirectory emits z/x/y.pbf tree") {
+  test("point tiles + writePbfDirectory emit a z/x/y.pbf tree") {
     val pts = Seq(
       (1L, 10.5, 20.5, "a"), (2L, 10.6, 20.6, "b"), (3L, -100.0, -40.0, "c"))
       .toDF("id", "lon", "lat", "tag")
-    val tiles = TileBuild.buildPointTiles(pts, "id", "lon", "lat",
-      Seq("tag"), "layer0", minZoom = 2, maxZoom = 3)
+    val tiles = pointTiles(pts, Seq("tag"), "layer0", minZoom = 2, maxZoom = 3)
     val n = tiles.count()
     assert(n >= 3 && n <= 4) // pts 1,2 share tiles; pt 3 separate
     val out = java.nio.file.Files.createTempDirectory("tiles").toString
@@ -473,4 +469,23 @@ class TilingSpec extends AnyFunSuite with SharedSpark {
       assert(quad.max - quad.min == 3, s"block ($bx,$by) not contiguous: $quad")
     }
   }
+}
+
+object TilingSpec {
+
+  /** One layer through the encode kernel, as a build without decades. */
+  def encodeOne(rows: DataFrame, layer: TileBuild.Layer): DataFrame =
+    TileBuild.encodeTiles(rows.withColumn("decade", lit(""))
+      .withColumn("layer", lit(0)), Seq(layer))
+
+  /** The one point build, as the pipeline's bubble layer runs it: the
+    * point rows, an attribute map, then the encode.
+    */
+  def pointTiles(pts: DataFrame, attrCols: Seq[String], layer: String,
+                 minZoom: Int, maxZoom: Int,
+                 baseZoom: Option[Int] = None): DataFrame =
+    encodeOne(TileBuild.pointTileRows(pts, "id", "lon", "lat", minZoom,
+        maxZoom, baseZoom)
+      .withColumn("attrs", map(attrCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*)),
+      TileBuild.Layer(_ => layer, polygons = false))
 }
