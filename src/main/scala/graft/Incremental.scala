@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.EtlConfig
-import graft.operators.{ArtifactCache, Geometry}
+import graft.operators.Geometry
 import graft.sinks.TileBuild
 import graft.sources.Sources
 
@@ -85,21 +85,15 @@ object Incremental {
     if (zs.isEmpty) -1 else zs.max
   }
 
-  /** q135's diff keyed for the pipeline: per-GEOID fingerprint = the
-    * order-free commutative sum of row hashes (q145's primitive — CSV
-    * part split may order a GEOID's year rows differently between
-    * snapshots), full-outer join, non-`unchanged` rows out.
-    * Null cells are sentinel-coalesced so (a, null) and (null, a)
-    * fingerprint differently.
-    */
-  def geoidDiff(oldLong: DataFrame, newLong: DataFrame): DataFrame =
-    diffFingerprints(fingerprints(oldLong), fingerprints(newLong))
-
   /** Per-GEOID fingerprint frame (GEOID, fp) of a long table — the
     * PERSISTABLE diff artifact: [[incrementalRegion]] stores this
     * (|geoids| rows) next to each tile tree, and the next delta diffs
     * against the stored frame instead of re-hashing the previous
     * corpus — at 100 TB the old-side scan is most of the diff's cost.
+    * The fingerprint is the order-free commutative sum of row hashes
+    * (q145's primitive — CSV part split may order a GEOID's year rows
+    * differently between snapshots); null cells are sentinel-coalesced
+    * so (a, null) and (null, a) fingerprint differently.
     */
   def fingerprints(long: DataFrame): DataFrame = {
     val cols = long.columns.filterNot(_ == "id")
@@ -111,7 +105,8 @@ object Incremental {
       .withColumnRenamed("id", "GEOID")
   }
 
-  /** Classify two fingerprint frames; non-`unchanged` rows out. */
+  /** q135's diff keyed for the pipeline: classify two fingerprint
+    * frames in one full-outer join; non-`unchanged` rows out. */
   def diffFingerprints(oldFp: DataFrame, newFp: DataFrame): DataFrame =
     oldFp.withColumnRenamed("fp", "fpo")
       .join(newFp.withColumnRenamed("fp", "fpn"), Seq("GEOID"), "full_outer")
@@ -162,22 +157,6 @@ object Incremental {
         col("content").as("tile_bytes"))
   }
 
-  /** Publish a fingerprint frame as `regionDir/fingerprints.parquet`,
-    * crash-safe: it is written into a hidden staging sibling and swapped
-    * in ([[ArtifactCache.swapDir]]). A failed write deletes the staging
-    * dir and leaves the previous artifact as it was.
-    */
-  private[graft] def publishFingerprints(fs: FileSystem, fps: DataFrame,
-                                         regionDir: Path): Unit = {
-    val tag = java.util.UUID.randomUUID()
-    val staging = new Path(regionDir, s".fingerprints.$tag.staging")
-    try {
-      fps.write.parquet(staging.toString)
-      ArtifactCache.swapDir(fs, staging, new Path(regionDir, "fingerprints.parquet"),
-        new Path(regionDir, s".fingerprints.$tag.old"))
-    } finally fs.delete(staging, true)
-  }
-
   /** A small frame collected to the driver, and fed back as a local
     * frame: its exact size plans broadcast joins, and its consumers
     * re-plan nothing upstream of it.
@@ -199,7 +178,11 @@ object Incremental {
     * ([[Pipeline.staged]]), so `prevDir` is never written. Falls back to
     * the full pipeline when the changed-GEOID fraction exceeds
     * `maxChangedFraction` — q135's fraction readout is the signal that
-    * the incremental machinery costs more than it saves.
+    * the incremental machinery costs more than it saves. Every directory
+    * the call publishes goes through [[Pipeline.staged]]: the
+    * fingerprints in both modes, the copied tree, and the fallback's tree
+    * (inside [[Pipeline.runRegion]]); only the in-place tile update
+    * writes the live tree.
     *
     * The diff chain (new snapshot → fingerprints → diff and its counts)
     * runs beside the features → fan checkouts
@@ -272,18 +255,22 @@ object Incremental {
       val treeDeeperThanFan =
         treeMaxZoom(prevFs, new Path(s"$prevDir/$region")) > fanMaxZ
       // the NEW fingerprints publish for the next delta as the last step
-      // of each tree build — newFps is a checkout, so writing it late
-      // reads nothing the build replaced
+      // of each tree build ([[Pipeline.staged]]) — newFps is a checkout,
+      // so writing it late reads nothing the build replaced
+      def publishFps(region: Path): Unit =
+        Pipeline.staged(outFs, new Path(region, "fingerprints.parquet"))(p =>
+          newFps.write.parquet(p.toString))
       if (nTotal == 0 || treeDeeperThanFan ||
           (nChanged + nAdded + nRemoved).toDouble / nTotal > maxChangedFraction) {
         // a fresh tree replaces the whole region subtree (the reference's
         // own `rm -rf _proc` semantics — an overwrite-only rebuild would
-        // leave STALE tiles for (z,x,y)s the new data no longer produces)
-        Pipeline.staged(outFs, outDir, region) { tree =>
-          Pipeline.runRegion(spark, newCsvPath, inputType, metricLongNames,
-            region, features = Some(feats), outDir = Some(tree.getParent.toString))
-          publishFingerprints(outFs, newFps, tree)
-        }
+        // leave STALE tiles for (z,x,y)s the new data no longer produces);
+        // runRegion swaps it in, then the fingerprints follow: a crash
+        // between the two leaves the new tree without them, and the next
+        // call hashes `oldCsvPath` instead (the cold path)
+        Pipeline.runRegion(spark, newCsvPath, inputType, metricLongNames,
+          region, features = Some(feats), outDir = Some(outDir))
+        publishFps(new Path(s"$outDir/$region"))
         Stats(nChanged, nAdded, nRemoved, -1L, -1L, fullRebuild = true)
       } else {
         // the bookkeeping sets live on the driver, SIZED BY CONTRACT, not
@@ -332,7 +319,7 @@ object Incremental {
             outFs.delete(new Path(tree, s"$decade/${r.getAs[Int]("z")}/" +
               s"${r.getAs[Long]("x")}/${r.getAs[Long]("y")}.pbf"), false)
           TileBuild.writeTiles(rebuilt, tree.toString, Pipeline.TreeLevels)
-          publishFingerprints(outFs, newFps, tree)
+          publishFps(tree)
         }
         // in-place = outDir IS the previous tree (qualified-URI equality,
         // scheme-agnostic); a copy never writes the tree it reads, so a
@@ -340,7 +327,7 @@ object Incremental {
         val inPlace = outFs.makeQualified(new Path(outDir)) ==
           prevFs.makeQualified(new Path(prevDir))
         if (inPlace) update(new Path(s"$outDir/$region"))
-        else Pipeline.staged(outFs, outDir, region) { tree =>
+        else Pipeline.staged(outFs, new Path(s"$outDir/$region")) { tree =>
           if (!FileUtil.copy(prevFs, new Path(s"$prevDir/$region"), outFs,
               tree, false, hconf)) throw new java.io.IOException(s"cannot copy to $tree")
           update(tree)

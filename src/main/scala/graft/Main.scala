@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.config.EtlConfig
@@ -59,12 +58,13 @@ object Main {
 
   /** Every region through [[Pipeline.runRegion]], which writes the wide
     * and extents CSVs itself, so the long CSV is scanned once per region
-    * (PipelineSpec pins this for Main too).
+    * (PipelineSpec pins this for Main too), and publishes each output
+    * whole, so a re-run over an existing --out leaves no tile the new
+    * data does not produce.
     */
   def run(spark: SparkSession, args: Args): Unit = {
     val metricNames = EtlConfig.columnMap(args.inputType).map(_._1)
       .filterNot(Seq("id", "year", "name", "parent_location").contains)
-    val fs = new Path(args.out).getFileSystem(spark.sessionState.newHadoopConf())
     for (region <- args.regions) {
       val features = if (!args.tiles) None else args.geo.map { g =>
         if (g.endsWith(".geojson") || g.endsWith(".json"))
@@ -72,17 +72,12 @@ object Main {
         else if (g.endsWith(".parquet")) spark.read.parquet(g)
         else spark.read.option("header", true).csv(g)
       }
-      def runInto(treeDir: Option[String]) = Pipeline.runRegion(spark,
-        args.data, args.inputType, metricNames, region, features = features,
-        outDir = treeDir,
+      val wide = Pipeline.runRegion(spark, args.data, args.inputType,
+        metricNames, region, features = features,
+        outDir = Some(s"${args.out}/tiles"),
         wideOut = Some(s"${args.out}/$region.wide"),
         extentsOut =
           if (args.extents) Some(s"${args.out}/$region.extents") else None)
-      // the region's tree is built aside and swapped in whole, so a re-run
-      // over an existing --out leaves no tile the new data does not produce
-      val wide = if (features.isEmpty) runInto(None)
-        else Pipeline.staged(fs, s"${args.out}/tiles", region)(tree =>
-          runInto(Some(tree.getParent.toString)))
       val metricCols = wide.columns.count(c => !EtlConfig.idColumns.contains(c))
       println(s"[graft] $region: wide=${wide.columns.length} cols" +
         (if (args.extents) s", extents over $metricCols metric-year cols" else ""))

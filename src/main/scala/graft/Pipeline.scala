@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.config.EtlConfig
-import graft.operators.{ArtifactCache, Extents, Geometry, Joins, Shape, Tiling}
+import graft.operators.{Extents, Geometry, Joins, Shape, Tiling}
 import graft.sinks.TileBuild
 import graft.sources.Sources
 
@@ -96,6 +96,39 @@ object Pipeline {
       held.synchronized(held += c)
       c
     } finally held.synchronized(held.foreach(releaseCheckpoint))
+  }
+
+  /** The one publish protocol of this engine: every directory artifact
+    * is built whole beside its live path, then swapped in. `build`
+    * writes `<name>` inside a hidden sibling `.<name>.<uuid>.staging` of
+    * `live`, at the path it is given. The live dir, if any, is moved
+    * aside to `.<name>.<uuid>.old/<name>`, the built one renamed into its
+    * place and the old one deleted; if that rename fails, the old dir
+    * goes back and the call throws. Both siblings hold their tree one
+    * level down, so a fixture's parquet never sits where the oracle's
+    * glob reads (the parquet files one level below a fixture dir). The
+    * staging dir is deleted on every exit, so a failed build leaves
+    * `live` as it was, and nothing the new build no longer produces
+    * survives it.
+    */
+  private[graft] def staged[T](fs: FileSystem, live: Path)(build: Path => T): T = {
+    val tag = s"${live.getName}.${java.util.UUID.randomUUID()}"
+    val staging = new Path(live.getParent, s".$tag.staging")
+    val aside = new Path(live.getParent, s".$tag.old")
+    val (built, old) = (new Path(staging, live.getName), new Path(aside, live.getName))
+    try {
+      val result = build(built)
+      if (fs.exists(live) && !(fs.mkdirs(aside) && fs.rename(live, old))) {
+        fs.delete(aside, true)
+        throw new java.io.IOException(s"cannot move $live aside")
+      }
+      if (!fs.rename(built, live)) {
+        if (fs.rename(old, live)) fs.delete(aside, true) // put the live dir back, if any
+        throw new java.io.IOException(s"cannot swap in $built")
+      }
+      fs.delete(aside, true)
+      result
+    } finally fs.delete(staging, true)
   }
 
   /** Runs independent branches side by side and returns their results in
@@ -224,24 +257,6 @@ object Pipeline {
   /** The directory levels of a region's tile tree: `decade/z/x/y.pbf`. */
   private[graft] val TreeLevels = Seq("decade", "z", "x", "y")
 
-  /** `build` writes a region tree at the path it is given, inside a
-    * hidden staging sibling of `$outDir/$region`; the finished tree is
-    * swapped in whole ([[ArtifactCache.swapDir]]) and the staging dir
-    * deleted on every exit, so a failed build leaves the region as it was
-    * and a tile the new build no longer produces does not survive it.
-    */
-  private[graft] def staged[T](fs: FileSystem, outDir: String, region: String)(
-      build: Path => T): T = {
-    val tag = java.util.UUID.randomUUID()
-    val staging = new Path(s"$outDir/.$region.$tag.staging")
-    try {
-      val built = build(new Path(staging, region))
-      ArtifactCache.swapDir(fs, new Path(staging, region),
-        new Path(s"$outDir/$region"), new Path(s"$outDir/.$region.$tag.old"))
-      built
-    } finally fs.delete(staging, true)
-  }
-
   /** A region's tilesets as ONE lazy plan (`build.sh:121-231`: the base
     * tilesets, split per decade by `tile-join`): every decade in
     * `decades`, the bubble layer of `points` and the choropleth layer of
@@ -339,6 +354,12 @@ object Pipeline {
     * metadata.json files. Every plan is the one a serial run makes; only
     * their order in time changes.
     *
+    * Every output is published whole ([[staged]]): the tree, the wide
+    * CSV and the extents CSV are each built in a staging sibling and
+    * swapped in, so a failed run leaves each of them as it was, and a
+    * re-run over an existing tree leaves no tile the new data does not
+    * produce.
+    *
     * @param extendBudget densest-tile feature budget driving the
     *                     `--extend-zooms-if-still-dropping` decision for
     *                     both layers (tippecanoe's default tile budget;
@@ -364,16 +385,22 @@ object Pipeline {
       Sources.longSchema(metricLongNames))
     val pivot = shape(long, inputType)
     val tiles = features.isDefined && outDir.isDefined
+    val hconf = spark.sessionState.newHadoopConf()
+    def publish(live: String)(build: String => Unit): Unit = {
+      val p = new Path(live)
+      staged(p.getFileSystem(hconf), p)(dir => build(dir.toString))
+    }
     withCheckouts { checkout =>
       val (wide, writeTree) = concurrently(
         if (tiles || (wideOut.isDefined && extentsOut.isDefined)) checkout(pivot)
         else pivot,
         for (supplied <- features; out <- outDir) yield
-          prepareTree(checkout(supplied), inputType, region, out, extendBudget))
+          (prepareTree(checkout(supplied), inputType, region, extendBudget),
+            s"$out/$region"))
       concurrently(
-        wideOut.foreach(p => Sources.writeCsv(wide, p)),
-        extentsOut.foreach(p => Sources.writeCsv(extents(wide), p, singleFile = true)),
-        writeTree.foreach(_(wide)))
+        wideOut.foreach(publish(_)(Sources.writeCsv(wide, _))),
+        extentsOut.foreach(publish(_)(Sources.writeCsv(extents(wide), _, singleFile = true))),
+        writeTree.foreach { case (write, tree) => publish(tree)(write(wide, _)) })
     }
     pivot
   }
@@ -381,11 +408,11 @@ object Pipeline {
   /** Everything of a region's tile tree that does not read the pivot,
     * over the checked-out features `f` (one checkout serves the
     * extend-zooms probes, the polygon geometry, the bounds and the bubble
-    * layer); returns the writer of the tree under `out/region` given the
-    * wide frame.
+    * layer); returns the writer of the region's tree, given the wide
+    * frame and the tree's directory.
     */
   private def prepareTree(f: DataFrame, inputType: String, region: String,
-                          out: String, extendBudget: Int): DataFrame => Unit = {
+                          extendBudget: Int): (DataFrame, String) => Unit = {
     val hasPolys = f.columns.contains("polys")
     val zoom = EtlConfig.choroplethZoom(region)
     val bz = EtlConfig.bubbleZoom(region)
@@ -426,11 +453,11 @@ object Pipeline {
     val maxZoomOut = math.max(bubbleMaxZ.getOrElse(bz.maxZoom), choroMaxZ)
     // the whole tree, both decades, in one encode shuffle and one sink
     // pass; then each decade's metadata.json
-    wide => {
+    (wide, tree) => {
       TileBuild.writeTiles(regionTiles(wide, Some(f), polyFeats, inputType,
-        region, bubbleMaxZ), s"$out/$region", TreeLevels)
+        region, bubbleMaxZ), tree, TreeLevels)
       for (decade <- EtlConfig.decades.keys.toSeq.sorted)
-        TileBuild.writeMetadataJson(f.sparkSession, s"$out/$region/$decade",
+        TileBuild.writeMetadataJson(f.sparkSession, s"$tree/$decade",
           Map("name" -> s"$region-$decade",
             "type" -> "overlay",
             "minzoom" -> math.min(bz.minZoom, zoom.minZoom).toString,

@@ -1421,8 +1421,8 @@ object QueriesCorpus {
       |FROM documents GROUP BY source ORDER BY source""".stripMargin
 
   // q146: GROUPED-ENTITY SNAPSHOT DIFF — the multi-row generalization
-  // of q135 and the oracle face of Incremental.geoidDiff (the r15
-  // incremental-rebuild trigger): an entity (an order here; a GEOID's
+  // of q135 and the oracle face of Incremental.diffFingerprints (the
+  // r15 incremental-rebuild trigger): an entity (an order here; a GEOID's
   // 19 year rows in the pipeline; a shard's documents in general) is
   // MANY rows, and its change verdict must not depend on row order —
   // CSV re-sharding reorders a group's rows without changing its

@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions.lit
   *     job) and serve only if it still matches; a same-count corpus in
   *     this or another JVM may have republished the dir since.
   *   - Miss or mismatch: load the dir if its `_key` matches, else learn
-  *     and [[publish]]: stage under `$FixtureRoot/.tmp/`, write `_key`
-  *     last, swap the staged dir in. No reader sees a partial dir, and
-  *     a failed learn leaves the live one as it was.
+  *     and publish through [[graft.Pipeline.staged]]: build the dir in a
+  *     hidden sibling of the count dir, write `_key` last, swap it in.
+  *     No reader sees a partial dir, and a failed learn leaves the live
+  *     one as it was.
   *   - The value is always read back from the published dir, so
   *     load ≡ learn by construction. Table artifacts serve the dir path
   *     and their callers re-read it on each call.
@@ -79,8 +80,10 @@ private[graft] object ArtifactCache {
         val loaded = readKey(fs, dir).contains(sidecar)
         if (!loaded) learns.incrementAndGet()
         val value = timed(if (loaded) loadWall else learnWall, key) {
-          if (!loaded) publish(fs, new Path(FixtureRoot), dir, sidecar) { tmp =>
+          if (!loaded) graft.Pipeline.staged(fs, dir) { tmp =>
             learn.withColumn(countCol, lit(n)).write.parquet(tmp.toString)
+            val out = fs.create(new Path(tmp, "_key"), false)
+            try out.write(sidecar.getBytes(UTF_8)) finally out.close()
           }
           read(dir.toString)
         }
@@ -94,37 +97,6 @@ private[graft] object ArtifactCache {
       val in = fs.open(new Path(dir, "_key"))
       try Some(new String(in.readAllBytes(), UTF_8)) finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Build a fixture into `$root/.tmp/<uuid>` with `write`, add `_key`
-    * last, then swap it into `live`. The staging dir is always deleted,
-    * so a throwing `write` leaves `live` and `.tmp` as they were.
-    */
-  private[graft] def publish(fs: FileSystem, root: Path, live: Path,
-                             key: String)(write: Path => Unit): Unit = {
-    val tmp = new Path(root, s".tmp/${java.util.UUID.randomUUID()}")
-    try {
-      write(tmp)
-      val out = fs.create(new Path(tmp, "_key"), false)
-      try out.write(key.getBytes(UTF_8)) finally out.close()
-      fs.mkdirs(live.getParent)
-      swapDir(fs, tmp, live, tmp.suffix(".old"))
-    } finally fs.delete(tmp, true)
-  }
-
-  /** Crash-safe directory swap: rename `live` (if any) to `aside`,
-    * rename `staged` into its place, delete `aside`. If the second
-    * rename fails, `aside` goes back to `live` and the swap throws.
-    */
-  private[graft] def swapDir(fs: FileSystem, staged: Path, live: Path,
-                             aside: Path): Unit = {
-    if (fs.exists(live) && !fs.rename(live, aside))
-      throw new java.io.IOException(s"cannot move $live aside")
-    if (!fs.rename(staged, live)) {
-      fs.rename(aside, live) // put the live dir back, if any
-      throw new java.io.IOException(s"cannot swap in $staged")
-    }
-    fs.delete(aside, true)
-  }
 
   /** Learn bodies run in this JVM (a fixture-served call must not move
     * it), and wall seconds per artifact learned / loaded.

@@ -192,7 +192,7 @@ object Similarity {
     * @return (assignments DataFrame with `cid`, final centroid map)
     */
   def kmeans(vectors: DataFrame, idCol: String, vecCol: String,
-             k: Int, iters: Int, dim: Int): (DataFrame, Map[Int, Array[Double]]) = {
+             k: Int, iters: Int): (DataFrame, Map[Int, Array[Double]]) = {
     val spark = vectors.sparkSession
     import spark.implicits._
     var centroids: Map[Int, Array[Double]] = vectors

@@ -270,7 +270,7 @@ object Tiling {
     val xs = ring.map(_._1); val ys = ring.map(_._2)
     val (minX, maxX) = (xs.min, xs.max)
     val (minY, maxY) = (ys.min, ys.max)
-    var cell = math.min(maxX - minX, maxY - minY) / 2.0
+    val cell = math.min(maxX - minX, maxY - minY) / 2.0
     if (cell == 0) return (minX, minY)
     case class Cell(x: Double, y: Double, h: Double) {
       val d: Double = signedDist(x, y, ring)

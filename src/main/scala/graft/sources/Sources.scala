@@ -108,7 +108,7 @@ object Sources {
       // raw line plus whatever parsed partially — full column list keeps
       // the parse full-width (see above) and helps triage
       writeCsv(parsed.filter(col(cc).isNotNull)
-        .select(schema.fieldNames.map(col) :+ col(cc).as("raw_record"): _*),
+        .select(schema.fieldNames.toSeq.map(col) :+ col(cc).as("raw_record"): _*),
         out)
     }
     if (total > 0 && bad > maxRejectFraction * total)

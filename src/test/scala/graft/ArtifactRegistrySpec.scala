@@ -25,6 +25,15 @@ class ArtifactRegistrySpec extends AnyFunSuite with SharedSpark {
 
   private def fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
 
+  /** A fixture publish as [[ArtifactCache.fixture]] makes one: `write`
+    * the rows into the staged dir, add `_key` last, swap it in.
+    */
+  private def publish(live: Path, key: String)(write: Path => Unit): Unit =
+    Pipeline.staged(fs, live) { tmp =>
+      write(tmp)
+      Files.write(new File(tmp.toString, "_key").toPath, key.getBytes("UTF-8"))
+    }
+
   test("fixture-present cold cache serves q69/q73 without learning; load == learn") {
     val d = "/root/testdata/sf0.001"
     // pass 1: learns (or loads a prior round's fixture) and guarantees
@@ -152,8 +161,7 @@ class ArtifactRegistrySpec extends AnyFunSuite with SharedSpark {
       assert(access("K1", 1) == k1 && access("K2", 2) == k2)
       assert(ArtifactCache.learnCount == learns, "steady state serves from memory")
       // another JVM publishes a different artifact into K2's dir
-      ArtifactCache.publish(fs, new Path(ArtifactCache.FixtureRoot),
-          new Path(s"$fx/2"), "foreign") { tmp =>
+      publish(new Path(s"$fx/2"), "foreign") { tmp =>
         Seq("foreign").toDF("v").write.parquet(tmp.toString)
       }
       assert(access("K1", 1) == k1)
@@ -164,26 +172,27 @@ class ArtifactRegistrySpec extends AnyFunSuite with SharedSpark {
     } finally FileUtils.deleteDirectory(new File(fx))
   }
 
-  test("a publish whose build throws mid-write leaves the live fixture and .tmp untouched") {
+  test("a publish whose build throws mid-write leaves the live fixture and no staging sibling") {
     val root = Files.createTempDirectory("fixture_root").toFile
     val live = new Path(s"$root/art/7")
     def md5s(dir: File): Map[String, String] =
       dir.listFiles().map(f => f.getName ->
         DigestUtils.md5Hex(Files.readAllBytes(f.toPath))).toMap
-    ArtifactCache.publish(fs, new Path(root.toString), live, "k1") { tmp =>
+    publish(live, "k1") { tmp =>
       spark.range(0, 100, 1, 4).write.parquet(tmp.toString)
     }
     val before = md5s(new File(live.toString))
     assert(before.contains("_key"))
     val boom = udf((i: Long) => if (i == 77) throw new IllegalStateException("boom") else i)
     intercept[Exception] {
-      ArtifactCache.publish(fs, new Path(root.toString), live, "k2") { tmp =>
+      publish(live, "k2") { tmp =>
         spark.range(0, 100, 1, 4).select(boom(col("id")).as("id"))
           .write.parquet(tmp.toString)
       }
     }
     assert(md5s(new File(live.toString)) == before)
-    assert(new File(s"$root/.tmp").list().isEmpty, "no staging dir may survive")
+    assert(new File(s"$root/art").list().toSeq == Seq("7"),
+      "no .7.*.staging or .7.*.old sibling may survive")
     FileUtils.deleteDirectory(root)
   }
 

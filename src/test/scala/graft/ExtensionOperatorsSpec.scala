@@ -374,7 +374,7 @@ class ExtensionOperatorsSpec extends AnyFunSuite with SharedSpark {
     }
     val df = rows.toDF("vec_id", "embedding")
     val (assigned, centroids) = Similarity.kmeans(df, "vec_id", "embedding",
-      k = 2, iters = 3, dim = 4)
+      k = 2, iters = 3)
     assert(assigned.count() == 40)
     // each blob maps to a single cluster
     val byParity = assigned.withColumn("parity", $"vec_id" % 2)

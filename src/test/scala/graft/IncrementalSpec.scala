@@ -96,6 +96,16 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     f
   }
 
+  /** The delta's fingerprint publish: `fps` swapped in as
+    * `regionDir/fingerprints.parquet` through [[Pipeline.staged]].
+    */
+  private def publishFps(fps: org.apache.spark.sql.DataFrame,
+                         regionDir: String): Unit = {
+    val live = new org.apache.hadoop.fs.Path(regionDir, "fingerprints.parquet")
+    Pipeline.staged(live.getFileSystem(spark.sessionState.newHadoopConf()), live)(p =>
+      fps.write.parquet(p.toString))
+  }
+
   /** md5 of every file under `dir` whose name ends with `suffix`, keyed
     * by its relative path.
     */
@@ -366,6 +376,42 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
   private def cachedRdds: Int =
     spark.sparkContext.getPersistentRDDs.values.count(!_.isCheckpointed)
 
+  test("a fallback that fails at the fingerprint publish recovers on the re-run") {
+    // the fallback's runRegion swaps the new tree in before its
+    // fingerprints follow: a crash between the two leaves a tree without
+    // fingerprints, and the re-run must diff by hashing the old CSV (the
+    // cold path) and still end at the full rebuild
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val oldCsv = writeLong(0 until 40, bumped = Set.empty)
+    val newCsv = writeLong(0 until 40, bumped = (0 until 20).toSet) // 50% changed
+    val feats40 = features.filter(
+      org.apache.spark.sql.functions.col("GEOID") < geoid(40))
+    val live = Files.createTempDirectory("incr-fp-crash").toString
+    val full = Files.createTempDirectory("incr-fp-crash-full").toString
+    Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "block-groups",
+      features = Some(feats40), outDir = Some(live))
+    Pipeline.runRegion(spark, newCsv, "raw", metricLongNames, "block-groups",
+      features = Some(feats40), outDir = Some(full))
+    def delta(): Incremental.Stats = Incremental.incrementalRegion(spark, oldCsv,
+      newCsv, "raw", metricLongNames, "block-groups", feats40,
+      prevDir = s"faulty://$live", outDir = s"faulty://$live")
+    FaultyFs.failOn = "/.fingerprints."
+    try intercept[Exception](delta()) finally FaultyFs.failOn = null
+    val stats = delta()
+    assert(stats.fullRebuild && stats.changed == 20, stats.toString)
+    for (suffix <- Seq(".pbf", "metadata.json")) {
+      val want = md5tree(s"$full/block-groups", suffix)
+      assert(want.nonEmpty && md5tree(s"$live/block-groups", suffix) == want,
+        s"the re-run must leave the full rebuild's $suffix files")
+    }
+    assert(Files.isDirectory(Paths.get(live, "block-groups", "fingerprints.parquet")),
+      "the re-run must publish the fingerprints")
+    val leftovers = Seq(live, s"$live/block-groups")
+      .flatMap(d => new java.io.File(d).list()).filter(_.startsWith("."))
+    assert(leftovers.isEmpty, s"staging left behind: ${leftovers.mkString(", ")}")
+  }
+
   test("a copy-mode delta that fails mid-update leaves outDir and the cache as they were") {
     // the fault hits the fingerprint publish, the last write of the
     // update: by then every rebuilt tile has been written. The region
@@ -404,11 +450,9 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     val prev = Files.createTempDirectory("incr-keep-prev").toString
     Pipeline.runRegion(spark, oldCsv, "raw", metricLongNames, "block-groups",
       features = Some(feats40), outDir = Some(prev))
-    val region = new org.apache.hadoop.fs.Path(s"$prev/block-groups")
-    Incremental.publishFingerprints(
-      region.getFileSystem(spark.sessionState.newHadoopConf()),
-      Incremental.fingerprints(graft.sources.Sources.readCsv(spark, oldCsv,
-        graft.sources.Sources.longSchema(metricLongNames))), region)
+    publishFps(Incremental.fingerprints(graft.sources.Sources.readCsv(
+      spark, oldCsv, graft.sources.Sources.longSchema(metricLongNames))),
+      s"$prev/block-groups")
     val before = md5tree(s"$prev/block-groups", suffix = "")
     assert(before.keys.exists(_.endsWith(".pbf")) &&
       before.keys.exists(_.endsWith("metadata.json")) &&
@@ -533,20 +577,18 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
   test("a fingerprint publish whose frame throws mid-write leaves the previous artifact") {
     val csv = writeLong(0 until 40, bumped = Set.empty)
     val regionDir = Files.createTempDirectory("incr-fp").resolve("block-groups")
-    val region = new org.apache.hadoop.fs.Path(regionDir.toString)
-    val fs = region.getFileSystem(spark.sessionState.newHadoopConf())
     val fps = Incremental.fingerprints(graft.sources.Sources.readCsv(spark, csv,
       graft.sources.Sources.longSchema(metricLongNames)))
-    Incremental.publishFingerprints(fs, fps, region)
+    publishFps(fps, regionDir.toString)
     val before = md5tree(regionDir.toString, suffix = "")
     assert(before.keys.exists(_.startsWith("fingerprints.parquet/part-")), before.toString)
     val fault = org.apache.spark.sql.functions.udf { (g: String) =>
       if (g != null) throw new IllegalStateException("injected fault") else g
     }
     intercept[Exception] {
-      Incremental.publishFingerprints(fs,
+      publishFps(
         fps.withColumn("GEOID", fault(org.apache.spark.sql.functions.col("GEOID"))),
-        region)
+        regionDir.toString)
     }
     assert(md5tree(regionDir.toString, suffix = "") == before,
       "the failed publish must leave the previous fingerprints as they were")
@@ -558,9 +600,9 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     val oldCsv = writeLong(0 until 20, bumped = Set.empty)
     val newCsv = writeLong(0 until 20, bumped = Set(3))
     val schema = graft.sources.Sources.longSchema(metricLongNames)
-    val p = Incremental.geoidDiff(
-      graft.sources.Sources.readCsv(spark, oldCsv, schema),
-      graft.sources.Sources.readCsv(spark, newCsv, schema))
+    val p = Incremental.diffFingerprints(
+      Incremental.fingerprints(graft.sources.Sources.readCsv(spark, oldCsv, schema)),
+      Incremental.fingerprints(graft.sources.Sources.readCsv(spark, newCsv, schema)))
       .queryExecution.executedPlan.toString
     assert("FileScan csv".r.findAllIn(p).size == 2,
       "each snapshot must scan exactly once")
@@ -575,13 +617,13 @@ class IncrementalSpec extends AnyFunSuite with SharedSpark with PlanCapture {
     ex.foreach(l => assert(l.contains("(id#"), l))
   }
 
-  test("geoidDiff classifies added/removed/changed and drops unchanged") {
+  test("diffFingerprints classifies added/removed/changed and drops unchanged") {
     val oldCsv = writeLong(0 until 10, bumped = Set.empty)
     val newCsv = writeLong((0 until 11).filterNot(_ == 3), bumped = Set(4))
     val schema = graft.sources.Sources.longSchema(metricLongNames)
-    val d = Incremental.geoidDiff(
-      graft.sources.Sources.readCsv(spark, oldCsv, schema),
-      graft.sources.Sources.readCsv(spark, newCsv, schema))
+    val d = Incremental.diffFingerprints(
+      Incremental.fingerprints(graft.sources.Sources.readCsv(spark, oldCsv, schema)),
+      Incremental.fingerprints(graft.sources.Sources.readCsv(spark, newCsv, schema)))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(d == Map(geoid(3) -> "removed", geoid(4) -> "changed",
       geoid(10) -> "added"), d.toString)

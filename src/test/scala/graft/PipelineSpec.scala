@@ -368,6 +368,34 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
       "no staging directory may remain beside the tree")
   }
 
+  test("a runRegion whose CSV write fails leaves the previous wide and extents CSVs") {
+    // `faulty://` (IncrementalSpec's FaultyFs) refuses to create files
+    // under the marked artifact; a write straight into the live path
+    // would have deleted the previous one first (`mode("overwrite")`)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val out = Files.createTempDirectory("csv-fault").toString
+    val names = Seq("counties.extents", "counties.wide")
+    def run(): Unit = Pipeline.runRegion(spark, fixtureCsv, "raw",
+      metricLongNames, "counties",
+      wideOut = Some(s"faulty://$out/counties.wide"),
+      extentsOut = Some(s"faulty://$out/counties.extents"))
+    run()
+    for (faulted <- names) {
+      val before = names.map(n => n -> treeDigests(s"$out/$n")).toMap
+      assert(before.values.forall(_.keys.exists(_.startsWith("part-"))), before.toString)
+      FaultyFs.failOn = s"/$faulted/"
+      try intercept[Exception](run()) finally FaultyFs.failOn = null
+      assert(treeDigests(s"$out/$faulted") == before(faulted),
+        s"the failed write must leave the previous $faulted as it was")
+      // the other output's parts are rewritten under new names, same bytes
+      for (n <- names) assert(treeDigests(s"$out/$n").values.toSeq.sorted ==
+        before(n).values.toSeq.sorted, s"$n changed after a failed $faulted write")
+      assert(new java.io.File(out).list().sorted.toSeq == names,
+        "no .staging or .old sibling may be left")
+    }
+  }
+
   test("job count: a warm runRegion plans both decades as one tile plan and one sink pass") {
     val features = Pipeline.geometryFeatures(
       graft.sources.Sources.readGeoJson(spark, fixtureGeoJson)).persist()
@@ -392,7 +420,8 @@ class PipelineSpec extends AnyFunSuite with SharedSpark with PlanCapture {
       captureJobs(Pipeline.extents(wide).collect())
     }
     // the rank passes are RDD jobs outside any SQL execution
-    assert(executions.map(_._1) == Seq("", "localCheckpoint at Pipeline.scala:95"),
+    assert(executions.size == 2 && executions.head._1 == "" &&
+        executions(1)._1.startsWith("localCheckpoint at Pipeline.scala"),
       s"extents must be one histogram checkout plus its folds: $executions")
     val jobs = executions.map(_._2).sum
     assert(jobs == ExtentsJobs, s"$jobs jobs per warm extents: $executions")
